@@ -29,8 +29,12 @@ reads, not snapshot-atomic) until their first ``ivf_index_maintenance``
 call upgrades them in place — run maintenance once after deploying to
 get the atomicity guarantee on pre-existing indexes.
 
-Buckets come from a provided column (e.g. a label) or an MLlib-KMeans
-coarse quantizer (``similarity.kmeans_buckets``). Probing reuses
+Buckets come from a provided column (e.g. a label), a sampled numpy
+k-means coarse quantizer (``similarity.numpy_kmeans_buckets``, the
+default) or a full-corpus MLlib fit (``similarity.kmeans_buckets``);
+``build_ivf_index``, ``build_ivfpq_index`` and the maintenance rebuild
+share one quantize step (``_coarse_quantize``) and one write-and-commit
+tail (``_write_index``). Probing reuses
 ``similarity.probe_topk`` so persisted-index results are value-identical
 to the in-line pipeline (and to its SQL oracle).
 """
@@ -44,9 +48,13 @@ from modelardb_rs_spark.operators.similarity import (
     bucket_centroids,
     cosine,
     kmeans_buckets,
+    nearest_centroids,
     numpy_kmeans_buckets,
     probe_topk,
 )
+
+_CENTROIDS_SCHEMA = "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT"
+_BOOKS_SCHEMA = "subspace INT, code INT, centroid ARRAY<FLOAT>"
 
 
 def _vectors_table(index_name: str) -> str:
@@ -139,6 +147,15 @@ def _fitted_meta_fn(engine, table_name: str, fitted_C, cent_rows: list, gen: int
     return meta_fn
 
 
+def _shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions``, or the default parallelism when
+    the conf is unset or not an integer (e.g. AQE's ``auto``)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def _bucket_spread(df: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
     """Repartition an assignment frame so the ``partitionBy(ivf_bucket)``
     write produces ~P files instead of tasks x buckets files (guide §6:
@@ -151,11 +168,7 @@ def _bucket_spread(df: DataFrame, id_col: str, n_buckets: int) -> DataFrame:
     splits each bucket across ceil(P/k) writers — big buckets never
     serialize into one task (the §2.5 skew rule; the salt is
     id-derived, so task retries reproduce the same placement)."""
-    spark = df.sparkSession
-    try:
-        P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        P = spark.sparkContext.defaultParallelism
+    P = _shuffle_partitions(df.sparkSession)
     S = max(1, -(-P // max(int(n_buckets), 1)))
     if S == 1:
         return df.repartition(P, F.col("ivf_bucket"))
@@ -280,108 +293,139 @@ def build_ivf_index(
     own). ``fit_sample=None`` restores the historical full-corpus
     MLlib fit. Returns ``{"n_vectors", "n_buckets"}``.
     """
-    fitted_C = None
-    if bucket_col is None:
-        if fit_sample is not None:
-            bucketed, fitted_C = numpy_kmeans_buckets(
-                corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
-                fit_sample=fit_sample, return_centroids=True,
-            )
-        else:
-            bucketed = kmeans_buckets(
-                corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
-            )
-        bucket_src = "ivf_bucket"
-    else:
-        bucketed, bucket_src = corpus, bucket_col
-    vectors = bucketed.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col(bucket_src).cast("int").alias("ivf_bucket"),
+    vectors, fitted_C, cent_rows, _ = _coarse_quantize(
+        index_name, corpus, bucket_col, n_buckets, id_col, vec_col, seed, fit_sample
+    )
+    return _write_index(
+        engine, index_name, vectors, id_col,
+        f"{id_col} BIGINT, {vec_col} ARRAY<FLOAT>, ivf_bucket INT",
+        fitted_C=fitted_C, cent_rows=cent_rows,
     )
 
-    vt, ct = _vectors_table(index_name), _centroids_table(index_name)
-    for t in (vt, ct):
-        if t in engine.tables():
-            engine.drop(t)
-    engine.create_table(vt, f"{id_col} BIGINT, {vec_col} ARRAY<FLOAT>, ivf_bucket INT")
-    engine.create_table(ct, "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT")
-    # centroids ARE index metadata (n_buckets rows): they ride the
-    # vectors commit as its meta payload (files + centroids flip in ONE
-    # atomic commit — probes resolving any snapshot get a consistent
-    # pair), then mirror as a table for SQL consumers.
-    cent_rows: list = []
-    if fitted_C is not None:
-        # fitted-quantizer path: centroids are known BEFORE the corpus
-        # pass, and the per-bucket counts come from the WRITE's own
-        # staged add entries (num_rows + ivf_bucket= path values) via
-        # the commit_meta callable — the build's only corpus pass is
-        # the fused assign+write job (was: persist the assignment, run
-        # a counts job, then write — three reads of the assignment
-        # output per build)
-        meta_fn = _fitted_meta_fn(engine, vt, fitted_C, cent_rows, gen=0)
-        engine.write(
-            vt,
-            _bucket_spread(vectors, id_col, len(fitted_C)),
-            partition_by=["ivf_bucket"],
-            commit_meta=meta_fn,
-        )
-        counts_fallback = meta_fn.fallback_used
+
+def _coarse_quantize(
+    index_name, corpus, bucket_col, n_buckets, id_col, vec_col, seed, fit_sample
+):
+    """The coarse-quantize step every index build and rebuild starts
+    with. Returns ``(vectors, fitted_C, cent_rows, fit_X)``:
+    ``vectors`` is (id, vector, ivf_bucket INT) and exactly one of
+    ``fitted_C``/``cent_rows`` carries the geometry.
+
+    - ``bucket_col`` set: that column IS the quantizer; ``cent_rows``
+      are the posterior (bucket, mean, count) rows of ONE fused
+      ``bucket_centroids`` scan.
+    - ``fit_sample`` set: seeded numpy k-means on the hash-ordered
+      sample, called through this module's ``numpy_kmeans_buckets``
+      attribute. ``fitted_C`` is the k x dim quantizer and ``fit_X``
+      the sample it was fitted on; counts come later, from the write's
+      own commit statistics.
+    - neither: full-corpus MLlib fit, posterior ``cent_rows`` as for
+      ``bucket_col``."""
+    fitted_C = cent_rows = fit_X = None
+    if bucket_col is not None:
+        bucketed, src = corpus, bucket_col
+    elif fit_sample is not None:
+        try:
+            bucketed, fitted_C, fit_X = numpy_kmeans_buckets(
+                corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
+                fit_sample=fit_sample, return_centroids=True, return_sample=True,
+            )
+        except ValueError as e:
+            raise ValueError(f"index {index_name!r}: {e}") from e
+        src = "ivf_bucket"
     else:
-        # centroids AND counts from ONE corpus scan (round 14): the
-        # former bucket_centroids + separate count aggregate + join
-        # read the corpus twice and shuffled twice for n_buckets rows
-        # of output. The count rides the per-(bucket, dim) aggregate —
-        # each dim-0 element counts its vector; identical to count(*)
-        # for the fixed-dimension non-null vectors the centroid math
-        # itself assumes (a zero-length array contributes to neither).
-        exploded = vectors.select(
-            F.col("ivf_bucket"),
-            F.posexplode(F.col(vec_col)).alias("__i__", "__x__"),
+        bucketed = kmeans_buckets(
+            corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
         )
-        cents = (
-            exploded.groupBy("ivf_bucket", "__i__")
-            .agg(
-                F.avg("__x__").alias("__m__"),
-                F.count("*").cast("long").alias("__c__"),
-            )
-            .groupBy("ivf_bucket")
-            .agg(
-                F.array_sort(F.collect_list(F.struct("__i__", "__m__"))).alias(
-                    "__s__"
-                ),
-                F.max("__c__").alias("n_vectors"),
-            )
-            .select(
-                "ivf_bucket",
-                F.transform("__s__", lambda s: s["__m__"].cast("float")).alias(
-                    "centroid"
-                ),
-                "n_vectors",
-            )
-        )
+        src = "ivf_bucket"
+    vectors = bucketed.select(
+        F.col(id_col), F.col(vec_col), F.col(src).cast("int").alias("ivf_bucket")
+    )
+    if fitted_C is None:
         cent_rows = [
             (int(r["ivf_bucket"]), list(r["centroid"]), int(r["n_vectors"]))
-            for r in cents.collect()
+            for r in bucket_centroids(vectors, vec_col, "ivf_bucket").collect()
         ]
-        engine.write(
-            vt,
-            _bucket_spread(vectors, id_col, max(len(cent_rows), 1)),
-            partition_by=["ivf_bucket"],
-            commit_meta=_centroids_meta(cent_rows, gen=0),
-        )
-        counts_fallback = False
-    engine.write(
-        ct,
-        engine.spark.createDataFrame(
-            cent_rows, "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT"
-        ),
-        txn=(f"ivf_rebuild::{index_name}", 0),
+    return vectors, fitted_C, cent_rows, fit_X
+
+
+def _cent_pairs(fitted_C, cent_rows) -> list:
+    """(bucket, centroid) pairs of either ``_coarse_quantize`` geometry."""
+    if fitted_C is not None:
+        return list(enumerate(fitted_C))
+    return [(b, c) for b, c, _ in cent_rows]
+
+
+def _write_index(
+    engine,
+    index_name: str,
+    rows: DataFrame,
+    id_col: str,
+    vec_schema: str | None = None,
+    fitted_C=None,
+    cent_rows: list | None = None,
+    book_rows: list | None = None,
+    gen: int = 0,
+    expected_paths: list | None = None,
+) -> dict:
+    """The one write-and-commit tail of every index build and rebuild.
+
+    Centroids ARE index metadata (n_buckets rows): they ride the vectors
+    commit as its meta payload — files and centroids flip in ONE atomic
+    commit, so probes resolving any snapshot get a consistent pair —
+    then mirror into ``<index>__centroids`` for SQL consumers. With
+    ``fitted_C`` the centroids are known before the corpus pass and the
+    per-bucket counts come from the write's own staged add entries
+    (``_fitted_meta_fn``), so the fused assign(+encode)+write job is
+    the only corpus pass; otherwise ``cent_rows`` carries the
+    (bucket, centroid, count) rows.
+
+    Fresh build (``expected_paths`` None): drop every index table — the
+    pqbooks table too, so a plain IVF build never inherits an earlier
+    IVF-PQ index's books — create the vectors table as ``vec_schema``,
+    append vectors and mirror, then write ``book_rows`` (IVF-PQ) into a
+    new pqbooks table. Rebuild: replace the vectors table CONDITIONALLY
+    on ``expected_paths`` and rewrite the mirror stamped ``gen``.
+    Returns ``{"n_vectors", "n_buckets", "counts_fallback"}``."""
+    vt, ct, bt = (
+        _vectors_table(index_name),
+        _centroids_table(index_name),
+        _pqbooks_table(index_name),
     )
+    if fitted_C is not None:
+        cent_rows = []  # filled by the meta callable at commit time
+        meta = _fitted_meta_fn(engine, vt, fitted_C, cent_rows, gen=gen)
+        rows = _bucket_spread(rows, id_col, len(fitted_C))
+    else:
+        meta = _centroids_meta(cent_rows, gen=gen)
+        rows = _bucket_spread(rows, id_col, max(len(cent_rows), 1))
+    txn = (f"ivf_rebuild::{index_name}", gen)
+    if expected_paths is None:
+        for t in (vt, ct, bt):
+            if t in engine.tables():
+                engine.drop(t)
+        engine.create_table(vt, vec_schema)
+        engine.create_table(ct, _CENTROIDS_SCHEMA)
+        if book_rows is not None:
+            engine.create_table(bt, _BOOKS_SCHEMA)
+        engine.write(vt, rows, partition_by=["ivf_bucket"], commit_meta=meta)
+        engine.write(
+            ct, engine.spark.createDataFrame(cent_rows, _CENTROIDS_SCHEMA), txn=txn
+        )
+        if book_rows is not None:
+            engine.write(bt, engine.spark.createDataFrame(book_rows, _BOOKS_SCHEMA))
+    else:
+        engine.overwrite(
+            vt, rows, partition_by=["ivf_bucket"], expected_paths=expected_paths,
+            commit_meta=meta,
+        )
+        engine.overwrite(
+            ct, engine.spark.createDataFrame(cent_rows, _CENTROIDS_SCHEMA), txn=txn
+        )
     return {
         "n_vectors": sum(r[2] for r in cent_rows),
         "n_buckets": len(cent_rows),
-        "counts_fallback": counts_fallback,
+        "counts_fallback": bool(getattr(meta, "fallback_used", False)),
     }
 
 
@@ -469,7 +513,8 @@ def append_to_ivf_index(
             # centroids do); exact |c_b + dec(codes)| norms ride the
             # same numpy encode pass
             assigned = _encode_residuals(
-                engine, index_name, assigned, cent_rows, id_col, vec_col
+                _residuals(engine.spark, assigned, cent_rows, vec_col),
+                *_cached_pq_books(engine, index_name), id_col, vec_col,
             )
         # one file per TOUCHED bucket per commit: without the
         # repartition the partitioned writer opens (batch partitions x
@@ -477,13 +522,9 @@ def append_to_ivf_index(
         # maybe_optimize then has to keep paying down (guide §6). No
         # salt here: append batches are micro-batch-sized, and one
         # writer per bucket is the file-count optimum.
-        spark = engine.spark
-        try:
-            P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            P = spark.sparkContext.defaultParallelism
         assigned = assigned.repartition(
-            max(1, min(P, len(cent_rows))), F.col("ivf_bucket")
+            max(1, min(_shuffle_partitions(engine.spark), len(cent_rows))),
+            F.col("ivf_bucket"),
         )
         try:
             version = engine.write(
@@ -638,77 +679,11 @@ def build_ivfpq_index(
 
     from modelardb_rs_spark.operators import pq as pq_ops
 
-    fitted_C = None
-    fit_X = None
-    if bucket_col is None:
-        if fit_sample is not None:
-            bucketed, fitted_C, fit_X = numpy_kmeans_buckets(
-                corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
-                fit_sample=fit_sample, return_centroids=True, return_sample=True,
-            )
-        else:
-            bucketed = kmeans_buckets(
-                corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
-            )
-        bucket_src = "ivf_bucket"
-    else:
-        bucketed, bucket_src = corpus, bucket_col
-    vectors = bucketed.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.col(bucket_src).cast("int").alias("ivf_bucket"),
+    vectors, fitted_C, cent_rows, fit_X = _coarse_quantize(
+        index_name, corpus, bucket_col, n_buckets, id_col, vec_col, seed, fit_sample
     )
-    spark = engine.spark
-    cent_rows: list = []
-    resid_sample = None
-    if fitted_C is not None:
-        cent_pairs = [
-            (b, [float(x) for x in fitted_C[b]]) for b in range(len(fitted_C))
-        ]
-        # Derive the PQ/OPQ training residuals DRIVER-SIDE from the
-        # coarse-fit sample (round 14): both samples order by
-        # xxhash64(id, seed) with ties on id, so the codebook sample is
-        # a PREFIX of the already-collected fit sample whenever the fit
-        # sample covers it (always, unless fit_sample < sample hit the
-        # limit). Replays _numpy_centroid_assign's nprobe=1 assignment
-        # (same float64 d2, same stable-argsort tie-break) and the
-        # zip_with float32 subtraction bit-for-bit, so the trained
-        # books/rotation are identical to the Spark-sample path — and
-        # the build drops a full corpus TopK pass (its only remaining
-        # corpus passes: the fit-sample collect and the fused
-        # assign+encode+write job).
-        if len(fit_X) and (len(fit_X) >= sample or len(fit_X) < int(fit_sample)):
-            Xs = fit_X[: int(sample)]
-            C64 = np.asarray(fitted_C, dtype=np.float64)
-            d2 = ((Xs[:, None, :] - C64[None, :, :]) ** 2).sum(-1)
-            assign = np.argsort(d2, axis=1, kind="stable")[:, 0]
-            C32 = C64.astype(np.float32)
-            resid_sample = (
-                Xs.astype(np.float32) - C32[assign]
-            ).astype(np.float64)
-    else:
-        cents = bucket_centroids(vectors, vec_col, "ivf_bucket").join(
-            vectors.groupBy("ivf_bucket").agg(
-                F.count("*").cast("long").alias("n_vectors")
-            ),
-            "ivf_bucket",
-        )
-        # centroids are index metadata (n_buckets rows): one collect,
-        # then broadcast-join the residual computation
-        cent_rows = [
-            (int(r["ivf_bucket"]), list(r["centroid"]), int(r["n_vectors"]))
-            for r in cents.collect()
-        ]
-        cent_pairs = [(b, c) for b, c, _ in cent_rows]
-    cent_df = spark.createDataFrame(
-        cent_pairs, "ivf_bucket INT, __c__ ARRAY<FLOAT>"
-    )
-    resid = vectors.join(F.broadcast(cent_df), "ivf_bucket").withColumn(
-        "__resid__",
-        F.zip_with(
-            F.col(vec_col), F.col("__c__"), lambda x, y: (x - y).cast("float")
-        ),
-    )
+    resid = _residuals(engine.spark, vectors, _cent_pairs(fitted_C, cent_rows), vec_col)
+    resid_sample = _residual_sample(fit_X, fitted_C, sample, fit_sample)
     rotation = None
     if opq:
         rotation, books = pq_ops.train_opq(
@@ -716,63 +691,19 @@ def build_ivfpq_index(
             sample=sample, opq_iters=opq_iters, iters=iters, seed=seed,
             sample_X=resid_sample,
         )
-        # the stored rotation AND books are ARRAY<FLOAT>: round-trip
-        # both through float32 NOW so this build's codes match what
-        # appends and rebuild re-encodes (which read the stored rows
-        # via _cached_pq_books) would encode, bit for bit — rounding
-        # only one of them would leave tie-adjacent residuals encoding
-        # differently across the build/append boundary
         rotation = rotation.astype(np.float32).astype(np.float64)
-        books = [b.astype(np.float32).astype(np.float64) for b in books]
     else:
         books = pq_ops.train_pq_codebooks(
             resid, m=m, ks=ks, vec_col="__resid__", id_col=id_col,
             sample=sample, iters=iters, seed=seed, sample_X=resid_sample,
         )
-        # same float32 round-trip as the OPQ branch: the stored pqbooks
-        # table is ARRAY<FLOAT>, so appends/rebuild re-encodes read
-        # float32-rounded books — encoding the build with float64-trained
-        # books would let a tie-adjacent residual code differently across
-        # the build/append boundary
-        books = [b.astype(np.float32).astype(np.float64) for b in books]
-    # exact reconstructed-vector norm |c_b + dec(codes)| computed in the
-    # SAME numpy encode pass (encode_pq's default pq_norm is the
-    # RESIDUAL's norm — not what cosine ranking needs here)
-    enc = pq_ops.encode_pq(
-        resid, books, vec_col="__resid__", recon_norm_base="__c__",
-        rotate=rotation,
-    )
-    rows = enc.select(id_col, vec_col, "ivf_bucket", "pq_codes", "pq_norm")
-
-    vt, ct, bt = _vectors_table(index_name), _centroids_table(index_name), _pqbooks_table(index_name)
-    for t in (vt, ct, bt):
-        if t in engine.tables():
-            engine.drop(t)
-    engine.create_table(
-        vt,
-        f"{id_col} BIGINT, {vec_col} ARRAY<FLOAT>, ivf_bucket INT, "
-        "pq_codes ARRAY<INT>, pq_norm DOUBLE",
-    )
-    engine.create_table(ct, "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT")
-    engine.create_table(bt, "subspace INT, code INT, centroid ARRAY<FLOAT>")
-    counts_fallback = False
-    if fitted_C is not None:
-        vectors_meta = _fitted_meta_fn(engine, vt, fitted_C, cent_rows, gen=0)
-    else:
-        vectors_meta = _centroids_meta(cent_rows, gen=0)
-    engine.write(
-        vt, _bucket_spread(rows, id_col, max(len(cent_pairs), 1)),
-        partition_by=["ivf_bucket"], commit_meta=vectors_meta,
-    )
-    if fitted_C is not None:
-        counts_fallback = vectors_meta.fallback_used
-    engine.write(
-        ct,
-        spark.createDataFrame(
-            cent_rows, "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT"
-        ),
-        txn=(f"ivf_rebuild::{index_name}", 0),
-    )
+    # the stored rotation AND books are ARRAY<FLOAT>: round-trip both
+    # through float32 NOW so this build's codes match what appends and
+    # rebuild re-encodes (which read the stored rows via
+    # _cached_pq_books) would encode, bit for bit — float64-trained
+    # values would let a tie-adjacent residual code differently across
+    # the build/append boundary
+    books = [b.astype(np.float32).astype(np.float64) for b in books]
     book_rows = [
         (s, j, [float(x) for x in books[s][j]])
         for s in range(len(books))
@@ -784,18 +715,61 @@ def build_ivfpq_index(
             (-1, i, [float(x) for x in rotation[i]])
             for i in range(rotation.shape[0])
         ]
-    engine.write(
-        bt,
-        spark.createDataFrame(book_rows, "subspace INT, code INT, centroid ARRAY<FLOAT>"),
+    out = _write_index(
+        engine, index_name,
+        _encode_residuals(resid, books, rotation, id_col, vec_col), id_col,
+        f"{id_col} BIGINT, {vec_col} ARRAY<FLOAT>, ivf_bucket INT, "
+        "pq_codes ARRAY<INT>, pq_norm DOUBLE",
+        fitted_C=fitted_C, cent_rows=cent_rows, book_rows=book_rows,
     )
     return {
-        "n_vectors": sum(r[2] for r in cent_rows),
-        "n_buckets": len(cent_rows),
+        **out,
         "m": len(books),
         "ks": int(books[0].shape[0]),
         "opq": rotation is not None,
-        "counts_fallback": counts_fallback,
     }
+
+
+def _residuals(spark, assigned: DataFrame, cent_pairs, vec_col: str) -> DataFrame:
+    """``assigned`` (id, vector, ivf_bucket) plus its bucket centroid
+    ``__c__`` and the float32 residual ``__resid__`` = vector - centroid:
+    one broadcast join against the (bucket, centroid) pairs — index
+    metadata — and a JVM ``zip_with`` subtraction."""
+    cent_df = spark.createDataFrame(
+        [(int(b), [float(x) for x in c]) for b, c in cent_pairs],
+        "ivf_bucket INT, __c__ ARRAY<FLOAT>",
+    )
+    return assigned.join(F.broadcast(cent_df), "ivf_bucket").withColumn(
+        "__resid__",
+        F.zip_with(
+            F.col(vec_col), F.col("__c__"), lambda x, y: (x - y).cast("float")
+        ),
+    )
+
+
+def _residual_sample(fit_X, fitted_C, sample: int, fit_sample: int):
+    """The PQ/OPQ training residuals derived DRIVER-SIDE from the
+    coarse-fit sample, or None when there is no fitted quantizer or its
+    sample cannot cover them.
+
+    Both samples order by xxhash64(id, seed) with ties on id, so the
+    codebook sample is a PREFIX of the collected fit sample unless
+    ``fit_sample < sample`` hit the limit. The map-side assignment
+    (``nearest_centroids``, ties to the lowest bucket) and the JVM
+    float32 subtraction of ``_residuals`` replay bit-for-bit, so the
+    trained books equal those of ``pq._driver_sample`` over the
+    residual frame — and the build skips that full corpus TopK pass."""
+    import numpy as np
+
+    if fitted_C is None or not len(fit_X) or (
+        len(fit_X) < sample and len(fit_X) >= int(fit_sample)
+    ):
+        return None
+    Xs = fit_X[: int(sample)]
+    C32 = np.asarray(fitted_C, dtype=np.float32)
+    return (Xs.astype(np.float32) - C32[nearest_centroids(Xs, fitted_C)]).astype(
+        np.float64
+    )
 
 
 def ivfpq_topk(
@@ -1676,28 +1650,15 @@ def _centroids_meta(cent_rows: list, gen: int) -> dict:
     }
 
 
-def _encode_residuals(engine, index_name, assigned, cent_pairs, id_col, vec_col):
-    """Residual-encode ``assigned`` (id, vec, ivf_bucket) against the
-    given (bucket, centroid) pairs using the index's cached PQ books:
-    broadcast centroid join, JVM zip_with residual, one numpy encode
-    pass with exact |c_b + dec(codes)| norms. The shared IVF-PQ encode
-    recipe of append_to_ivf_index and ivf_index_maintenance; an OPQ
-    index's stored rotation applies here automatically, so appends and
-    rebuild re-encodes quantize in the same rotated space the build
-    did."""
+def _encode_residuals(resid, books, rotation, id_col, vec_col):
+    """PQ-encode a ``_residuals`` frame: one numpy encode pass with exact
+    |c_b + dec(codes)| norms, (id, vector, ivf_bucket, pq_codes, pq_norm)
+    out. The one IVF-PQ encode recipe of the build, appends and
+    maintenance rebuilds; appends and rebuilds pass the index's stored
+    books and rotation (``_cached_pq_books``), so an OPQ index's
+    re-encodes quantize in the same rotated space the build did."""
     from modelardb_rs_spark.operators import pq as pq_ops
 
-    books, rotation = _cached_pq_books(engine, index_name)
-    cent_df = engine.spark.createDataFrame(
-        [(int(b), [float(x) for x in c]) for b, c in cent_pairs],
-        "ivf_bucket INT, __c__ ARRAY<FLOAT>",
-    )
-    resid = assigned.join(F.broadcast(cent_df), "ivf_bucket").withColumn(
-        "__resid__",
-        F.zip_with(
-            F.col(vec_col), F.col("__c__"), lambda x, y: (x - y).cast("float")
-        ),
-    )
     enc = pq_ops.encode_pq(
         resid, books, vec_col="__resid__", recon_norm_base="__c__", rotate=rotation
     )
@@ -1869,52 +1830,31 @@ def ivf_index_maintenance(
     if not reasons:
         return {"rebuilt": False, "reasons": [], "stats_before": stats}
 
-    from modelardb_rs_spark.operators.similarity import numpy_kmeans_buckets
-
     vt_snap = engine.folder.log(vt).snapshot()
     expected = list(vt_snap.paths)
     # monotonically increasing rebuild stamp: the vectors log version
     # strictly grows, so each rebuild's stamp is unique and newer
     stamp = int(vt_snap.version) + 1
-    corpus = engine.table(vt).select(id_col, vec_col)
-    k = int(n_buckets or stats["n_buckets"])
-    bucketed, fitted_C = numpy_kmeans_buckets(
-        corpus, k=k, id_col=id_col, vec_col=vec_col, seed=seed,
-        fit_sample=fit_sample, return_centroids=True,
-    )
-    vectors = bucketed.select(
-        F.col(id_col), F.col(vec_col), F.col("ivf_bucket").cast("int").alias("ivf_bucket")
+    vectors, fitted_C, cent_rows, _ = _coarse_quantize(
+        index_name, engine.table(vt).select(id_col, vec_col), None,
+        int(n_buckets or stats["n_buckets"]), id_col, vec_col, seed, fit_sample,
     )
     if _pqbooks_table(index_name) in engine.tables():
         vectors = _encode_residuals(
-            engine, index_name, vectors,
-            [(b, fitted_C[b]) for b in range(len(fitted_C))], id_col, vec_col,
+            _residuals(engine.spark, vectors, _cent_pairs(fitted_C, cent_rows), vec_col),
+            *_cached_pq_books(engine, index_name), id_col, vec_col,
         )
-    # per-bucket counts come from the replace commit's own staged add
-    # entries (num_rows + ivf_bucket= paths — see build_ivf_index), so
-    # the rebuild's only corpus passes are the fit-sample collect and
-    # the fused reassign+encode+replace job (was: persist the
-    # reassignment, run a counts job, then write)
-    cent_rows = []
-    # the ONE atomic flip: new files + new centroids in one commit
-    engine.overwrite(
-        vt, _bucket_spread(vectors, id_col, len(fitted_C)),
-        partition_by=["ivf_bucket"], expected_paths=expected,
-        commit_meta=_fitted_meta_fn(engine, vt, fitted_C, cent_rows, gen=stamp),
-    )
-    # derived mirror for SQL consumers (resynced above if this
+    # the ONE atomic flip (new files + new centroids in one commit),
+    # then the derived mirror for SQL consumers (resynced above if that
     # second commit is lost to a crash)
-    engine.overwrite(
-        ct,
-        engine.spark.createDataFrame(
-            cent_rows, "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT"
-        ),
-        txn=(rebuild_app, stamp),
+    out = _write_index(
+        engine, index_name, vectors, id_col, fitted_C=fitted_C,
+        cent_rows=cent_rows, gen=stamp, expected_paths=expected,
     )
     return {
         "rebuilt": True,
         "reasons": reasons,
         "stats_before": stats,
-        "n_vectors": sum(r[2] for r in cent_rows),
-        "n_buckets": len(cent_rows),
+        "n_vectors": out["n_vectors"],
+        "n_buckets": out["n_buckets"],
     }

@@ -12,12 +12,12 @@ products once, then every corpus vector scores with ``m`` table lookups
 
 Spark-first mapping:
 - **training** runs seeded numpy Lloyd iterations on a deterministic
-  driver sample (lowest ids) — at billions of vectors codebooks are
-  always trained on a sample; the loop is over m×ks×iters tiny
-  centroids, never the corpus,
-- **encoding** is map-only Column algebra: per subspace the ks squared
-  distances are literal-folded JVM expressions and the code is the
-  argmin index — no Python in the hot path, whole-stage codegen,
+  driver sample (seeded id-hash order) — at billions of vectors
+  codebooks are always trained on a sample; the loop is over
+  m×ks×iters tiny centroids, never the corpus,
+- **encoding** is map-only: one numpy pass per Arrow batch, the code
+  per subspace is ``similarity.nearest_centroids`` (the same chunked
+  kernel the training loop and the IVF assignment use),
 - **scoring** broadcasts the per-query lookup tables as literal arrays
   and sums ``m`` `element_at` lookups per (query, vector) pair — the
   corpus side reads ONLY the code columns (column pruning drops the
@@ -33,6 +33,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from modelardb_rs_spark.operators.similarity import nearest_centroids
 
 
 def train_pq_codebooks(
@@ -107,8 +109,7 @@ def _fit_books(
         else:
             C = books[s].copy()
         for _ in range(iters):
-            d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            assign = d2.argmin(1)
+            assign = nearest_centroids(Xs, C)
             for j in range(len(C)):
                 pts = Xs[assign == j]
                 if len(pts):
@@ -118,17 +119,15 @@ def _fit_books(
 
 
 def _encode_np(X: np.ndarray, books: list[np.ndarray]) -> np.ndarray:
-    """(n, m) int32 codes for float64 rows X — the one argmin-encode
-    routine, shared by the OPQ training loop (driver sample) and the
-    distributed ``encode_pq`` batch function. Ties break to the lowest
-    code (numpy argmin returns the first minimum)."""
+    """(n, m) int32 codes for float64 rows X — the one encode routine,
+    shared by the OPQ training loop (driver sample) and the distributed
+    ``encode_pq`` batch function: ``nearest_centroids`` per subspace,
+    ties to the lowest code."""
     m = len(books)
     sub_d = books[0].shape[1]
     codes = np.empty((len(X), m), dtype=np.int32)
     for s in range(m):
-        S = X[:, s * sub_d : (s + 1) * sub_d]
-        d2 = ((S[:, None, :] - books[s][None, :, :]) ** 2).sum(-1)
-        codes[:, s] = np.argmin(d2, axis=1)
+        codes[:, s] = nearest_centroids(X[:, s * sub_d : (s + 1) * sub_d], books[s])
     return codes
 
 

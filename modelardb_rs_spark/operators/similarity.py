@@ -35,9 +35,11 @@ operational rule, measured):
   (``_bucket_near_pairs_fn``) — candidates never exist as rows; a hot
   bucket distributes EXACTLY via ``max_bucket_rows`` (one task per
   chunk pair, ``_chunk_pair_fn``).
-- **Per-(row, centroid) assignment** (k-means assign, multi-probe):
-  ``_numpy_centroid_assign`` — a mapInPandas batch distance scan with
-  the centroid matrix in the closure.
+- **Per-(row, centroid) assignment** (k-means fit and assign,
+  multi-probe, PQ encode): the chunked numpy kernel
+  ``nearest_centroids`` — on executors inside
+  ``_numpy_centroid_assign``'s mapInPandas batch scan (centroid matrix
+  in the closure), on the driver inside the k-means/PQ fits.
 - **Metadata-sized scoring** (|Q| x n_buckets centroid probes, exact
   re-rank of an |Q| x rerank shortlist): the Column ``cosine``/``dot``
   algebra stays — the pair count is bounded by index metadata, the
@@ -400,20 +402,29 @@ def ivf_topk(
 
 
 def bucket_centroids(corpus: DataFrame, vec_col: str = "embedding", bucket_col: str = "label") -> DataFrame:
-    """Element-wise mean vector per bucket: (bucket_col, centroid
-    float array). One groupBy over the exploded dimensions — this is the
-    index-build half of IVF, persisted by operators/ann_index.py."""
+    """Element-wise mean vector and vector count per bucket:
+    (bucket_col, centroid float array, n_vectors) from ONE groupBy over
+    the exploded dimensions — the index-build half of IVF, persisted by
+    operators/ann_index.py. The count rides the per-(bucket, dim)
+    aggregate (each dim-0 element counts its vector): identical to
+    count(*) for the fixed-dimension non-null vectors the centroid math
+    itself assumes (a zero-length array contributes to neither), and
+    pruned from the plan by consumers that read only the centroid."""
     exploded = corpus.select(
         F.col(bucket_col), F.posexplode(F.col(vec_col)).alias("__i__", "__x__")
     )
     return (
         exploded.groupBy(bucket_col, "__i__")
-        .agg(F.avg("__x__").alias("__m__"))
+        .agg(F.avg("__x__").alias("__m__"), F.count("*").alias("__c__"))
         .groupBy(bucket_col)
-        .agg(F.array_sort(F.collect_list(F.struct("__i__", "__m__"))).alias("__s__"))
+        .agg(
+            F.array_sort(F.collect_list(F.struct("__i__", "__m__"))).alias("__s__"),
+            F.max("__c__").alias("n_vectors"),
+        )
         .select(
             F.col(bucket_col),
             F.transform(F.col("__s__"), lambda s: s["__m__"].cast("float")).alias("centroid"),
+            "n_vectors",
         )
     )
 
@@ -532,6 +543,35 @@ def kmeans_buckets(
     return model.transform(with_vec).drop("__mlvec__")
 
 
+def nearest_centroids(X, C, n: int = 1):
+    """Indices of the ``n`` nearest rows of the centroid matrix ``C``
+    (k x dim) for every row of ``X`` (N x dim), by squared Euclidean
+    distance — THE nearest-centroid kernel: k-means assignment (coarse
+    and per-subspace), PQ encoding and the map-side bucket assignment
+    all call it. ``n == 1`` returns shape (N,), larger ``n`` (N, n) in
+    nearest-first order. Ties go to the lowest centroid index
+    (``argmin`` returns the first minimum; the stable argsort keeps
+    index order among equal distances — the two agree on finite input).
+
+    Row-chunked so the in-flight chunk x k x dim difference tensor
+    stays at ~32 MB at any N/k/dim; the distance of each (row,
+    centroid) pair does not depend on the chunking, so results are
+    identical to the one-shot N x k x dim form."""
+    import numpy as np
+
+    k, dim = C.shape
+    chunk = max(1, (1 << 22) // max(k * dim, 1))
+    out = np.empty((len(X), n) if n > 1 else len(X), dtype=np.intp)
+    for s in range(0, len(X), chunk):
+        Xc = X[s : s + chunk]
+        d2 = ((Xc[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+        out[s : s + chunk] = (
+            d2.argmin(1) if n == 1
+            else np.argsort(d2, axis=1, kind="stable")[:, :n]
+        )
+    return out
+
+
 def _numpy_centroid_assign(
     corpus: DataFrame,
     centroids,
@@ -540,13 +580,11 @@ def _numpy_centroid_assign(
 ) -> DataFrame:
     """Corpus + ``ivf_bucket`` via MAP-ONLY nearest-centroid assignment
     (one row per probed bucket when ``nprobe > 1``): a ``mapInPandas``
-    pass scores each Arrow batch against the k x dim centroid matrix in
-    numpy — squared Euclidean, ties by bucket id (stable argsort over
-    centroids stored in bucket order) — and emits the ``nprobe``
-    nearest. No shuffle, no window, no N x k intermediate ever leaves
-    the batch; the centroid matrix rides the UDF closure (metadata-
-    sized). The row-chunked distance computation caps the in-flight
-    chunk x k x dim difference tensor at ~32 MB at any k/dim.
+    pass runs ``nearest_centroids`` on each Arrow batch against the
+    k x dim centroid matrix (ties by bucket id — centroids are stored in
+    bucket order) and emits the ``nprobe`` nearest. No shuffle, no
+    window, no N x k intermediate ever leaves the batch; the centroid
+    matrix rides the UDF closure (metadata-sized).
 
     Vectorized numpy ON PURPOSE, measured against two Column-algebra
     shapes at 50k rows / k=100 / dim=64 (SCALE.md "Round-9"): a
@@ -562,26 +600,18 @@ def _numpy_centroid_assign(
     from pyspark.sql import types as T
 
     C = np.asarray(centroids, dtype=np.float64)
-    k = len(C)
-    nprobe = min(int(nprobe), k)
-    dim = C.shape[1] if k else 0
+    nprobe = min(int(nprobe), len(C))
     out_schema = T.StructType(
         list(corpus.schema.fields)
         + [T.StructField("ivf_bucket", T.IntegerType(), False)]
     )
-    chunk = max(1, (1 << 22) // max(k * dim, 1))
 
     def assign(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            tops = []
-            for s in range(0, len(X), chunk):
-                d2 = ((X[s : s + chunk, None, :] - C[None, :, :]) ** 2).sum(-1)
-                # stable sort on d2: equal distances keep bucket order
-                tops.append(np.argsort(d2, axis=1, kind="stable")[:, :nprobe])
-            top = np.concatenate(tops)
+            top = nearest_centroids(X, C, nprobe)
             out = pdf.iloc[np.repeat(np.arange(len(pdf)), nprobe)].reset_index(
                 drop=True
             )
@@ -616,7 +646,9 @@ def numpy_kmeans_buckets(
     paying ~10 MLlib jobs of pure scheduling overhead (measured in
     TESTDATA.md's per-entry runtimes, round-9). Driver memory is
     ``fit_sample x dim x 8`` bytes (65536 x 64-dim = 33 MB; at dim
-    4096 drop ``fit_sample`` to ~8192 or use ``kmeans_buckets``).
+    4096 drop ``fit_sample`` to ~8192 or use ``kmeans_buckets``) plus
+    one <= 32 MB ``nearest_centroids`` chunk per Lloyd step — the fit
+    is ``pq._fit_books`` with a single subspace.
     ``return_centroids=True`` also returns the fitted k x dim float64
     centroid matrix so index builds can store the quantizer centroids
     directly (the FAISS convention) instead of re-scanning the corpus
@@ -629,22 +661,18 @@ def numpy_kmeans_buckets(
     of paying a second full-corpus TopK collect."""
     import numpy as np
 
+    from modelardb_rs_spark.operators.pq import _fit_books
+
     rows = (
         corpus.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
         .limit(int(fit_sample))
         .collect()
     )
+    if not rows:
+        raise ValueError("numpy_kmeans_buckets: the corpus is empty, nothing to fit")
     X = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-        assign = d2.argmin(1)
-        for j in range(len(C)):
-            pts = X[assign == j]
-            if len(pts):
-                C[j] = pts.mean(0)
+    C = _fit_books(X, 1, k, iters, np.random.default_rng(seed))[0]
     assigned = _numpy_centroid_assign(corpus, C, vec_col, nprobe=1)
     if return_centroids and return_sample:
         return assigned, C, X

@@ -1186,41 +1186,112 @@ def test_crashed_legacy_rebuild_still_heals_by_rebuilding(engine, emb):
 
 def test_driver_side_codebook_sample_matches_spark_sample(engine, emb):
     """The IVF-PQ build derives its PQ/OPQ training residuals from the
-    coarse-fit sample DRIVER-SIDE (round 14): the derivation — hash-
-    order prefix, _numpy_centroid_assign replay, float32 residual
-    subtraction — must be BIT-IDENTICAL to pq._driver_sample over the
-    distributed residual frame, or the trained books (and every stored
-    code) would silently diverge from the former Spark-sample path."""
+    coarse-fit sample DRIVER-SIDE (``ann_index._residual_sample``: hash-
+    order prefix, ``nearest_centroids`` assignment, float32 residual
+    subtraction) — it must be BIT-IDENTICAL to pq._driver_sample over
+    the build's distributed residual frame, or the trained books (and
+    every stored code) would silently diverge from the Spark-sample
+    path."""
     import numpy as np
 
     from modelardb_rs_spark.operators import pq as pq_ops
-    from modelardb_rs_spark.operators.similarity import numpy_kmeans_buckets
 
-    bucketed, C, X = numpy_kmeans_buckets(
-        emb, k=4, fit_sample=65536, return_centroids=True, return_sample=True
+    vectors, C, _, X = ann_index._coarse_quantize(
+        "replay", emb, None, 4, "vec_id", "embedding", 42, 65536
     )
-    vectors = bucketed.select(
-        "vec_id", "embedding", F.col("ivf_bucket").cast("int").alias("ivf_bucket")
-    )
-    cent_pairs = [(b, [float(x) for x in C[b]]) for b in range(len(C))]
-    cent_df = emb.sparkSession.createDataFrame(
-        cent_pairs, "ivf_bucket INT, __c__ ARRAY<FLOAT>"
-    )
-    resid = vectors.join(F.broadcast(cent_df), "ivf_bucket").withColumn(
-        "__resid__",
-        F.zip_with(F.col("embedding"), F.col("__c__"), lambda x, y: (x - y).cast("float")),
+    resid = ann_index._residuals(
+        emb.sparkSession, vectors, ann_index._cent_pairs(C, None), "embedding"
     )
     spark_sample = pq_ops._driver_sample(resid, "vec_id", "__resid__", 4096, 42)
-    # the build's driver-side replay
-    Xs = X[:4096]
-    C64 = np.asarray(C, dtype=np.float64)
-    d2 = ((Xs[:, None, :] - C64[None, :, :]) ** 2).sum(-1)
-    assign = np.argsort(d2, axis=1, kind="stable")[:, 0]
-    derived = (Xs.astype(np.float32) - C64.astype(np.float32)[assign]).astype(
-        np.float64
-    )
+    derived = ann_index._residual_sample(X, C, 4096, 65536)
     assert spark_sample.shape == derived.shape
     assert np.array_equal(spark_sample, derived)
+
+
+def _nearest_reference(X, C, n):
+    """The unchunked N x k x dim form every kernel copy used to inline."""
+    import numpy as np
+
+    d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1)
+    return np.argsort(d2, axis=1, kind="stable")[:, :n]
+
+
+@pytest.mark.parametrize("n", [1, 3])
+def test_nearest_centroids_matches_unchunked_reference(n):
+    """The chunked kernel equals the one-shot reference, with exact ties
+    (duplicate centroids) going to the lowest index, for row counts on
+    both sides of a chunk boundary."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    base = rng.normal(size=(128, 64))
+    C = np.concatenate([base, base[:32]])  # rows 128.. duplicate 0..31
+    chunk = (1 << 22) // C.size  # rows per chunk at this k x dim
+    for rows in (chunk - 1, chunk, chunk + 1, 2 * chunk + 3):
+        # rows sitting exactly on duplicated centroids tie at distance 0
+        X = np.concatenate([C[128:], rng.normal(size=(rows - 32, 64))])
+        got = similarity.nearest_centroids(X, C, n)
+        ref = _nearest_reference(X, C, n)
+        assert np.array_equal(got, ref[:, 0] if n == 1 else ref)
+    assert np.array_equal(similarity.nearest_centroids(C[128:], C), np.arange(32))
+
+
+def test_nearest_centroids_memory_is_chunk_bounded():
+    """2048 x 256 rows against 256 x 256 centroids: the unchunked
+    difference tensor would be 1.07 GB; the kernel stays near its
+    ~32 MB chunk."""
+    import tracemalloc
+
+    import numpy as np
+
+    rng = np.random.default_rng(0)
+    X, C = rng.normal(size=(2048, 256)), rng.normal(size=(256, 256))
+    tracemalloc.start()
+    try:
+        similarity.nearest_centroids(X, C)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 128 << 20
+
+
+@pytest.mark.parametrize("builder", ["build_ivf_index", "build_ivfpq_index"])
+def test_empty_corpus_build_names_the_index(engine, emb, builder):
+    """A sampled k-means build over an empty corpus fails with a clear
+    ValueError naming the index, not an IndexError from inside numpy."""
+    with pytest.raises(ValueError, match="'emptyidx'.*empty"):
+        getattr(ann_index, builder)(
+            engine, "emptyidx", emb.where("vec_id < 0"), bucket_col=None, n_buckets=4
+        )
+
+
+def test_ivfpq_label_build_stores_ivf_centroid_meta(engine, emb):
+    """The bucket_col IVF-PQ build takes its centroids AND counts from
+    the same fused aggregate as the IVF build: identical stored meta."""
+    ann_index.build_ivf_index(engine, "lab_ivf", emb, bucket_col="label")
+    ann_index.build_ivfpq_index(engine, "lab_pq", emb, bucket_col="label", m=8, ks=16)
+
+    def meta(name):
+        cents = engine.folder.log(f"{name}__vectors").snapshot().meta["ann_centroids"]
+        return sorted(map(repr, cents))
+
+    assert meta("lab_pq") == meta("lab_ivf")
+    assert sum(n for _, _, n in engine.folder.log(
+        "lab_pq__vectors").snapshot().meta["ann_centroids"]) == emb.count()
+
+
+def test_ivf_build_over_ivfpq_index_drops_its_books(engine, emb):
+    """Rebuilding a name that held an IVF-PQ index as plain IVF must not
+    leave the old books behind: appends would otherwise PQ-encode into a
+    vectors table without code columns."""
+    ann_index.build_ivfpq_index(engine, "swap", emb, bucket_col="label", m=8, ks=16)
+    ann_index.build_ivf_index(engine, "swap", emb, bucket_col="label")
+    assert "swap__pqbooks" not in engine.tables()
+    out = ann_index.append_to_ivf_index(
+        engine, "swap", emb.where("vec_id < 5").withColumn(
+            "vec_id", F.col("vec_id") + 100000)
+    )
+    assert out["appended"] == 5
 
 
 def test_fitted_counts_fallback_reads_staged_files_only(engine, emb, monkeypatch, caplog):
