@@ -2275,11 +2275,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ composition over the persisted index (the FAISS IndexIVFPQ
     shape, Jegou/Douze/Schmid TPAMI 2011 SV): coarse-assign vectors to
     IVF buckets, product-quantize the RESIDUALS, and answer queries by
-    ADC-scanning ONLY the nprobe probed buckets' code columns
-    (planning-time partition pruning + column pruning drop every other
-    bucket and the raw vectors; plan-asserted in tests/test_ann_index
-    .py), then exact re-rank of a 50-candidate shortlist. The flat
-    pq_topk scan shrinks by n_buckets/nprobe. Seeded build; recall
+    ADC-scanning ONLY the nprobe probed buckets (planning-time partition
+    pruning drops every other bucket; plan-asserted in tests/test_ann_
+    index.py), then exact re-rank of a 50-candidate shortlist from the
+    SAME scan's raw vectors (column pruning drops them only without
+    rerank; the one-scan plan is asserted in tests/test_plans.py). The
+    flat pq_topk scan shrinks by n_buckets/nprobe. Seeded build; recall
     floors vs brute force."""
     import fcntl
 

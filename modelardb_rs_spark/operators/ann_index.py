@@ -657,7 +657,8 @@ def build_ivfpq_index(
     Hive-partitioned by ``ivf_bucket``, raw vectors kept for exact
     re-rank), plus a tiny ``<index>__pqbooks`` table — so
     ``ivf_index_topk`` (exact-within-probed-buckets) keeps working on
-    an IVF-PQ index unchanged, and ``ivfpq_topk`` reads codes only.
+    an IVF-PQ index unchanged, and ``ivfpq_topk`` without ``rerank``
+    reads codes only.
     Residual encoding beats raw-vector PQ on recall because residuals
     concentrate near zero once the bucket centroid is subtracted.
 
@@ -791,27 +792,25 @@ def ivfpq_topk(
     query-only m x ks lookup table plus a per-(query, bucket) scalar
     q.c_b — valid because q.(c_b + r) = q.c_b + q.r. The union of
     probed buckets becomes a static IN-filter on the partitioned
-    vectors table (planning-time partition pruning, plan-asserted),
-    the per-query restriction is a broadcast equi-join on
-    ``ivf_bucket``, and scoring reads ONLY (id, bucket, codes, norm) —
-    column pruning drops the raw vectors. ``rerank=N`` re-ranks an
-    N-candidate shortlist with true cosine, reading raw vectors for
-    |Q| x N rows out of the probed partitions only. The query-set
-    collect is bounded by ``max_queries`` (default
+    vectors table (planning-time partition pruning, plan-asserted), and
+    ``pq.adc_topk`` scores that ONE scan: the tables and scalars ride
+    its closure (|Q| x (m x ks + dim + nprobe) doubles), each query
+    scores only its own buckets' rows, and the scan reads (id, bucket,
+    codes, norm) — column pruning drops the raw vectors. ``rerank=N``
+    re-ranks an N-candidate shortlist with true cosine: the same scan
+    then also reads the raw vectors, and each task computes exact
+    cosine only for its ADC survivors (at most N + ties per query).
+    ``queries`` is evaluated once, by the query-set collect, which is
+    bounded by ``max_queries`` (default
     ``similarity.MAX_COLLECTED_QUERIES``; over-limit raises — use
     ``ivf_index_topk`` for large query tables)."""
     import numpy as np
 
     from modelardb_rs_spark.operators import pq as pq_ops
-    from modelardb_rs_spark.operators.similarity import (
-        collect_query_rows,
-        dot,
-        norm,
-        ranked_topk,
-    )
+    from modelardb_rs_spark.operators.similarity import collect_query_rows
 
     books, rotation = _cached_pq_books(engine, index_name)
-    # one snapshot resolution serves centroids AND both vector scans:
+    # one snapshot resolution serves centroids AND the vector scan:
     # snapshot-atomic under concurrent rebuilds (codes are re-encoded
     # against each rebuild's centroids, so a torn pair would score ADC
     # against the wrong geometry; books are immutable across rebuilds
@@ -823,83 +822,27 @@ def ivfpq_topk(
         for b, c, _ in _centroid_rows(engine, index_name, snap=vt_snap)
     }
     qrows = collect_query_rows(queries, id_col, vec_col, max_queries)
-    lut_rows = []
+    probes = []
     for r in qrows:
         qv = np.asarray(list(r[1]), dtype=np.float64)
-        qn = float(np.sqrt((qv**2).sum()))
-        # OPQ index: codes quantize r @ R, so the residual LUT reads
-        # the ROTATED query — the bucket scalar q.c_b and the bucket
-        # probe order stay in the original space
-        lut = pq_ops.query_lut(books, qv @ rotation if rotation is not None else qv)
+        # the bucket scalar q.c_b and the probe order use the original
+        # space; adc_topk rotates the query for the residual LUT of an
+        # OPQ index
         sims = sorted(
             (
                 (-(qv @ c) / (np.sqrt((c**2).sum()) or 1.0), b)
                 for b, c in cents.items()
             )
         )[:nprobe]
-        for _, b in sims:
-            lut_rows.append((int(r[0]), b, float(qv @ cents[b]), qn, lut))
-    luts = engine.spark.createDataFrame(
-        lut_rows,
-        "query_id long, ivf_bucket int, __qdotc__ double, __qn__ double, "
-        "__lut__ array<double>",
+        pb = sorted(b for _, b in sims)
+        probes.append((np.array(pb), np.array([float(qv @ cents[b]) for b in pb])))
+    probed = sorted({b for pb, _ in probes for b in pb.tolist()})
+    scan = engine.table(vt, version=vt_snap.version).where(
+        F.col("ivf_bucket").isin(probed)
     )
-    probed = sorted({b for _, b, *_ in lut_rows})
-    codes = (
-        engine.table(vt, version=vt_snap.version)
-        .where(F.col("ivf_bucket").isin(probed))
-        .select(
-            F.col(id_col).alias("neighbor_id"), "ivf_bucket", "pq_codes", "pq_norm"
-        )
+    return pq_ops.adc_topk(
+        scan, books, qrows, k, rerank, id_col, vec_col, rotation, probes
     )
-    ip = F.col("__qdotc__") + pq_ops.adc_inner_product(books)
-    scored = (
-        codes.join(F.broadcast(luts), "ivf_bucket")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            F.round(
-                F.try_divide(
-                    ip,
-                    F.col("__qn__") * F.greatest(F.col("pq_norm"), F.lit(1e-12)),
-                ),
-                6,
-            ),
-        )
-    )
-    shortlist = ranked_topk(scored, rerank or k)
-    if rerank is None:
-        return shortlist
-    qv_df = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv__"),
-        norm(F.col(vec_col)).alias("__qn2__"),
-    )
-    cv = (
-        engine.table(vt, version=vt_snap.version)
-        .where(F.col("ivf_bucket").isin(probed))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cv__"),
-            norm(F.col(vec_col)).alias("__cn2__"),
-        )
-    )
-    exact = (
-        shortlist.select("query_id", "neighbor_id")
-        .join(F.broadcast(qv_df), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.round(
-                F.try_divide(
-                    dot(F.col("__qv__"), F.col("__cv__")),
-                    F.col("__qn2__") * F.col("__cn2__"),
-                ),
-                6,
-            ),
-        )
-    )
-    return ranked_topk(exact, k)
 
 
 def ivf_index_topk(
@@ -1060,7 +1003,7 @@ def semantic_dedup_check(
     (m bytes/vector instead of dim x 4 — column pruning drops the raw
     vectors, so gate I/O shrinks by ~dim*4/m), keeps the top-``s`` ADC
     candidates per query, and exact-re-ranks only that |batch| x s
-    shortlist against raw vectors (the ``ivfpq_topk`` rerank shape).
+    shortlist against raw vectors (ADC shortlist, then exact cosine).
     Approximate exactly as ADC is: a true near-dup can fall outside
     the ADC top-``s`` (raise ``s``; recall is floored in tests). The
     within-batch block stays exact — it uses the batch's own raw
@@ -1408,9 +1351,8 @@ def semantic_dedup_check(
             .where(F.col("__r__") <= s_short)
             .select("__qid__", "dup_of")
         )
-        # exact re-rank of the |batch| x s shortlist (the ivfpq_topk
-        # rerank shape): raw vectors are read for shortlisted rows out
-        # of the probed partitions only
+        # exact re-rank of the |batch| x s shortlist: raw vectors are
+        # joined for shortlisted rows out of the probed partitions only
         cv = (
             engine.table(vt, version=snap.version)
             .where(F.col("ivf_bucket").isin(probed_buckets))

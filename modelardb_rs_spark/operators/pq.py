@@ -18,10 +18,13 @@ Spark-first mapping:
 - **encoding** is map-only: one numpy pass per Arrow batch, the code
   per subspace is ``similarity.nearest_centroids`` (the same chunked
   kernel the training loop and the IVF assignment use),
-- **scoring** broadcasts the per-query lookup tables as literal arrays
-  and sums ``m`` `element_at` lookups per (query, vector) pair — the
-  corpus side reads ONLY the code columns (column pruning drops the
-  raw embeddings entirely), then one window ranks top-k per query.
+- **scoring** is ONE numpy pass over the codes (``adc_topk``, shared by
+  the flat and the IVF-PQ probe): the per-query lookup tables ride the
+  ``mapInArrow`` closure, each (query, vector) pair costs ``m`` table
+  lookups, each task forwards only its shortlist survivors, and the
+  same scan feeds the optional exact re-rank — without ``rerank`` it
+  reads ONLY the code columns (column pruning drops the raw embeddings
+  entirely). Two JVM windows finish the ranks.
 
 Recall < 1 by construction; `sim_pq_topk` validates recall floors
 against ``brute_force_topk`` with a fixed seed, mirroring the IVF/LSH
@@ -367,20 +370,6 @@ def query_lut(books: list[np.ndarray], qv: np.ndarray) -> list[float]:
     ]
 
 
-def adc_inner_product(books: list[np.ndarray]) -> "F.Column":
-    """Column: sum of the m LUT lookups selected by ``pq_codes`` —
-    expects ``__lut__`` (array<double>, from query_lut) and
-    ``pq_codes`` in scope."""
-    m = len(books)
-    ks = books[0].shape[0]
-    ip = F.lit(0.0)
-    for s in range(m):
-        ip = ip + F.element_at(
-            F.col("__lut__"), F.lit(s * ks) + F.element_at("pq_codes", s + 1) + 1
-        )
-    return ip
-
-
 def pq_topk(
     encoded: DataFrame,
     books: list[np.ndarray],
@@ -397,18 +386,19 @@ def pq_topk(
     Queries collect driver-side (few — the broadcast-queries shape of
     brute_force_topk), bounded by ``max_queries`` (default
     ``similarity.MAX_COLLECTED_QUERIES``; over-limit raises — see
-    ``collect_query_rows``); each gets an m×ks inner-product lookup
-    table shipped as one literal array. The corpus side reads ONLY
-    (id, pq_codes, pq_norm): scoring is m `element_at` lookups per
-    pair, then one per-query window ranks. Output matches
+    ``collect_query_rows``). ``queries`` is evaluated once, by that
+    collect, and ``encoded`` is scanned once, by ``adc_topk``: the
+    per-query m×ks lookup tables ride the kernel's closure, and the
+    scan reads (id, pq_codes, pq_norm) only. Output matches
     brute_force_topk: (query_id, neighbor_id, cos, rank) with cos the
     PQ-approximated cosine.
 
     ``rerank=N`` adds the standard exact re-ranking stage (FAISS's
     refine step): ADC selects an N-candidate shortlist per query, then
-    TRUE cosine ranks only those N rows — the raw vectors are read for
-    |Q|·N rows instead of the whole corpus, trading a sliver of I/O for
-    near-exact recall.
+    TRUE cosine ranks only those N rows. The same scan then also reads
+    the raw vectors, but exact cosine is computed only for each task's
+    ADC survivors (at most N + ties per query), never for the whole
+    corpus.
 
     ``rotate=R`` scores an OPQ index (codes from
     ``encode_pq(..., rotate=R)``): each query rotates driver-side
@@ -419,71 +409,217 @@ def pq_topk(
     from modelardb_rs_spark.operators.similarity import collect_query_rows
 
     qrows = collect_query_rows(queries, id_col, vec_col, max_queries)
-    spark = encoded.sparkSession
-    R64 = None if rotate is None else np.asarray(rotate, dtype=np.float64)
-    lut_rows = []
-    for r in qrows:
-        qv = np.asarray(list(r[1]), dtype=np.float64)
-        qn = float(np.sqrt((qv**2).sum()))
-        if R64 is not None:
-            qv = qv @ R64
-        lut_rows.append((int(r[0]), qn, query_lut(books, qv)))
-    luts = spark.createDataFrame(
-        lut_rows, "query_id long, __qn__ double, __lut__ array<double>"
-    )
-    c = encoded.select(
-        F.col(id_col).alias("neighbor_id"), "pq_codes", "pq_norm"
-    )
-    ip = adc_inner_product(books)
-    scored = (
-        c.crossJoin(F.broadcast(luts))
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cos",
-            # try_divide: a zero-norm query yields NULL, which ranked_topk
-            # drops — the shared degenerate-vector policy (and ANSI mode
-            # would otherwise throw DIVIDE_BY_ZERO)
-            F.round(
-                F.try_divide(
-                    ip, F.col("__qn__") * F.greatest(F.col("pq_norm"), F.lit(1e-12))
-                ),
-                6,
-            ),
-        )
-    )
+    return adc_topk(encoded, books, qrows, k, rerank, id_col, vec_col, rotate)
+
+
+def adc_topk(
+    scan: DataFrame,
+    books: list[np.ndarray],
+    qrows: list,
+    k: int,
+    rerank: int | None,
+    id_col: str,
+    vec_col: str,
+    rotate: np.ndarray | None = None,
+    probes: list[tuple[np.ndarray, np.ndarray]] | None = None,
+) -> DataFrame:
+    """The one ADC probe kernel behind ``pq_topk`` and
+    ``ann_index.ivfpq_topk``: top-k by ADC cosine over ``scan`` (id,
+    ``pq_codes``, ``pq_norm``) for the collected ``qrows``, exact
+    re-ranked when ``rerank`` is set. ``probes`` (IVF-PQ) gives each
+    query its sorted probed buckets and the bucket scalars q·c_b: the
+    query scores only rows of those buckets (``scan`` then carries
+    ``ivf_bucket``), adding q·c_b to the residual ADC.
+
+    One ``mapInArrow`` pass over ``scan``; the per-query LUTs, query
+    vectors and bucket scalars ride the closure, |Q|·(m·ks + dim +
+    nprobe) doubles, bounded by the ``max_queries`` collect. Per Arrow
+    batch and query the kernel computes the ADC scores, keeps the
+    task's survivors — every row whose raw ADC is at least the N-th
+    largest minus 2e-6 (N = ``rerank or k``), so a tie after the
+    6-digit rounding at the shortlist boundary is never lost; a task
+    holds at most N + ties per query — and computes exact cosine for
+    new survivors only, from the raw-vector column of the same scan
+    (read only when ``rerank`` is set). It emits narrow (query_id,
+    neighbor_id, adc, exact) rows; both ranks finish in the JVM
+    through ``similarity.ranked_topk``.
+
+    Values match the Column algebra of the SQL mirrors bit for bit: ADC
+    sums ``((0.0 + lut[s0]) + lut[s1]) + …`` (plus q·c_b), divided by
+    ``qn * max(pq_norm, 1e-12)``; exact cosine sums float64 products
+    left to right like ``similarity.dot``/``norm``; rounding to 6
+    digits happens in the JVM. A zero denominator (``try_divide``'s
+    NULL) and NaN rows are dropped, as ``ranked_topk`` would."""
+    import pyarrow as pa
+
+    from pyspark.sql import types as T
+
     from modelardb_rs_spark.operators.similarity import ranked_topk
 
-    # corpus-sized scored set: ranked_topk plans as a two-phase rank
-    # limit (partial map-side top-k, tiny exchange) — see its docstring
-    shortlist = ranked_topk(scored, rerank or k)
-    if rerank is None:
-        return shortlist
-    # exact re-rank of the shortlist only: |Q|·rerank raw-vector rows
-    from modelardb_rs_spark.operators.similarity import dot, norm
+    R64 = None if rotate is None else np.asarray(rotate, dtype=np.float64)
+    n_keep = rerank or k
+    with_exact = rerank is not None
+    m = len(books)
+    ks = books[0].shape[0]
+    qids = [int(r[0]) for r in qrows]
+    qvs = [np.asarray(list(r[1]), dtype=np.float64) for r in qrows]
+    qns = [float(np.sqrt((qv**2).sum())) for qv in qvs]
+    luts = [
+        np.asarray(query_lut(books, qv if R64 is None else qv @ R64)) for qv in qvs
+    ]
+    exact_q = (
+        [(qv, float(np.sqrt(_seq_dot(qv[None, :], qv)[0]))) for qv in qvs]
+        if with_exact
+        else None
+    )
+    cols = [id_col, "pq_codes", "pq_norm"]
+    if probes is not None:
+        cols.append("ivf_bucket")
+    if with_exact:
+        cols.append(vec_col)
+    src = scan.select(*cols)
+    fields = [
+        T.StructField("query_id", T.LongType()),
+        T.StructField("neighbor_id", src.schema[id_col].dataType),
+        T.StructField("adc", T.DoubleType()),
+    ]
+    if with_exact:
+        fields.append(T.StructField("exact", T.DoubleType()))
 
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv__"),
-        norm(F.col(vec_col)).alias("__qn2__"),
+    def fn(batches):
+        empty = (np.empty(0, np.int64), np.empty(0), np.empty(0))
+        held = [empty] * len(qids)
+        id_type = None
+        for batch in batches:
+            n = batch.num_rows
+            if not n:
+                continue
+            id_arr = batch.column(0)
+            id_type = id_arr.type
+            live = ~id_arr.is_null().to_numpy(zero_copy_only=False)
+            ids = id_arr.fill_null(0).to_numpy().astype(np.int64, copy=False)
+            codes = batch.column(1).flatten().to_numpy().reshape(n, m)
+            norms = batch.column(2).to_numpy(zero_copy_only=False)
+            if probes is not None:
+                buckets = batch.column(3).to_numpy(zero_copy_only=False)
+            for j, qid in enumerate(qids):
+                sel = live & (ids != qid)
+                bucket_dot = None
+                if probes is not None:
+                    pb, pdot = probes[j]
+                    sel &= np.isin(buckets, pb)
+                    bucket_dot = pdot[np.searchsorted(pb, buckets[sel])]
+                rows = np.flatnonzero(sel)
+                if not len(rows):
+                    continue
+                adc = _adc_cosine(codes[rows], norms[rows], luts[j], ks, qns[j], bucket_dot)
+                good = ~np.isnan(adc)
+                rows, adc = rows[good], adc[good]
+                h_id, h_adc, h_ex = held[j]
+                t = _keep_threshold(np.concatenate([h_adc, adc]), n_keep)
+                keep = h_adc >= t
+                h_id, h_adc, h_ex = h_id[keep], h_adc[keep], h_ex[keep]
+                keep = adc >= t
+                rows, adc = rows[keep], adc[keep]
+                ex = (
+                    _exact_cosine(batch.column(len(cols) - 1), rows, *exact_q[j])
+                    if with_exact
+                    else np.empty(len(rows))
+                )
+                held[j] = (
+                    np.concatenate([h_id, ids[rows]]),
+                    np.concatenate([h_adc, adc]),
+                    np.concatenate([h_ex, ex]),
+                )
+        if id_type is None:
+            return
+        sizes = [len(h[0]) for h in held]
+        out = [
+            pa.array(np.repeat(np.asarray(qids, dtype=np.int64), sizes)),
+            pa.array(np.concatenate([h[0] for h in held])).cast(id_type),
+            pa.array(np.concatenate([h[1] for h in held])),
+        ]
+        if with_exact:
+            out.append(pa.array(np.concatenate([h[2] for h in held])))
+        yield pa.RecordBatch.from_arrays(out, names=[f.name for f in fields])
+
+    scored = src.mapInArrow(fn, T.StructType(fields)).withColumn(
+        "cos", F.round("adc", 6)
     )
-    cv = encoded.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv__"),
-        norm(F.col(vec_col)).alias("__cn2__"),
+    if not with_exact:
+        return ranked_topk(scored, k)
+    # the exact score rides the shortlist rank inside the id column:
+    # struct order compares neighbor_id first, so the rank is unchanged
+    shortlist = ranked_topk(
+        scored.select("query_id", F.struct("neighbor_id", "exact").alias("__nb__"), "cos"),
+        n_keep,
+        id_col="__nb__",
     )
-    exact = (
-        shortlist.select("query_id", "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cos",
-            F.round(
-                F.try_divide(
-                    dot(F.col("__qv__"), F.col("__cv__")),
-                    F.col("__qn2__") * F.col("__cn2__"),
-                ),
-                6,
-            ),
+    return ranked_topk(
+        shortlist.select(
+            "query_id",
+            F.col("__nb__.neighbor_id").alias("neighbor_id"),
+            F.round("__nb__.exact", 6).alias("cos"),
+        ),
+        k,
+    )
+
+
+def _adc_cosine(codes, norms, lut, ks: int, qn: float, bucket_dot=None) -> np.ndarray:
+    """Raw ADC cosine of (n, m) code rows: ``((0.0 + lut[s0]) + lut[s1])
+    + …`` plus the bucket scalar q·c_b when given, over ``qn *
+    max(pq_norm, 1e-12)`` — the Column algebra's order. NaN where the
+    denominator is 0 (``try_divide``'s NULL)."""
+    ip = np.zeros(len(codes))
+    for s in range(codes.shape[1]):
+        ip += lut[s * ks + codes[:, s]]
+    if bucket_dot is not None:
+        ip += bucket_dot
+    den = qn * np.maximum(norms, 1e-12)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den != 0, ip / den, np.nan)
+
+
+def _keep_threshold(adc: np.ndarray, n_keep: int) -> float:
+    """Lowest raw ADC that can still reach the top ``n_keep`` once
+    scores are rounded to 6 digits: the n_keep-th largest minus 2e-6.
+    Rounding moves a value by at most 5e-7, so a row that rounds equal
+    to the n_keep-th lies within 1e-6 of it and is kept; every dropped
+    row is beaten by n_keep rows on its rounded score."""
+    if len(adc) <= n_keep:
+        return -np.inf
+    return np.partition(adc, len(adc) - n_keep)[len(adc) - n_keep] - 2e-6
+
+
+def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise float64 dot of A with B (same shape, or one vector),
+    summed left to right over the columns — ``similarity.dot``'s
+    ``aggregate`` order, so the values match it bit for bit (numpy's
+    pairwise ``sum`` would not)."""
+    acc = np.zeros(len(A))
+    for d in range(A.shape[1]):
+        acc += A[:, d] * B[..., d]
+    return acc
+
+
+def _exact_cosine(vec_arr, rows: np.ndarray, qv: np.ndarray, qn: float) -> np.ndarray:
+    """Exact cosine of the raw vectors at ``rows`` of an Arrow list
+    column against query ``qv`` (exact norm ``qn``): NaN for a NULL,
+    wrong-length or zero-norm vector, which ``ranked_topk`` drops like
+    the NULL of ``try_divide``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sub = vec_arr.take(pa.array(rows))
+    dim = len(qv)
+    ok = pc.list_value_length(sub).fill_null(-1).to_numpy() == dim
+    V = np.zeros((len(rows), dim))
+    if ok.any():
+        V[ok] = (
+            sub.filter(pa.array(ok)).flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
         )
-    )
-    return ranked_topk(exact, k)
+    den = qn * np.sqrt(_seq_dot(V, V))
+    out = np.full(len(rows), np.nan)
+    good = ok & (den != 0)
+    out[good] = _seq_dot(V[good], qv) / den[good]
+    return out

@@ -40,11 +40,14 @@ operational rule, measured):
   ``nearest_centroids`` — on executors inside
   ``_numpy_centroid_assign``'s mapInPandas batch scan (centroid matrix
   in the closure), on the driver inside the k-means/PQ fits.
-- **Metadata-sized scoring** (|Q| x n_buckets centroid probes, exact
-  re-rank of an |Q| x rerank shortlist): the Column ``cosine``/``dot``
-  algebra stays — the pair count is bounded by index metadata, the
-  interpreted cost is invisible, and the expression doubles as the
-  SQL-oracle mirror.
+- **Metadata-sized scoring** (|Q| x n_buckets centroid probes): the
+  Column ``cosine``/``dot`` algebra stays — the pair count is bounded
+  by index metadata, the interpreted cost is invisible, and the
+  expression doubles as the SQL-oracle mirror.
+- **PQ probes** (ADC scoring and the exact re-rank of its shortlist):
+  the numpy kernel ``pq.adc_topk``, one ``mapInArrow`` pass over the
+  scanned codes and vectors, summing in this module's ``dot`` order so
+  values match the Column algebra bit for bit.
 """
 
 from __future__ import annotations
@@ -164,10 +167,11 @@ def collect_query_rows(
     vec_col: str = "embedding",
     max_queries: int | None = None,
 ):
-    """Driver-side query-set collect for the LUT-broadcast ANN serving
-    paths (``pq.pq_topk``, ``ann_index.ivfpq_topk``), bounded so a
-    mistakenly-large query TABLE fails with a clear error instead of
-    building |Q| per-query lookup tables on the driver. The bound is
+    """Driver-side query-set collect for the PQ probe paths
+    (``pq.pq_topk``, ``ann_index.ivfpq_topk``), whose per-query lookup
+    tables and query vectors ride the scoring kernel's closure — bounded
+    so a mistakenly-large query TABLE fails with a clear error instead
+    of building |Q| per-query lookup tables on the driver. The bound is
     enforced with a ``limit(n+1)`` collect — no separate count job.
     For query sets beyond the bound, the distributed-query paths
     (``ivf_index_topk`` / ``brute_force_topk``) are the right tool;

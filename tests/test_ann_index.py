@@ -479,6 +479,48 @@ def test_ivfpq_probe_prunes_partitions_and_reads_codes_only(engine, emb):
     assert out.count() == 3
 
 
+def test_ivfpq_rerank_evaluates_queries_once(engine, spark, emb):
+    """The probe's only read of ``queries`` is the bounded collect: a
+    per-row accumulator in the query frame ticks exactly |Q| times,
+    with the exact re-rank on (its query vectors ride the kernel's
+    closure instead of a second evaluation of the frame)."""
+    from pyspark.sql.types import ArrayType, FloatType
+
+    ann_index.build_ivfpq_index(engine, "onceq", emb, bucket_col="label")
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf(ArrayType(FloatType()))
+    def tick(v):
+        acc.add(1)
+        return v
+
+    queries = emb.where(F.col("vec_id") < 6).withColumn("embedding", tick("embedding"))
+    out = ann_index.ivfpq_topk(engine, "onceq", queries, k=5, nprobe=3, rerank=30)
+    assert len(out.collect()) == 30
+    assert acc.value == 6
+
+
+def test_ivfpq_shortlist_keeps_ties_across_tasks(engine, spark):
+    """300 copies of one vector tie on ADC and on exact cosine, spread
+    over several files of one bucket (one scan task each): each task
+    must forward all its tied rows, so the result is the 5 lowest
+    non-query ids. Ids arrive in descending order, so a task keeping
+    its first N rows would keep its highest ids."""
+    import numpy as np
+
+    v = [float(x) for x in np.random.default_rng(11).normal(size=16)]
+    corpus = spark.createDataFrame(
+        [(i, v, 0) for i in reversed(range(300))],
+        "vec_id long, embedding array<float>, label int",
+    )
+    ann_index.build_ivfpq_index(engine, "ties", corpus, bucket_col="label", m=4, ks=4)
+    assert engine.table("ties__vectors").rdd.getNumPartitions() >= 3
+    out = ann_index.ivfpq_topk(
+        engine, "ties", corpus.where(F.col("vec_id") == 0), k=5, nprobe=1, rerank=10
+    ).collect()
+    assert [r["neighbor_id"] for r in sorted(out, key=lambda r: r["rank"])] == [1, 2, 3, 4, 5]
+
+
 def test_ivf_probe_still_works_on_ivfpq_index(engine, emb):
     """The IVF-PQ layout is a superset of the IVF one: the exact
     within-probed-buckets probe must keep working unchanged."""

@@ -809,6 +809,99 @@ def test_pq_topk_recall_with_rerank(spark):
     assert len(pq_ops.pq_topk(enc, books, q, k=5, max_queries=5).collect()) == 25
 
 
+def test_pq_topk_scores_match_the_column_algebra(spark):
+    """The numpy probe kernel scores as the Column algebra it replaced:
+    ADC is a left-to-right ``element_at`` sum over the query's LUT over
+    ``qn * greatest(pq_norm, 1e-12)``, exact cosine is
+    ``similarity.dot`` over the two ``norm``s, both ``try_divide``'d
+    and rounded to 6 digits — on vectors whose element scales spread
+    over four decades."""
+    from modelardb_rs_spark.operators import pq as pq_ops
+
+    rng = np.random.default_rng(13)
+    rows = [
+        (i, [float(x) for x in rng.normal(size=16) * 10 ** rng.uniform(-2, 2, size=16)])
+        for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    books = pq_ops.train_pq_codebooks(df, m=4, ks=8, sample=120)
+    enc = pq_ops.encode_pq(df, books)
+    q = df.where(F.col("vec_id") == 0)
+    qv = np.asarray(rows[0][1], dtype=np.float32).astype(np.float64)
+    lut = F.array(*[F.lit(x) for x in pq_ops.query_lut(books, qv)])
+    ip = F.lit(0.0)
+    for s in range(4):
+        ip = ip + F.element_at(lut, F.lit(s * 8) + F.element_at("pq_codes", s + 1) + 1)
+    qn = float(np.sqrt((qv**2).sum()))
+    adc_ref = enc.where(F.col("vec_id") != 0).select(
+        "vec_id", F.round(F.try_divide(ip, F.lit(qn) * F.greatest("pq_norm", F.lit(1e-12))), 6)
+    )
+    got = pq_ops.pq_topk(enc, books, q, k=200).select("neighbor_id", "cos")
+    assert set(map(tuple, got.collect())) == set(map(tuple, adc_ref.collect()))
+
+    qcol = F.array(*[F.lit(float(x)) for x in qv])
+    exact_ref = df.where(F.col("vec_id") != 0).select(
+        "vec_id",
+        F.round(
+            F.try_divide(sim_ops.dot(qcol, F.col("embedding")),
+                         sim_ops.norm(qcol) * sim_ops.norm(F.col("embedding"))),
+            6,
+        ),
+    )
+    got = pq_ops.pq_topk(enc, books, q, k=200, rerank=200).select("neighbor_id", "cos")
+    assert set(map(tuple, got.collect())) == set(map(tuple, exact_ref.collect()))
+
+
+def test_pq_topk_rerank_scans_encoded_once(spark):
+    """The ADC shortlist and its exact re-rank come from ONE scan of
+    ``encoded``: a per-row accumulator upstream of encode_pq's batch
+    UDF ticks once per corpus row (a second scan for the raw vectors
+    would re-run the encode and tick twice)."""
+    from pyspark.sql.types import ArrayType, FloatType
+
+    from modelardb_rs_spark.operators import pq as pq_ops
+
+    rng = np.random.default_rng(9)
+    rows = [(i, [float(x) for x in rng.normal(size=16)]) for i in range(200)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    books = pq_ops.train_pq_codebooks(df, m=4, ks=8, sample=200)
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf(ArrayType(FloatType()))
+    def tick(v):
+        acc.add(1)
+        return v
+
+    enc = pq_ops.encode_pq(df.withColumn("embedding", tick("embedding")), books)
+    q = df.where(F.col("vec_id") < 3)
+    out = pq_ops.pq_topk(enc, books, q, k=5, rerank=20).collect()
+    assert len(out) == 15
+    assert acc.value == 200
+
+
+@pytest.mark.parametrize("rerank", [None, 10])
+def test_pq_topk_keeps_rounded_ties_at_the_shortlist_boundary(spark, rerank):
+    """ADC cosines that differ only below the 6th digit tie after
+    rounding, and ties rank by id. Every task's raw ADC order here
+    favours the HIGHEST ids, so a per-task pre-selection without the
+    rounding margin would lose the lowest ids the rank must return."""
+    from modelardb_rs_spark.operators import pq as pq_ops
+
+    books = [np.eye(2)]
+    # pq_norm falls with the id, so the raw ADC 1/pq_norm rises with
+    # it: every value rounds to 1.0, the raw order is reversed
+    rows = [(i, [1.0, 0.0], [0], 1.0 + (300 - i) * 1e-10) for i in range(300)]
+    enc = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, pq_codes array<int>, pq_norm double"
+    ).repartition(3)
+    assert enc.rdd.getNumPartitions() >= 3
+    q = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    out = pq_ops.pq_topk(enc, books, q, k=5, rerank=rerank).collect()
+    assert [(r["neighbor_id"], r["cos"]) for r in sorted(out, key=lambda r: r["rank"])] == [
+        (i, 1.0) for i in range(1, 6)
+    ]
+
+
 def test_mmr_rerank_matches_naive_greedy(spark):
     """mmr_rerank must equal a literal python replay of the greedy MMR
     rule (score = lam*rel - (1-lam)*max_sim_to_selected, empty-set term

@@ -351,6 +351,45 @@ def test_ann_rank_is_two_phase(spark):
     assert out.count() == 4 * 5
 
 
+def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark):
+    """An IVF-PQ probe with rerank reads codes and raw vectors in ONE
+    scan of the vectors table, shuffles once on query_id (both ranks
+    share the exchange) and joins nothing. A warm single-query probe
+    runs at most 4 Spark jobs: the query collect's two, the rank's
+    shuffle stage and the result."""
+    from modelardb_rs_spark.operators import ann_index
+    from modelardb_rs_spark.sources.testdata import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    ann_index.build_ivfpq_index(engine, "planpq", emb, bucket_col=None, n_buckets=8)
+    q = emb.where(F.col("vec_id") == 3)
+
+    def probe():
+        return ann_index.ivfpq_topk(engine, "planpq", q, k=5, nprobe=3, rerank=50)
+
+    out = probe()
+    plan = plan_of(out)
+    scans = plan.split("FileScan")[1:]
+    assert len(scans) == 1, plan
+    # the scan's Location is elided in the plan string: check its files
+    assert out.inputFiles() and all("planpq__vectors" in f for f in out.inputFiles())
+    read_schema = scans[0].split("ReadSchema:")[1].splitlines()[0]
+    assert "pq_codes" in read_schema and "embedding" in read_schema
+    assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
+    assert "Join" not in plan, plan
+    assert len(out.collect()) == 5  # warm-up
+
+    sc = spark.sparkContext
+    group = "ivfpq_probe_job_count"
+    sc.setJobGroup(group, group)
+    try:
+        probe().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+
+
 def test_asof_hot_key_window_partitions_by_time_bucket(spark):
     """The two-pass as-of plan's SCALE property is that the carried-
     value window partitions by (key, time bucket) — one hot key spreads
