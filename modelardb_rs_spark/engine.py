@@ -7,7 +7,7 @@ A user of the reference maps almost 1:1:
 
     Operations::create(table, kind)   -> Engine.create_table / create_time_series_table / read_sql(DDL)
     Operations::tables/schema         -> Engine.tables / Engine.schema
-    Operations::write(table, batch)   -> Engine.write(table, df)
+    Operations::write(table, batch)   -> Engine.write(table, df | pa.Table)
     Operations::read(sql)             -> Engine.read_sql(sql)
     Operations::read_time_series_table(...) -> Engine.read_time_series_table(...)
     Operations::copy/move             -> Engine.copy / Engine.move
@@ -31,6 +31,7 @@ import datetime
 import os
 import re
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -689,20 +690,28 @@ class Engine:
     def write(
         self,
         name: str,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         partition_by: list[str] | None = None,
         txn: tuple[str, int] | None = None,
         commit_meta: dict | None = None,
         expected_meta: tuple[str, object] | None = None,
     ) -> int | None:
-        """Append a DataFrame. Returns the committed log version, or
-        None when a txn replay gate skipped the write (callers auditing
-        exactly-once behavior can distinguish applied from replayed).
-        Time series tables are compressed inline
+        """Append a DataFrame or an Arrow table. Returns the committed
+        log version, or None when a txn replay gate skipped the write
+        (callers auditing exactly-once behavior can distinguish applied
+        from replayed). Time series tables are compressed inline
         (reference Operations::write → try_compress_multivariate_time_series,
         modelardb_embedded/src/data_folder.rs:191-238). ``partition_by``
         (normal tables only) lays files out Hive-style on those columns
         for planning-time partition pruning.
+
+        An Arrow table is already in driver memory, so a time series
+        table fits and writes it in-process with no Spark job
+        (``compress.compress_arrow``, then one file per field through
+        ``DataFolder.write_segments``); column types whose cast only
+        Spark can reproduce, and every normal table, go through
+        ``spark.createDataFrame`` into the DataFrame path. A DataFrame
+        is compressed by the distributed ``compress.compress``.
 
         ``txn=(app_id, version)`` makes the append idempotent under
         at-least-once replay: the identifier is recorded ATOMICALLY in
@@ -720,6 +729,8 @@ class Engine:
                 return None
         kind = self.catalog.kind(name)
         if kind == TableKind.NORMAL:
+            if isinstance(df, pa.Table):
+                df = self.spark.createDataFrame(df)
             schema = self.catalog.normal_table_schema(name)
             self._check_columns(name, df, [f.name for f in schema.fields])
             cast = df.select(
@@ -736,6 +747,11 @@ class Engine:
         meta = self.catalog.time_series_metadata(name)
         insert_schema = meta.insert_schema()
         self._check_columns(name, df, [f.name for f in insert_schema.fields])
+        if isinstance(df, pa.Table):
+            segments = compress_ops.compress_arrow(df, meta, self._session_zone())
+            if segments is not None:
+                return self.folder.write_segments(meta, segments, txn=txn)
+            df = self.spark.createDataFrame(df)
         cast = df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in insert_schema.fields]
         )
@@ -753,6 +769,20 @@ class Engine:
         finally:
             if cache_input:
                 cast.unpersist()
+
+    def _session_zone(self) -> str | int:
+        """The session time zone as ``compress.compress_arrow`` takes
+        it: a fixed offset in seconds, or a region id. Resolved by
+        Spark's own ``DateTimeUtils.getZoneId``, so aliases and offset
+        spellings (``GMT+8``, ``+08:00``) mean what they mean to a cast."""
+        jvm = self.spark._jvm
+        zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+            self.spark.conf.get("spark.sql.session.timeZone")
+        )
+        rules = zone.getRules()
+        if rules.isFixedOffset():
+            return int(rules.getOffset(jvm.java.time.Instant.EPOCH).getTotalSeconds())
+        return str(zone.getId())
 
     def overwrite(
         self,
@@ -814,12 +844,13 @@ class Engine:
         return total
 
     @staticmethod
-    def _check_columns(table: str, df: DataFrame, required: list[str]) -> None:
-        missing = [c for c in required if c not in df.columns]
+    def _check_columns(table: str, df: DataFrame | pa.Table, required: list[str]) -> None:
+        columns = df.column_names if isinstance(df, pa.Table) else df.columns
+        missing = [c for c in required if c not in columns]
         if missing:
             raise ValueError(
                 f"write to {table!r}: input is missing column(s) {missing}; "
-                f"expected {required}, got {df.columns}"
+                f"expected {required}, got {columns}"
             )
 
     # ---------------------------------------------------------------- read

@@ -15,8 +15,11 @@ results take the fast ``DataFrame.toArrow()`` path (one Arrow-native
 collection), large ones iterate ``toLocalIterator`` partition-by-
 partition into bounded Arrow batches, mirroring the reference's
 channel-backed batch stream (remote.rs:729-743) instead of
-materializing the whole result on the driver. Ingest moves Arrow→Spark
-via ``createDataFrame`` on the Arrow table.
+materializing the whole result on the driver. Ingest: an upload that
+fits in one spill buffer is handed to ``Engine.write`` as an Arrow
+table, which compresses a time series upload in-process with no Spark
+job; larger uploads spill to staged parquet and take one distributed
+``spark.read.parquet`` write.
 """
 
 from __future__ import annotations
@@ -162,16 +165,20 @@ class ModelarFlightServer(flight.FlightServerBase):
         """Ingest a record-batch upload with BOUNDED driver memory.
 
         The reference streams do_put batches through a bounded channel
-        into the storage engine (remote.rs:750-794); the Spark-first
-        equivalent: iterate the reader chunk-by-chunk, spill every
-        ``put_spill_bytes`` of Arrow data as one parquet file into a
-        staging directory under the engine's data folder (shared
-        storage on a real cluster, so executors can read it), then
-        ingest the whole upload as ONE distributed ``spark.read.parquet``
-        + transactional commit. A multi-GB put holds at most one spill
-        buffer plus one in-flight batch on the driver — never the whole
-        upload — and the compressor sees a single large input instead
-        of per-chunk dribbles."""
+        into the storage engine, compressing in-process
+        (remote.rs:750-794). Here the reader is iterated chunk by chunk
+        into one ``put_spill_bytes`` buffer. An upload that fits in it
+        is already on the driver, so it goes to ``Engine.write`` as an
+        Arrow table: a time series table is fitted and written
+        in-process with no Spark job. A larger upload spills each full
+        buffer as one parquet file into a staging directory under the
+        engine's data folder (created on the first spill; shared storage
+        on a real cluster, so executors can read it) and is ingested as
+        ONE distributed ``spark.read.parquet`` + transactional commit.
+        A multi-GB put holds at most one spill buffer plus one in-flight
+        batch on the driver — never the whole upload — and the
+        compressor sees a single large input instead of per-chunk
+        dribbles."""
         import io
         import uuid
 
@@ -179,8 +186,7 @@ class ModelarFlightServer(flight.FlightServerBase):
 
         table_name = descriptor.path[0].decode("utf-8")
         fs = self.engine.folder.fs
-        stage = fs.join(self.engine.folder.root, "_staging", f"put-{uuid.uuid4().hex[:16]}")
-        fs.mkdirs(stage)
+        stage = None
         try:
             buf: list[pa.RecordBatch] = []
             buf_bytes = 0
@@ -188,9 +194,14 @@ class ModelarFlightServer(flight.FlightServerBase):
             schema = reader.schema
 
             def flush() -> None:
-                nonlocal buf, buf_bytes, n_files
+                nonlocal buf, buf_bytes, n_files, stage
                 if not buf:
                     return
+                if stage is None:
+                    stage = fs.join(
+                        self.engine.folder.root, "_staging", f"put-{uuid.uuid4().hex[:16]}"
+                    )
+                    fs.mkdirs(stage)
                 sink = io.BytesIO()
                 pq.write_table(pa.Table.from_batches(buf, schema=schema), sink)
                 fs.write_bytes(
@@ -211,16 +222,18 @@ class ModelarFlightServer(flight.FlightServerBase):
                 buf_bytes += batch.nbytes
                 if buf_bytes >= self.put_spill_bytes:
                     flush()
-            flush()
-            if n_files == 0:
+            if stage is None:
+                if buf:
+                    self.engine.write(table_name, pa.Table.from_batches(buf, schema=schema))
                 return
-            df = self.engine.spark.read.parquet(stage)
-            self.engine.write(table_name, df)
+            flush()
+            self.engine.write(table_name, self.engine.spark.read.parquet(stage))
         finally:
-            try:
-                fs.delete(stage, recursive=True)
-            except Exception:
-                pass
+            if stage is not None:
+                try:
+                    fs.delete(stage, recursive=True)
+                except Exception:
+                    pass
 
     # -- actions -----------------------------------------------------------
 

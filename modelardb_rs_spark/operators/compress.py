@@ -37,33 +37,16 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from modelardb_rs_spark.compression.fitter import fit_series
+from modelardb_rs_spark.plans.stats import plan_size_bytes
 from modelardb_rs_spark.types import ErrorBound, TimeSeriesTableMetadata, segment_schema
 
-
-def segments_frame(
-    cols: dict, field_idx: int, tag_values: dict, tag_columns: list[str]
-) -> pd.DataFrame:
-    """Assemble fit_series output columns into a segment-schema pandas
-    frame for one field of one series."""
-    seg = pd.DataFrame(cols)
-    seg["model_type_id"] = seg["model_type_id"].astype(np.int8)
-    seg["min_value"] = seg["min_value"].astype(np.float32)
-    seg["max_value"] = seg["max_value"].astype(np.float32)
-    seg["error"] = seg["error"].astype(np.float32)
-    seg["value_count"] = seg["value_count"].astype(np.int32)
-    seg["ts_kind"] = seg["ts_kind"].astype(np.int8)
-    # None (Gorilla) -> NaN under float astype; keep real nulls so the
-    # fast-path columns stay honestly absent for model-free segments
-    seg["param0"] = pd.array(seg["param0"], dtype=pd.Float32Dtype())
-    seg["param1"] = pd.array(seg["param1"], dtype=pd.Float64Dtype())
-    seg["field_column"] = np.int16(field_idx)
-    for t in tag_columns:
-        seg[t] = tag_values[t]
-    return seg
+_NULL_MESSAGE = "NULL {!r} in INSERT into non-nullable column"
 
 
 def _fit_group(
@@ -183,7 +166,7 @@ def compress(
     # declared-non-null points into values SQL treats as present).
     def _non_null(name: str):
         return F.when(F.col(name).isNotNull(), F.col(name)).otherwise(
-            F.raise_error(F.lit(f"NULL {name!r} in INSERT into non-nullable column"))
+            F.raise_error(F.lit(_NULL_MESSAGE.format(name)))
         )
 
     df = df.withColumn(ts_col, _non_null(ts_col))
@@ -206,6 +189,91 @@ def compress(
     return shaped.mapInPandas(fit_iter, schema=out_schema)
 
 
+def compress_arrow(
+    table: pa.Table, meta: TimeSeriesTableMetadata, zone: str | int
+) -> pd.DataFrame | None:
+    """Compress an Arrow table on the driver: the in-process twin of
+    ``compress`` for inputs already in driver memory (a Flight
+    ``do_put`` under one spill buffer). The whole table is one batch
+    for ``_fit_batch``, the kernel every ``mapInPandas`` task runs, so
+    each series is fitted as one chunk; a range partition boundary can
+    split a series in the Spark path, so that path may store more
+    segments, but both reconstruct the same points.
+
+    Columns are cast exactly as ``Engine.write``'s Spark cast would:
+    timestamps in s/ms/us are instants; tz-naive ones are wall-clock
+    times in ``zone`` (the session time zone, an IANA id or a fixed
+    offset in seconds), resolved like Java's ``LocalDateTime.atZone``:
+    the earlier offset in an overlap, the offset before a gap.
+    Integer timestamps are seconds, as ``CAST(bigint AS TIMESTAMP)``.
+    Fields may be floating (not half) or integer (not uint64); tags
+    strings or integers. Any other type returns None and the caller
+    takes the Spark path. A NULL timestamp or field raises."""
+    ts_col = meta.timestamp_column
+    field_names = meta.field_names
+    try:
+        if table.column(ts_col).null_count:
+            raise ValueError(_NULL_MESSAGE.format(ts_col))
+        ts_us = _arrow_ts_us(table.column(ts_col), zone)
+        if ts_us is None:
+            return None
+        fields = {}
+        for f in field_names:
+            col = table.column(f)
+            if col.null_count:
+                raise ValueError(_NULL_MESSAGE.format(f))
+            t = col.type
+            if not (
+                (pa.types.is_floating(t) and t != pa.float16())
+                or (pa.types.is_integer(t) and t != pa.uint64())
+            ):
+                return None
+            with np.errstate(over="ignore"):
+                fields[f] = np.asarray(col.to_numpy(), dtype=np.float32)
+        tags = {}
+        for tag in meta.tag_columns:
+            col = table.column(tag)
+            if pa.types.is_integer(col.type):
+                col = col.cast(pa.string())
+            elif not (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)):
+                return None
+            tags[tag] = col.to_pandas()
+    except (pa.ArrowInvalid, pa.ArrowNotImplementedError, KeyError):
+        return None
+    pdf = pd.DataFrame({ts_col: ts_us, **fields, **tags})
+    bounds = [meta.field_columns[f] for f in field_names]
+    return _fit_batch(pdf, ts_col, field_names, bounds, list(meta.tag_columns))
+
+
+# CAST(bigint AS TIMESTAMP) multiplies seconds by 10^6; beyond this the
+# product leaves int64 and Spark's own overflow rule decides.
+_MAX_TS_SECONDS = (1 << 63) // 1_000_000
+
+
+def _arrow_ts_us(col: pa.ChunkedArray, zone: str | int) -> np.ndarray | None:
+    """Epoch µs of a timestamp column under Spark's cast rules (see
+    ``compress_arrow``), or None for a type left to Spark."""
+    t = col.type
+    if pa.types.is_integer(t):
+        secs = col.cast(pa.int64()).to_numpy()
+        if len(secs) and (secs.max() > _MAX_TS_SECONDS or secs.min() < -_MAX_TS_SECONDS):
+            return None
+        return secs * 1_000_000
+    if not pa.types.is_timestamp(t) or t.unit == "ns":
+        return None
+    us = col.cast(pa.timestamp("us", t.tz))
+    if t.tz is not None:
+        return us.cast(pa.int64()).to_numpy()
+    wall = us.cast(pa.int64()).to_numpy()
+    if isinstance(zone, int):
+        return wall - zone * 1_000_000
+    # In a gap, the last instant before it carries the offset in force
+    # before the gap, which is the offset Java applies there.
+    inst = pc.assume_timezone(us, zone, ambiguous="earliest", nonexistent="earliest")
+    offset = pc.local_timestamp(inst).cast(pa.int64()).to_numpy() - inst.cast(pa.int64()).to_numpy()
+    return wall - offset
+
+
 # Below this Catalyst size estimate, ``repartitionByRange``'s sampling
 # pass re-reads so little data that it beats a dedicated stats job.
 _SMALL_INPUT_BYTES = 1 << 30
@@ -221,11 +289,7 @@ def _bucket_by_volume(df: DataFrame, ts_col: str, tags: list[str], parallelism: 
     range boundaries is cheaper than scheduling a separate aggregate,
     and range partitioning preserves series contiguity exactly. Unknown
     sizes are treated as large — the stats path is the scale-safe one."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        size = _SMALL_INPUT_BYTES + 1
-    if size <= _SMALL_INPUT_BYTES:
+    if plan_size_bytes(df) <= _SMALL_INPUT_BYTES:
         keys = [*tags, ts_col] if tags else [ts_col]
         return df.repartitionByRange(parallelism, *keys)
     spark = df.sparkSession

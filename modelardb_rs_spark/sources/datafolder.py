@@ -33,8 +33,12 @@ from __future__ import annotations
 import re
 import uuid
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from modelardb_rs_spark.sources.hadoopfs import HadoopFS
 from modelardb_rs_spark.sources.txlog import TransactionLog
@@ -72,8 +76,6 @@ def _parquet_segment_stats(fs: HadoopFS, uri: str, size: int) -> dict | None:
     readers drop the JVM branch when fast points are negligible — each
     extra branch is an extra scan of the segment files.
     Returns None (conservative) when the footer is unreadable."""
-    import pyarrow.parquet as pq
-
     stream = None
     try:
         if uri.startswith("file:"):
@@ -146,8 +148,6 @@ def _parquet_num_rows(fs: HadoopFS, uri: str, size: int) -> int | None:
     questions (e.g. the ANN index's per-bucket sizes, which pair the
     count with the ``ivf_bucket=`` partition value in the path) from
     the commit log alone — zero jobs, zero file scans."""
-    import pyarrow.parquet as pq
-
     stream = None
     try:
         if uri.startswith("file:"):
@@ -440,13 +440,15 @@ class DataFolder:
     def write_segments(
         self,
         meta: TimeSeriesTableMetadata,
-        segments: DataFrame,
+        segments: DataFrame | pd.DataFrame,
         txn: tuple[str, int] | None = None,
     ) -> int | None:
         """Atomically append segment rows, partitioned by field_column,
         sorted within partitions by (tags..., start_time). Returns the
         committed version, or None when a txn replay gate skipped the
-        commit."""
+        commit. A pandas frame (segments fitted on the driver) is written
+        without a Spark job: one zstd file per ``field_column=N/``
+        directory, through pyarrow and the Hadoop FS."""
         # No repartition: the compressor already co-located each series'
         # segments in one task; an extra shuffle here would double the
         # write cost. Sorting by (field_column, tags..., start_time) keeps
@@ -465,8 +467,31 @@ class DataFolder:
                 .parquet(staged)
             )
 
+        def write_frame(staged: str) -> None:
+            if not len(segments):
+                return
+            schema = to_arrow_schema(segment_schema(meta.tag_columns))
+            body = pa.schema([f for f in schema if f.name != "field_column"])
+            # Spark's ascending sort puts NULL tags first
+            frame = segments.sort_values(sort_cols, na_position="first", kind="stable")
+            for idx, part in frame.groupby("field_column", sort=True):
+                table = pa.Table.from_pandas(part, schema=body, preserve_index=False)
+                sink = pa.BufferOutputStream()
+                pq.write_table(table.replace_schema_metadata(None), sink, compression="zstd")
+                self.fs.write_bytes(
+                    self.fs.join(
+                        staged,
+                        f"field_column={idx}",
+                        f"part-00000-{uuid.uuid4()}.c000.zstd.parquet",
+                    ),
+                    sink.getvalue().to_pybytes(),
+                )
+
         return self._stage_and_commit(
-            meta.name, write_staged, segment_stats=True, txn=txn
+            meta.name,
+            write_frame if isinstance(segments, pd.DataFrame) else write_staged,
+            segment_stats=True,
+            txn=txn,
         )
 
     def limit_time_cutoff(self, name: str, n: int) -> int | None:

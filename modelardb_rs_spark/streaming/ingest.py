@@ -111,7 +111,7 @@ def start_stateful_ingest(
     from pyspark.sql import types as T
 
     from modelardb_rs_spark.compression.fitter import fit_series
-    from modelardb_rs_spark.operators.compress import segments_frame
+    from modelardb_rs_spark.operators.compress import _assemble
     from modelardb_rs_spark.types import segment_schema
 
     meta = engine.catalog.time_series_metadata(table)
@@ -141,16 +141,15 @@ def start_stateful_ingest(
         )
         if state.hasTimedOut:
             # idle flush: close every held tail
-            frames = []
+            parts = []
             for idx, (fname, bound) in enumerate(zip(field_names, bounds)):
                 t_ts, t_v = tail[fname]
                 if len(t_ts):
-                    frames.append(
-                        segments_frame(fit_series(t_ts, t_v, bound), idx, tag_values, tags)
-                    )
+                    cols = fit_series(t_ts, t_v, bound)
+                    parts.append((cols, idx, tag_values, len(cols["value_count"])))
             state.remove()
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            if parts:
+                yield _assemble(parts, tags)
             return
 
         batches = [pdf for pdf in pdf_iter if len(pdf)]
@@ -159,7 +158,7 @@ def start_stateful_ingest(
             if batches
             else np.empty(0, np.int64)
         )
-        frames = []
+        parts = []
         new_tail: dict = {}
         held = 0
         for idx, (fname, bound) in enumerate(zip(field_names, bounds)):
@@ -188,7 +187,7 @@ def start_stateful_ingest(
             else:
                 new_tail[fname] = (np.empty(0, np.int64), np.empty(0, np.float32))
             if len(cols["value_count"]):
-                frames.append(segments_frame(cols, idx, tag_values, tags))
+                parts.append((cols, idx, tag_values, len(cols["value_count"])))
             held += len(new_tail[fname][0])
         if held:
             state.update((pickle.dumps(new_tail),))
@@ -201,8 +200,8 @@ def start_stateful_ingest(
             )
         elif state.exists:
             state.remove()
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+        if parts:
+            yield _assemble(parts, tags)
 
     grouped = stream.groupBy(*[F.col(t) for t in tags]) if tags else stream.groupBy(F.lit(1))
     segs = grouped.applyInPandasWithState(

@@ -159,6 +159,42 @@ def test_null_field_rejected_at_write(engine, spark):
         engine.write("nn", pts)
 
 
+
+def test_arrow_write_leaves_other_types_to_spark(engine, spark):
+    """``Engine.write`` fits an Arrow table in-process only for column
+    types whose Spark cast it reproduces. Others (here ns timestamps, a
+    boolean field, a float tag) go through ``spark.createDataFrame`` and
+    land as the DataFrame write of the same table does. A NULL
+    timestamp in-process fails like the Spark path, naming the column."""
+    import pyarrow as pa
+
+    from modelardb_rs_spark.operators import compress as compress_ops
+
+    table = pa.table({
+        "timestamp": pa.array([i * 10**9 + 1_500 for i in range(20)], pa.timestamp("ns", tz="UTC")),
+        "f": pa.array([i % 3 == 0 for i in range(20)]),
+        "tag": pa.array([float(i % 2) for i in range(20)]),
+    })
+    for name in ("arrow_in", "frame_in"):
+        engine.read_sql(f"CREATE TIME SERIES TABLE {name}(timestamp TIMESTAMP, f FIELD, tag TAG)")
+    assert compress_ops.compress_arrow(table, engine.catalog.time_series_metadata("arrow_in"), 0) is None
+    engine.write("arrow_in", table)
+    engine.write("frame_in", spark.createDataFrame(table))
+    q = "SELECT tag, unix_micros(timestamp) AS us, f FROM {} ORDER BY tag, us"
+    got = engine.read_sql(q.format("arrow_in")).collect()
+    assert len(got) == 20
+    assert got == engine.read_sql(q.format("frame_in")).collect()
+
+    bad = pa.table({
+        "timestamp": pa.array([None, 1], pa.timestamp("us")),
+        "f": pa.array([1.0, 2.0], pa.float32()),
+        "tag": pa.array(["a", "a"]),
+    })
+    version = engine.folder.log("arrow_in").snapshot().version
+    with pytest.raises(ValueError, match="NULL 'timestamp'"):
+        engine.write("arrow_in", bad)
+    assert engine.folder.log("arrow_in").snapshot().version == version
+
 def test_epoch_zero_is_a_real_boundary(engine, spark):
     """start=1970-01-01 must bound the aggregate, not be treated as
     'no range' — tables can hold pre-1970 (negative-µs) points."""

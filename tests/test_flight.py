@@ -5,8 +5,10 @@ Flight there too)."""
 
 import datetime
 import time
+from urllib.parse import urlparse
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from modelardb_rs_spark.flight import ModelarFlightClient, start_server
@@ -266,3 +268,207 @@ def test_do_get_collect_bound_uses_reconstructed_size(engine, monkeypatch):
         assert bound >= 60_000 * 16
     finally:
         server.shutdown()
+
+
+# -- in-process do_put -------------------------------------------------------
+
+_PARITY_DDL = (
+    "CREATE TIME SERIES TABLE {name}(timestamp TIMESTAMP, f FIELD, g FIELD(0.5), "
+    "site TAG, unit TAG)"
+)
+
+
+def _parity_upload(ts_type) -> pa.Table:
+    """Two tags, four series, rows shuffled; ``f`` is lossless and
+    unique per series point, ``g`` has an absolute bound of 0.5. With
+    ``ts_type`` None the timestamp is int64 seconds. The 7-minute steps
+    from 01:00 cross the 2024-03-10 spring-forward gap in
+    America/New_York without two wall times landing on one instant."""
+    import numpy as np
+
+    base = int(datetime.datetime(2024, 3, 10, 1, 0, tzinfo=datetime.timezone.utc).timestamp())
+    rows = []
+    for s, site in enumerate(["n", "s"]):
+        for u, unit in enumerate(["a", "b"]):
+            for k in range(40):
+                rows.append((base + 420 * k, float(k), 10.0 + 0.37 * (k % 7) + s + u, site, unit))
+    rows = [rows[i] for i in np.random.default_rng(5).permutation(len(rows))]
+    secs = pa.array([r[0] for r in rows], pa.int64())
+    if ts_type is None:
+        ts = secs
+    else:
+        ts = pa.array([r[0] * 1_000_000 for r in rows], pa.int64()).cast(
+            pa.timestamp("us", tz=ts_type.tz)
+        ).cast(ts_type)
+    return pa.table({
+        "timestamp": ts,
+        "f": pa.array([r[1] for r in rows], pa.float32()),
+        "g": pa.array([r[2] for r in rows], pa.float32()),
+        "site": pa.array([r[3] for r in rows]),
+        "unit": pa.array([r[4] for r in rows]),
+    })
+
+
+def _gridded(engine, name: str):
+    return engine.read_sql(
+        f"SELECT site, unit, unix_micros(timestamp) AS us, f, g FROM {name} "
+        "ORDER BY site, unit, us"
+    ).toPandas()
+
+
+def _assert_file_stats(engine, name: str) -> None:
+    files = engine.folder.log(name).snapshot().files
+    assert files
+    for f in files:
+        for key in ("min_start_time", "max_end_time", "all_fast", "total_points"):
+            assert key in f, (name, key, f)
+
+
+@pytest.mark.parametrize(
+    "ts_type,zone",
+    [
+        (pa.timestamp("us", tz="UTC"), "UTC"),
+        (pa.timestamp("ms", tz="Asia/Kolkata"), "America/New_York"),
+        (pa.timestamp("us"), "America/New_York"),
+        (pa.timestamp("s"), "GMT+8"),
+        (None, "UTC"),
+    ],
+    ids=["tz_utc", "tz_kolkata", "naive_new_york", "naive_fixed_offset", "int64_seconds"],
+)
+def test_in_process_put_matches_staged_put(engine, ts_type, zone):
+    """The same upload sent once in-process and once through the staged
+    Spark path reconstructs the same points: identical for the lossless
+    field, within the bound for the lossy one, and every added file
+    carries the commit-log stats readers prune with."""
+    import numpy as np
+
+    spark = engine.spark
+    old_zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    server = start_server(engine)
+    try:
+        client = ModelarFlightClient(f"grpc://127.0.0.1:{server.port}")
+        for name in ("p_mem", "p_staged"):
+            client.create(_PARITY_DDL.format(name=name))
+        upload = _parity_upload(ts_type)
+        client.write("p_mem", upload)
+        server.put_spill_bytes = 1  # every batch spills: the staged path
+        client.write("p_staged", upload)
+        mem, staged = _gridded(engine, "p_mem"), _gridded(engine, "p_staged")
+    finally:
+        server.shutdown()
+        spark.conf.set("spark.sql.session.timeZone", old_zone)
+    assert len(mem) == upload.num_rows
+    for col in ("site", "unit", "us", "f"):
+        assert mem[col].tolist() == staged[col].tolist(), col
+    truth = upload.to_pandas().set_index(["site", "unit", "f"])["g"]
+    for got in (mem, staged):
+        want = truth.loc[list(zip(got["site"], got["unit"], got["f"]))].to_numpy()
+        assert np.abs(got["g"].to_numpy() - want).max() <= 0.5
+    if zone == "UTC":
+        secs = upload.column("timestamp").cast(pa.int64()).to_numpy()
+        if ts_type is not None:
+            secs = secs // 1_000_000
+        assert sorted(mem["us"]) == sorted(secs * 1_000_000)
+    for name in ("p_mem", "p_staged"):
+        _assert_file_stats(engine, name)
+    files = engine.folder.log("p_mem").snapshot().files
+    assert len(files) == 2  # one per field
+    for f in files:
+        pf = pq.ParquetFile(
+            urlparse(engine.folder.fs.join(engine.folder.table_path("p_mem"), f["path"])).path
+        )
+        assert "field_column" not in pf.schema_arrow.names
+        body = pf.read(columns=["site", "unit", "start_time"])
+        keys = list(zip(*(body.column(c).to_pylist() for c in body.column_names)))
+        assert keys == sorted(keys)
+        group = pf.metadata.row_group(0)
+        stats = {group.column(c).path_in_schema: group.column(c).statistics for c in range(group.num_columns)}
+        for c in ("start_time", "end_time", "model_type_id", "ts_kind", "value_count"):
+            assert stats[c].has_min_max, c
+
+
+def test_mixed_spark_and_in_process_files_answer_alike(engine):
+    """A table holding Spark-written and in-process files answers the
+    pushdown aggregates and the gridded scan like a table written wholly
+    by Spark."""
+    spark = engine.spark
+    upload = _parity_upload(pa.timestamp("us", tz="UTC"))
+    half = upload.num_rows // 2
+    engine.read_sql(_PARITY_DDL.format(name="m_mixed"))
+    engine.read_sql(_PARITY_DDL.format(name="m_spark"))
+    engine.write("m_mixed", spark.createDataFrame(upload.slice(0, half)))
+    engine.write("m_mixed", upload.slice(half))
+    engine.write("m_spark", spark.createDataFrame(upload.slice(0, half)))
+    engine.write("m_spark", spark.createDataFrame(upload.slice(half)))
+    _assert_file_stats(engine, "m_mixed")
+
+    aggs = "count(f) AS n, min(f) AS lo, max(f) AS hi, sum(f) AS s, avg(f) AS a"
+    for where in ("", " WHERE timestamp >= timestamp '1970-01-01'"):
+        for group in ("", " GROUP BY site, unit"):
+            sel = f"SELECT {'site, unit, ' if group else ''}{aggs} FROM {{}}{where}{group}"
+            order = " ORDER BY site, unit" if group else ""
+            got = engine.read_sql(f"SELECT * FROM ({sel.format('m_mixed')}){order}").collect()
+            want = engine.read_sql(f"SELECT * FROM ({sel.format('m_spark')}){order}").collect()
+            assert got == want, (where, group)
+    assert engine.explain_path("SELECT count(f) FROM m_mixed") == engine.explain_path(
+        "SELECT count(f) FROM m_spark"
+    )
+    mixed, spark_only = _gridded(engine, "m_mixed"), _gridded(engine, "m_spark")
+    for col in ("site", "unit", "us", "f"):
+        assert mixed[col].tolist() == spark_only[col].tolist(), col
+    assert (mixed["g"] - spark_only["g"]).abs().max() <= 1.0
+
+
+def _job_ids(spark) -> set[int]:
+    """Every job id in the status store. Job groups are thread-local and
+    do_put runs on the server's thread, so jobs are counted globally."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    return {int(j.jobId()) for j in conv.asJava(sc._jsc.sc().statusStore().jobsList(None))}
+
+
+def test_small_put_runs_no_spark_job(engine):
+    """A warm do_put of a small time-series batch fits and writes on the
+    driver: no Spark job. The staged path (forced by a tiny spill bound)
+    does run jobs, which shows the count is live."""
+    server = start_server(engine)
+    try:
+        client = ModelarFlightClient(f"grpc://127.0.0.1:{server.port}")
+        client.create(_PARITY_DDL.format(name="jobs"))
+        upload = _parity_upload(pa.timestamp("us", tz="UTC"))
+        client.write("jobs", upload.slice(0, 40))  # warm-up
+        before = _job_ids(engine.spark)
+        client.write("jobs", upload.slice(40))
+        assert _job_ids(engine.spark) - before == set()
+        server.put_spill_bytes = 1
+        before = _job_ids(engine.spark)
+        client.write("jobs", upload.slice(0, 40))
+        assert _job_ids(engine.spark) - before
+    finally:
+        server.shutdown()
+    assert engine.read_sql("SELECT count(f) AS n FROM jobs").collect()[0]["n"] == 200
+
+
+def test_put_with_null_field_commits_nothing(engine):
+    """NULL in a field fails the upload at the client with the column
+    named, leaves the table version unchanged and stages nothing."""
+    server = start_server(engine)
+    try:
+        client = ModelarFlightClient(f"grpc://127.0.0.1:{server.port}")
+        client.create(_PARITY_DDL.format(name="nulls"))
+        upload = _parity_upload(pa.timestamp("us", tz="UTC"))
+        client.write("nulls", upload.slice(0, 10))
+        version = engine.folder.log("nulls").snapshot().version
+        f = upload.column("f").to_pylist()
+        f[3] = None
+        bad = upload.set_column(1, "f", pa.array(f, pa.float32()))
+        with pytest.raises(pa.ArrowException, match="NULL 'f'"):
+            client.write("nulls", bad)
+    finally:
+        server.shutdown()
+    assert engine.folder.log("nulls").snapshot().version == version
+    fs = engine.folder.fs
+    staging = fs.join(engine.folder.root, "_staging")
+    assert not fs.exists(staging) or not fs.list(staging)
