@@ -35,6 +35,7 @@ import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from modelardb_rs_spark.catalog import Catalog
 from modelardb_rs_spark.operators import aggregates as agg_ops
@@ -730,7 +731,7 @@ class Engine:
         kind = self.catalog.kind(name)
         if kind == TableKind.NORMAL:
             if isinstance(df, pa.Table):
-                df = self.spark.createDataFrame(df)
+                df = self._arrow_frame(df)
             schema = self.catalog.normal_table_schema(name)
             self._check_columns(name, df, [f.name for f in schema.fields])
             cast = df.select(
@@ -751,7 +752,7 @@ class Engine:
             segments = compress_ops.compress_arrow(df, meta, self._session_zone())
             if segments is not None:
                 return self.folder.write_segments(meta, segments, txn=txn)
-            df = self.spark.createDataFrame(df)
+            df = self._arrow_frame(df)
         cast = df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in insert_schema.fields]
         )
@@ -769,6 +770,17 @@ class Engine:
         finally:
             if cache_input:
                 cast.unpersist()
+
+    def _arrow_frame(self, table: pa.Table) -> DataFrame:
+        """``table`` as a DataFrame with its tz-naive timestamps typed
+        TimestampNTZ, as ``spark.read.parquet`` reads them. The write's
+        cast then takes them as wall-clock times in the session zone,
+        resolving a DST gap or overlap as Spark does; the default
+        ``createDataFrame`` localizes them in pyarrow, which raises on
+        either."""
+        return self.spark.createDataFrame(
+            table, schema=from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+        )
 
     def _session_zone(self) -> str | int:
         """The session time zone as ``compress.compress_arrow`` takes

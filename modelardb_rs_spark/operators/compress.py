@@ -194,7 +194,7 @@ def compress_arrow(
 ) -> pd.DataFrame | None:
     """Compress an Arrow table on the driver: the in-process twin of
     ``compress`` for inputs already in driver memory (a Flight
-    ``do_put`` under one spill buffer). The whole table is one batch
+    ``do_put`` of at most 16 MiB). The whole table is one batch
     for ``_fit_batch``, the kernel every ``mapInPandas`` task runs, so
     each series is fitted as one chunk; a range partition boundary can
     split a series in the Spark path, so that path may store more

@@ -159,7 +159,6 @@ def test_null_field_rejected_at_write(engine, spark):
         engine.write("nn", pts)
 
 
-
 def test_arrow_write_leaves_other_types_to_spark(engine, spark):
     """``Engine.write`` fits an Arrow table in-process only for column
     types whose Spark cast it reproduces. Others (here ns timestamps, a
@@ -194,6 +193,7 @@ def test_arrow_write_leaves_other_types_to_spark(engine, spark):
     with pytest.raises(ValueError, match="NULL 'timestamp'"):
         engine.write("arrow_in", bad)
     assert engine.folder.log("arrow_in").snapshot().version == version
+
 
 def test_epoch_zero_is_a_real_boundary(engine, spark):
     """start=1970-01-01 must bound the aggregate, not be treated as

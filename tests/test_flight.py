@@ -388,6 +388,50 @@ def test_in_process_put_matches_staged_put(engine, ts_type, zone):
             assert stats[c].has_min_max, c
 
 
+@pytest.mark.parametrize(
+    "ddl",
+    [
+        "CREATE TABLE {name}(timestamp TIMESTAMP, f FLOAT, g FLOAT, site STRING, unit STRING)",
+        _PARITY_DDL,
+    ],
+    ids=["normal_table", "bool_field"],
+)
+def test_spark_fallback_put_matches_staged_put_across_dst_gap(engine, ddl):
+    """Uploads that ``Engine.write`` hands to ``spark.createDataFrame``
+    (every normal table, and a time series upload with a column type
+    the in-process cast leaves to Spark, here a boolean field) read
+    tz-naive timestamps as wall-clock times in the session zone, as the
+    staged parquet read does. Rows in the America/New_York
+    spring-forward gap land where the staged put puts them instead of
+    failing the put."""
+    from modelardb_rs_spark.operators import compress as compress_ops
+
+    spark = engine.spark
+    upload = _parity_upload(pa.timestamp("us"))
+    if ddl == _PARITY_DDL:
+        f = upload.column("f").cast(pa.int64()).to_numpy() % 2 == 1
+        upload = upload.set_column(1, "f", pa.array(f))
+    old_zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    server = start_server(engine)
+    try:
+        client = ModelarFlightClient(f"grpc://127.0.0.1:{server.port}")
+        for name in ("s_mem", "s_staged"):
+            client.create(ddl.format(name=name))
+        if ddl == _PARITY_DDL:
+            meta = engine.catalog.time_series_metadata("s_mem")
+            assert compress_ops.compress_arrow(upload, meta, "America/New_York") is None
+        client.write("s_mem", upload)
+        server.put_spill_bytes = 1  # every batch spills: the staged path
+        client.write("s_staged", upload)
+        mem, staged = _gridded(engine, "s_mem"), _gridded(engine, "s_staged")
+    finally:
+        server.shutdown()
+        spark.conf.set("spark.sql.session.timeZone", old_zone)
+    assert len(mem) == upload.num_rows
+    assert mem.equals(staged)
+
+
 def test_mixed_spark_and_in_process_files_answer_alike(engine):
     """A table holding Spark-written and in-process files answers the
     pushdown aggregates and the gridded scan like a table written wholly
@@ -429,10 +473,13 @@ def _job_ids(spark) -> set[int]:
     return {int(j.jobId()) for j in conv.asJava(sc._jsc.sc().statusStore().jobsList(None))}
 
 
-def test_small_put_runs_no_spark_job(engine):
+def test_small_put_runs_no_spark_job(engine, monkeypatch):
     """A warm do_put of a small time-series batch fits and writes on the
-    driver: no Spark job. The staged path (forced by a tiny spill bound)
-    does run jobs, which shows the count is live."""
+    driver: no Spark job. An upload over ``_IN_PROCESS_PUT_BYTES`` that
+    still fits one spill buffer, and one that spills, take the staged
+    path and run jobs, which also shows the count is live."""
+    import modelardb_rs_spark.flight as fl
+
     server = start_server(engine)
     try:
         client = ModelarFlightClient(f"grpc://127.0.0.1:{server.port}")
@@ -442,13 +489,18 @@ def test_small_put_runs_no_spark_job(engine):
         before = _job_ids(engine.spark)
         client.write("jobs", upload.slice(40))
         assert _job_ids(engine.spark) - before == set()
+        monkeypatch.setattr(fl, "_IN_PROCESS_PUT_BYTES", upload.slice(0, 40).nbytes - 1)
+        before = _job_ids(engine.spark)
+        client.write("jobs", upload.slice(0, 40))
+        assert _job_ids(engine.spark) - before
+        monkeypatch.undo()
         server.put_spill_bytes = 1
         before = _job_ids(engine.spark)
         client.write("jobs", upload.slice(0, 40))
         assert _job_ids(engine.spark) - before
     finally:
         server.shutdown()
-    assert engine.read_sql("SELECT count(f) AS n FROM jobs").collect()[0]["n"] == 200
+    assert engine.read_sql("SELECT count(f) AS n FROM jobs").collect()[0]["n"] == 240
 
 
 def test_put_with_null_field_commits_nothing(engine):
