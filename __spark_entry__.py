@@ -118,7 +118,8 @@ def _ts_engine(spark: SparkSession, sf_dir: str) -> Engine:
     key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     # version the cache by the DDL and the physical segment layout so
     # schema changes across rounds never read a stale /tmp data folder
-    ver = hashlib.md5(f"{_TS_TABLE_DDL}|layout=4".encode()).hexdigest()[:8]
+    # (layout 5: add-entries carry commit-log series rows)
+    ver = hashlib.md5(f"{_TS_TABLE_DDL}|layout=5".encode()).hexdigest()[:8]
     root = os.path.join(cache_root("entry"), f"{key}_{ver}")
     ck = (spark.sparkContext.applicationId, root)
     cached = _ENGINE_CACHE.get(ck)
@@ -646,7 +647,8 @@ def ts_many_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     import fcntl
 
     key = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    root = os.path.join(cache_root("entry"), key + "_users")
+    # versioned like _ts_engine: layout 5 adds commit-log series rows
+    root = os.path.join(cache_root("entry"), key + "_users_layout5")
     os.makedirs(root, exist_ok=True)
     with open(os.path.join(root, ".build_lock"), "w") as lock:
         fcntl.flock(lock, fcntl.LOCK_EX)

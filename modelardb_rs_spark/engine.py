@@ -35,7 +35,8 @@ import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from modelardb_rs_spark.catalog import Catalog
 from modelardb_rs_spark.operators import aggregates as agg_ops
@@ -415,8 +416,6 @@ class Engine:
         """Create a normal table. ``schema`` is a StructType or DDL string
         ("a INT, b STRING"). Timestamps are µs-precision (the reference
         coerces to µs for the same reason, parser.rs:848-860)."""
-        from pyspark.sql import types as T
-
         if isinstance(schema, str):
             schema = T.StructType.fromDDL(schema)
         self.catalog.add_normal_table(name, schema)
@@ -771,15 +770,33 @@ class Engine:
             if cache_input:
                 cast.unpersist()
 
-    def _arrow_frame(self, table: pa.Table) -> DataFrame:
-        """``table`` as a DataFrame with its tz-naive timestamps typed
-        TimestampNTZ, as ``spark.read.parquet`` reads them. The write's
-        cast then takes them as wall-clock times in the session zone,
-        resolving a DST gap or overlap as Spark does; the default
+    def _arrow_frame(self, table: pa.Table, schema: T.StructType | None = None) -> DataFrame:
+        """A driver-built Arrow ``table`` as a DataFrame — the one route
+        for frames the engine builds in memory (uploads, commit-log
+        answers, SHOW/DESCRIBE/EXPLAIN rows). Built from Arrow, the
+        frame is a local relation that Spark collects in one light job;
+        ``createDataFrame`` over a list of tuples pays a Python worker.
+        ``schema`` defaults to the table's own, with tz-naive timestamps
+        typed TimestampNTZ as ``spark.read.parquet`` reads them; a
+        write's cast then takes them as wall-clock times in the session
+        zone, resolving a DST gap or overlap as Spark does (the default
         ``createDataFrame`` localizes them in pyarrow, which raises on
-        either."""
-        return self.spark.createDataFrame(
-            table, schema=from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+        either)."""
+        if schema is None:
+            schema = from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
+        return self.spark.createDataFrame(table, schema=schema)
+
+    def _rows_frame(self, rows: list[tuple], ddl: str) -> DataFrame:
+        """String rows under a DDL schema, through ``_arrow_frame``."""
+        schema = T.StructType.fromDDL(ddl)
+        columns = [list(c) for c in zip(*rows)] or [[] for _ in schema.fields]
+        return self._arrow_frame(
+            pa.Table.from_arrays(columns, schema=to_arrow_schema(schema)), schema
+        )
+
+    def _session_is_utc(self) -> bool:
+        return self.spark.conf.get("spark.sql.session.timeZone", "UTC") in (
+            "UTC", "Etc/UTC", "GMT", "Z", "+00:00",
         )
 
     def _session_zone(self) -> str | int:
@@ -983,26 +1000,33 @@ class Engine:
         """True iff every series' segments are pairwise time-disjoint at
         ``version`` — which proves no duplicate (timestamp, series)
         points (timestamps strictly increase inside a segment). Cached
-        per snapshot version; computed with ONE narrow metadata window
-        over the segment columns (never the payloads). Disjointness of
-        the full snapshot implies it for every pruned subset, so the
-        cached answer serves all time ranges and tag filters. A write
-        bumps the version and invalidates naturally."""
+        per snapshot version. Disjointness of the full snapshot implies
+        it for every pruned subset, so the cached answer serves all time
+        ranges and tag filters. A write bumps the version and
+        invalidates naturally.
+
+        Proven from the commit log when every live file carries series
+        rows (``aggregates.log_disjoint``): no job, no file opened. Otherwise, or
+        when the log cannot prove it, ONE narrow metadata window over
+        the segment columns (never the payloads) decides, in 3 jobs."""
         if version < 0:
             return True
-        segments, info = self.segments(name, version=version, with_info=True)
+        snap = self.folder.log(name).snapshot(version)
         # keyed by the live FILE SET, not the version number alone: a
         # drop + recreate restarts versions at 0 but stages under fresh
         # txn= dirs, so a stale proof can never serve the new table
-        key = (name, version, info["paths_hash"])
+        key = (name, version, hash(tuple(sorted(snap.paths))))
         hit = self._disjoint_cache.get(key)
         if hit is not None:
             return hit
-        if info["n_files"] > self._DISJOINT_PROBE_MAX_FILES:
+        if agg_ops.log_disjoint(snap.files):
+            result = True
+        elif len(snap.files) > self._DISJOINT_PROBE_MAX_FILES:
             result = False
         else:
             from pyspark.sql import Window
 
+            segments = self.segments(name, version=version)
             w = Window.partitionBy("field_column", *meta.tag_columns).orderBy(
                 "start_time", "end_time"
             )
@@ -1055,9 +1079,7 @@ class Engine:
         if for_sql is not None and "*" not in for_sql:
             tokens = {t.lower() for t in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", for_sql)}
         terms = _where_conjuncts(for_sql) if for_sql is not None else []
-        if terms and self.spark.conf.get(
-            "spark.sql.session.timeZone", "UTC"
-        ) not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
+        if terms and not self._session_is_utc():
             # TIMESTAMP literals parse in the session zone; the µs-epoch
             # segment bounds only line up under UTC — keep tag pushdown,
             # drop the timestamp terms
@@ -1114,8 +1136,6 @@ class Engine:
             self.create_time_series_table(stmt.ts_metadata)
             return None
         if stmt.kind == "create_normal":
-            from pyspark.sql import types as T
-
             self.create_table(stmt.tables[0], T.StructType.fromDDL(stmt.columns_ddl))
             return None
         if stmt.kind == "truncate":
@@ -1131,9 +1151,7 @@ class Engine:
             return None
         if stmt.kind == "show_tables":
             rows = [(n, k) for n, k in sorted(self.tables().items())]
-            return self.spark.createDataFrame(
-                rows or [], "table_name string, table_type string"
-            )
+            return self._rows_frame(rows, "table_name string, table_type string")
         if stmt.kind == "describe":
             name = stmt.tables[0]
             kind = self.catalog.kind(name)
@@ -1152,14 +1170,10 @@ class Engine:
                     for g in meta.generated_columns
                 ]
                 rows += [(t, "string", "tag") for t in meta.tag_columns]
-            return self.spark.createDataFrame(
-                rows, "column_name string, data_type string, role string"
-            )
+            return self._rows_frame(rows, "column_name string, data_type string, role string")
         if stmt.kind == "explain_analyze":
             report = self.explain_path(stmt.select_sql, analyze=True)
-            return self.spark.createDataFrame(
-                [(line,) for line in report.splitlines()], "plan string"
-            )
+            return self._rows_frame([(line,) for line in report.splitlines()], "plan string")
         if stmt.kind == "delete":
             table = stmt.tables[0]
             if self.catalog.kind(table) != TableKind.TIME_SERIES:
@@ -1219,8 +1233,10 @@ class Engine:
     def explain_path(self, sql: str, analyze: bool = False) -> str:
         """Which execution path a statement takes — the API-level
         analog of the reference's EXPLAIN showing whether its physical
-        rule fired: 'segment-stats pushdown' (metadata-only Column
-        aggregation, optionally bucketed/partial), or 'gridded view'
+        rule fired: 'segment-stats pushdown' — answered on the driver
+        from the commit log's per-series rows ('commit-log answer', no
+        segment file read), or metadata-only Column aggregation over the
+        segment files, optionally bucketed/partial — or 'gridded view'
         (full reconstruction under spark.sql), or the statement kind
         for DDL/utility statements.
 
@@ -1300,6 +1316,8 @@ class Engine:
         bucketed = bool(re.search(r"time_bucket|date_trunc", sql, re.IGNORECASE))
         kind = "bucketed resample" if bucketed else "simple aggregates"
         plan = df._jdf.queryExecution().executedPlan().toString()
+        if "FileScan" not in plan:
+            return f"segment-stats pushdown ({kind}, commit-log answer: no segment file read)"
         partial = "MapInPandas" in plan or "ArrowEvalPython" in plan
         return (
             f"segment-stats pushdown ({kind}"
@@ -1373,7 +1391,10 @@ class Engine:
         → pure Column aggregation over segment statistics. Extended past
         the reference: GROUP BY over tag columns and WHERE clauses made
         of tag-equality conjunctions are also eligible (tags are
-        segment-row columns, so both stay exact)."""
+        segment-row columns, so both stay exact). Without a time bound
+        the commit log's series rows answer first (``_log_aggregates``);
+        a two-sided time bound fires only under a UTC session zone,
+        because TIMESTAMP literals are session-zone wall-clock times."""
         m = _SIMPLE_AGG_SQL.match(sql)
         if not m:
             return None
@@ -1399,9 +1420,7 @@ class Engine:
                 group_cols.append(g)
             elif bucket_us is None and (b := _bucket_us_of(g, meta.timestamp_column)):
                 width, origin, kind = b
-                if kind == "date_trunc" and self.spark.conf.get(
-                    "spark.sql.session.timeZone", "UTC"
-                ) not in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00"):
+                if kind == "date_trunc" and not self._session_is_utc():
                     # Spark's date_trunc truncates in the session zone;
                     # the epoch-aligned rewrite only matches under UTC —
                     # decline so spark.sql answers with zone semantics
@@ -1421,6 +1440,11 @@ class Engine:
                         continue
                 if bm := _TS_BOUND.match(cond):
                     if bm["col"] == meta.timestamp_column:
+                        if not self._session_is_utc():
+                            # TIMESTAMP literals parse in the session
+                            # zone; the µs bounds below are UTC — decline
+                            # so spark.sql answers with zone semantics
+                            return None
                         try:
                             us = _to_us(datetime.datetime.fromisoformat(bm["val"]))
                         except ValueError:
@@ -1534,6 +1558,10 @@ class Engine:
             return None
         if bucket_expr is not None and not bucket_seen:
             return None  # grouped by a bucket the projection doesn't show
+        if bucket_us is None and lo_us is None:
+            logged = self._log_aggregates(table, meta, aggs, group_cols, tag_filters)
+            if logged is not None:
+                return logged
         segments, info = self.segments(table, lo_us, hi_us, with_info=True)
         for col, val in tag_filters:
             segments = segments.where(F.col(col) == F.lit(val))
@@ -1561,6 +1589,37 @@ class Engine:
             out = agg_ops.segment_aggregates(segments, aggs, group_cols or None)
         keep = group_cols + [a[2] for a in aggs]
         return out.select(*keep)
+
+    def _log_aggregates(
+        self,
+        name: str,
+        meta: TimeSeriesTableMetadata,
+        aggs: list[tuple[str, int, str]],
+        group_by: list[str],
+        tag_filters: list[tuple[str, object]],
+    ) -> DataFrame | None:
+        """Un-time-bounded simple aggregates answered from the latest
+        snapshot's commit-log series rows (``aggregates.log_aggregates``)
+        as an Arrow-built frame with the Column path's schema. None —
+        take the Column path — when any live file of a referenced field
+        partition lacks rows (legacy, over the series cap, or from a
+        wide commit), or a group key or filter is not a string tag."""
+        tags = set(meta.tag_columns)
+        if not set(group_by) <= tags or any(
+            t not in tags or not isinstance(v, str) for t, v in tag_filters
+        ):
+            return None
+        series: dict[int, list[list]] = {idx: [] for _, idx, _ in aggs}
+        for f in self.folder.log(name).snapshot().files:
+            idx = f.get("field_column")
+            if idx is None or (idx in series and f.get("series") is None):
+                return None
+            if idx in series:
+                series[idx].extend(f["series"])
+        answer = agg_ops.log_aggregates(
+            series, meta.tag_columns, aggs, group_by, tag_filters
+        )
+        return None if answer is None else self._arrow_frame(*answer)
 
     # ------------------------------------------------------------- include
 
@@ -1608,8 +1667,9 @@ class Engine:
         aggregate selection (None|count|min|max|sum|avg), tag filters,
         GROUP BY, and a time range.
 
-        Aggregates with tag constraints run purely on segment statistics;
-        aggregates with a time range use partial pushdown (stats for
+        Aggregates with tag constraints run purely on segment statistics
+        (from the commit log's series rows when every live file has
+        them); aggregates with a time range use partial pushdown (stats for
         segments fully inside the range, decode only for boundary
         segments — operators/aggregates.py::time_range_aggregates)."""
         meta = self.catalog.time_series_metadata(name)
@@ -1619,14 +1679,21 @@ class Engine:
         start_us, end_us = _to_us(start), _to_us(end)
 
         if agg_items:
-            segments = self.segments(name, start_us, end_us)
-            for t, v in (tags or {}).items():
-                segments = segments.where(F.col(t) == F.lit(v))
             aggs = [
                 (a.lower(), field_index[c], f"{a.lower()}_{c}") for c, a in agg_items.items()
             ]
             # identity check, not truthiness: epoch 0 is a valid boundary
-            if start_us is None and end_us is None:
+            unbounded = start_us is None and end_us is None
+            if unbounded:
+                logged = self._log_aggregates(
+                    name, meta, aggs, list(group_by or []), list((tags or {}).items())
+                )
+                if logged is not None:
+                    return logged
+            segments = self.segments(name, start_us, end_us)
+            for t, v in (tags or {}).items():
+                segments = segments.where(F.col(t) == F.lit(v))
+            if unbounded:
                 return agg_ops.segment_aggregates(segments, aggs, group_by or None)
             lo = start_us if start_us is not None else -(2**62)
             hi = end_us if end_us is not None else 2**62

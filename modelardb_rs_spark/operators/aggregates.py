@@ -30,12 +30,32 @@ At 100 TB this reads only the stats columns of the segment Parquet files
 tag columns IS supported here (a strict superset of the reference rule,
 which bails on any GROUP BY): tags are segment-row columns, so grouped
 aggregates are equally exact.
+
+Commit-log answers: every segment add-entry of a commit that stats its
+files on the driver carries one row per series (tag tuple) of that file
+(``series_rows``: value_count, seg_sum, seg_sum_sq, min/max value, time
+span, in-file disjointness). An un-time-bounded simple aggregate whose
+referenced field partitions have rows in every live file is answered on
+the driver from those rows (``log_aggregates``) — no segment file is
+opened and no Spark job runs until the one-row result is collected. The
+merge math is the numpy twin of ``pushdown_agg_column`` and
+``_variance_final``: counts are exact integer sums, min/max follow
+Spark's NaN ordering (NaN above every number), and sums merge with
+``math.fsum``, so they equal the Column path up to f64 addition order.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from modelardb_rs_spark.compression.fitter import _spark_max, _spark_min
 
 SIMPLE_AGGS = (
     "count", "min", "max", "sum", "avg",
@@ -126,6 +146,223 @@ def segment_aggregates(
     if group_by_tags:
         return segments.groupBy(*group_by_tags).agg(*cols)
     return segments.agg(*cols)
+
+
+# -- commit-log series rows ---------------------------------------------------
+
+# Segment columns one series row summarizes, and the positions of a row:
+# [[tag values], value_count, seg_sum, seg_sum_sq, min_value, max_value,
+#  min start_time, max end_time, disjoint]
+SERIES_STATS_COLUMNS = (
+    "value_count", "seg_sum", "seg_sum_sq", "min_value", "max_value",
+    "start_time", "end_time",
+)
+TAGS, COUNT, SUM, SUM_SQ, MIN, MAX, START, END, DISJOINT = range(9)
+
+
+def _fsum(values) -> float:
+    """``math.fsum``, except where it refuses IEEE semantics: +inf and
+    -inf together (Spark's double SUM gives NaN) or an intermediate
+    overflow (inf)."""
+    try:
+        return math.fsum(values)
+    except (ValueError, OverflowError):
+        return float(np.sum(np.asarray(values, dtype=np.float64)))
+
+
+def _spans_disjoint(spans: list[tuple[int, int]]) -> bool:
+    """Whether closed time spans are pairwise disjoint: in start order,
+    each starts after the running max of the earlier ends."""
+    spans = sorted(spans)
+    reach = spans[0][1] if spans else 0
+    for start, end in spans[1:]:
+        if start <= reach:
+            return False
+        reach = max(reach, end)
+    return True
+
+
+def _batch_series_rows(
+    segs: pa.Table, tag_columns: list[str], max_series: int
+) -> list[list] | None:
+    """``series_rows`` of one batch of segment rows."""
+    if any(segs.column(c).null_count for c in SERIES_STATS_COLUMNS):
+        return None
+    if not segs.num_rows:
+        return []
+    key = np.zeros(segs.num_rows, dtype=np.int64)
+    for t in tag_columns:
+        codes = segs.column(t).combine_chunks().dictionary_encode()
+        idx = np.asarray(codes.indices.fill_null(-1), dtype=np.int64) + 1
+        key = np.unique(key * (len(codes.dictionary) + 1) + idx, return_inverse=True)[1]
+        if key.max() >= max_series:
+            return None
+    col = {c: segs.column(c).to_numpy() for c in SERIES_STATS_COLUMNS}
+    order = np.lexsort((col["end_time"], col["start_time"], key))
+    key = key[order]
+    col = {c: v[order] for c, v in col.items()}
+    bounds = np.flatnonzero(np.diff(key)) + 1
+    firsts = np.concatenate(([0], bounds)).astype(np.int64)
+    lasts = np.concatenate((bounds, [len(key)])).astype(np.int64)
+    tags = [segs.column(t).take(order[firsts]).to_pylist() for t in tag_columns]
+    rows = []
+    for g, (a, b) in enumerate(zip(firsts, lasts)):
+        s, e = col["start_time"][a:b], col["end_time"][a:b]
+        rows.append([
+            [values[g] for values in tags],
+            int(col["value_count"][a:b].sum()),
+            _fsum(col["seg_sum"][a:b]),
+            _fsum(col["seg_sum_sq"][a:b]),
+            _spark_min(col["min_value"][a:b]),
+            _spark_max(col["max_value"][a:b]),
+            int(s[0]),
+            int(e.max()),
+            bool(np.all(s[1:] > np.maximum.accumulate(e[:-1]))),
+        ])
+    return rows
+
+
+def series_rows(batches, tag_columns: list[str], max_series: int) -> list[list] | None:
+    """One row per series (tag tuple) of one segment file — the stats
+    ``DataFolder`` records in the file's add-entry. ``batches`` are the
+    file's segment rows (Arrow tables or record batches of the tag and
+    ``SERIES_STATS_COLUMNS`` columns), read one at a time so driver
+    memory is bounded by the batch size, not the file. ``disjoint``
+    says the series' segments are pairwise time-disjoint: in each batch
+    every start is after the running max of the earlier ends, in
+    (start_time, end_time) order, and the series' per-batch spans are
+    disjoint too (``_spans_disjoint``; when one batch's span covers
+    another's segments the series is reported not disjoint even if no
+    two segments overlap, which only costs the probe). Returns None
+    — record no rows — when the file holds more than ``max_series``
+    series or any stats value is NULL (``seg_sum_sq`` of files written
+    before it existed)."""
+    parts: dict[tuple, list[list]] = {}
+    for batch in batches:
+        if isinstance(batch, pa.RecordBatch):
+            batch = pa.Table.from_batches([batch])
+        rows = _batch_series_rows(batch, tag_columns, max_series)
+        if rows is None:
+            return None
+        for r in rows:
+            parts.setdefault(tuple(r[TAGS]), []).append(r)
+        if len(parts) > max_series:
+            return None
+    merged = []
+    for rows in parts.values():
+        merged.append([
+            rows[0][TAGS],
+            sum(r[COUNT] for r in rows),
+            _fsum([r[SUM] for r in rows]),
+            _fsum([r[SUM_SQ] for r in rows]),
+            _spark_min(np.array([r[MIN] for r in rows])),
+            _spark_max(np.array([r[MAX] for r in rows])),
+            min(r[START] for r in rows),
+            max(r[END] for r in rows),
+            all(r[DISJOINT] for r in rows) and _spans_disjoint([(r[START], r[END]) for r in rows]),
+        ])
+    return merged
+
+
+def log_disjoint(files: list[dict]) -> bool:
+    """Whether the series rows of ``files`` (live segment add-entries)
+    prove every series time-disjoint: each series is disjoint inside
+    every file, and its per-file spans are disjoint too. False when any
+    file lacks rows — that proves nothing either way."""
+    spans: dict[tuple, list[tuple[int, int]]] = {}
+    for f in files:
+        rows = f.get("series")
+        if rows is None or f.get("field_column") is None:
+            return False
+        for r in rows:
+            if not r[DISJOINT]:
+                return False
+            spans.setdefault((f["field_column"], *r[TAGS]), []).append((r[START], r[END]))
+    return all(_spans_disjoint(series) for series in spans.values())
+
+
+def _variance_value(vf: str, n: float, s: float, q: float) -> float | None:
+    """``_variance_final`` on Python floats (same clamp, NaN and n <= 1
+    rules)."""
+    m2 = q - s * s / n
+    if not (m2 > 0.0 or math.isnan(m2)):
+        m2 = 0.0
+    if vf.endswith("_samp"):
+        if n <= 1:
+            return None
+        v = m2 / (n - 1)
+    else:
+        v = m2 / n
+    return math.sqrt(v) if vf.startswith("stddev") else v
+
+
+def _merged(func: str, rows: list[list]):
+    """One aggregate over the series rows of one group and field — the
+    numpy twin of ``pushdown_agg_column``."""
+    if func == "count":
+        return sum(r[COUNT] for r in rows)
+    if not rows:
+        return None
+    if func == "min":
+        return _spark_min(np.array([r[MIN] for r in rows]))
+    if func == "max":
+        return _spark_max(np.array([r[MAX] for r in rows]))
+    n = sum(r[COUNT] for r in rows)
+    s = _fsum([r[SUM] for r in rows])
+    if func == "sum":
+        return s
+    if func == "avg":
+        return s / n
+    return _variance_value(
+        _VAR_CANON.get(func, func), float(n), s, _fsum([r[SUM_SQ] for r in rows])
+    )
+
+
+def log_aggregates(
+    series: dict[int, list[list]],
+    tag_columns: list[str],
+    aggs: list[tuple[str, int, str]],
+    group_by_tags: list[str] | None = None,
+    tag_filters: list[tuple[str, str]] | None = None,
+) -> tuple[pa.Table, T.StructType] | None:
+    """``segment_aggregates`` answered from commit-log series rows.
+
+    ``series`` maps each referenced field index to the series rows of
+    every live file of that field partition; ``tag_filters`` are
+    ``tag = 'value'`` conjuncts. Returns the result as an Arrow table
+    plus the Spark schema the Column path produces (tags string, COUNT
+    a non-null long, MIN/MAX float, the rest double), groups in
+    ascending tag order with NULL first; None when the output column
+    names collide or an aggregate is not one of ``SIMPLE_AGGS`` (the
+    Column path then reports the error)."""
+    group = list(group_by_tags or [])
+    names = [n.lower() for n in group + [alias for _, _, alias in aggs]]
+    if len(set(names)) != len(names) or any(f not in SIMPLE_AGGS for f, _, _ in aggs):
+        return None
+    pos = {t: i for i, t in enumerate(tag_columns)}
+    wanted = [(pos[t], v) for t, v in tag_filters or []]
+    parts: dict[tuple, dict[int, list[list]]] = {}
+    for idx, rows in series.items():
+        for r in rows:
+            tags = r[TAGS]
+            if all(tags[p] == v for p, v in wanted):
+                key = tuple(tags[pos[t]] for t in group)
+                parts.setdefault(key, {}).setdefault(idx, []).append(r)
+    if not group:
+        parts.setdefault((), {})
+    keys = sorted(parts, key=lambda k: [(v is not None, v or "") for v in k])
+    fields = [T.StructField(t, T.StringType(), True) for t in group]
+    columns = [[k[i] for k in keys] for i in range(len(group))]
+    for func, idx, alias in aggs:
+        columns.append([_merged(func, parts[k].get(idx, [])) for k in keys])
+        if func == "count":
+            fields.append(T.StructField(alias, T.LongType(), False))
+        elif func in ("min", "max"):
+            fields.append(T.StructField(alias, T.FloatType(), True))
+        else:
+            fields.append(T.StructField(alias, T.DoubleType(), True))
+    schema = T.StructType(fields)
+    return pa.Table.from_arrays(columns, schema=to_arrow_schema(schema)), schema
 
 
 def time_range_aggregates(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from modelardb_rs_spark.operators import aggregates as agg_ops
 from modelardb_rs_spark.sources.hadoopfs import HadoopFS
 from modelardb_rs_spark.sources.txlog import TransactionLog
 from modelardb_rs_spark.types import TimeSeriesTableMetadata, segment_schema
@@ -55,6 +56,16 @@ _OPTIMIZE_SMALL_FRACTION = 0.75
 # one distributed job instead of driver-side footer reads.
 _DRIVER_STATS_MAX_FILES = 64
 
+# A file holding more series than this records no per-series rows in its
+# add-entry. A row is ~135 bytes of JSON; a checkpoint of 64 files at the
+# cap is 1.1 MB and parses in 15 ms on a 4-core host (256 series: 2.1 MB,
+# 39 ms), so a wide commit stays cheap for every snapshot that reads it.
+_SERIES_ROWS_MAX = 128
+# Segment rows per batch when a file's series rows are computed (~50
+# bytes each: tags plus the seven stats columns), so a commit's threaded
+# footer reads hold ~3 MB per file whatever the file size.
+_SERIES_BATCH_ROWS = 65536
+
 
 class ConcurrentModificationError(RuntimeError):
     """A transactional rewrite lost a race: files it read were removed
@@ -62,19 +73,25 @@ class ConcurrentModificationError(RuntimeError):
     snapshot."""
 
 
-def _parquet_segment_stats(fs: HadoopFS, uri: str, size: int) -> dict | None:
-    """Per-file stats from the Parquet FOOTER plus three tiny columns —
+def _parquet_segment_stats(
+    fs: HadoopFS, uri: str, size: int, tag_columns: list[str] | None = None
+) -> dict | None:
+    """Per-file stats from the Parquet FOOTER plus a few narrow columns —
     no Spark job. ``file:`` URIs read via pyarrow directly; other
     schemes go through a seekable Hadoop stream. Returns
     ``{"span": (min start_time, max end_time) | None,
        "all_fast": bool | None,
-       "fast_points": int | None, "total_points": int | None}``.
+       "fast_points": int | None, "total_points": int | None,
+       "series": list | None}``.
     ``all_fast`` means every segment in the file is JVM-reconstructable
     (max model_type_id < GORILLA and max ts_kind == 0) so readers can
     drop the Python decode branch; ``fast_points``/``total_points`` are
     the decoded-point counts per branch (sum of value_count), letting
     readers drop the JVM branch when fast points are negligible — each
     extra branch is an extra scan of the segment files.
+    ``series`` (only with ``tag_columns``) holds one stats row per
+    series of the file (``aggregates.series_rows``), or None when the
+    file has more than ``_SERIES_ROWS_MAX`` series or NULL stats.
     Returns None (conservative) when the footer is unreadable."""
     stream = None
     try:
@@ -112,7 +129,7 @@ def _parquet_segment_stats(fs: HadoopFS, uri: str, size: int) -> dict | None:
     all_fast = None
     if max_model is not None and max_ts_kind is not None:
         all_fast = bool(int(max_model) < GORILLA_ID and int(max_ts_kind) == 0)
-    fast_points = total_points = None
+    fast_points = total_points = series = None
     try:
         # Three narrow columns (two int8, one int32) — a few KB even for
         # files holding 100k+ segments; the file handle is already open.
@@ -128,6 +145,14 @@ def _parquet_segment_stats(fs: HadoopFS, uri: str, size: int) -> dict | None:
         fast_points = int(
             pc.sum(pc.if_else(pc.fill_null(fast_mask, False), counts, 0)).as_py() or 0
         )
+        if tag_columns is not None:
+            columns = [*tag_columns, *agg_ops.SERIES_STATS_COLUMNS]
+            if set(columns) <= set(pf.schema_arrow.names):
+                series = agg_ops.series_rows(
+                    pf.iter_batches(batch_size=_SERIES_BATCH_ROWS, columns=columns),
+                    tag_columns,
+                    _SERIES_ROWS_MAX,
+                )
     except Exception:
         pass
     finally:
@@ -138,6 +163,7 @@ def _parquet_segment_stats(fs: HadoopFS, uri: str, size: int) -> dict | None:
         "all_fast": all_fast,
         "fast_points": fast_points,
         "total_points": total_points,
+        "series": series,
     }
 
 
@@ -203,7 +229,7 @@ class DataFolder:
         name: str,
         write_staged,
         op: str = "append",
-        segment_stats: bool = False,
+        segment_tags: list[str] | None = None,
         remove: list[str] | None = None,
         txn: tuple[str, int] | None = None,
         replace_expected: list[str] | None = None,
@@ -213,13 +239,17 @@ class DataFolder:
         """Run `write_staged(staged_uri)` into a fresh txn= directory,
         then commit the produced parquet files atomically.
 
-        With ``segment_stats`` each add-entry also records the file's
-        field_column (from the partition path) and min/max time span —
-        Delta-style data skipping: readers prune files driver-side from
-        the log before Spark ever lists or opens them. Spans come from
-        the Parquet FOOTERS (KB-sized ranged reads, threaded across
-        files), not a Spark job — commit latency stays flat no matter
-        how wide the table is.
+        ``segment_tags`` (the tag columns of a time series table) makes
+        each add-entry also record the file's field_column (from the
+        partition path) and min/max time span — Delta-style data
+        skipping: readers prune files driver-side from the log before
+        Spark ever lists or opens them. Spans come from the Parquet
+        FOOTERS (KB-sized ranged reads, threaded across files), not a
+        Spark job — commit latency stays flat no matter how wide the
+        table is. A commit of at most ``_DRIVER_STATS_MAX_FILES`` files
+        also records ``series``: one stats row per series (tag tuple)
+        of each file, read from its narrow columns, which lets simple
+        aggregates and the duplicate-points proof skip the files.
 
         ``remove`` lists rel-paths this commit replaces (OPTIMIZE). The
         commit aborts if any of them left the live set concurrently —
@@ -257,7 +287,7 @@ class DataFolder:
             if m:
                 entry["field_column"] = int(m.group(1))
             add.append(entry)
-        if segment_stats and add:
+        if segment_tags is not None and add:
             if len(add) > _DRIVER_STATS_MAX_FILES:
                 # wide commit: ONE distributed job computes every file's
                 # stats (narrow columns only) — the driver reading
@@ -267,7 +297,8 @@ class DataFolder:
             else:
                 def stats_of(entry: dict):
                     return _parquet_segment_stats(
-                        self.fs, self.fs.join(table, entry["path"]), entry["size"]
+                        self.fs, self.fs.join(table, entry["path"]), entry["size"],
+                        segment_tags,
                     )
 
                 if len(add) == 1:
@@ -287,6 +318,8 @@ class DataFolder:
                 if st.get("total_points") is not None:
                     entry["fast_points"] = st["fast_points"]
                     entry["total_points"] = st["total_points"]
+                if st.get("series") is not None:
+                    entry["series"] = st["series"]
         elif add:
             # normal tables: record each file's row count (one footer
             # ranged read per file, threaded — same flat-commit-latency
@@ -369,7 +402,8 @@ class DataFolder:
         directory: group by input_file_name over FIVE narrow columns.
         Same outputs as _parquet_segment_stats, computed where the data
         lives — commit latency stays flat no matter how many files one
-        transaction stages."""
+        transaction stages — except ``series``: a wide commit records no
+        series rows, so its files keep readers on the Spark paths."""
         from modelardb_rs_spark.types import GORILLA_ID
 
         df = self.spark.read.parquet(staged)
@@ -490,7 +524,7 @@ class DataFolder:
         return self._stage_and_commit(
             meta.name,
             write_frame if isinstance(segments, pd.DataFrame) else write_staged,
-            segment_stats=True,
+            segment_tags=meta.tag_columns,
             txn=txn,
         )
 
@@ -807,7 +841,7 @@ class DataFolder:
             name,
             write_staged,
             op="optimize",
-            segment_stats=meta is not None,
+            segment_tags=meta.tag_columns if meta is not None else None,
             remove=removed,
         )
         produced = len(self.log(name).read_commit(version).get("add", []))
@@ -890,7 +924,7 @@ class DataFolder:
             )
 
         version = self._stage_and_commit(
-            name, write_staged, op="expire", segment_stats=True,
+            name, write_staged, op="expire", segment_tags=meta.tag_columns,
             remove=old + boundary,
         )
         return {
@@ -938,7 +972,7 @@ class DataFolder:
             )
 
         version = self._stage_and_commit(
-            name, write_staged, op="resegment", segment_stats=True,
+            name, write_staged, op="resegment", segment_tags=meta.tag_columns,
             remove=list(snap.paths),
         )
         return {"files_before": len(snap.paths), "version": version}

@@ -29,6 +29,17 @@ Commit schema::
      "add": [{"path": "txn=../field_column=0/part-...parquet", "size": S}],
      "remove": ["relative/path", ...]}
 
+Segment add-entries (time series tables, ``DataFolder._stage_and_commit``)
+also carry ``field_column``, ``min_start_time``/``max_end_time``,
+``all_fast``, ``fast_points``/``total_points`` and, for files statted on
+the driver, ``series``: one row per series (tag tuple) of the file,
+``[[tag values], value_count, seg_sum, seg_sum_sq, min_value,
+max_value, min start_time, max end_time, disjoint]``
+(``operators/aggregates.series_rows``). A file with more series than
+``datafolder._SERIES_ROWS_MAX``, NULL stats, or from a commit of more
+than ``datafolder._DRIVER_STATS_MAX_FILES`` files has no ``series`` key;
+readers then take the paths that open the files.
+
 Paths are relative to the table's data directory so a table (or the
 whole folder) can be copied/moved wholesale.
 """

@@ -953,3 +953,369 @@ def test_resample_randomized_mixed_series(engine, spark):
             .collect()
         }
         assert got == ref and len(ref) > 20, (every, len(got), len(ref))
+
+
+# -- commit-log answers --------------------------------------------------------
+# Un-time-bounded simple aggregates are answered from the per-series rows
+# each segment add-entry carries. They must equal the Column path over the
+# segment files (same schema, exact count/min/max, sum/avg/var up to f64
+# addition order) and the gridded view.
+
+LOG_DDL = (
+    "CREATE TIME SERIES TABLE {name}(timestamp TIMESTAMP, f FIELD, g FIELD(0.5), "
+    "tag TAG, site TAG)"
+)
+
+
+def _arrow_points(start_s, values, tags, sites):
+    import pyarrow as pa
+
+    n = len(values)
+    return pa.table({
+        "timestamp": pa.array(
+            [int(TS0.timestamp() + start_s + i) * 1_000_000 for i in range(n)],
+            pa.timestamp("us", tz="UTC"),
+        ),
+        "f": pa.array(values, pa.float32()),
+        "g": pa.array([float(i % 13) for i in range(n)], pa.float32()),
+        "tag": pa.array(tags),
+        "site": pa.array(sites),
+    })
+
+
+@pytest.fixture(scope="module")
+def log_engine(spark, tmp_path_factory):
+    """Spark-written and in-process (Arrow) files, NULL tags and a
+    single-point series."""
+    from modelardb_rs_spark.engine import Engine
+
+    engine = Engine(spark, str(tmp_path_factory.mktemp("log_answers") / "data_folder"))
+    engine.read_sql(LOG_DDL.format(name="lg"))
+    rows = [
+        Row(
+            timestamp=TS0 + datetime.timedelta(seconds=i),
+            f=float(i % 17) * 0.5,
+            g=float(i % 29),
+            tag=None if i % 7 == 0 else f"t{i % 3}",
+            site=f"s{i % 2}",
+        )
+        for i in range(900)
+    ]
+    engine.write("lg", spark.createDataFrame(rows))
+    n = 60
+    engine.write("lg", _arrow_points(
+        1000, [float(i) for i in range(n)], ["t1"] * n, [None] * n
+    ))
+    engine.write("lg", _arrow_points(4000, [42.0], ["solo"], ["s0"]))
+    assert all(f.get("series") for f in engine.folder.log("lg").snapshot().files)
+    return engine
+
+
+def _same(a, b, approx: bool) -> bool:
+    import math
+
+    if a is None or b is None:
+        return a is None and b is None
+    if isinstance(a, float):
+        if math.isnan(a) or math.isnan(b):
+            return math.isnan(a) and math.isnan(b)
+        if approx and math.isfinite(a):
+            return a == pytest.approx(b, rel=1e-9, abs=1e-9)
+    return a == b
+
+
+def assert_rows_match(got, want, schema):
+    """Order-insensitive row equality: DoubleType columns (sum, avg, the
+    variance family) within f64 reassociation, everything else exact."""
+    from pyspark.sql import types as T
+
+    approx = [isinstance(f.dataType, T.DoubleType) for f in schema.fields]
+    got, want = sorted(got, key=str), sorted(want, key=str)
+    assert len(got) == len(want), (got, want)
+    for g, w in zip(got, want):
+        assert all(_same(a, b, ap) for a, b, ap in zip(g, w, approx)), (g, w)
+
+
+def log_and_column(engine, monkeypatch, sql, empty=False):
+    """The log-answered frame of one statement, checked against the
+    Column path (which reads no file either when the table is empty)."""
+    log = engine.read_sql(sql)
+    assert "commit-log answer" in engine.explain_path(sql), sql
+    with monkeypatch.context() as m:
+        m.setattr(engine, "_log_aggregates", lambda *args: None)
+        column = engine.read_sql(sql)
+        assert empty or "metadata-only" in engine.explain_path(sql), sql
+    assert log.schema == column.schema
+    assert_rows_match(log.collect(), column.collect(), log.schema)
+    return log
+
+
+_ALL = "count(f) AS n, min(f) AS mn, max(f) AS mx, sum(f) AS s, avg(f) AS a"
+_VAR = ("var_pop(g) AS vp, var_samp(g) AS vs, variance(f) AS v, stddev_pop(g) AS sp, "
+        "stddev_samp(g) AS ss, stddev(f) AS sd")
+
+
+@pytest.mark.parametrize(
+    "select,where,group",
+    [
+        (_ALL, "", ""),
+        (_VAR, "", ""),
+        (f"{_ALL}, {_VAR}", "", "tag"),
+        ("count(*) AS n, max(g) AS mx", "", "tag, site"),
+        ("count(g) AS n, sum(g) AS s", " WHERE site = 's0'", "tag"),
+        (_ALL, " WHERE tag = 't1' AND site = 's1'", ""),
+        ("count(*), min(g), var_samp(f)", " WHERE tag = 'solo'", ""),
+        (_ALL, " WHERE tag = 'absent'", ""),
+        (_ALL, " WHERE tag = 'absent'", "tag"),
+    ],
+)
+def test_log_answer_matches_column_path_and_grid(log_engine, monkeypatch, select, where, group):
+    proj = f"{group}, {select}" if group else select
+    tail = f" GROUP BY {group}" if group else ""
+    sql = f"SELECT {proj} FROM lg{where}{tail}"
+    log = log_and_column(log_engine, monkeypatch, sql)
+    defeat = (" AND " if where else " WHERE ") + "timestamp >= timestamp '1970-01-01'"
+    grid = log_engine.read_sql(f"SELECT {proj} FROM lg{where}{defeat}{tail}")
+    assert "gridded view" in log_engine.explain_path(f"SELECT {proj} FROM lg{where}{defeat}{tail}")
+    assert_rows_match(log.collect(), grid.collect(), log.schema)
+
+
+def test_log_merge_special_values_match_column_path(spark):
+    """The merge twin against ``segment_aggregates`` over the same
+    segment stats: NaN orders above every number (max NaN, min skips
+    it), +inf and -inf sum to NaN, n <= 1 has a NULL sample variance.
+    (Neither write path stores NaN/inf points yet, so this runs on
+    segment rows directly.)"""
+    from modelardb_rs_spark.operators import aggregates as agg
+    from modelardb_rs_spark.types import segment_schema
+
+    nan, inf = float("nan"), float("inf")
+    stats = [  # tag, value_count, seg_sum, seg_sum_sq, min, max
+        ("nan", 4, nan, nan, 1.0, nan), ("nan", 2, 3.0, 5.0, 0.5, 2.0),
+        ("inf", 2, inf, inf, 1.0, inf), ("inf", 3, -inf, inf, -inf, 2.0),
+        ("allnan", 1, nan, nan, nan, nan), ("solo", 1, 42.0, 1764.0, 42.0, 42.0),
+        ("big", 3, 1e308, inf, 1e30, 3e38), ("big", 2, 1e308, 4.0, 1.0, 2.0),
+        (None, 5, 10.0, 30.0, 1.0, 3.0),
+    ]
+    schema = segment_schema(["tag"])
+    rows = []
+    for i, (tag, n, s, q, mn, mx) in enumerate(stats):
+        values = dict(model_type_id=0, start_time=10 * i, end_time=10 * i + n, timestamps=b"",
+                      min_value=mn, max_value=mx, values=b"", residuals=b"", error=0.0,
+                      value_count=n, seg_sum=s, seg_sum_sq=q, ts_kind=0, param0=None,
+                      param1=None, field_column=0, tag=tag)
+        rows.append(tuple(values[f.name] for f in schema.fields))
+    segments = spark.createDataFrame(rows, schema)
+    aggs = [(f, 0, f) for f in agg.SIMPLE_AGGS]
+    import pyarrow as pa
+
+    series = agg.series_rows(
+        [pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows])], ["tag"], 64
+    )
+    for group in ([], ["tag"]):
+        table, log_schema = agg.log_aggregates({0: series}, ["tag"], aggs, group)
+        column = agg.segment_aggregates(segments, aggs, group or None)
+        assert log_schema == column.schema
+        assert_rows_match([tuple(r.values()) for r in table.to_pylist()],
+                          column.collect(), log_schema)
+    grouped = agg.log_aggregates({0: series}, ["tag"], aggs, ["tag"])[0]
+    by_tag = {r["tag"]: r for r in grouped.to_pylist()}
+    assert by_tag["nan"]["min"] == 0.5 and by_tag["nan"]["max"] != by_tag["nan"]["max"]
+    assert by_tag["inf"]["sum"] != by_tag["inf"]["sum"]  # inf + -inf
+    assert by_tag["solo"]["var_samp"] is None and by_tag["solo"]["var_pop"] == 0.0
+
+
+def test_log_answer_from_read_time_series_table(log_engine, monkeypatch):
+    log = log_engine.read_time_series_table(
+        "lg", columns={"f": "avg", "g": "max"}, group_by=["tag"], tags={"site": "s1"}
+    )
+    assert "FileScan" not in log._jdf.queryExecution().executedPlan().toString()
+    with monkeypatch.context() as m:
+        m.setattr(log_engine, "_log_aggregates", lambda *args: None)
+        column = log_engine.read_time_series_table(
+            "lg", columns={"f": "avg", "g": "max"}, group_by=["tag"], tags={"site": "s1"}
+        )
+        assert "FileScan" in column._jdf.queryExecution().executedPlan().toString()
+    assert log.schema == column.schema
+    assert_rows_match(log.collect(), column.collect(), log.schema)
+
+
+def test_log_answer_on_empty_and_truncated_tables(engine, spark, monkeypatch):
+    engine.read_sql(LOG_DDL.format(name="e"))
+    for sql in (f"SELECT {_ALL}, {_VAR} FROM e", f"SELECT tag, {_ALL} FROM e GROUP BY tag",
+                "SELECT count(*) AS n FROM e WHERE tag = 'x'"):
+        log_and_column(engine, monkeypatch, sql, empty=True)
+    engine.write("e", _arrow_points(0, [1.0, 2.0], ["a", "b"], ["s", "s"]))
+    engine.read_sql("TRUNCATE e")
+    row = log_and_column(engine, monkeypatch, f"SELECT {_ALL} FROM e", empty=True).collect()[0]
+    assert row.n == 0 and row.s is None
+
+
+def _strip_series(engine, name, version):
+    """Rewrite commit ``version`` as a writer predating series rows
+    would have left it."""
+    import json
+
+    log = engine.folder.log(name)
+    doc = log.read_commit(version)
+    for entry in doc["add"]:
+        entry.pop("series", None)
+    log.fs.write_bytes(log._commit_uri(version), json.dumps(doc).encode("utf-8"))
+
+
+def test_any_file_without_rows_forces_the_column_path(engine, spark, monkeypatch):
+    """A legacy file (no ``series`` key) or a file above the series cap
+    keeps the statement on the Spark Column path, which still answers
+    over every file."""
+    import modelardb_rs_spark.sources.datafolder as dfm
+
+    engine.read_sql(LOG_DDL.format(name="mix"))
+    legacy = engine.write("mix", _arrow_points(0, [1.0, 2.0, 3.0], ["a"] * 3, ["s"] * 3))
+    _strip_series(engine, "mix", legacy)
+    engine.write("mix", _arrow_points(10, [4.0, 5.0], ["b"] * 2, ["s"] * 2))
+    sql = "SELECT tag, count(f) AS n, sum(f) AS s FROM mix GROUP BY tag"
+    assert "metadata-only" in engine.explain_path(sql)
+    got = sorted(tuple(r) for r in engine.read_sql(sql).collect())
+    assert got == [("a", 3, 6.0), ("b", 2, 9.0)]
+
+    engine.read_sql(LOG_DDL.format(name="wide"))
+    monkeypatch.setattr(dfm, "_SERIES_ROWS_MAX", 2)
+    engine.write("wide", _arrow_points(0, [1.0, 2.0, 3.0], ["a", "b", "c"], ["s"] * 3))
+    engine.write("wide", _arrow_points(10, [4.0, 5.0], ["a", "b"], ["s"] * 2))
+    files = engine.folder.log("wide").snapshot().files
+    assert sorted("series" in f for f in files) == [False, False, True, True]
+    assert "metadata-only" in engine.explain_path("SELECT count(f) AS n FROM wide")
+    assert engine.read_sql("SELECT count(f) AS n, max(f) AS mx FROM wide").collect()[0] == (5, 5.0)
+
+
+def test_series_rows_survive_optimize_expire_and_checkpoint(engine, spark, monkeypatch):
+    """Every rewrite recommits series rows, and a snapshot replayed from
+    a checkpoint carries them: the statement stays log-answered."""
+    from modelardb_rs_spark.sources import txlog
+
+    engine.read_sql(LOG_DDL.format(name="life"))
+    for i in range(txlog._CHECKPOINT_INTERVAL + 1):
+        engine.write("life", _arrow_points(
+            60 * i, [float(i + j) for j in range(30)], [f"t{i % 3}"] * 30, ["s"] * 30
+        ))
+    log = engine.folder.log("life")
+    assert any(v % txlog._CHECKPOINT_INTERVAL == 0 for v in log._list_log()[1])
+    sql = f"SELECT tag, {_ALL}, {_VAR} FROM life GROUP BY tag"
+    before = log_and_column(engine, monkeypatch, sql).collect()
+
+    engine.optimize("life")
+    assert len(log.snapshot().files) == 2  # one compacted file per field
+    after = log_and_column(engine, monkeypatch, sql).collect()
+    assert_rows_match(after, before, engine.read_sql(sql).schema)
+
+    engine.expire("life", TS0 + datetime.timedelta(seconds=75))
+    assert log.read_commit(log.snapshot().version)["op"] == "expire"
+    expired = log_and_column(engine, monkeypatch, sql).collect()
+    assert sum(r.n for r in expired) == sum(r.n for r in before) - 30 - 15
+    fresh = txlog.TransactionLog(log.fs, log.table_uri).snapshot()
+    assert all(f.get("series") for f in fresh.files)
+
+
+def test_time_bounded_rewrite_declines_outside_utc(engine, spark):
+    """TIMESTAMP literals mean session-zone wall-clock times: under a
+    non-UTC zone a time-bounded statement must answer like the gridded
+    view, not from bounds read as UTC."""
+    import pyarrow as pa
+
+    engine.read_sql("CREATE TIME SERIES TABLE tz(timestamp TIMESTAMP, v FIELD, tag TAG)")
+    minutes = 24 * 60
+    engine.write("tz", pa.table({
+        "timestamp": pa.array(
+            [int(TS0.timestamp() + 60 * i) * 1_000_000 for i in range(minutes)],
+            pa.timestamp("us", tz="UTC"),
+        ),
+        "v": pa.array([float(i) for i in range(minutes)], pa.float32()),
+        "tag": pa.array(["a"] * minutes),
+    }))
+    bounds = ("timestamp >= TIMESTAMP '2024-01-01 06:00:00' "
+              "AND timestamp <= TIMESTAMP '2024-01-01 08:00:00'")
+    old = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+        got = engine.read_sql(f"SELECT sum(v) AS s FROM tz WHERE {bounds}").collect()[0].s
+        grid = engine.read_sql(
+            f"SELECT sum(v) AS s FROM tz WHERE {bounds} AND v >= -1"
+        ).collect()[0].s
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    # 06:00-08:00 New York is 11:00-13:00 UTC: minutes 660..780
+    assert got == grid == float(sum(range(660, 781)))
+
+
+def test_series_rows_of_one_file():
+    """Per-series stats with NULL tags as their own series; the disjoint
+    flag compares each start with the running max of earlier ends."""
+    import pyarrow as pa
+
+    from modelardb_rs_spark.operators import aggregates as agg
+
+    segs = pa.table({
+        "tag": pa.array(["a", "a", "a", None, None]),
+        "value_count": pa.array([2, 3, 1, 4, 1], pa.int32()),
+        "seg_sum": [1.0, 2.0, 3.0, 4.0, 5.0],
+        "seg_sum_sq": [1.0, 4.0, 9.0, 16.0, 25.0],
+        "min_value": pa.array([0.5, float("nan"), -1.0, 2.0, 3.0], pa.float32()),
+        "max_value": pa.array([1.0, float("nan"), 0.0, 2.0, 3.0], pa.float32()),
+        "start_time": pa.array([30, 0, 12, 5, 10], pa.int64()),
+        "end_time": pa.array([40, 20, 15, 9, 11], pa.int64()),
+    })
+    rows = agg.series_rows([segs], ["tag"], max_series=2)
+    by_tag = {r[agg.TAGS][0]: r for r in rows}
+    a = by_tag["a"]
+    assert a[agg.COUNT] == 6 and a[agg.SUM] == 6.0 and a[agg.SUM_SQ] == 14.0
+    assert a[agg.MIN] == -1.0 and a[agg.MAX] != a[agg.MAX]  # NaN
+    assert (a[agg.START], a[agg.END], a[agg.DISJOINT]) == (0, 40, False)  # 12 <= 20
+    assert by_tag[None][agg.DISJOINT] is True
+    assert agg.series_rows([segs], ["tag"], max_series=1) is None
+    legacy = segs.set_column(3, "seg_sum_sq", pa.array([None, 1.0, 1.0, 1.0, 1.0], pa.float64()))
+    assert agg.series_rows([legacy], ["tag"], max_series=2) is None
+    # read in batches of two rows: the same rows, merged across batches
+    batched = agg.series_rows(segs.to_batches(max_chunksize=2), ["tag"], max_series=2)
+    assert sorted(map(str, batched)) == sorted(map(str, rows))  # str: NaN == NaN
+    assert agg.series_rows(segs.to_batches(max_chunksize=2), ["tag"], max_series=1) is None
+    # across batches the per-batch spans decide: batches out of time
+    # order are fine, a batch span covering another batch's segments is
+    # reported not disjoint even when no two segments overlap (the
+    # probe then decides)
+    def batch(*spans):
+        return segs.slice(0, len(spans)).set_column(
+            6, "start_time", pa.array([a for a, _ in spans], pa.int64())
+        ).set_column(7, "end_time", pa.array([b for _, b in spans], pa.int64()))
+
+    def disjoint(*batches):
+        return agg.series_rows(list(batches), ["tag"], 2)[0][agg.DISJOINT]
+
+    assert disjoint(batch((30, 40)), batch((0, 20)), batch((25, 26))) is True
+    assert disjoint(batch((0, 20)), batch((30, 40)), batch((35, 36))) is False
+    assert disjoint(batch((0, 5), (30, 40)), batch((10, 20))) is False
+
+
+def test_log_disjointness_proof():
+    """Series rows prove disjointness only when each series is disjoint
+    inside every file and its file spans are disjoint in start order
+    (against the running max of earlier ends)."""
+    from modelardb_rs_spark.operators.aggregates import log_disjoint
+
+    def entry(field, *rows):
+        return {"field_column": field,
+                "series": [[[tag], 1, 0.0, 0.0, 0.0, 0.0, lo, hi, ok] for tag, lo, hi, ok in rows]}
+
+    base = [entry(0, ("a", 0, 10, True), ("b", 0, 50, True)), entry(0, ("a", 11, 20, True))]
+    assert log_disjoint(base)
+    # other series and other fields may overlap freely
+    assert log_disjoint(base + [entry(1, ("a", 5, 15, True)), entry(0, ("c", 5, 6, True))])
+    assert not log_disjoint(base + [entry(0, ("a", 20, 30, True))])
+    # (0,100) then (40,50) then (60,70): 60 overlaps the first span only
+    assert not log_disjoint([entry(0, ("a", 0, 100, True)), entry(0, ("a", 40, 50, True)),
+                              entry(0, ("a", 60, 70, True))][::2])
+    assert not log_disjoint([entry(0, ("a", 0, 100, True)), entry(0, ("a", 101, 102, True)),
+                              entry(0, ("a", 60, 70, True))])
+    assert not log_disjoint(base + [entry(0, ("z", 0, 1, False))])
+    assert not log_disjoint(base + [{"field_column": 0}])
+    assert log_disjoint([])
+

@@ -630,3 +630,31 @@ def test_sweep_staging_liveness_guards(spark, engine):
     assert not os.path.exists(active)
     assert fs.exists(ckpt)
     assert pinned.count() == 1000  # lineage-truncated frame still readable
+
+
+def test_utility_frames_keep_rows_and_schema(engine, spark):
+    """SHOW TABLES, DESCRIBE and EXPLAIN ANALYZE build their frames from
+    Arrow; rows and schema equal the ``createDataFrame(list, ddl)`` frames
+    they replace, an empty SHOW TABLES included."""
+    def same(df, rows, ddl):
+        ref = spark.createDataFrame(rows, ddl)
+        assert df.schema == ref.schema
+        assert df.collect() == ref.collect()
+        assert "PythonRDD" not in df._jdf.queryExecution().executedPlan().toString()
+
+    same(engine.read_sql("SHOW TABLES"), [], "table_name string, table_type string")
+    engine.read_sql(
+        "CREATE TIME SERIES TABLE u(timestamp TIMESTAMP, f FIELD(1.0), g FIELD AS (f * 2), tag TAG)"
+    )
+    engine.create_table("n", "a INT, b STRING")
+    same(engine.read_sql("SHOW TABLES"), [("n", "normal"), ("u", "time_series")],
+         "table_name string, table_type string")
+    ddl = "column_name string, data_type string, role string"
+    same(engine.read_sql("DESCRIBE u"),
+         [("timestamp", "timestamp", "timestamp"), ("f", "float", "field(1)"),
+          ("g", "float", "field as (f * 2)"), ("tag", "string", "tag")], ddl)
+    same(engine.read_sql("DESCRIBE n"), [("a", "int", "column"), ("b", "string", "column")], ddl)
+    report = engine.explain_path("SELECT count(f) AS n FROM u", analyze=True)
+    df = engine.read_sql("EXPLAIN ANALYZE SELECT count(f) AS n FROM u")
+    assert df.schema == spark.createDataFrame([], "plan string").schema
+    assert [r.plan for r in df.collect()][0] == report.splitlines()[0]

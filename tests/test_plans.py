@@ -35,13 +35,117 @@ def plan_of(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_pushdown_plan_has_no_python_stage(planned):
-    plan = plan_of(planned.read_sql("SELECT count(a) AS c, sum(a) AS s FROM p"))
+@pytest.fixture()
+def planned_without_rows(spark, tmp_path):
+    """The ``planned`` table written with a series cap of 0: no add-entry
+    carries series rows, so simple aggregates take the Column path."""
+    import modelardb_rs_spark.sources.datafolder as dfm
+    from modelardb_rs_spark.engine import Engine
+
+    engine = Engine(spark, str(tmp_path / "without_rows"))
+    engine.read_sql(
+        "CREATE TIME SERIES TABLE p(timestamp TIMESTAMP, a FIELD, b FIELD, tag TAG)"
+    )
+    rows = [
+        Row(timestamp=TS0 + datetime.timedelta(seconds=i), a=float(i), b=float(i) * 2, tag="t")
+        for i in range(500)
+    ]
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(dfm, "_SERIES_ROWS_MAX", 0)
+        engine.write("p", spark.createDataFrame(rows))
+    assert not any("series" in f for f in engine.folder.log("p").snapshot().files)
+    return engine
+
+
+def _jobs_and_input_bytes(spark, group: str) -> tuple[int, int]:
+    """Jobs run under job group ``group`` and the input bytes their
+    stages read, from the status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
+    store = sc._jsc.sc().statusStore()
+    conv = sc._jvm.scala.jdk.javaapi.CollectionConverters
+    empty = sc._gateway.new_array(sc._jvm.double, 0)
+    listed = store.stageList(None, False, False, empty, sc._jvm.java.util.ArrayList())
+    read = sum(int(st.inputBytes()) for st in conv.asJava(listed) if int(st.stageId()) in stages)
+    return len(jobs), read
+
+
+def _in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        return fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_pushdown_plan_has_no_python_stage(planned_without_rows):
+    plan = plan_of(planned_without_rows.read_sql("SELECT count(a) AS c, sum(a) AS s FROM p"))
     assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
     # narrow projection: only the stats columns are read
     assert "ReadSchema: struct<value_count:int,seg_sum:double>" in plan
     # partition pruning on the referenced field
     assert "field_column" in plan.split("PartitionFilters")[1][:80]
+
+
+def test_log_answered_stats_query_reads_no_file(planned, planned_without_rows, spark):
+    """With series rows in every entry the statement is answered on the
+    driver: no FileScan, 0 input bytes, at most one (collect) job. The
+    same statement over a table without rows scans the stats columns."""
+    sql = "SELECT tag, count(a) AS c, sum(a) AS s, var_pop(b) AS v FROM p GROUP BY tag"
+    df = planned.read_sql(sql)
+    assert "FileScan" not in plan_of(df)
+    df.collect()  # warm-up
+    rows = _in_group(spark, "log_answer", lambda: planned.read_sql(sql).toArrow())
+    assert rows.num_rows == 1
+    jobs, read = _jobs_and_input_bytes(spark, "log_answer")
+    assert jobs <= 1 and read == 0
+    _in_group(spark, "column_path", lambda: planned_without_rows.read_sql(sql).toArrow())
+    assert _jobs_and_input_bytes(spark, "column_path")[1] > 0
+
+
+def _two_field_put(engine, name, seconds):
+    import pyarrow as pa
+
+    engine.write(name, pa.table({
+        "timestamp": pa.array(
+            [int(TS0.timestamp() + s) * 1_000_000 for s in seconds], pa.timestamp("us", tz="UTC")
+        ),
+        "a": pa.array([float(s) for s in seconds], pa.float32()),
+        "b": pa.array([2.0 * s for s in seconds], pa.float32()),
+        "tag": pa.array(["t"] * len(seconds)),
+    }))
+
+
+def test_warm_multifield_read_after_put_runs_no_probe_job(engine, spark):
+    """Disjoint puts are proven duplicate-free from the commit log, so
+    planning a multi-field read after a put runs no probe job."""
+    engine.read_sql("CREATE TIME SERIES TABLE d(timestamp TIMESTAMP, a FIELD, b FIELD, tag TAG)")
+    _two_field_put(engine, "d", range(0, 100))
+    engine.table("d").count()  # warm-up
+    _two_field_put(engine, "d", range(100, 200))
+    _in_group(spark, "after_put", lambda: engine.table("d"))
+    assert _jobs_and_input_bytes(spark, "after_put")[0] == 0
+    version = engine.folder.log("d").snapshot().version
+    proofs = [v for (n, ver, _), v in engine._disjoint_cache.items() if n == "d" and ver == version]
+    assert proofs == [True]
+    assert engine.table("d").count() == 200
+
+
+def test_overlapping_puts_still_run_the_probe(engine, spark):
+    """Interleaved puts of one series overlap in time: the log proves
+    nothing, the probe runs and finds the overlap, and the read keeps
+    every point."""
+    engine.read_sql("CREATE TIME SERIES TABLE o(timestamp TIMESTAMP, a FIELD, b FIELD, tag TAG)")
+    _two_field_put(engine, "o", range(0, 100, 2))
+    _two_field_put(engine, "o", range(1, 100, 2))
+    df = _in_group(spark, "overlap", lambda: engine.table("o"))
+    assert _jobs_and_input_bytes(spark, "overlap")[0] > 0
+    assert list(engine._disjoint_cache.values()) == [False]
+    assert df.count() == 100
 
 
 def test_forced_grid_plan_decodes(planned):

@@ -514,3 +514,82 @@ def test_asof_hot_key_null_by_keys_match_one_pass(spark):
                  best.t if best else None)
             )
         assert one == sorted(want, key=skey), f"trial {trial} vs oracle"
+
+
+@pytest.fixture(scope="module")
+def fuzz_mixed_engine(spark, tmp_path_factory):
+    """One Spark-written load plus in-process (Arrow) puts, some with
+    NULL tags: every live file carries commit-log series rows."""
+    import pyarrow as pa
+
+    from modelardb_rs_spark.engine import Engine
+
+    eng = Engine(spark, str(tmp_path_factory.mktemp("fuzz_mixed")))
+    eng.read_sql(
+        "CREATE TIME SERIES TABLE fm(timestamp TIMESTAMP, a FIELD, b FIELD(0.5), "
+        "site TAG, unit TAG)"
+    )
+    rng = random.Random(11)
+    eng.write("fm", eng.spark.createDataFrame([
+        Row(timestamp=TS0 + datetime.timedelta(seconds=i), a=float(rng.randint(0, 50)),
+            b=rng.uniform(-100, 100), site=f"s{i % 3}", unit=f"u{i % 2}")
+        for i in range(1500)
+    ]))
+    for p in range(4):
+        n = rng.randint(1, 80)
+        eng.write("fm", pa.table({
+            "timestamp": pa.array(
+                [int(TS0.timestamp()) * 1_000_000 + (2000 + 100 * p + i) * 1_000_000
+                 for i in range(n)], pa.timestamp("us", tz="UTC")),
+            "a": pa.array([float(rng.randint(-5, 5)) for _ in range(n)], pa.float32()),
+            "b": pa.array([rng.uniform(-1e3, 1e3) for _ in range(n)], pa.float32()),
+            "site": pa.array([rng.choice(["s0", "s3", None]) for _ in range(n)]),
+            "unit": pa.array([rng.choice(["u0", "u1", None]) for _ in range(n)]),
+        }))
+    assert all(f.get("series") for f in eng.folder.log("fm").snapshot().files)
+    return eng
+
+
+def test_fuzz_log_answer_matches_column_path(fuzz_mixed_engine, monkeypatch):
+    """Random simple aggregates (variance family and absent tag values
+    included): the commit-log answer has the Column path's schema, its
+    exact counts/min/max and its sums up to f64 addition order, and
+    agrees with the gridded view."""
+    from pyspark.sql import types as T
+
+    eng = fuzz_mixed_engine
+    funcs = AGGS + ["var_pop", "var_samp", "variance", "stddev_pop", "stddev_samp", "stddev"]
+    rng = random.Random(31)
+    for _ in range(20):
+        items = []
+        for j in range(rng.randint(1, 4)):
+            func = rng.choice(funcs)
+            col = rng.choice(["a", "b", "*"] if func == "count" else ["a", "b"])
+            items.append(f"{func}({col}) AS x{j}")
+        conds = [f"site = 's{rng.randint(0, 4)}'"] if rng.random() < 0.5 else []
+        if rng.random() < 0.3:
+            conds.append(f"unit = 'u{rng.randint(0, 2)}'")
+        where = " WHERE " + " AND ".join(conds) if conds else ""
+        gcols = rng.sample(["site", "unit"], rng.randint(0, 2))
+        group = " GROUP BY " + ", ".join(gcols) if gcols else ""
+        proj = ", ".join(gcols + items)
+        sql = f"SELECT {proj} FROM fm{where}{group}"
+        assert "commit-log answer" in eng.explain_path(sql), sql
+        log = eng.read_sql(sql)
+        with monkeypatch.context() as m:
+            m.setattr(eng, "_log_aggregates", lambda *args: None)
+            column = eng.read_sql(sql)
+        assert log.schema == column.schema, sql
+        defeat = (" AND " if where else " WHERE ") + "timestamp >= timestamp '1970-01-01'"
+        grid = eng.read_sql(f"SELECT {proj} FROM fm{where}{defeat}{group}")
+        exact = [not isinstance(f.dataType, T.DoubleType) for f in log.schema.fields]
+        got = sorted((tuple(r) for r in log.collect()), key=str)
+        for other in (column, grid):
+            want = sorted((tuple(r) for r in other.collect()), key=str)
+            assert len(got) == len(want), sql
+            for g, w in zip(got, want):
+                for x, y, ex in zip(g, w, exact):
+                    if ex or x is None or y is None:
+                        assert x == y, (sql, g, w)
+                    else:
+                        assert x == pytest.approx(y, rel=1e-9, abs=1e-6), (sql, g, w)
