@@ -566,7 +566,8 @@ def ts_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ts_limit_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bare LIMIT bounds the segment scan with a commit-log time cutoff
-    (engine._bare_limit + datafolder.limit_time_cutoff; reference
+    (plans/sql.py Select.bare_limit, read by Engine.register_views, +
+    datafolder.limit_time_cutoff; reference
     pushes LIMIT into the scan, time_series_table.rs:447 +
     grid_exec.rs:239-246): only the file prefix that provably
     reconstructs >= n rows is read. The oracle compares the
@@ -578,11 +579,12 @@ def ts_limit_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ts_value_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-predicate pushdown to segment statistics: `WHERE value >= x`
-    prunes every segment whose max_value < x BEFORE decode (engine
-    _VAL_TERM -> table(value_filters=...); min_value/max_value are of
-    RECONSTRUCTED values, so lossy tables prune safely). The aggregate
-    projection is allowed because WHERE filters rows first — the
-    relaxed conjunct extractor only declines parens from FROM onward."""
+    prunes every segment whose max_value < x BEFORE decode (a 'number'
+    predicate of plans/sql.py -> Engine.table(value_filters=...);
+    min_value/max_value are of RECONSTRUCTED values, so lossy tables
+    prune safely). The aggregate projection is allowed because WHERE
+    filters rows first: the pushed conjuncts come from the WHERE
+    directly over the table, whatever the projection computes."""
     eng = _ts_engine(spark, sf_dir)
     return eng.read_sql(
         "SELECT count(value) AS n, round(sum(value), 2) AS s "

@@ -13,16 +13,17 @@ A user of the reference maps almost 1:1:
     Operations::copy/move             -> Engine.copy / Engine.move
     truncate/drop/vacuum              -> Engine.truncate / drop / vacuum (also as SQL)
 
-Query semantics for time series tables: ``read_sql`` registers each
-table as a temp view — normal tables directly, time series tables as the
-*gridded* reconstruction view (operators/grid.py) — then delegates to
-``spark.sql`` (the full inherited SQL surface, like the reference
-inherits DataFusion's). Before delegating, the model-based aggregate
-rewrite (operators/aggregates.py) intercepts un-filtered simple
-aggregates over one time series table, mirroring the reference's
-``ModelSimpleAggregates`` physical rule — implemented as an API-level
-query rewrite because pure PySpark cannot register Catalyst physical
-rules (SURVEY.md §4.1).
+Query semantics for time series tables: ``read_sql`` parses a query
+once with Spark's own parser (plans/sql.py), registers each table the
+query reads as a temp view — normal tables directly, time series tables
+as the *gridded* reconstruction view (operators/grid.py) — then
+delegates to ``spark.sql`` (the full inherited SQL surface, like the
+reference inherits DataFusion's). Before delegating, the model-based
+aggregate rewrite (operators/aggregates.py) intercepts simple
+aggregates over one time series table, matched on the parsed plan like
+the reference's ``ModelSimpleAggregates`` physical rule — implemented as
+an API-level query rewrite because pure PySpark cannot register Catalyst
+physical rules (SURVEY.md §4.1).
 """
 
 from __future__ import annotations
@@ -43,6 +44,7 @@ from modelardb_rs_spark.operators import aggregates as agg_ops
 from modelardb_rs_spark.operators import compress as compress_ops
 from modelardb_rs_spark.operators import grid as grid_ops
 from modelardb_rs_spark.parser import ModelarStatement, parse_statement
+from modelardb_rs_spark.plans import sql as sql_plan
 from modelardb_rs_spark.plans.stats import plan_size_bytes
 from modelardb_rs_spark.sources.datafolder import DataFolder
 from modelardb_rs_spark.types import TableKind, TimeSeriesTableMetadata
@@ -90,124 +92,29 @@ _INTERVAL_UNITS_US = {
 }
 
 
-# SQL WHERE → view-constraint extraction (register_views). Deliberately
-# conservative: pushdown happens ONLY for a single-SELECT statement with
-# a single pure-AND WHERE made of simple terms — anything else (OR, NOT,
-# BETWEEN — whose AND would split wrong, subqueries, set operations,
-# multiple WHEREs) disables it entirely, because a restriction is only
-# safe when every conjunct is independently implied by the query.
-# Parens are allowed ONLY in the projection (between SELECT and FROM):
-# aggregates/round()/windows there run AFTER the WHERE filters rows, so
-# the restriction still holds — but parens from FROM onward mean a
-# derived table or predicate subquery (`FROM (SELECT .. LIMIT ..)`,
-# `IN (SELECT ..)`) where restricting the base view can change WHICH
-# rows an inner LIMIT/aggregate sees, so those decline.
-_FORBID_PUSHDOWN = re.compile(
-    r"\bOR\b|\bNOT\b|\bBETWEEN\b|\bUNION\b|\bINTERSECT\b|\bEXCEPT\b|[()]",
-    re.IGNORECASE,
-)
-_FROM_KW = re.compile(r"\bFROM\b", re.IGNORECASE)
-_SELECT_KW = re.compile(r"\bSELECT\b", re.IGNORECASE)
-_WHERE_CLAUSE = re.compile(
-    r"\bWHERE\b(?P<clause>.*?)(?:\bGROUP\s+BY\b|\bORDER\s+BY\b|\bHAVING\b|\bLIMIT\b|\bWINDOW\b|;|$)",
-    re.IGNORECASE | re.DOTALL,
-)
-_TS_TERM = re.compile(
-    r"^(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*(?P<op>>=|<=|>|<)\s*"
-    r"TIMESTAMP\s*'(?P<lit>[^']+)'$",
-    re.IGNORECASE,
-)
-_TAG_TERM = re.compile(
-    r"^(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*=\s*'(?P<lit>[^']*)'$"
-)
-_VAL_TERM = re.compile(
-    r"^(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*(?P<op>>=|<=|>|<)\s*"
-    r"(?P<lit>-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)$"
-)
-
-
-# Bare-LIMIT detection for scan pushdown: exactly `SELECT <row-wise
-# projection> FROM <table> LIMIT <n>` — no WHERE/GROUP/ORDER/JOIN/
-# DISTINCT/OFFSET/set-ops, and a paren-free projection (no aggregates
-# or windows), because only then is ANY n rows a correct answer.
-_BARE_LIMIT = re.compile(
-    r"^\s*SELECT\s+(?P<proj>[^()]*?)\s+FROM\s+(?P<table>[A-Za-z_][A-Za-z0-9_]*)"
-    r"\s+LIMIT\s+(?P<n>\d+)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_FORBID_LIMIT_PUSHDOWN = re.compile(
-    r"\b(WHERE|GROUP|ORDER|HAVING|DISTINCT|JOIN|UNION|INTERSECT|EXCEPT|OFFSET|OVER|VALUES)\b",
-    re.IGNORECASE,
-)
-
-
-def _bare_limit(sql: str) -> tuple[str, int] | None:
-    """(table, n) when the statement is a bare LIMIT scan, else None."""
-    m = _BARE_LIMIT.match(sql)
-    if m is None or _FORBID_LIMIT_PUSHDOWN.search(sql):
-        return None
-    return m["table"], int(m["n"])
-
-
-def _where_conjuncts(sql: str) -> list[str]:
-    """The WHERE clause's AND-conjunct terms, or [] when pushdown is
-    unsafe (see _FORBID_PUSHDOWN)."""
-    matches = _WHERE_CLAUSE.findall(sql)
-    if len(matches) != 1:
-        return []
-    clause = matches[0]
-    if len(_SELECT_KW.findall(sql)) != 1:
-        return []  # subquery somewhere: the restriction may not commute
-    from_m = _FROM_KW.search(sql)
-    if from_m is None:
-        return []
-    # projection parens (count(a), round(..)) are harmless — those
-    # expressions evaluate after WHERE; anything suspicious from FROM
-    # onward declines
-    if _FORBID_PUSHDOWN.search(sql, from_m.start()) or re.search(
-        r"\bOR\b|\bNOT\b|\bBETWEEN\b|\bUNION\b|\bINTERSECT\b|\bEXCEPT\b",
-        sql[: from_m.start()],
-        re.IGNORECASE,
-    ):
-        return []
-    return [t.strip() for t in re.split(r"\bAND\b", clause, flags=re.IGNORECASE)]
-
-
 def _view_constraints(
-    terms: list[str], meta
+    preds: tuple[sql_plan.Pred, ...], meta, utc: bool
 ) -> tuple[int | None, int | None, dict, list[tuple[str, str, float]]]:
-    """(start_us, end_us, tag equality filters, stored-field value
-    comparisons) implied for ``meta``'s table by the conjunct terms;
-    unrecognized terms are ignored (they simply don't restrict)."""
+    """(start_us, end_us, tag equalities, field value comparisons) that
+    WHERE conjuncts imply for ``meta``'s table. Timestamp bounds count
+    only under a UTC session (TIMESTAMP literals are session-zone)."""
     start_us = end_us = None
     tags: dict[str, str] = {}
     vals: list[tuple[str, str, float]] = []
     ts_col = meta.timestamp_column.lower()
     tag_cols = {t.lower(): t for t in meta.tag_columns}
     field_cols = {f.lower(): f for f in meta.field_names}
-    for term in terms:
-        if m := _TS_TERM.match(term):
-            if m["col"].lower() != ts_col:
-                continue
-            try:
-                lit = _to_us(m["lit"])
-            except (ValueError, TypeError):
-                continue
-            op = m["op"]
-            if op in (">", ">="):
-                lo = lit + (1 if op == ">" else 0)
-                start_us = lo if start_us is None else max(start_us, lo)
+    for p in preds:
+        col = p.column.lower()
+        if p.kind == "timestamp" and col == ts_col and utc:
+            if p.op == ">=":
+                start_us = p.value if start_us is None else max(start_us, p.value)
             else:
-                hi = lit - (1 if op == "<" else 0)
-                end_us = hi if end_us is None else min(end_us, hi)
-        elif m := _TAG_TERM.match(term):
-            col = tag_cols.get(m["col"].lower())
-            if col is not None:
-                tags[col] = m["lit"]
-        elif m := _VAL_TERM.match(term):
-            col = field_cols.get(m["col"].lower())
-            if col is not None:
-                vals.append((col, m["op"], float(m["lit"])))
+                end_us = p.value if end_us is None else min(end_us, p.value)
+        elif p.kind == "string" and col in tag_cols:
+            tags[tag_cols[col]] = p.value
+        elif p.kind == "number" and col in field_cols:
+            vals.append((field_cols[col], p.op, p.value))
     return start_us, end_us, tags, vals
 
 
@@ -238,57 +145,44 @@ def _interval_us(every) -> int:
     return int(m.group(1)) * _INTERVAL_UNITS_US[m.group(2).lower()]
 
 
-# SELECT agg(col)[ AS alias][, ...] FROM table [GROUP BY c[, ...]] — the
-# shape eligible for the model-based aggregate rewrite.
-_AGG_ITEM = re.compile(
-    r"^(?P<func>count|min|max|sum|avg|var_pop|var_samp|variance|stddev_pop|stddev_samp|stddev)"
-    r"\s*\(\s*(?P<arg>\*|[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-    r"(?:\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?$",
-    re.IGNORECASE,
+# The simple aggregates the model-based rewrite answers from segment stats.
+_AGG_FUNCS = frozenset(
+    "count min max sum avg var_pop var_samp variance stddev_pop stddev_samp stddev".split()
 )
-_SIMPLE_AGG_SQL = re.compile(
-    r"^\s*SELECT\s+(?P<items>.+?)\s+FROM\s+(?P<table>[A-Za-z_][A-Za-z0-9_]*)"
-    r"(?:\s+WHERE\s+(?P<where>.+?))?"
-    r"(?:\s+GROUP\s+BY\s+(?P<group>.+?))?\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-# time_bucket('15 minutes', ts) / date_trunc('hour', ts) group keys — the
-# fixed-width truncations the resample rewrite can answer. Calendar
-# units (month/year) have no fixed width and stay on the gridded path;
-# weeks are Monday-aligned (origin 1970-01-05, matching the
-# TimescaleDB idiom's Monday origin modulo the week).
-_TIME_BUCKET = re.compile(
-    r"^time_bucket\(\s*(?:INTERVAL\s+)?'(?P<iv>[^']+)'\s*,\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*\)$",
-    re.IGNORECASE,
-)
-_DATE_TRUNC = re.compile(
-    r"^date_trunc\(\s*'(?P<unit>second|minute|hour|day)'\s*,\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*\)$",
-    re.IGNORECASE,
-)
-
+_EDGE_FUNCS = frozenset({"max_by", "min_by"})  # (field, ts): the last()/first() idiom
+_COUNT_STAR = sql_plan.Lit("1", "integer")  # Spark parses count(*) as count(1)
+_WEEK_US = _INTERVAL_UNITS_US["week"]
 _MONDAY_ORIGIN_US = 4 * 86_400_000_000  # 1970-01-05, the first epoch Monday
 
 
-def _bucket_us_of(expr: str, ts_col: str) -> tuple[int, int, str] | None:
+def _bucket_us_of(expr, ts_col: str) -> tuple[int, int, str] | None:
     """(bucket width µs, origin µs, kind) if ``expr`` is a fixed-width
-    truncation of the timestamp column, else None. ``kind`` is
-    'time_bucket' (timezone-independent epoch buckets) or 'date_trunc'
-    (must match Spark's session-timezone truncation, so the caller only
-    rewrites it under a UTC session)."""
-    expr = expr.strip()
-    if m := _TIME_BUCKET.match(expr):
-        if m["col"] != ts_col:
-            return None
+    ``time_bucket('15 minutes', ts)`` or ``date_trunc('hour', ts)``,
+    else None: calendar units have no fixed width; weeks are
+    Monday-aligned (origin 1970-01-05, the TimescaleDB idiom). A
+    'date_trunc' kind truncates in the session zone, so the caller
+    rewrites it only under a UTC session."""
+    if not isinstance(expr, sql_plan.Call) or len(expr.args) != 2:
+        return None
+    unit, col = expr.args
+    if col != sql_plan.Col(ts_col) or not isinstance(unit, sql_plan.Lit):
+        return None
+    if expr.func == "time_bucket" and unit.type == "string":
         try:
-            b = _interval_us(m["iv"])
+            b = _interval_us(unit.value)
         except ValueError:
             return None
-        origin = _MONDAY_ORIGIN_US if re.search(r"week", m["iv"], re.IGNORECASE) else 0
+        origin = _MONDAY_ORIGIN_US if "week" in unit.value.lower() else 0
         return b, origin, "time_bucket"
-    if m := _DATE_TRUNC.match(expr):
-        if m["col"] != ts_col:
-            return None
-        return _INTERVAL_UNITS_US[m["unit"].lower()], 0, "date_trunc"
+    if expr.func == "time_bucket" and unit.type.startswith("interval "):
+        # a day-time INTERVAL arrives as µs; whether it was written in
+        # weeks (Monday origin) is lost, so whole weeks decline (the
+        # inlined gridded path answers them), as do year-month ones
+        b = 0 if unit.type.split()[-1] in ("year", "month") else int(unit.value)
+        return (b, 0, "time_bucket") if b > 0 and b % _WEEK_US else None
+    units = ("second", "minute", "hour", "day")
+    if expr.func == "date_trunc" and unit.type == "string" and unit.value.lower() in units:
+        return _INTERVAL_UNITS_US[unit.value.lower()], 0, "date_trunc"
     return None
 
 
@@ -318,27 +212,6 @@ def _inline_time_bucket_sql(sql: str) -> str:
         sql,
         flags=re.IGNORECASE,
     )
-# max_by(field, ts) / min_by(field, ts) — the TimescaleDB last()/first()
-# idiom, answered by the edge-points read (O(series) decode)
-_EDGE_ITEM = re.compile(
-    r"^(?P<func>max_by|min_by)\s*\(\s*(?P<field>[A-Za-z_][A-Za-z0-9_]*)\s*,"
-    r"\s*(?P<ts>[A-Za-z_][A-Za-z0-9_]*)\s*\)"
-    r"(?:\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?$",
-    re.IGNORECASE,
-)
-
-# tag = 'value' conjunctions — one of the two WHERE shapes the rewrite accepts
-_TAG_EQ = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*=\s*'(?P<val>[^']*)'\s*$"
-)
-# <ts_col> >= TIMESTAMP '...' / <ts_col> <= TIMESTAMP '...' bounds — a
-# TWO-sided pair routes to partial pushdown; a single bound deliberately
-# does not fire (it is the documented rewrite-defeat idiom, and the
-# reference rule also bails on any pushed filter)
-_TS_BOUND = re.compile(
-    r"^\s*(?P<col>[A-Za-z_][A-Za-z0-9_]*)\s*(?P<op>>=|<=)\s*timestamp\s*'(?P<val>[^']+)'\s*$",
-    re.IGNORECASE,
-)
 
 
 class Engine:
@@ -433,6 +306,9 @@ class Engine:
         self.catalog.kind(name)
         self.folder.drop(name)
         self.catalog.drop(name)
+        # the view read_sql registered last would keep serving the
+        # dropped files; a re-created table re-registers its own
+        self.spark.catalog.dropTempView(name)
 
     def vacuum(self, tables: list[str] | None = None, retain_seconds: int | None = None) -> None:
         names = tables or list(self.catalog.tables())
@@ -892,19 +768,27 @@ class Engine:
         version: int | None = None,
         timestamp_ms: int | None = None,
         with_info: bool = False,
+        tags=(),
     ) -> DataFrame:
         """The raw physical segments DataFrame of a time series table.
         A known time range prunes files driver-side from the commit log's
         per-file stats (exact predicates are re-applied downstream).
-        `version`/`timestamp_ms` read an older snapshot (time travel)."""
-        return self.folder.read_segments(
-            self.catalog.time_series_metadata(name),
+        `version`/`timestamp_ms` read an older snapshot (time travel).
+        ``tags``: (tag, value) equality filters on the segment rows."""
+        meta = self.catalog.time_series_metadata(name)
+        segments, info = self.folder.read_segments(
+            meta,
             version=version,
             timestamp_ms=timestamp_ms,
             start_us=start_us,
             end_us=end_us,
-            with_info=with_info,
+            with_info=True,
         )
+        for t, v in tags:
+            if t not in meta.tag_columns:
+                raise ValueError(f"{name}: {t!r} is not a tag column")
+            segments = segments.where(F.col(t) == F.lit(v))
+        return (segments, info) if with_info else segments
 
     def table(
         self,
@@ -949,12 +833,8 @@ class Engine:
         meta = self.catalog.time_series_metadata(name)
         start_us, end_us = _to_us(start), _to_us(end)
         segments, info = self.segments(
-            name, start_us, end_us, version, timestamp_ms, with_info=True
+            name, start_us, end_us, version, timestamp_ms, True, (tags or {}).items()
         )
-        for t, v in (tags or {}).items():
-            if t not in meta.tag_columns:
-                raise ValueError(f"{name}: {t!r} is not a tag column")
-            segments = segments.where(F.col(t) == F.lit(v))
         no_dups = False
         if (
             probe_duplicates
@@ -1047,69 +927,60 @@ class Engine:
         self._disjoint_cache[key] = result
         return result
 
-    def register_views(self, for_sql: str | None = None) -> None:
-        """Register every catalog table as a Spark temp view (time series
-        tables as their gridded reconstruction).
+    def register_views(
+        self,
+        for_sql: str | sql_plan.Analysis | None = None,
+        time_travel_views: frozenset[str] = frozenset(),
+    ) -> None:
+        """Register catalog tables as Spark temp views (time series
+        tables as their gridded reconstruction) for one statement, given
+        as SQL text or as its ``plans.sql`` analysis. A plain query gets
+        views of only the tables it reads, shaped by it. Every table gets
+        its full view when there is no statement, Spark cannot parse it,
+        it is not a plain query (EXPLAIN, CREATE VIEW, ...), or it reads
+        a relation that is no catalog table, CTE or time-travel view: a
+        SQL temp view can hide reads of any table and field. (A SQL
+        function body reading a catalog table is not seen.)
 
-        ``for_sql``: projection pushdown into the reassembly — Catalyst
-        cannot prune stored fields through the multivariate
-        collect_list/arrays_zip aggregation (dropping a zipped array
-        would change row multiplicity), so the field set is pruned HERE,
-        from the statement's identifier tokens. Referencing a strict
-        subset of a table's fields registers a view that decodes only
-        those fields; a single-field view is the shuffle-free univariate
-        plan (the reference prunes GridExec columns the same way,
-        time_series_table.rs:535-595). Token matching overapproximates
-        (string literals, other tables' columns), which only ever keeps
-        extra fields — never drops a referenced one. ``*`` anywhere, or
-        no recognized field reference (e.g. bare ``count(*)``, whose
-        multiplicity depends on every field), keeps the full view.
-
-        Predicate pushdown into the view: a statement whose single
-        WHERE clause is a pure AND-conjunction of simple terms (no OR /
-        NOT / BETWEEN / parens / set ops) gets its unqualified
-        timestamp bounds and tag equalities applied to the SEGMENT scan
-        before decode (_view_constraints) — every conjunct is implied
-        by the query, so restricting the view is always safe, and the
-        query re-applies its own WHERE on the decoded rows. A raw
-        ``SELECT * FROM t WHERE ts >= X`` then decodes only the pruned
-        segments instead of the whole table.
-        """
-        tokens: set[str] | None = None
-        if for_sql is not None and "*" not in for_sql:
-            tokens = {t.lower() for t in re.findall(r"[A-Za-z_][A-Za-z0-9_]*", for_sql)}
-        terms = _where_conjuncts(for_sql) if for_sql is not None else []
-        if terms and not self._session_is_utc():
-            # TIMESTAMP literals parse in the session zone; the µs-epoch
-            # segment bounds only line up under UTC — keep tag pushdown,
-            # drop the timestamp terms
-            terms = [t for t in terms if not _TS_TERM.match(t)]
-        for name, kind in self.catalog.tables().items():
-            fields = None
-            start_us = end_us = None
-            tag_filters: dict[str, str] = {}
-            value_filters: list[tuple[str, str, float]] = []
+        Shaping: a view decodes only the fields the query references —
+        Catalyst cannot prune fields through the multivariate
+        collect_list/arrays_zip reassembly, and a single-field view is
+        the shuffle-free univariate plan (as the reference prunes GridExec
+        columns, time_series_table.rs:535-595); a star, USING/NATURAL
+        join or no field reference (bare ``count(*)``) keeps all. The
+        typed AND-conjuncts of the WHERE directly over a table read once
+        restrict its SEGMENT scan before decode (_view_constraints): each
+        is implied by the query, which re-applies its WHERE. A bare
+        ``SELECT <columns> FROM t LIMIT n`` scans only the file prefix
+        that provably holds n rows (time_series_table.rs:447)."""
+        if isinstance(for_sql, str):
+            for_sql = sql_plan.analyze(self.spark, for_sql)
+        tables = self.catalog.tables()
+        known = {n.lower() for n in tables} | {v.lower() for v in time_travel_views}
+        query = for_sql if for_sql is not None and for_sql.closed else None
+        if query is not None and not query.relations <= known | query.ctes:
+            query = None
+        utc = self._session_is_utc()
+        for name, kind in tables.items():
+            if query is not None and name.lower() not in query.relations:
+                continue
+            fields = start_us = end_us = tag_filters = value_filters = None
+            if kind == TableKind.TIME_SERIES and query is not None:
+                meta = self.catalog.time_series_metadata(name)
+                selectable = meta.field_names + [g.name for g in meta.generated_columns]
+                hit = [c for c in selectable if c.lower() in (query.columns or ())]
+                if query.columns is not None and hit and len(hit) < len(selectable):
+                    fields = hit
+                start_us, end_us, tag_filters, value_filters = _view_constraints(
+                    query.filters.get(name.lower(), ()), meta, utc
+                )
+                sel = query.select
+                if sel is not None and sel.bare_limit and sel.table.lower() == name.lower():
+                    end_us = self.folder.limit_time_cutoff(name, sel.bare_limit)
             # tables the statement never names get no instrumentation
             # (EXPLAIN ANALYZE counters must reflect the query, not the
             # catalog) and no duplicate-uniqueness probe job
-            referenced = tokens is None or name.lower() in tokens
-            if kind == TableKind.TIME_SERIES:
-                meta = self.catalog.time_series_metadata(name)
-                if tokens is not None:
-                    selectable = meta.field_names + [g.name for g in meta.generated_columns]
-                    hit = [c for c in selectable if c.lower() in tokens]
-                    if hit and len(hit) < len(selectable):
-                        fields = hit
-                start_us, end_us, tag_filters, value_filters = _view_constraints(terms, meta)
-                # LIMIT pushdown into the grid: a bare `SELECT ... FROM
-                # t LIMIT n` scans only the file prefix that provably
-                # reconstructs >= n rows (time cutoff from commit-log
-                # stats) — O(limit) segments decoded instead of the
-                # whole table (reference: time_series_table.rs:447)
-                if for_sql is not None and end_us is None and start_us is None:
-                    bl = _bare_limit(for_sql)
-                    if bl is not None and bl[0].lower() == name.lower():
-                        end_us = self.folder.limit_time_cutoff(name, bl[1])
+            referenced = for_sql is None or name.lower() in for_sql.relations
             saved_metrics = self._analyze_metrics
             if not referenced:
                 self._analyze_metrics = None
@@ -1212,11 +1083,14 @@ class Engine:
         if stmt.kind == "insert":
             self._insert(stmt)
             return None
-        sql = self._rewrite_time_travel(sql)
-        rewritten = self._try_aggregate_pushdown(sql)
-        if rewritten is not None:
-            return rewritten
-        self.register_views(for_sql=sql)
+        sql, time_travel_views = self._rewrite_time_travel(sql)
+        analysis = sql_plan.analyze(self.spark, sql)
+        df = self._try_aggregate_pushdown(analysis)
+        return self._gridded(sql, analysis, time_travel_views) if df is None else df
+
+    def _gridded(self, sql: str, analysis, time_travel_views: frozenset[str]) -> DataFrame:
+        """``sql`` under plain spark.sql over the views it reads."""
+        self.register_views(analysis, time_travel_views)
         # ASOF JOIN (DuckDB / Snowflake MATCH_CONDITION shape) routes to
         # operators/asof.py — Spark SQL has no as-of join of its own,
         # the same way time_bucket/max_by route below
@@ -1252,11 +1126,12 @@ class Engine:
         stmt = parse_statement(sql)
         if stmt.kind not in ("passthrough", "select"):
             return stmt.kind
+        sql, time_travel_views = self._rewrite_time_travel(sql)
+        analysis = sql_plan.analyze(self.spark, sql)
+        gridded = "gridded view (reconstruction under spark.sql)"
         if not analyze:
-            df = self._try_aggregate_pushdown(self._rewrite_time_travel(sql))
-            if df is not None:
-                return self._pushdown_path_of(sql, df)
-            return "gridded view (reconstruction under spark.sql)"
+            df = self._try_aggregate_pushdown(analysis)
+            return gridded if df is None else self._pushdown_path_of(analysis, df)
 
         from modelardb_rs_spark.types import GORILLA_ID, PMC_MEAN_ID, SWING_ID
 
@@ -1272,14 +1147,10 @@ class Engine:
         }
         self._analyze_metrics = m
         try:
-            df = self._try_aggregate_pushdown(self._rewrite_time_travel(sql))
-            path = (
-                self._pushdown_path_of(sql, df)
-                if df is not None
-                else "gridded view (reconstruction under spark.sql)"
-            )
+            df = self._try_aggregate_pushdown(analysis)
+            path = gridded if df is None else self._pushdown_path_of(analysis, df)
             if df is None:
-                df = self.read_sql(sql)
+                df = self._gridded(sql, analysis, time_travel_views)
             n_out = df.count()  # execute the instrumented plan
         finally:
             self._analyze_metrics = None
@@ -1312,8 +1183,9 @@ class Engine:
             f"rows_created_by_model_type: {by_model_str}"
         )
 
-    def _pushdown_path_of(self, sql: str, df: DataFrame) -> str:
-        bucketed = bool(re.search(r"time_bucket|date_trunc", sql, re.IGNORECASE))
+    def _pushdown_path_of(self, analysis: sql_plan.Analysis, df: DataFrame) -> str:
+        # a rewritten statement's only non-column GROUP BY key is its bucket
+        bucketed = any(isinstance(g, sql_plan.Call) for g in analysis.select.group_by or ())
         kind = "bucketed resample" if bucketed else "simple aggregates"
         plan = df._jdf.queryExecution().executedPlan().toString()
         if "FileScan" not in plan:
@@ -1332,13 +1204,16 @@ class Engine:
         re.IGNORECASE,
     )
 
-    def _rewrite_time_travel(self, sql: str) -> str:
+    def _rewrite_time_travel(self, sql: str) -> tuple[str, frozenset[str]]:
         """Delta-style time-travel SQL: ``FROM t VERSION AS OF 3`` /
         ``FROM t TIMESTAMP AS OF '2024-01-02 00:00:00'`` — each clause
         registers the historical snapshot as a temp view and the clause
         collapses to that view's name (Engine.table version/timestamp_ms
-        does the snapshot resolution)."""
+        does the snapshot resolution). Returns the rewritten statement
+        and the names of the views it registered."""
         import datetime as _dt
+
+        views: set[str] = set()
 
         def by_version(m: re.Match) -> str:
             name, v = m["name"], int(m["v"])
@@ -1346,6 +1221,7 @@ class Engine:
                 return m.group(0)
             view = f"{name}__asof_v{v}"
             self.table(name, version=v).createOrReplaceTempView(view)
+            views.add(view)
             return view
 
         def by_timestamp(m: re.Match) -> str:
@@ -1358,10 +1234,11 @@ class Engine:
             ms = int(t.timestamp() * 1000)
             view = f"{name}__asof_t{ms}"
             self.table(name, timestamp_ms=ms).createOrReplaceTempView(view)
+            views.add(view)
             return view
 
         sql = self._TT_VERSION.sub(by_version, sql)
-        return self._TT_TIMESTAMP.sub(by_timestamp, sql)
+        return self._TT_TIMESTAMP.sub(by_timestamp, sql), frozenset(views)
 
     def _insert(self, stmt: ModelarStatement) -> None:
         """INSERT INTO t [(cols)] SELECT ... | VALUES ... — routed through
@@ -1378,217 +1255,162 @@ class Engine:
         if query.lstrip().upper().startswith("VALUES"):
             query = f"SELECT * FROM ({query}) AS __v({', '.join(cols)})"
         else:
-            self.register_views()
+            self.register_views(query)
         df = self.spark.sql(query).toDF(*cols)
         self.write(table, df)
 
     # ----------------------------------------------- model-based aggregates
 
-    def _try_aggregate_pushdown(self, sql: str) -> DataFrame | None:
+    def _try_aggregate_pushdown(
+        self, analysis: sql_plan.Analysis | None
+    ) -> DataFrame | None:
         """API-level equivalent of the reference's ModelSimpleAggregates
-        physical rule (model_simple_aggregates.rs:175-334): un-filtered
-        COUNT/MIN/MAX/SUM/AVG over stored fields of one time series table
-        → pure Column aggregation over segment statistics. Extended past
-        the reference: GROUP BY over tag columns and WHERE clauses made
-        of tag-equality conjunctions are also eligible (tags are
-        segment-row columns, so both stay exact). Without a time bound
-        the commit log's series rows answer first (``_log_aggregates``);
-        a two-sided time bound fires only under a UTC session zone,
-        because TIMESTAMP literals are session-zone wall-clock times."""
-        m = _SIMPLE_AGG_SQL.match(sql)
-        if not m:
+        physical rule (model_simple_aggregates.rs:175-334), matched like
+        it on the parsed plan: COUNT/MIN/MAX/SUM/AVG and the variance
+        family over stored fields of one time series table, answered from
+        segment statistics (``_stats_aggregates``). Past the reference:
+        GROUP BY tags and one fixed-width time_bucket/date_trunc key;
+        WHERE tag equalities and one lower plus one upper timestamp
+        bound, strict or not (a single bound declines: the documented
+        rewrite-defeat idiom); all-``max_by``/``min_by(field, ts)`` items
+        by the edge-points read. Time bounds and date_trunc need a UTC
+        session. Columns follow the projection, named as spark.sql names
+        them. Anything else → None, the gridded path."""
+        sel = analysis.select if analysis is not None else None
+        if sel is None or sel.ordered or sel.limit is not None:
             return None
-        table = m["table"]
-        try:
-            if self.catalog.kind(table) != TableKind.TIME_SERIES:
-                return None
-        except KeyError:
+        table = sel.table
+        if self.catalog.tables().get(table) != TableKind.TIME_SERIES:
             return None
         meta = self.catalog.time_series_metadata(table)
         field_index = meta.field_index_of
-        raw_groups = (
-            [g.strip() for g in re.split(r",(?![^()]*\))", m["group"])]
-            if m["group"]
-            else []
-        )
         group_cols: list[str] = []
-        bucket_us: int | None = None
-        bucket_origin = 0
-        bucket_expr: str | None = None
-        for g in raw_groups:
-            if g in meta.tag_columns:
-                group_cols.append(g)
-            elif bucket_us is None and (b := _bucket_us_of(g, meta.timestamp_column)):
-                width, origin, kind = b
-                if kind == "date_trunc" and not self._session_is_utc():
-                    # Spark's date_trunc truncates in the session zone;
-                    # the epoch-aligned rewrite only matches under UTC —
-                    # decline so spark.sql answers with zone semantics
+        bucket = bucket_key = None
+        for g in sel.group_by or ():
+            if isinstance(g, sql_plan.Col) and g.name in meta.tag_columns:
+                group_cols.append(g.name)
+            elif bucket is None and (bucket := _bucket_us_of(g, meta.timestamp_column)):
+                if bucket[2] == "date_trunc" and not self._session_is_utc():
                     return None
-                bucket_us, bucket_origin = width, origin
-                bucket_expr = re.sub(r"\s+", "", g).lower()
+                bucket_key = g
             else:
                 return None
         tag_filters: list[tuple[str, str]] = []
-        lo_us: int | None = None
-        hi_us: int | None = None
-        if m["where"]:
-            for cond in re.split(r"\s+AND\s+", m["where"], flags=re.IGNORECASE):
-                if tm := _TAG_EQ.match(cond):
-                    if tm["col"] in meta.tag_columns:
-                        tag_filters.append((tm["col"], tm["val"]))
-                        continue
-                if bm := _TS_BOUND.match(cond):
-                    if bm["col"] == meta.timestamp_column:
-                        if not self._session_is_utc():
-                            # TIMESTAMP literals parse in the session
-                            # zone; the µs bounds below are UTC — decline
-                            # so spark.sql answers with zone semantics
-                            return None
-                        try:
-                            us = _to_us(datetime.datetime.fromisoformat(bm["val"]))
-                        except ValueError:
-                            return None
-                        if bm["op"] == ">=" and lo_us is None:
-                            lo_us = us
-                            continue
-                        if bm["op"] == "<=" and hi_us is None:
-                            hi_us = us
-                            continue
+        bounds: dict[str, int] = {}
+        for p in sel.where:
+            if p is not None and p.kind == "string" and p.column in meta.tag_columns:
+                tag_filters.append((p.column, p.value))
+            elif (
+                p is not None and p.kind == "timestamp" and p.column == meta.timestamp_column
+                and p.op not in bounds and self._session_is_utc()
+            ):
+                bounds[p.op] = p.value
+            else:
                 return None  # any other predicate: gridded path
-        if (lo_us is None) != (hi_us is None):
+        if len(bounds) == 1:
             return None  # single bound = the rewrite-defeat idiom
-        items = [i.strip() for i in re.split(r",(?![^()]*\))", m["items"])]
+        lo_us, hi_us = bounds.get(">="), bounds.get("<=")
 
-        # last()/first() shape: every non-group item is max_by/min_by on
-        # (stored field, timestamp) → edge-points read. Mixed statements
-        # (edge + simple aggs), time ranges (the edge segment may straddle
-        # the bound), and bucket group keys stay on the gridded path.
-        edge_parsed = []
-        for item in items:
-            if item in meta.tag_columns and item in group_cols:
+        aggs: list[tuple[str, int, str]] = []
+        edges: list[tuple[str, int, str]] = []
+        bucket_alias: str | None = None
+        out_names: list[str] = []
+        for item in sel.items:
+            e = item.expr
+            arg = e.args[0] if isinstance(e, sql_plan.Call) and e.args else None
+            if item.alias is None and isinstance(e, sql_plan.Col) and e.name in group_cols:
+                out_names.append(e.name)  # plain group key in the projection
                 continue
-            em = _EDGE_ITEM.match(item)
-            if em:
-                edge_parsed.append(em)
-        if edge_parsed and len(edge_parsed) + len(group_cols) == len(items):
-            if bucket_expr is not None or lo_us is not None or hi_us is not None:
+            if bucket_alias is None and bucket_key is not None and e == bucket_key:
+                bucket_alias = item.alias or "bucket"
+                out_names.append(bucket_alias)
+                continue
+            if not isinstance(e, sql_plan.Call) or e.func not in _AGG_FUNCS | _EDGE_FUNCS:
                 return None
-            # One edge_points pass per direction (not per item): the
-            # operator handles many field_columns in a single window +
-            # decode; per-field conditional struct extremums then fold
-            # every requested item inside one aggregation.
-            by_dir: dict[str, list[tuple[int, str]]] = {"last": [], "first": []}
-            ordered_aliases: list[str] = []
-            for em in edge_parsed:
-                fld, tscol = em["field"], em["ts"]
-                if tscol != meta.timestamp_column or fld not in field_index:
-                    return None
-                alias = em["alias"] or f"{em['func'].lower()}({fld}, {tscol})"
-                which = "last" if em["func"].lower() == "max_by" else "first"
-                by_dir[which].append((field_index[fld], alias))
-                ordered_aliases.append(alias)
-            segments, info = self.segments(table, with_info=True)
-            for col, val in tag_filters:
-                segments = segments.where(F.col(col) == F.lit(val))
-            outs = []
-            for which, dir_items in by_dir.items():
-                if not dir_items:
-                    continue
-                idxs = sorted({i for i, _ in dir_items})
-                ep = grid_ops.edge_points(
-                    segments.where(F.col("field_column").isin(idxs)),
-                    list(meta.tag_columns),
-                    which,
-                    may_have_slow=info["may_have_slow"],
-                    fast_fraction=info["fast_fraction"],
-                )
-                # struct extremum: deterministic on timestamp ties
-                pick = F.max if which == "last" else F.min
-                dir_aggs = [
-                    pick(
-                        F.when(
-                            F.col("field_column") == F.lit(idx),
-                            F.struct("timestamp", "value"),
-                        )
-                    )["value"].alias(alias)
-                    for idx, alias in dir_items
-                ]
-                outs.append(
-                    ep.groupBy(*group_cols).agg(*dir_aggs)
-                    if group_cols
-                    else ep.agg(*dir_aggs)
-                )
-            out = outs[0]
-            for o in outs[1:]:
-                out = out.join(o, group_cols) if group_cols else out.crossJoin(o)
-            return out.select(*group_cols, *ordered_aliases)
-        if edge_parsed:
-            return None  # mixed edge + simple aggregates: gridded path
-
-        aggs: list[tuple[str, int | None, str]] = []
-        bucket_alias, bucket_seen = "bucket", False
-        for i, item in enumerate(items):
-            if item.strip() in meta.tag_columns and item.strip() in group_cols:
-                continue  # plain group key in the projection
-            if bucket_expr is not None and not bucket_seen:
-                # the bucket group key in the projection, optionally aliased
-                bm = re.match(r"^(?P<expr>.*?)(?:\s+AS\s+(?P<alias>[A-Za-z_][A-Za-z0-9_]*))?$",
-                              item, re.IGNORECASE | re.DOTALL)
-                if bm and re.sub(r"\s+", "", bm["expr"]).lower() == bucket_expr:
-                    if bm["alias"]:
-                        bucket_alias = bm["alias"]
-                    bucket_seen = True
-                    continue
-            am = _AGG_ITEM.match(item)
-            if not am:
-                return None
-            func, arg = am["func"].lower(), am["arg"]
-            if arg == "*":
-                if func != "count":
-                    return None
+            if e.func == "count" and e.args == (_COUNT_STAR,):
                 idx = 0  # every point exists in every field partition
-            elif arg in field_index:
-                idx = field_index[arg]
+            elif isinstance(arg, sql_plan.Col) and arg.name in field_index:
+                idx = field_index[arg.name]
             else:
                 return None
-            alias = am["alias"] or f"{func}({arg})"
-            aggs.append((func, idx, alias))
-        if not aggs:
-            return None
-        if bucket_expr is not None and not bucket_seen:
-            return None  # grouped by a bucket the projection doesn't show
-        if bucket_us is None and lo_us is None:
-            logged = self._log_aggregates(table, meta, aggs, group_cols, tag_filters)
+            edge = e.func in _EDGE_FUNCS
+            if e.args[1:] != ((sql_plan.Col(meta.timestamp_column),) if edge else ()):
+                return None
+            (edges if edge else aggs).append((e.func, idx, item.name))
+            out_names.append(item.name)
+        if len(set(out_names)) != len(out_names) or (edges and aggs) or not (edges or aggs):
+            return None  # duplicate names, mixed edge + simple aggregates
+        if bucket_key is not None and (bucket_alias is None or edges):
+            return None  # a bucket the projection doesn't show, or edges
+        if edges and lo_us is not None:
+            return None  # the edge segment may straddle the bound
+        if edges:
+            out = self._edge_aggregates(table, meta, edges, group_cols, tag_filters)
+        else:
+            out = self._stats_aggregates(
+                table, meta, aggs, group_cols, tag_filters, lo_us, hi_us, bucket, bucket_alias
+            )
+        return out.select(*out_names)
+
+    def _stats_aggregates(self, name, meta, aggs, group_by, tag_filters, lo_us=None,
+                          hi_us=None, bucket=None, bucket_alias="bucket") -> DataFrame:
+        """Simple aggregates (func, field index, alias) per ``group_by``
+        tags from segment statistics, for SQL and the API: unbounded and
+        unbucketed from the commit log's series rows first; per ``bucket``
+        (width µs, origin µs) by the resample rewrite; time-bounded with
+        only the boundary segments decoded."""
+        unbounded = lo_us is None and hi_us is None  # epoch 0 is a bound
+        if unbounded and bucket is None:
+            logged = self._log_aggregates(name, meta, aggs, group_by, tag_filters)
             if logged is not None:
                 return logged
-        segments, info = self.segments(table, lo_us, hi_us, with_info=True)
-        for col, val in tag_filters:
-            segments = segments.where(F.col(col) == F.lit(val))
-        if bucket_us is not None:
-            # GROUP BY time_bucket/date_trunc: the resample rewrite —
-            # closed-form per-bucket aggregates where the model allows,
-            # gridded fallback otherwise (operators/aggregates.py::resample)
-            out = agg_ops.resample(
-                segments, list(meta.tag_columns), bucket_us, aggs,
-                lo_us, hi_us, group_cols or None,
+        segments, info = self.segments(name, lo_us, hi_us, with_info=True, tags=tag_filters)
+        tag_columns, group_by = list(meta.tag_columns), group_by or None
+        if bucket is not None:
+            return agg_ops.resample(
+                segments, tag_columns, bucket[0], aggs, lo_us, hi_us, group_by,
                 bucket_alias=bucket_alias, may_have_slow=info["may_have_slow"],
-                origin_us=bucket_origin, fast_fraction=info["fast_fraction"],
+                origin_us=bucket[1], fast_fraction=info["fast_fraction"],
                 metrics=self._analyze_metrics,
             )
-            keep = [bucket_alias] + group_cols + [a[2] for a in aggs]
-            return out.select(*keep)
-        if lo_us is not None and hi_us is not None:
-            # two-sided range: stats for interior segments, decode only
-            # the boundary ones (time_range_aggregates)
-            out = agg_ops.time_range_aggregates(
-                segments, list(meta.tag_columns), aggs, lo_us, hi_us,
-                group_cols or None, metrics=self._analyze_metrics,
+        if unbounded:
+            return agg_ops.segment_aggregates(segments, aggs, group_by)
+        return agg_ops.time_range_aggregates(
+            segments, tag_columns, aggs, -(2**62) if lo_us is None else lo_us,
+            2**62 if hi_us is None else hi_us, group_by, metrics=self._analyze_metrics,
+        )
+
+    def _edge_aggregates(self, name, meta, edges, group_cols, tag_filters) -> DataFrame:
+        """max_by/min_by(field, timestamp) items by the edge-points read
+        (O(series) decode): one edge_points pass per direction, then
+        per-field conditional struct extremums fold every item of that
+        direction inside one aggregation."""
+        segments, info = self.segments(name, with_info=True, tags=tag_filters)
+        outs = []
+        for func, which in (("max_by", "last"), ("min_by", "first")):
+            dir_items = [(idx, alias) for f, idx, alias in edges if f == func]
+            if not dir_items:
+                continue
+            ep = grid_ops.edge_points(
+                segments.where(F.col("field_column").isin(sorted({i for i, _ in dir_items}))),
+                list(meta.tag_columns),
+                which,
+                may_have_slow=info["may_have_slow"],
+                fast_fraction=info["fast_fraction"],
             )
-        else:
-            out = agg_ops.segment_aggregates(segments, aggs, group_cols or None)
-        keep = group_cols + [a[2] for a in aggs]
-        return out.select(*keep)
+            # struct extremum: deterministic on timestamp ties
+            pick = F.max if which == "last" else F.min
+            dir_aggs = [
+                pick(F.when(F.col("field_column") == F.lit(idx), F.struct("timestamp", "value")))[
+                    "value"
+                ].alias(alias)
+                for idx, alias in dir_items
+            ]
+            outs.append(ep.groupBy(*group_cols).agg(*dir_aggs))
+        out = outs[0]
+        for o in outs[1:]:
+            out = out.join(o, group_cols) if group_cols else out.crossJoin(o)
+        return out
 
     def _log_aggregates(
         self,
@@ -1673,46 +1495,18 @@ class Engine:
         segments fully inside the range, decode only for boundary
         segments — operators/aggregates.py::time_range_aggregates)."""
         meta = self.catalog.time_series_metadata(name)
-        field_index = meta.field_index_of
         columns = columns or {f: None for f in meta.field_names}
-        agg_items = {c: a for c, a in columns.items() if a is not None}
-        start_us, end_us = _to_us(start), _to_us(end)
-
-        if agg_items:
-            aggs = [
-                (a.lower(), field_index[c], f"{a.lower()}_{c}") for c, a in agg_items.items()
-            ]
-            # identity check, not truthiness: epoch 0 is a valid boundary
-            unbounded = start_us is None and end_us is None
-            if unbounded:
-                logged = self._log_aggregates(
-                    name, meta, aggs, list(group_by or []), list((tags or {}).items())
-                )
-                if logged is not None:
-                    return logged
-            segments = self.segments(name, start_us, end_us)
-            for t, v in (tags or {}).items():
-                segments = segments.where(F.col(t) == F.lit(v))
-            if unbounded:
-                return agg_ops.segment_aggregates(segments, aggs, group_by or None)
-            lo = start_us if start_us is not None else -(2**62)
-            hi = end_us if end_us is not None else 2**62
-            return agg_ops.time_range_aggregates(
-                segments, meta.tag_columns, aggs, lo, hi, group_by or None,
-                metrics=self._analyze_metrics,
-            )
-
-        df = self.table(name, start=start, end=end)
-        for t, v in (tags or {}).items():
-            df = df.where(F.col(t) == F.lit(v))
-        if not agg_items:
-            return df.select(meta.timestamp_column, *columns.keys(), *meta.tag_columns)
-        exprs = [
-            getattr(F, a.lower())(F.col(c)).alias(f"{a.lower()}_{c}") for c, a in agg_items.items()
+        aggs = [
+            (a.lower(), meta.field_index_of[c], f"{a.lower()}_{c}")
+            for c, a in columns.items() if a is not None
         ]
-        if group_by:
-            return df.groupBy(*group_by).agg(*exprs)
-        return df.agg(*exprs)
+        if aggs:
+            return self._stats_aggregates(
+                name, meta, aggs, list(group_by or []), list((tags or {}).items()),
+                _to_us(start), _to_us(end),
+            )
+        df = self.table(name, start=start, end=end, tags=tags)
+        return df.select(meta.timestamp_column, *columns.keys(), *meta.tag_columns)
 
     def resample(
         self,
@@ -1732,27 +1526,14 @@ class Engine:
         maps field -> aggregate (or list of aggregates) like
         read_time_series_table."""
         meta = self.catalog.time_series_metadata(name)
-        field_index = meta.field_index_of
-        start_us, end_us = _to_us(start), _to_us(end)
-        segments, info = self.segments(name, start_us, end_us, with_info=True)
-        for t, v in (tags or {}).items():
-            segments = segments.where(F.col(t) == F.lit(v))
         aggs = [
-            (a.lower(), field_index[c], f"{a.lower()}_{c}")
+            (a.lower(), meta.field_index_of[c], f"{a.lower()}_{c}")
             for c, spec in columns.items()
             for a in ([spec] if isinstance(spec, str) else spec)
         ]
-        return agg_ops.resample(
-            segments,
-            meta.tag_columns,
-            _interval_us(every),
-            aggs,
-            start_us,
-            end_us,
-            group_by or None,
-            may_have_slow=info["may_have_slow"],
-            fast_fraction=info["fast_fraction"],
-            metrics=self._analyze_metrics,
+        return self._stats_aggregates(
+            name, meta, aggs, group_by, list((tags or {}).items()), _to_us(start), _to_us(end),
+            (_interval_us(every), 0),
         )
 
     def gapfill(
@@ -1790,30 +1571,33 @@ class Engine:
         name the output."""
         meta = self.catalog.time_series_metadata(name)
         field_index = meta.field_index_of
-        segments, info = self.segments(name, with_info=True)
-        for t, v in (tags or {}).items():
-            segments = segments.where(F.col(t) == F.lit(v))
+        segments, info = self.segments(name, with_info=True, tags=(tags or {}).items())
         wanted = fields or list(meta.field_columns)
         segments = segments.where(
             F.col("field_column").isin([field_index[f] for f in wanted])
         )
         return meta, segments, wanted, info
 
-    def _named_field_output(self, out: DataFrame, meta, wanted: list[str]) -> DataFrame:
-        """(field_column, timestamp µs, value) → (tags, field name,
-        TimestampType, value)."""
-        field_index = meta.field_index_of
+    def _named_field_output(self, out: DataFrame, meta, wanted: list[str], *extra) -> DataFrame:
+        """(field_column, timestamp µs, value, *extra) → (tags, field
+        name, TimestampType, value, *extra)."""
+        return out.select(
+            *meta.tag_columns,
+            self._field_name(meta, wanted),
+            F.timestamp_micros(F.col("timestamp")).alias(meta.timestamp_column),
+            "value",
+            *extra,
+        )
+
+    @staticmethod
+    def _field_name(meta, wanted: list[str]):
+        """The ``field`` column: each wanted field_column index as its name."""
         name_expr = F.col("field_column").cast("string")
         for f in wanted:
             name_expr = F.when(
-                F.col("field_column") == F.lit(field_index[f]), F.lit(f)
+                F.col("field_column") == F.lit(meta.field_index_of[f]), F.lit(f)
             ).otherwise(name_expr)
-        return out.select(
-            *meta.tag_columns,
-            name_expr.alias("field"),
-            F.timestamp_micros(F.col("timestamp")).alias(meta.timestamp_column),
-            "value",
-        )
+        return name_expr.alias("field")
 
     def last_points(
         self,
@@ -1878,22 +1662,7 @@ class Engine:
             may_have_slow=info["may_have_slow"],
             fast_fraction=info["fast_fraction"],
         )
-        return self._outliers_named(out, meta, wanted)
-
-    def _outliers_named(self, out: DataFrame, meta, wanted: list[str]) -> DataFrame:
-        field_index = meta.field_index_of
-        name_expr = F.col("field_column").cast("string")
-        for f in wanted:
-            name_expr = F.when(
-                F.col("field_column") == F.lit(field_index[f]), F.lit(f)
-            ).otherwise(name_expr)
-        return out.select(
-            *meta.tag_columns,
-            name_expr.alias("field"),
-            F.timestamp_micros(F.col("timestamp")).alias(meta.timestamp_column),
-            "value",
-            "zscore",
-        )
+        return self._named_field_output(out, meta, wanted, "zscore")
 
     def m4(
         self,
@@ -1910,9 +1679,7 @@ class Engine:
         from modelardb_rs_spark.operators.downsample import m4_downsample
 
         meta = self.catalog.time_series_metadata(name)
-        pts = self.table(name, fields=[field], start=start, end=end)
-        for tcol, v in (tags or {}).items():
-            pts = pts.where(F.col(tcol) == F.lit(v))
+        pts = self.table(name, fields=[field], start=start, end=end, tags=tags)
         return m4_downsample(
             pts.withColumnRenamed(field, "value"),
             meta.tag_columns,
@@ -1936,9 +1703,7 @@ class Engine:
         from modelardb_rs_spark.operators.downsample import value_histogram
 
         meta = self.catalog.time_series_metadata(name)
-        pts = self.table(name, fields=[field], start=start, end=end)
-        for tcol, v in (tags or {}).items():
-            pts = pts.where(F.col(tcol) == F.lit(v))
+        pts = self.table(name, fields=[field], start=start, end=end, tags=tags)
         return value_histogram(
             pts.withColumnRenamed(field, "value"), meta.tag_columns, lo, hi, nbins
         )
@@ -1955,20 +1720,14 @@ class Engine:
         it reads three narrow columns. Output: (*tags, field, first_ts,
         last_ts, n_points)."""
         meta, segments, wanted, _ = self._per_series_read(name, fields, tags)
-        field_index = meta.field_index_of
         spans = segments.groupBy(*meta.tag_columns, "field_column").agg(
             F.min("start_time").alias("__f__"),
             F.max("end_time").alias("__l__"),
             F.sum("value_count").cast("long").alias("n_points"),
         )
-        name_expr = F.col("field_column").cast("string")
-        for f in wanted:
-            name_expr = F.when(
-                F.col("field_column") == F.lit(field_index[f]), F.lit(f)
-            ).otherwise(name_expr)
         return spans.select(
             *meta.tag_columns,
-            name_expr.alias("field"),
+            self._field_name(meta, wanted),
             F.timestamp_micros(F.col("__f__")).alias("first_ts"),
             F.timestamp_micros(F.col("__l__")).alias("last_ts"),
             "n_points",
@@ -1987,9 +1746,7 @@ class Engine:
         from modelardb_rs_spark.operators.series import deltas as deltas_op
 
         meta = self.catalog.time_series_metadata(name)
-        pts = self.table(name, fields=[field], start=start, end=end)
-        for tcol, v in (tags or {}).items():
-            pts = pts.where(F.col(tcol) == F.lit(v))
+        pts = self.table(name, fields=[field], start=start, end=end, tags=tags)
         return deltas_op(
             pts, meta.tag_columns, ts_col=meta.timestamp_column, value_col=field
         )
@@ -2008,9 +1765,7 @@ class Engine:
         from modelardb_rs_spark.operators.series import rolling_mean as rm_op
 
         meta = self.catalog.time_series_metadata(name)
-        pts = self.table(name, fields=[field], start=start, end=end)
-        for tcol, v in (tags or {}).items():
-            pts = pts.where(F.col(tcol) == F.lit(v))
+        pts = self.table(name, fields=[field], start=start, end=end, tags=tags)
         return rm_op(
             pts, meta.tag_columns, n, ts_col=meta.timestamp_column, value_col=field
         )
@@ -2030,9 +1785,7 @@ class Engine:
         from modelardb_rs_spark.operators.series import cusum_changepoint
 
         meta = self.catalog.time_series_metadata(name)
-        pts = self.table(name, fields=[field], start=start, end=end)
-        for tcol, v in (tags or {}).items():
-            pts = pts.where(F.col(tcol) == F.lit(v))
+        pts = self.table(name, fields=[field], start=start, end=end, tags=tags)
         return cusum_changepoint(
             pts, meta.tag_columns, ts_col=meta.timestamp_column, value_col=field
         )

@@ -114,6 +114,7 @@ def _assemble(parts: list, tag_columns: list[str]) -> pd.DataFrame:
 
 def _fit_batch(
     pdf: pd.DataFrame,
+    table: str,
     ts_col: str,
     field_names: list[str],
     bounds: list[ErrorBound],
@@ -125,7 +126,13 @@ def _fit_batch(
     disjoint time buckets of one series in the same partition, and
     fitting them as a single chunk would fuse across the holes —
     producing irregular, other-bucket-overlapping segments where the
-    data is perfectly regular."""
+    data is perfectly regular. A NaN or ±inf field value (or one beyond
+    float32) raises before anything is written: models and segment
+    stats hold finite values only."""
+    for f in field_names:
+        with np.errstate(over="ignore"):
+            if not np.isfinite(pdf[f].to_numpy(dtype=np.float32)).all():
+                raise ValueError(f"{table}: field {f!r} holds NaN or infinite values")
     group_cols = tag_columns + (["__bucket__"] if "__bucket__" in pdf.columns else [])
     parts: list = []
     if not group_cols:
@@ -147,6 +154,7 @@ def compress(
 
     Returns a DataFrame with ``types.segment_schema(meta.tag_columns)``.
     """
+    table = meta.name
     ts_col = meta.timestamp_column
     field_names = meta.field_names
     bounds = [meta.field_columns[f] for f in field_names]
@@ -176,7 +184,7 @@ def compress(
     def fit_iter(batches):
         for pdf in batches:
             if len(pdf):
-                out = _fit_batch(pdf, ts_col, field_names, bounds, tags)
+                out = _fit_batch(pdf, table, ts_col, field_names, bounds, tags)
                 if len(out):
                     yield out
 
@@ -242,7 +250,7 @@ def compress_arrow(
         return None
     pdf = pd.DataFrame({ts_col: ts_us, **fields, **tags})
     bounds = [meta.field_columns[f] for f in field_names]
-    return _fit_batch(pdf, ts_col, field_names, bounds, list(meta.tag_columns))
+    return _fit_batch(pdf, meta.name, ts_col, field_names, bounds, list(meta.tag_columns))
 
 
 # CAST(bigint AS TIMESTAMP) multiplies seconds by 10^6; beyond this the

@@ -219,9 +219,6 @@ class DataFolder:
         retention or any storage-level surgery on ``_txn`` history."""
         return self.log(name).mirror_healthy
 
-    def _has_data(self, name: str) -> bool:
-        return bool(self.log(name).snapshot().files)
-
     # -------------------------------------------------------- write/commit
 
     def _stage_and_commit(

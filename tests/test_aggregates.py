@@ -248,6 +248,58 @@ def test_sql_two_sided_range_uses_partial_pushdown(lossy_engine):
     assert "value_count" in plan  # stats columns are in the scan
 
 
+_ELEVEN = ["count", "min", "max", "sum", "avg", "var_pop", "var_samp", "variance",
+           "stddev_pop", "stddev_samp", "stddev"]
+
+
+@pytest.mark.parametrize("aliased", [False, True])
+@pytest.mark.parametrize("group", ["", "tag"])
+def test_rewrite_names_columns_like_spark_sql(lossy_engine, aliased, group):
+    """The rewrite's output columns are the gridded path's: same names
+    (``count(*)`` is Spark's ``count(1)``, function names lower case)
+    and the projection's order, group keys included."""
+    items = [f"{fn.upper() if i % 2 else fn}(f)" for i, fn in enumerate(_ELEVEN)] + ["count(*)"]
+    if aliased:
+        items = [f"{it} AS x{i}" for i, it in enumerate(items)]
+    proj = ", ".join(items[:3] + ([group] if group else []) + items[3:])
+    tail = f" GROUP BY {group}" if group else ""
+    sql = f"SELECT {proj} FROM m{tail}"
+    grid_sql = f"SELECT {proj}{FORCED_GRID}{tail}"
+    assert "segment-stats pushdown" in lossy_engine.explain_path(sql)
+    assert "gridded" in lossy_engine.explain_path(grid_sql)
+    assert lossy_engine.read_sql(sql).columns == lossy_engine.read_sql(grid_sql).columns
+
+
+def test_sql_strict_bounds_take_partial_pushdown(lossy_engine):
+    """``>= a AND < b`` (and ``> a AND <= b``) take partial pushdown
+    like ``>= a AND <= b - 1 µs`` and equal the gridded answer; the
+    window ends on a stored point, so the strict bound matters."""
+    a, b = "2024-01-01 00:10:00", "2024-01-01 00:40:00"
+    items = "count(f) AS n, min(f) AS mn, max(f) AS mx, sum(f) AS s, var_pop(f) AS v"
+    windows = {
+        f"timestamp >= timestamp '{a}' AND timestamp < timestamp '{b}'":
+            f"timestamp >= timestamp '{a}' AND timestamp <= timestamp '2024-01-01 00:39:59.999999'",
+        f"timestamp > timestamp '{a}' AND timestamp <= timestamp '{b}'":
+            f"timestamp >= timestamp '2024-01-01 00:10:00.000001' AND timestamp <= timestamp '{b}'",
+    }
+    for strict, closed in windows.items():
+        for group in ("", " GROUP BY tag"):
+            proj = f"tag, {items}" if group else items
+            sql = f"SELECT {proj} FROM m WHERE {strict}{group}"
+            path = lossy_engine.explain_path(sql)
+            assert "segment-stats pushdown" in path and "partial" in path, path
+            got = sorted(lossy_engine.read_sql(sql).collect())
+            same = sorted(lossy_engine.read_sql(f"SELECT {proj} FROM m WHERE {closed}{group}").collect())
+            lossy_engine.register_views()
+            grid = sorted(lossy_engine.spark.sql(sql).collect())
+            assert sum(r.n for r in got) == 1800
+            for g, c, r in zip(got, same, grid):
+                assert g == c
+                assert (g.n, g.mn, g.mx) == (r.n, r.mn, r.mx)
+                assert g.s == pytest.approx(r.s, rel=1e-9)
+                assert g.v == pytest.approx(r.v, rel=1e-6)
+
+
 # --------------------------------------------------------------- resample
 
 

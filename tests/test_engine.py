@@ -149,6 +149,68 @@ def test_drop_if_exists_is_noop(engine):
         engine.read_sql("DROP TABLE never_created")
 
 
+def test_drop_removes_the_view_and_recreate_reads_only_new_rows(engine, spark):
+    """After DROP TABLE the name is unknown to SQL (not served by the
+    view the last query registered), for both table kinds; a table
+    re-created under the name reads only its own rows."""
+    from pyspark.errors import AnalysisException
+
+    ddl = {
+        "d": "CREATE TIME SERIES TABLE d(timestamp TIMESTAMP, f FIELD, tag TAG)",
+        "n": "CREATE TABLE n(timestamp TIMESTAMP, f FLOAT, tag STRING)",
+    }
+    schema = "timestamp timestamp, f float, tag string"
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(TS0 + datetime.timedelta(seconds=i), float(i), "a") for i in range(lo, hi)],
+            schema,
+        )
+
+    for name, create in ddl.items():
+        engine.read_sql(create)
+        engine.write(name, rows(0, 10))
+        q = f"SELECT count(*) AS c, min(f) AS lo FROM {name} WHERE tag = 'a' AND f >= 0"
+        assert tuple(engine.read_sql(q).collect()[0]) == (10, 0.0)
+        engine.read_sql(f"DROP TABLE {name}")
+        with pytest.raises(AnalysisException, match="TABLE_OR_VIEW_NOT_FOUND"):
+            engine.read_sql(q).collect()
+        engine.read_sql(create)
+        engine.write(name, rows(100, 103))
+        assert tuple(engine.read_sql(q).collect()[0]) == (3, 100.0)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_non_finite_field_rejected_on_both_write_paths(engine, spark, bad):
+    """NaN/±inf field values cannot be stored (the models and segment
+    stats hold finite values): both write paths raise one error naming
+    the table and the field before any commit, leaving the version."""
+    import pyarrow as pa
+
+    engine.read_sql("CREATE TIME SERIES TABLE nf(timestamp TIMESTAMP, f FIELD, g FIELD, tag TAG)")
+    engine.write("nf", spark.createDataFrame(
+        [Row(timestamp=TS0, f=1.0, g=1.0, tag="a")], "timestamp timestamp, f float, g float, tag string"
+    ))
+    version = engine.folder.log("nf").snapshot().version
+    message = r"nf: field 'g' holds NaN or infinite values"
+    upload = pa.table({
+        "timestamp": pa.array([10**6 * i for i in range(1, 5)], pa.timestamp("us", tz="UTC")),
+        "f": pa.array([1.0, 2.0, 3.0, 4.0], pa.float32()),
+        "g": pa.array([1.0, bad, 3.0, 4.0], pa.float32()),
+        "tag": pa.array(["a"] * 4),
+    })
+    with pytest.raises(ValueError, match=message):
+        engine.write("nf", upload)  # in-process fit
+    frame = spark.createDataFrame(
+        [(TS0, 1.0, 1.0, "a"), (TS0 + datetime.timedelta(seconds=1), 2.0, bad, "a")],
+        "timestamp timestamp, f double, g double, tag string",
+    )
+    with pytest.raises(Exception, match=message):
+        engine.write("nf", frame)  # Spark fit
+    assert engine.folder.log("nf").snapshot().version == version
+    assert engine.read_sql("SELECT count(*) AS c FROM nf WHERE tag = 'a'").collect()[0].c == 1
+
+
 def test_null_field_rejected_at_write(engine, spark):
     engine.read_sql("CREATE TIME SERIES TABLE nn(timestamp TIMESTAMP, f FIELD, tag TAG)")
     pts = spark.createDataFrame(

@@ -376,17 +376,156 @@ def test_bare_limit_prunes_segment_files(engine, spark):
 def test_bare_limit_declines_unsafe_shapes(engine):
     """Aggregates, WHERE, ORDER BY etc. must NOT trigger the limit
     cutoff — any-n-rows is only a correct answer for a bare row scan."""
-    from modelardb_rs_spark.engine import _bare_limit
+    from modelardb_rs_spark.plans.sql import analyze
 
-    assert _bare_limit("SELECT * FROM t LIMIT 10") == ("t", 10)
-    assert _bare_limit("SELECT a, tag FROM t LIMIT 5") == ("t", 5)
-    assert _bare_limit("SELECT count(*) FROM t LIMIT 10") is None
-    assert _bare_limit("SELECT * FROM t WHERE a > 1 LIMIT 10") is None
-    assert _bare_limit("SELECT * FROM t ORDER BY a LIMIT 10") is None
-    assert _bare_limit("SELECT DISTINCT a FROM t LIMIT 10") is None
-    assert _bare_limit("SELECT * FROM t LIMIT 10 OFFSET 5") is None
-    assert _bare_limit("SELECT a FROM t JOIN u ON x = y LIMIT 3") is None
-    assert _bare_limit("SELECT max(a) OVER () FROM t LIMIT 2") is None
+    def bare_limit(sql):
+        select = analyze(engine.spark, sql).select
+        if select is None or select.bare_limit is None:
+            return None
+        return select.table, select.bare_limit
+
+    assert bare_limit("SELECT * FROM t LIMIT 10") == ("t", 10)
+    assert bare_limit("SELECT a, tag FROM t LIMIT 5") == ("t", 5)
+    assert bare_limit("SELECT count(*) FROM t LIMIT 10") is None
+    assert bare_limit("SELECT * FROM t WHERE a > 1 LIMIT 10") is None
+    assert bare_limit("SELECT * FROM t ORDER BY a LIMIT 10") is None
+    assert bare_limit("SELECT DISTINCT a FROM t LIMIT 10") is None
+    assert bare_limit("SELECT * FROM t LIMIT 10 OFFSET 5") is None
+    assert bare_limit("SELECT a FROM t JOIN u ON x = y LIMIT 3") is None
+    assert bare_limit("SELECT max(a) OVER () FROM t LIMIT 2") is None
+
+
+_AT_5MIN = "TIMESTAMP '2024-01-01 00:05:00'"
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        f"SELECT count(a) AS n, sum(b) AS s FROM p WHERE timestamp >= {_AT_5MIN} OR a < 10",
+        f"SELECT count(a) AS n FROM p WHERE timestamp >= {_AT_5MIN} AND (tag = 'x' OR a < 350)",
+        f"SELECT count(a) AS n FROM p WHERE NOT (timestamp < {_AT_5MIN}) AND a < 400",
+        f"SELECT count(*) AS n FROM p WHERE NOT (timestamp >= {_AT_5MIN} AND b > 100)",
+        f"SELECT count(*) AS n FROM p WHERE timestamp >= {_AT_5MIN} AND a > (SELECT avg(a) FROM p)",
+        f"SELECT count(*) AS n FROM p WHERE a IN (SELECT a FROM p WHERE timestamp < {_AT_5MIN})",
+        "SELECT count(*) AS n FROM p x JOIN p y ON x.timestamp = y.timestamp "
+        f"WHERE x.timestamp >= {_AT_5MIN} AND y.a < 450",
+        "SELECT count(*) AS n, min(a) AS lo FROM (SELECT * FROM p ORDER BY timestamp LIMIT 320) q "
+        f"WHERE timestamp >= {_AT_5MIN}",
+        "SELECT count(*) AS n FROM (SELECT timestamp, a FROM p LIMIT 100) q WHERE a >= 0",
+        f"WITH w AS (SELECT * FROM p WHERE timestamp >= {_AT_5MIN}) "
+        "SELECT count(*) AS n FROM w u JOIN w v ON u.timestamp = v.timestamp",
+    ],
+)
+def test_view_pushdown_matches_full_views(planned, sql):
+    """OR, NOT, subqueries, a self-join, a LIMIT under a filter and a
+    CTE read twice: read_sql equals the statement over the full,
+    unrestricted views of every table."""
+    got = sorted(planned.read_sql(sql).collect())
+    planned.register_views()
+    assert got == sorted(planned.spark.sql(sql).collect()), sql
+
+
+def test_statement_reading_a_temp_view_gets_full_views(planned):
+    """A SQL temp view can read any table and field: a statement that
+    reads one gets every table's full view, with nothing pushed into
+    the tables it names itself (here the field pruning to ``a`` would
+    break the view's read of ``b``)."""
+    planned.read_sql("CREATE OR REPLACE TEMP VIEW pv AS SELECT timestamp, b FROM p")
+    try:
+        row = planned.read_sql(
+            "SELECT count(*) AS n, max(m) AS m FROM pv CROSS JOIN (SELECT max(a) AS m FROM p) q"
+        ).collect()[0]
+        assert (row.n, row.m) == (500, 499.0)
+    finally:
+        planned.spark.catalog.dropTempView("pv")
+
+
+def test_filtered_limit_takes_no_limit_cutoff(planned):
+    """A LIMIT over a WHERE must not cut the scan to the file prefix
+    that holds n rows: those rows may all fail the filter."""
+    rows = planned.read_sql(f"SELECT timestamp, a FROM p WHERE timestamp >= {_AT_5MIN} LIMIT 50").collect()
+    assert len(rows) == 50 and all(r.a >= 300 for r in rows)
+
+
+def test_read_sql_parses_a_select_once(planned, monkeypatch):
+    """One Spark parse per SELECT, whichever path answers it."""
+    from modelardb_rs_spark.plans import sql as sql_plan
+
+    parsed = []
+    analyze = sql_plan.analyze
+    monkeypatch.setattr(
+        sql_plan, "analyze", lambda spark, sql: parsed.append(sql) or analyze(spark, sql)
+    )
+    for sql in (
+        "SELECT count(a) AS n FROM p",  # commit-log answer
+        f"SELECT count(a) AS n FROM p WHERE timestamp >= {_AT_5MIN}",  # gridded
+        "SELECT * FROM p VERSION AS OF 0 LIMIT 3",  # time travel, bare limit
+    ):
+        parsed.clear()
+        planned.read_sql(sql).collect()
+        assert len(parsed) == 1, sql
+    parsed.clear()
+    planned.explain_path(f"SELECT a FROM p WHERE timestamp >= {_AT_5MIN}", analyze=True)
+    assert len(parsed) == 1
+
+
+def test_planning_does_not_grow_with_the_catalog(engine, spark, monkeypatch):
+    """A one-table gridded query plans the same with 0 or 20 unrelated
+    time series tables in the catalog: the same ``Engine.table`` calls
+    and at most 10% more py4j round trips (a view per catalog table
+    once cost ~18x)."""
+    import threading
+
+    import pyarrow as pa
+
+    from modelardb_rs_spark.engine import Engine
+
+    ddl = "CREATE TIME SERIES TABLE {}(timestamp TIMESTAMP, f FIELD, g FIELD, tag TAG)"
+
+    def upload(n):
+        return pa.table({
+            "timestamp": pa.array([10**6 * i for i in range(n)], pa.timestamp("us", tz="UTC")),
+            "f": pa.array([float(i % 7) for i in range(n)], pa.float32()),
+            "g": pa.array([float(i) for i in range(n)], pa.float32()),
+            "tag": pa.array([f"s{i % 2}" for i in range(n)]),
+        })
+
+    engine.read_sql(ddl.format("m"))
+    engine.write("m", upload(2000))
+    sql = (
+        "SELECT count(f), min(f), max(f), sum(f) FROM m "
+        "WHERE timestamp >= TIMESTAMP '1970-01-01 00:05:00'"
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    main = threading.get_ident()
+    tables, trips = [], [0]
+    send, table = client.send_command, Engine.table
+
+    def counted(*args, **kwargs):
+        trips[0] += threading.get_ident() == main
+        return send(*args, **kwargs)
+
+    def recorded(self, *args, **kwargs):
+        tables.append((args, kwargs))
+        return table(self, *args, **kwargs)
+
+    def plan():
+        engine.read_sql(sql)  # warm: catalog, snapshot and proof caches
+        tables.clear()
+        trips[0] = 0
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counted)
+            m.setattr(Engine, "table", recorded)
+            engine.read_sql(sql)
+        return list(tables), trips[0]
+
+    alone = plan()
+    for i in range(20):
+        engine.read_sql(ddl.format(f"other{i}"))
+        engine.write(f"other{i}", upload(10))
+    crowded = plan()
+    assert crowded[0] == alone[0] and len(alone[0]) == 1
+    assert 0 < crowded[1] <= 1.1 * alone[1], (alone[1], crowded[1])
 
 
 def test_value_predicate_prunes_segments(planned):

@@ -59,12 +59,21 @@ def test_fuzz_rewrite_matches_gridded(fuzz_engine):
             func = rng.choice(AGGS)
             col = rng.choice(["a", "b", "*"] if func == "count" else ["a", "b"])
             items.append(f"{func}({col}) AS x{j}")
-        where = ""
+        conds = []
         if rng.random() < 0.5:
             conds = [f"site = 's{rng.randint(0, 2)}'"]
             if rng.random() < 0.4:
                 conds.append(f"unit = 'u{rng.randint(0, 1)}'")
-            where = " WHERE " + " AND ".join(conds)
+        if rng.random() < 0.5:
+            # a two-sided window, strict or not, on whole seconds where
+            # points sit: the partial pushdown's boundary decode
+            lo = rng.randint(0, 1500)
+            hi = lo + rng.randint(1, 500)
+            at = lambda s: f"timestamp '{(TS0 + datetime.timedelta(seconds=s)):%Y-%m-%d %H:%M:%S}'"
+            conds.append(f"timestamp {rng.choice(['>=', '>'])} {at(lo)}")
+            conds.append(f"timestamp {rng.choice(['<=', '<'])} {at(hi)}")
+        rng.shuffle(conds)
+        where = " WHERE " + " AND ".join(conds) if conds else ""
         group = ""
         group_cols = ""
         if rng.random() < 0.5:
@@ -74,11 +83,13 @@ def test_fuzz_rewrite_matches_gridded(fuzz_engine):
         sql = f"SELECT {group_cols}{', '.join(items)} FROM fz{where}{group}"
 
         fast = fuzz_engine.read_sql(sql)
-        # the same statement with a rewrite-defeating predicate runs on
-        # the gridded view through plain spark.sql
+        # the same statement with a rewrite-defeating predicate (a second
+        # lower bound) runs on the gridded view through plain spark.sql
         defeat = " AND " if where else " WHERE "
         slow_sql = sql.replace(group, "") + defeat + "timestamp >= timestamp '1970-01-01'" + group
         slow = fuzz_engine.read_sql(slow_sql)
+        assert "segment-stats pushdown" in fuzz_engine.explain_path(sql), sql
+        assert "gridded" in fuzz_engine.explain_path(slow_sql), slow_sql
 
         f_rows = canonical([tuple(r) for r in fast.collect()])
         s_rows = canonical([tuple(r) for r in slow.collect()])
