@@ -428,10 +428,11 @@ def ts_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def ts_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-bucket downsampling (Engine.resample →
-    operators/aggregates.py::resample): daily buckets per event type.
-    PMC-regular segments contribute per-bucket aggregates in closed form
-    without decoding (an operator past the reference's rewrite set);
-    the irregular events series exercises the gridded fallback here."""
+    operators/aggregates.py::segment_aggregates): daily buckets per event
+    type. Segments inside one bucket answer from their stats and
+    PMC-regular ones crossing buckets in closed form, without decoding
+    (an operator past the reference's rewrite set); the irregular events
+    series exercises the gridded fallback here."""
     eng = _ts_engine(spark, sf_dir)
     out = eng.resample(
         "ts_events", "1 day", {"value": ["count", "sum"]}, group_by=["etype"]
@@ -541,7 +542,8 @@ def ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ts_resample_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL surface of the resample rewrite: GROUP BY
     time_bucket(...) in the engine dialect routes through
-    operators/aggregates.py::resample (engine.py::_try_aggregate_pushdown)."""
+    operators/aggregates.py::segment_aggregates
+    (engine.py::_try_aggregate_pushdown)."""
     eng = _ts_engine(spark, sf_dir)
     out = eng.read_sql(
         "SELECT time_bucket('1 day', timestamp) AS bucket, etype, "
@@ -603,8 +605,8 @@ def ts_tag_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ts_range_partial_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-ranged aggregates from interior-segment stats + decoded
-    boundary segments (operators/aggregates.py::time_range_aggregates)."""
+    """Time-ranged aggregates from interior-segment stats + closed-form or
+    decoded boundary segments (operators/aggregates.py::segment_aggregates)."""
     eng = _ts_engine(spark, sf_dir)
     out = eng.read_time_series_table(
         "ts_events",

@@ -1355,29 +1355,20 @@ class Engine:
     def _stats_aggregates(self, name, meta, aggs, group_by, tag_filters, lo_us=None,
                           hi_us=None, bucket=None, bucket_alias="bucket") -> DataFrame:
         """Simple aggregates (func, field index, alias) per ``group_by``
-        tags from segment statistics, for SQL and the API: unbounded and
-        unbucketed from the commit log's series rows first; per ``bucket``
-        (width µs, origin µs) by the resample rewrite; time-bounded with
-        only the boundary segments decoded."""
-        unbounded = lo_us is None and hi_us is None  # epoch 0 is a bound
-        if unbounded and bucket is None:
+        tags from segment statistics, for SQL and the API: from the
+        commit log's series rows when unbounded and unbucketed, else by
+        the segment-aggregate kernel. ``bucket`` starts with (width µs,
+        origin µs)."""
+        if lo_us is None and hi_us is None and bucket is None:  # epoch 0 is a bound
             logged = self._log_aggregates(name, meta, aggs, group_by, tag_filters)
             if logged is not None:
                 return logged
         segments, info = self.segments(name, lo_us, hi_us, with_info=True, tags=tag_filters)
-        tag_columns, group_by = list(meta.tag_columns), group_by or None
-        if bucket is not None:
-            return agg_ops.resample(
-                segments, tag_columns, bucket[0], aggs, lo_us, hi_us, group_by,
-                bucket_alias=bucket_alias, may_have_slow=info["may_have_slow"],
-                origin_us=bucket[1], fast_fraction=info["fast_fraction"],
-                metrics=self._analyze_metrics,
-            )
-        if unbounded:
-            return agg_ops.segment_aggregates(segments, aggs, group_by)
-        return agg_ops.time_range_aggregates(
-            segments, tag_columns, aggs, -(2**62) if lo_us is None else lo_us,
-            2**62 if hi_us is None else hi_us, group_by, metrics=self._analyze_metrics,
+        width, origin = bucket[:2] if bucket else (None, 0)
+        return agg_ops.segment_aggregates(
+            segments, aggs, group_by or None, list(meta.tag_columns), lo_us, hi_us, width,
+            origin, bucket_alias, info["may_have_slow"], info["fast_fraction"],
+            self._analyze_metrics,
         )
 
     def _edge_aggregates(self, name, meta, edges, group_cols, tag_filters) -> DataFrame:
@@ -1492,8 +1483,8 @@ class Engine:
         Aggregates with tag constraints run purely on segment statistics
         (from the commit log's series rows when every live file has
         them); aggregates with a time range use partial pushdown (stats for
-        segments fully inside the range, decode only for boundary
-        segments — operators/aggregates.py::time_range_aggregates)."""
+        segments fully inside the range, closed form or decode only for
+        boundary segments — operators/aggregates.py::segment_aggregates)."""
         meta = self.catalog.time_series_metadata(name)
         columns = columns or {f: None for f in meta.field_names}
         aggs = [
@@ -1519,9 +1510,10 @@ class Engine:
         tags: dict[str, str] | None = None,
     ) -> DataFrame:
         """Time-bucket downsampling with model-based pushdown
-        (operators/aggregates.py::resample): PMC-Mean segments with
-        regular timestamps contribute per-bucket aggregates in closed
-        form without decoding; other segments grid first. ``every`` is a
+        (operators/aggregates.py::segment_aggregates): a segment inside
+        one bucket contributes its stats, a PMC-Mean segment with regular
+        timestamps crossing buckets contributes per-bucket aggregates in
+        closed form, and other segments grid first. ``every`` is a
         bucket width (µs int or '15 minutes'/'1 hour'/'1 day'); ``columns``
         maps field -> aggregate (or list of aggregates) like
         read_time_series_table."""

@@ -1,4 +1,4 @@
-"""Model-based (segment-pushdown) simple aggregates.
+"""Model-based (segment-pushdown) simple aggregates: one kernel.
 
 Reference semantics: the ``ModelSimpleAggregates`` physical optimizer
 rule rewrites un-grouped, un-filtered COUNT/MIN/MAX/SUM/AVG over one
@@ -6,30 +6,48 @@ field column to run directly on segment metadata without reconstruction
 (crates/modelardb_storage/src/optimizer/model_simple_aggregates.rs:175-618;
 segment math crates/modelardb_compression/src/models/mod.rs:98-184).
 
-Spark-first translation: the segments table stores ``value_count`` and
-``seg_sum`` as plain columns (see types.segment_schema — the closed-form
-per-model length/sum math runs once at compression time instead of once
-per query), so every pushed-down aggregate is pure JVM-side Column
-aggregation over four narrow columns:
+Spark-first translation: the segments table stores ``value_count``,
+``seg_sum`` and ``seg_sum_sq`` as plain columns next to ``min_value``/
+``max_value`` (see types.segment_schema — the closed-form per-model
+math runs once at compression time, over the reconstructed values,
+instead of once per query). Every aggregate reads one partial state per
+field, (n, Σv, Σv², min, max), and one final merge (``_final``)
+finishes it:
 
-    COUNT(f) -> SUM(value_count)        MIN(f) -> MIN(min_value)
-    SUM(f)   -> SUM(seg_sum)            MAX(f) -> MAX(max_value)
-    AVG(f)   -> SUM(seg_sum) / SUM(value_count)
-    VAR_POP(f)  -> (SUM(seg_sum_sq) - SUM(seg_sum)^2/N) / N
+    COUNT(f) -> SUM(n)        MIN(f) -> MIN(min)      MAX(f) -> MAX(max)
+    SUM(f)   -> SUM(Σv)       AVG(f) -> SUM(Σv) / SUM(n)
+    VAR_POP(f)  -> (SUM(Σv²) - SUM(Σv)^2/N) / N
     VAR_SAMP(f) -> same numerator over N-1;  STDDEV_* -> sqrt(VAR_*)
 
+``segment_aggregates`` is the one kernel for whole-table, time-ranged
+and time-bucketed (resample, ``GROUP BY time_bucket``) aggregates. It
+sorts each pruned segment once into one of three classes, and all three
+emit the same partial columns into one final aggregation:
+
+(a) whole: inside [start, end] and, with a bucket, inside one bucket —
+    its stats columns;
+(b) closed form: a PMC-Mean segment with regular timestamps that
+    crosses a bucket or range edge (a Swing one too when only
+    COUNT/MIN/MAX are asked) — index math over the points each bucket
+    covers, no decode;
+(c) everything else — decoded by ``grid.grid_univariate`` and
+    aggregated point by point.
+
+(a) and (b) read the same columns and share one scan.
+
+With no bound and no bucket every segment is whole, so the plan is one
+aggregate over the stats columns: column pruning reads no binary
+payload, and nothing decodes. GROUP BY tag columns is supported (a
+strict superset of the reference rule, which bails on any GROUP BY):
+tags are segment-row columns, so grouped aggregates are equally exact.
+``pushdown_agg_column`` (public) and the z-score's μ/σ
+(``anomaly.zscore_outliers``) are ``_final`` over the stats columns.
+
 Variance/stddev are an extension past the reference's accumulator set
-(count/min/max/sum/avg): ``seg_sum_sq`` is materialized at compression
-time like ``seg_sum``. Folders written before the column existed hold
-NULLs there; the variance expressions coalesce those to NaN so a mixed
+(count/min/max/sum/avg). Folders written before ``seg_sum_sq`` existed
+hold NULLs there; the stats partial coalesces those to NaN so a mixed
 or legacy folder yields a loud NaN instead of a silently-undercounted
 result (rewrite the table, or query through the gridded view, to fix).
-
-At 100 TB this reads only the stats columns of the segment Parquet files
-(column pruning) — no binary payloads, no decode, no Python. GROUP BY
-tag columns IS supported here (a strict superset of the reference rule,
-which bails on any GROUP BY): tags are segment-row columns, so grouped
-aggregates are equally exact.
 
 Commit-log answers: every segment add-entry of a commit that stats its
 files on the driver carries one row per series (tag tuple) of that file
@@ -38,15 +56,16 @@ span, in-file disjointness). An un-time-bounded simple aggregate whose
 referenced field partitions have rows in every live file is answered on
 the driver from those rows (``log_aggregates``) — no segment file is
 opened and no Spark job runs until the one-row result is collected. The
-merge math is the numpy twin of ``pushdown_agg_column`` and
-``_variance_final``: counts are exact integer sums, min/max follow
-Spark's NaN ordering (NaN above every number), and sums merge with
-``math.fsum``, so they equal the Column path up to f64 addition order.
+merge math is the numpy twin of ``_final``: counts are exact integer
+sums, min/max follow Spark's NaN ordering (NaN above every number), and
+sums merge with ``math.fsum``, so they equal the Column path up to f64
+addition order.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -65,32 +84,60 @@ SIMPLE_AGGS = (
 # SQL synonyms (both Spark and DuckDB): variance == var_samp, stddev == stddev_samp
 _VAR_CANON = {"variance": "var_samp", "stddev": "stddev_samp"}
 
-
-def _variance_final(vf: str, n: Column, s: Column, q: Column) -> Column:
-    """Final variance-family value from merged partials (``n`` point
-    count as double, ``s`` = Σv, ``q`` = Σv²) — the one copy of the
-    m2 = q - s²/n math shared by the whole-table, time-ranged, and
-    resample pushdowns. Clamps the tiny negative float residue a
-    near-constant series produces (Spark reports 0.0; sqrt of a negative
-    would be NaN) while letting a poisoning NaN through (Spark orders
-    NaN above every number), and returns NULL for the sample forms when
-    n <= 1, like Spark."""
-    m2 = F.greatest(q - s * s / n, F.lit(0.0))
-    if vf == "var_pop":
-        v = m2 / n
-    elif vf == "var_samp":
-        v = F.when(n > 1, m2 / (n - 1))
-    elif vf == "stddev_pop":
-        v = F.sqrt(m2 / n)
-    else:  # stddev_samp
-        v = F.sqrt(F.when(n > 1, m2 / (n - 1)))
-    return v.cast("double")
+# The partials (n, s = Σv, q = Σv², lo = min, hi = max) each aggregate reads
+_NEEDS = {"count": ("n",), "min": ("lo",), "max": ("hi",), "sum": ("s",), "avg": ("n", "s")}
+_PARTIALS = ("n", "s", "q", "lo", "hi")
 
 
-def _sum_sq(only) -> Column:
-    # NaN-poison legacy NULLs: NaN propagates through SUM, NULL would be
-    # silently skipped and undercount the variance
-    return F.sum(only(F.coalesce(F.col("seg_sum_sq"), F.lit(float("nan")))))
+def _checked(func: str) -> str:
+    func = func.lower()
+    if func not in SIMPLE_AGGS:
+        raise ValueError(f"not a pushdown-able aggregate: {func}")
+    return func
+
+
+def _final(func: str, part) -> Column:
+    """One aggregate's final value from its partials: ``part(k)`` is the
+    per-row partial ``k`` (one of ``_PARTIALS``), which this merges
+    (SUM for n/s/q, MIN/MAX for lo/hi) — the one Column copy of the
+    partial→final algebra. The variance family clamps the tiny negative
+    float residue a near-constant series produces (Spark reports 0.0;
+    sqrt of a negative would be NaN) while letting a poisoning NaN
+    through (Spark orders NaN above every number), and the sample forms
+    are NULL when n <= 1, like Spark."""
+    if func == "count":
+        return F.coalesce(F.sum(part("n")), F.lit(0)).cast("long")
+    if func == "min":
+        return F.min(part("lo"))
+    if func == "max":
+        return F.max(part("hi"))
+    # Spark SUM(float) accumulates in double; seg_sum is the f64 sum of
+    # reconstructed values, so the result matches gridded SUM(value)
+    # modulo f64 addition order.
+    s = F.sum(part("s"))
+    if func == "sum":
+        return s
+    if func == "avg":
+        return (s / F.sum(part("n"))).cast("double")
+    vf = _VAR_CANON.get(func, func)
+    n = F.sum(part("n")).cast("double")
+    m2 = F.greatest(F.sum(part("q")) - s * s / n, F.lit(0.0))
+    v = m2 / n if vf.endswith("_pop") else F.when(n > 1, m2 / (n - 1))
+    return (F.sqrt(v) if vf.startswith("stddev") else v).cast("double")
+
+
+# Partial k of a whole segment, from its stats columns (SQL). A legacy
+# NULL seg_sum_sq is NaN-poisoned: NaN propagates through SUM, NULL would
+# be silently skipped and undercount the variance.
+_STATS = {
+    "n": "CAST(value_count AS BIGINT)", "s": "seg_sum",
+    "q": "coalesce(seg_sum_sq, CAST('NaN' AS DOUBLE))", "lo": "min_value", "hi": "max_value",
+}
+
+
+def _when_field(field: str, idx: int | None, value: str) -> str:
+    """SQL: ``value`` on rows of field ``idx`` (every row when None)."""
+    return value if idx is None else f"CASE WHEN {field} = {int(idx)} THEN {value} END"
 
 
 def pushdown_agg_column(func: str, field_index: int | None = None) -> Column:
@@ -99,53 +146,179 @@ def pushdown_agg_column(func: str, field_index: int | None = None) -> Column:
     ``field_index`` restricts to one field_column partition when the
     segments DataFrame holds several fields (conditional aggregation).
     """
-    func = func.lower()
-    if func not in SIMPLE_AGGS:
-        raise ValueError(f"not a pushdown-able aggregate: {func}")
-    cond = (F.col("field_column") == F.lit(field_index)) if field_index is not None else F.lit(True)
-
-    def only(c: Column) -> Column:
-        return F.when(cond, c)
-
-    if func == "count":
-        return F.coalesce(F.sum(only(F.col("value_count"))), F.lit(0)).cast("long")
-    if func == "min":
-        return F.min(only(F.col("min_value")))
-    if func == "max":
-        return F.max(only(F.col("max_value")))
-    if func == "sum":
-        # Spark SUM(float) accumulates in double; seg_sum is the f64 sum of
-        # reconstructed values, so the result matches gridded SUM(value)
-        # modulo f64 addition order.
-        return F.sum(only(F.col("seg_sum")))
-    if func == "avg":
-        return (F.sum(only(F.col("seg_sum"))) / F.sum(only(F.col("value_count")))).cast("double")
-    # variance family
-    func = _VAR_CANON.get(func, func)
-    n = F.sum(only(F.col("value_count"))).cast("double")
-    s = F.sum(only(F.col("seg_sum")))
-    return _variance_final(func, n, s, _sum_sq(only))
+    func = _checked(func)
+    return _final(func, lambda k: F.expr(_when_field("field_column", field_index, _STATS[k])))
 
 
 def segment_aggregates(
     segments: DataFrame,
     aggs: list[tuple[str, int | None, str]],
     group_by_tags: list[str] | None = None,
+    tag_columns: list[str] | None = None,
+    start_us: int | None = None,
+    end_us: int | None = None,
+    bucket_us: int | None = None,
+    origin_us: int = 0,
+    bucket_alias: str = "bucket",
+    may_have_slow: bool = True,
+    fast_fraction: float | None = None,
+    metrics: dict | None = None,
 ) -> DataFrame:
-    """Run simple aggregates directly on a segments DataFrame.
+    """Simple aggregates over a segments DataFrame, per ``group_by_tags``
+    and, with ``bucket_us``, per time bucket: the one kernel (see the
+    module docstring for its three segment classes).
 
-    ``aggs``: list of (func, field_index|None, output_alias).
+    ``aggs``: (func, field_index|None, output_alias). ``start_us`` /
+    ``end_us``: a closed time range, a side open when None.
+    ``bucket_us``: a bucket width B; bucket b covers [O + b*B,
+    O + (b+1)*B) for ``origin_us`` O (e.g. Monday-aligned weeks), and
+    the output gains ``bucket_alias`` (TimestampType, bucket start)
+    ahead of the tags. Buckets and groups with no points are absent
+    (plain GROUP BY semantics); with neither, the result is exactly one
+    row (COUNT 0 and NULLs over no points). ``tag_columns`` (default
+    ``group_by_tags``) are carried through class (c)'s decode, which
+    gets ``may_have_slow``, ``fast_fraction`` and ``metrics``.
+
+    Exactness: the stats and the closed form describe the reconstructed
+    values (PMC reconstruction is bit-exactly the stored f32 mean; a
+    Swing bucket's MIN/MAX sit at the endpoint indices of a monotone
+    line, evaluated with the decoder's f32(param0 + param1·dt)), so the
+    answer equals the decode-then-aggregate one, SUM/AVG/VAR up to f64
+    addition order. A Swing SUM/AVG/VAR decodes: the analytic series
+    sum skips the per-point f32 rounding.
+
+    The classes are SQL text: one parse per projected column instead of
+    a py4j call per Column operator keeps planning cheap.
     """
-    # Restrict the scan to the referenced field partitions up front so
-    # Delta/Parquet partition pruning applies (the per-agg CASE WHEN alone
-    # would force a full scan of every field_column directory).
-    indexes = {idx for _, idx, _ in aggs if idx is not None}
-    if indexes:
+    from modelardb_rs_spark.operators.grid import grid_univariate, prune_segments, python_only
+    from modelardb_rs_spark.types import PMC_MEAN_ID, SWING_ID
+
+    aggs = [(_checked(func), idx, alias) for func, idx, alias in aggs]
+    B, O = bucket_us, int(origin_us)
+    if B is not None and B <= 0:
+        raise ValueError("bucket_us must be positive")
+    # Restrict every class to the referenced field partitions up front
+    # (partition pruning; the per-field CASE WHEN alone would scan all).
+    indexes = {idx for _, idx, _ in aggs}
+    if None not in indexes:
         segments = segments.where(F.col("field_column").isin(sorted(indexes)))
-    cols = [pushdown_agg_column(func, idx).alias(alias) for func, idx, alias in aggs]
-    if group_by_tags:
-        return segments.groupBy(*group_by_tags).agg(*cols)
-    return segments.agg(*cols)
+    segments = prune_segments(segments, start_us, end_us)
+
+    # One set of partial columns per referenced field, shared by its
+    # aggregates: __<partial>_<field>__.
+    needs: dict[int | None, set[str]] = {}
+    for func, idx, _ in aggs:
+        needs.setdefault(idx, set()).update(_NEEDS.get(func, ("n", "s", "q")))
+
+    def name(idx: int | None, k: str) -> str:
+        return f"__{k}_{'all' if idx is None else idx}__"
+
+    def bucket_start(t: str) -> str:
+        """SQL: the µs start of the bucket holding ``t`` (pmod floors
+        pre-epoch timestamps too)."""
+        return f"({t} - pmod({f'({t} - {O})' if O else t}, {B}))"
+
+    def partials(frame: DataFrame, value: dict, field: str, bucket: str | None) -> DataFrame:
+        cols = [] if B is None else [F.expr(f"timestamp_micros({bucket})").alias(bucket_alias)]
+        cols += [F.col(t) for t in group_by_tags or []]
+        for idx, keys in needs.items():
+            cols += [
+                F.expr(_when_field(field, idx, value[k])).alias(name(idx, k))
+                for k in _PARTIALS if k in keys
+            ]
+        return frame.select(*cols)
+
+    # (a) whole: inside the range and one bucket
+    inside = []
+    if start_us is not None:
+        inside.append(f"start_time >= {int(start_us)}")
+    if end_us is not None:
+        inside.append(f"end_time <= {int(end_us)}")
+    if B is not None:
+        inside.append(f"{bucket_start('start_time')} = {bucket_start('end_time')}")
+    whole = " AND ".join(inside)
+    if not whole:  # every segment is whole: one aggregate over the stats
+        parts = [partials(segments, _STATS, "field_column", None)]
+    elif "param0" not in segments.columns or python_only(may_have_slow, fast_fraction):
+        # no closed form: the snapshot predates the model columns, or
+        # holds almost no JVM-decodable points (the closed form would
+        # scan for nothing)
+        closed = "false"
+        parts = [partials(
+            segments.where(whole), _STATS, "field_column", bucket_start("start_time")
+        )]
+    else:
+        # (b) closed form: a regular PMC segment (Swing too, for
+        # COUNT/MIN/MAX) crossing an edge. The points of [lo, hi] are
+        # indices i0 = ceil((lo - s) / step) .. i1 = floor((hi - s) /
+        # step); a single point or a step of 0 (duplicate timestamps)
+        # decodes instead. (a) and (b) read the same columns, so one
+        # pass answers both: a whole segment clips to itself and
+        # overlaps one bucket, and takes its stats.
+        model = f"model_type_id = {PMC_MEAN_ID}"
+        if {func for func, _, _ in aggs} <= {"count", "min", "max"}:
+            model = f"({model} OR (model_type_id = {SWING_ID} AND param1 IS NOT NULL))"
+        closed = (f"{model} AND coalesce(ts_kind, 1) = 0 AND param0 IS NOT NULL "
+                  "AND end_time > start_time")
+        rows = segments.where(f"({whole}) OR ({closed})")
+        lo = "start_time" if start_us is None else f"greatest(start_time, {int(start_us)})"
+        hi = "end_time" if end_us is None else f"least(end_time, {int(end_us)})"
+        if B is not None:  # one row per bucket the clipped segment overlaps
+            rows = rows.select("*", F.explode(F.expr(
+                f"sequence({bucket_start(lo)}, {bucket_start(hi)}, CAST({B} AS BIGINT))"
+            )).alias("__b__"))
+            lo, hi = f"greatest({lo}, __b__)", f"least({hi}, __b__ + {B - 1})"
+        step = "((end_time - start_time) div (value_count - 1))"
+        i0 = f"(({lo} - start_time + {step} - 1) div {step})"
+        i1 = f"(({hi} - start_time) div {step})"
+        cnt = f"({i1} - {i0} + 1)"
+
+        def v_at(i: str) -> str:
+            # the decoder's value at index i: PMC's stored mean, or a
+            # Swing line (monotone, so its extremes are endpoints)
+            return (f"CASE WHEN model_type_id = {PMC_MEAN_ID} THEN param0 ELSE CAST("
+                    f"CAST(param0 AS DOUBLE) + param1 * CAST({i} * {step} AS DOUBLE) AS FLOAT) END")
+
+        mean = "CAST(param0 AS DOUBLE)"
+        closed_values = {
+            "n": cnt, "s": f"CAST({cnt} AS DOUBLE) * {mean}",
+            "q": f"CAST({cnt} AS DOUBLE) * {mean} * {mean}",
+            "lo": f"least({v_at(i0)}, {v_at(i1)})", "hi": f"greatest({v_at(i0)}, {v_at(i1)})",
+        }
+        # CASE keeps the index math (a division by the step) off whole rows
+        values = {k: f"CASE WHEN {whole} THEN {_STATS[k]} ELSE {v} END"
+                  for k, v in closed_values.items()}
+        parts = [partials(
+            rows.where(f"{values['n']} > 0"), values, "field_column",
+            "__b__" if B is not None else None,
+        )]
+
+    if whole:
+        # (c) everything else decodes
+        points = grid_univariate(
+            segments.where(f"NOT ({whole}) AND NOT ({closed})")
+            .withColumn("__field__", F.col("field_column").cast("string")),
+            list(tag_columns if tag_columns is not None else group_by_tags or []) + ["__field__"],
+            start_us,
+            end_us,
+            may_have_slow=may_have_slow,
+            fast_fraction=fast_fraction,
+            metrics=metrics,
+        )
+        point_values = {
+            "n": "CAST(1 AS BIGINT)", "s": "CAST(value AS DOUBLE)",
+            "q": "CAST(value AS DOUBLE) * CAST(value AS DOUBLE)", "lo": "value", "hi": "value",
+        }
+        parts.append(partials(
+            points, point_values, "CAST(__field__ AS INT)", bucket_start("timestamp")
+        ))
+
+    group = ([] if B is None else [bucket_alias]) + list(group_by_tags or [])
+    finals = [
+        _final(func, lambda k, idx=idx: F.col(name(idx, k))).alias(alias)
+        for func, idx, alias in aggs
+    ]
+    return reduce(DataFrame.unionByName, parts).groupBy(*group).agg(*finals)
 
 
 # -- commit-log series rows ---------------------------------------------------
@@ -282,8 +455,8 @@ def log_disjoint(files: list[dict]) -> bool:
 
 
 def _variance_value(vf: str, n: float, s: float, q: float) -> float | None:
-    """``_variance_final`` on Python floats (same clamp, NaN and n <= 1
-    rules)."""
+    """``_final``'s variance family on Python floats (same clamp, NaN and
+    n <= 1 rules)."""
     m2 = q - s * s / n
     if not (m2 > 0.0 or math.isnan(m2)):
         m2 = 0.0
@@ -298,7 +471,7 @@ def _variance_value(vf: str, n: float, s: float, q: float) -> float | None:
 
 def _merged(func: str, rows: list[list]):
     """One aggregate over the series rows of one group and field — the
-    numpy twin of ``pushdown_agg_column``."""
+    numpy twin of ``_final``."""
     if func == "count":
         return sum(r[COUNT] for r in rows)
     if not rows:
@@ -363,377 +536,3 @@ def log_aggregates(
             fields.append(T.StructField(alias, T.DoubleType(), True))
     schema = T.StructType(fields)
     return pa.Table.from_arrays(columns, schema=to_arrow_schema(schema)), schema
-
-
-def time_range_aggregates(
-    segments: DataFrame,
-    tag_columns: list[str],
-    aggs: list[tuple[str, int | None, str]],
-    start_us: int,
-    end_us: int,
-    group_by_tags: list[str] | None = None,
-    metrics: dict | None = None,
-) -> DataFrame:
-    """Simple aggregates under a time-range predicate, answered mostly
-    from segment statistics: segments fully inside [start, end]
-    contribute their stats columns directly; only segments *straddling* a
-    boundary are decoded and filtered point-wise. The reference's rule
-    bails on any predicate (model_simple_aggregates.rs fires only with no
-    pushed filters) — this is a strict superset, and the dominant-cost
-    shape at scale: a month-long query over a year of data decodes only
-    the two boundary segments per series.
-
-    Exactness: stats describe the reconstructed values (types.py), so
-    interior-stats + decoded-boundary equals the fully-gridded aggregate.
-    """
-    from modelardb_rs_spark.operators.grid import grid_univariate
-
-    pruned = segments.where(
-        (F.col("end_time") >= F.lit(int(start_us))) & (F.col("start_time") <= F.lit(int(end_us)))
-    )
-    # Restrict both passes to the referenced field partitions up front
-    # (partition pruning on field_column).
-    indexes = {idx for _, idx, _ in aggs}
-    if None not in indexes:
-        pruned = pruned.where(F.col("field_column").isin(sorted(indexes)))
-    inside = pruned.where(
-        (F.col("start_time") >= F.lit(int(start_us))) & (F.col("end_time") <= F.lit(int(end_us)))
-    )
-    boundary = pruned.where(
-        (F.col("start_time") < F.lit(int(start_us))) | (F.col("end_time") > F.lit(int(end_us)))
-    )
-
-    group = list(group_by_tags or [])
-
-    # ONE stats projection + ONE boundary decode feed a single final
-    # aggregation: every requested aggregate becomes a pair of partial
-    # columns (null where the row's field doesn't match), so a 5-aggregate
-    # query still scans the stats columns once and decodes each boundary
-    # segment once — instead of one job per aggregate.
-    def match(idx: int | None, field_col: Column) -> Column:
-        return F.lit(True) if idx is None else field_col == F.lit(idx)
-
-    stat_cols, point_cols, final_cols = [], [], []
-    for func, idx, alias in aggs:
-        seg_m = match(idx, F.col("field_column"))
-        pt_m = match(idx, F.col("__field__").cast("int"))
-        if func == "count":
-            stat_cols.append(F.when(seg_m, F.col("value_count").cast("long")).alias(f"c_{alias}"))
-            point_cols.append(F.when(pt_m, F.lit(1).cast("long")).alias(f"c_{alias}"))
-            final_cols.append(F.coalesce(F.sum(f"c_{alias}"), F.lit(0)).cast("long").alias(alias))
-        elif func == "sum":
-            stat_cols.append(F.when(seg_m, F.col("seg_sum")).alias(f"s_{alias}"))
-            point_cols.append(F.when(pt_m, F.col("value").cast("double")).alias(f"s_{alias}"))
-            final_cols.append(F.sum(f"s_{alias}").alias(alias))
-        elif func == "min":
-            stat_cols.append(F.when(seg_m, F.col("min_value")).alias(f"m_{alias}"))
-            point_cols.append(F.when(pt_m, F.col("value")).alias(f"m_{alias}"))
-            final_cols.append(F.min(f"m_{alias}").alias(alias))
-        elif func == "max":
-            stat_cols.append(F.when(seg_m, F.col("max_value")).alias(f"x_{alias}"))
-            point_cols.append(F.when(pt_m, F.col("value")).alias(f"x_{alias}"))
-            final_cols.append(F.max(f"x_{alias}").alias(alias))
-        elif func == "avg":
-            stat_cols.append(F.when(seg_m, F.col("seg_sum")).alias(f"as_{alias}"))
-            stat_cols.append(F.when(seg_m, F.col("value_count").cast("long")).alias(f"ac_{alias}"))
-            point_cols.append(F.when(pt_m, F.col("value").cast("double")).alias(f"as_{alias}"))
-            point_cols.append(F.when(pt_m, F.lit(1).cast("long")).alias(f"ac_{alias}"))
-            final_cols.append(
-                (F.sum(f"as_{alias}") / F.sum(f"ac_{alias}")).cast("double").alias(alias)
-            )
-        elif _VAR_CANON.get(func, func) in ("var_pop", "var_samp", "stddev_pop", "stddev_samp"):
-            vf = _VAR_CANON.get(func, func)
-            stat_cols.append(
-                F.when(seg_m, F.coalesce(F.col("seg_sum_sq"), F.lit(float("nan")))).alias(f"q_{alias}")
-            )
-            stat_cols.append(F.when(seg_m, F.col("seg_sum")).alias(f"s_{alias}"))
-            stat_cols.append(F.when(seg_m, F.col("value_count").cast("long")).alias(f"c_{alias}"))
-            v64 = F.col("value").cast("double")
-            point_cols.append(F.when(pt_m, v64 * v64).alias(f"q_{alias}"))
-            point_cols.append(F.when(pt_m, v64).alias(f"s_{alias}"))
-            point_cols.append(F.when(pt_m, F.lit(1).cast("long")).alias(f"c_{alias}"))
-            final_cols.append(
-                _variance_final(
-                    vf,
-                    F.sum(f"c_{alias}").cast("double"),
-                    F.sum(f"s_{alias}"),
-                    F.sum(f"q_{alias}"),
-                ).alias(alias)
-            )
-        else:
-            raise ValueError(f"not a pushdown-able aggregate: {func}")
-
-    stats_part = inside.select(*group, *stat_cols)
-    points = grid_univariate(
-        boundary.withColumn("__field__", F.col("field_column").cast("string")),
-        tag_columns + ["__field__"],
-        start_us,
-        end_us,
-        metrics=metrics,
-    )
-    points_part = points.select(*group, *point_cols)
-    u = stats_part.unionByName(points_part)
-    return u.groupBy(*group).agg(*final_cols) if group else u.agg(*final_cols)
-
-
-def resample(
-    segments: DataFrame,
-    tag_columns: list[str],
-    bucket_us: int,
-    aggs: list[tuple[str, int | None, str]],
-    start_us: int | None = None,
-    end_us: int | None = None,
-    group_by_tags: list[str] | None = None,
-    bucket_alias: str = "bucket",
-    may_have_slow: bool = True,
-    origin_us: int = 0,
-    fast_fraction: float | None = None,
-    metrics: dict | None = None,
-) -> DataFrame:
-    """Time-bucket downsampling (``GROUP BY time_bucket``) with model-based
-    pushdown — an operator past the reference's rewrite set (the reference
-    grids every point for any windowed GROUP BY; grid_exec.rs:261-391).
-
-    PMC-Mean segments with regular timestamps never decode: the points a
-    bucket covers form a closed-form index range (``i0 = ceil((lo-s)/step)``,
-    ``i1 = floor((hi-s)/step)``), and every reconstructed value equals the
-    stored f32 mean, so per-bucket COUNT/SUM/MIN/MAX/AVG/VAR are pure
-    Column arithmetic over one ``explode(sequence(bucket_first,
-    bucket_last))`` — whole-stage codegen, output rows = overlapped
-    buckets, not points. A year-long constant sensor at 1 Hz resampled
-    to 1 h emits 8 760 rows from a handful of segment rows instead of
-    31 M decoded points; that asymmetry is the 100 TB win.
-
-    Swing segments join the closed form when only COUNT/MIN/MAX are
-    requested (index math + monotone-line endpoint values); their
-    SUM/AVG/VAR must decode because the analytic series sum skips the
-    per-point f32 rounding. Gorilla/irregular segments (and rows written
-    before the model-parameter columns existed) fall back to the gridded
-    path —
-    decode, bucket by floor division, aggregate. Both paths produce the
-    same partial columns and one final groupBy(bucket, tags) merges them,
-    so a mixed table costs one aggregation. Exactness matches the engine
-    invariant: PMC reconstruction is bit-exactly the stored mean, so the
-    closed form equals the decode-then-aggregate result (SUM/VAR up to
-    f64 addition order).
-
-    ``aggs``: (func, field_index|None, alias) like time_range_aggregates.
-    Output: ``bucket`` (TimestampType, bucket start) + group_by_tags +
-    aliases; buckets with no points are absent (plain GROUP BY semantics).
-    """
-    from modelardb_rs_spark.operators.grid import grid_univariate, prune_segments
-    from modelardb_rs_spark.types import PMC_MEAN_ID, SWING_ID
-
-    B = int(bucket_us)
-    if B <= 0:
-        raise ValueError("bucket_us must be positive")
-    # origin shift (e.g. Monday-aligned weeks): bucket b covers
-    # [O + b*B, O + (b+1)*B), so all bucket math runs on t - O
-    O = int(origin_us)
-    pruned = prune_segments(segments, start_us, end_us)
-    indexes = {idx for _, idx, _ in aggs}
-    if None not in indexes:
-        pruned = pruned.where(F.col("field_column").isin(sorted(indexes)))
-
-    lo_clip = -(2**62) if start_us is None else int(start_us)
-    hi_clip = 2**62 if end_us is None else int(end_us)
-
-    funcs = {f for f, _, _ in aggs}
-    if "param0" in pruned.columns:
-        # step == 0 with n > 1 (all-duplicate timestamps) would divide by
-        # zero in the index math — those rows decode instead.
-        eligible = F.col("model_type_id") == F.lit(PMC_MEAN_ID)
-        if funcs <= {"count", "min", "max"}:
-            # Swing joins the closed form when no sum-family aggregate is
-            # requested: COUNT is index math, and a (monotone) line's
-            # bucket MIN/MAX sit at the endpoint indices, evaluated with
-            # the same f32(param0 + param1*dt) arithmetic the decoder
-            # uses. SUM/AVG/VAR of a Swing segment must decode — the
-            # analytic series sum skips the per-point f32 rounding.
-            eligible = eligible | (
-                (F.col("model_type_id") == F.lit(SWING_ID))
-                & F.col("param1").isNotNull()
-            )
-        fast_cond = (
-            eligible
-            & (F.coalesce(F.col("ts_kind"), F.lit(1)) == F.lit(0))
-            & F.col("param0").isNotNull()
-            & ((F.col("value_count") == 1) | (F.col("end_time") > F.col("start_time")))
-        )
-        fast, slow = pruned.where(fast_cond), pruned.where(~fast_cond)
-    else:
-        fast, slow = None, pruned
-
-    group = [bucket_alias] + list(group_by_tags or [])
-
-    def match(idx: int | None, field_col: Column) -> Column:
-        return F.lit(True) if idx is None else field_col == F.lit(idx)
-
-    # Partial columns per agg — identical alias pairs on both paths so one
-    # unionByName + one groupBy finishes them. ``v`` is the constant
-    # reconstructed value (PMC / decoded point); ``vmin``/``vmax`` the
-    # bucket extremes (endpoint values for Swing, == v otherwise).
-    def partials(cnt: Column, v: Column, vmin: Column, vmax: Column):
-        cols_for = {}
-        for func, idx, alias in aggs:
-            c = []
-            if func == "count":
-                c.append((cnt.cast("long"), f"c_{alias}"))
-            elif func == "sum":
-                c.append(((cnt.cast("double") * v.cast("double")), f"s_{alias}"))
-            elif func == "min":
-                c.append((vmin, f"m_{alias}"))
-            elif func == "max":
-                c.append((vmax, f"x_{alias}"))
-            elif func == "avg":
-                c.append(((cnt.cast("double") * v.cast("double")), f"as_{alias}"))
-                c.append((cnt.cast("long"), f"ac_{alias}"))
-            elif _VAR_CANON.get(func, func) in (
-                "var_pop", "var_samp", "stddev_pop", "stddev_samp",
-            ):
-                v64 = v.cast("double")
-                c.append((cnt.cast("double") * v64 * v64, f"q_{alias}"))
-                c.append((cnt.cast("double") * v64, f"s_{alias}"))
-                c.append((cnt.cast("long"), f"c_{alias}"))
-            else:
-                raise ValueError(f"not a resample-able aggregate: {func}")
-            cols_for[(func, idx, alias)] = c
-        return cols_for
-
-    final_cols: list[Column] = []
-    for func, idx, alias in aggs:
-        if func == "count":
-            final_cols.append(F.coalesce(F.sum(f"c_{alias}"), F.lit(0)).cast("long").alias(alias))
-        elif func == "sum":
-            final_cols.append(F.sum(f"s_{alias}").alias(alias))
-        elif func == "min":
-            final_cols.append(F.min(f"m_{alias}").alias(alias))
-        elif func == "max":
-            final_cols.append(F.max(f"x_{alias}").alias(alias))
-        elif func == "avg":
-            final_cols.append((F.sum(f"as_{alias}") / F.sum(f"ac_{alias}")).cast("double").alias(alias))
-        else:
-            final_cols.append(
-                _variance_final(
-                    _VAR_CANON.get(func, func),
-                    F.sum(f"c_{alias}").cast("double"),
-                    F.sum(f"s_{alias}"),
-                    F.sum(f"q_{alias}"),
-                ).alias(alias)
-            )
-
-    # Deduplicated partial aliases in a stable order (avg shares c_/s_
-    # names only within its own as_/ac_ prefixes, so no collisions).
-    def emit(cols_for, bucket_col, src):
-        seen, out = set(), [bucket_col.alias(bucket_alias)]
-        out += [F.col(t) for t in (group_by_tags or [])]
-        for key, pairs in cols_for.items():
-            fcond = match(key[1], F.col("field_column") if src == "seg" else F.col("__field__").cast("int"))
-            for expr, name in pairs:
-                if name not in seen:
-                    seen.add(name)
-                    out.append(F.when(fcond, expr).alias(name))
-        return out
-
-    parts: list[DataFrame] = []
-    if fast is not None:
-        step = F.expr(
-            "CASE WHEN value_count > 1 THEN (end_time - start_time) DIV (value_count - 1) "
-            "ELSE CAST(1 AS BIGINT) END"
-        )
-        st = f"(start_time - {O})" if O else "start_time"
-        en = f"(end_time - {O})" if O else "end_time"
-        b_first = F.expr(f"({st} - pmod({st}, {B})) div {B}")
-        b_last = F.expr(f"({en} - pmod({en}, {B})) div {B}")
-        seg_buckets = fast.select(
-            "field_column",
-            "model_type_id",
-            "start_time",
-            "end_time",
-            "value_count",
-            "param0",
-            "param1",
-            step.alias("__step__"),
-            F.explode(F.sequence(b_first, b_last)).alias("__b__"),
-            *(group_by_tags or []),
-        )
-        lo = F.greatest(
-            F.col("start_time"), F.col("__b__") * F.lit(B) + F.lit(O), F.lit(lo_clip)
-        )
-        hi = F.least(
-            F.col("end_time"),
-            (F.col("__b__") + 1) * F.lit(B) + F.lit(O) - 1,
-            F.lit(hi_clip),
-        )
-        # ceil/floor division on non-negative longs (lo >= start_time),
-        # clamped to the valid index range (the n==1 placeholder step
-        # would otherwise run i1 past the single point)
-        i0 = F.greatest(F.expr("(__lo__ - start_time + __step__ - 1) DIV __step__"), F.lit(0))
-        i1 = F.least(
-            F.expr("(__hi__ - start_time) DIV __step__"),
-            (F.col("value_count") - 1).cast("long"),
-        )
-        seg_buckets = (
-            seg_buckets.withColumn("__lo__", lo)
-            .withColumn("__hi__", hi)
-            .withColumn("__i0__", i0)
-            .withColumn("__i1__", i1)
-            .withColumn(
-                "__cnt__",
-                F.when(
-                    F.col("value_count") == 1,
-                    F.when(
-                        (F.col("__lo__") == F.col("start_time"))
-                        & (F.col("__hi__") >= F.col("start_time")),
-                        F.lit(1),
-                    ).otherwise(F.lit(0)),
-                ).otherwise(F.col("__i1__") - F.col("__i0__") + 1)
-                .cast("long"),
-            )
-            .where(F.col("__cnt__") > 0)
-        )
-
-        # Value at index i — the same arithmetic as the decoder/_grid_jvm:
-        # PMC is the stored f32 mean; Swing is f32(param0 + param1·dt) in
-        # double math. A line is monotone, so bucket extremes are the
-        # endpoint values (f32 rounding preserves order).
-        def v_at(i: Column) -> Column:
-            dt = (i * F.col("__step__")).cast("double")
-            return F.when(
-                F.col("model_type_id") == F.lit(PMC_MEAN_ID), F.col("param0")
-            ).otherwise(
-                (F.col("param0").cast("double") + F.col("param1") * dt).cast("float")
-            )
-
-        v0, v1 = v_at(F.col("__i0__")), v_at(F.col("__i1__"))
-        cols_for = partials(
-            F.col("__cnt__"), F.col("param0"), F.least(v0, v1), F.greatest(v0, v1)
-        )
-        parts.append(
-            seg_buckets.select(
-                *emit(
-                    cols_for,
-                    F.timestamp_micros(F.col("__b__") * F.lit(B) + F.lit(O)),
-                    "seg",
-                )
-            )
-        )
-
-    points = grid_univariate(
-        slow.withColumn("__field__", F.col("field_column").cast("string")),
-        tag_columns + ["__field__"],
-        start_us,
-        end_us,
-        may_have_slow=may_have_slow,
-        fast_fraction=fast_fraction,
-        metrics=metrics,
-    )
-    pt_shift = f"(timestamp - {O})" if O else "timestamp"
-    pt_bucket = F.expr(f"timestamp_micros(timestamp - pmod({pt_shift}, {B}))")
-    cols_for_pts = partials(F.lit(1), F.col("value"), F.col("value"), F.col("value"))
-    parts.append(points.select(*emit(cols_for_pts, pt_bucket, "pt")))
-
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-    return u.groupBy(*group).agg(*final_cols)

@@ -30,15 +30,13 @@ def zscore_outliers(
     one row per point with |v − μ_series| > z·σ_series (population σ).
     Series with σ == 0 emit nothing.
     """
+    from modelardb_rs_spark.operators.aggregates import pushdown_agg_column
     from modelardb_rs_spark.operators.grid import grid_univariate
 
     keys = tag_columns + ["field_column"]
-    n = F.sum("value_count").cast("double")
-    s = F.sum("seg_sum")
-    q = F.sum(F.coalesce(F.col("seg_sum_sq"), F.lit(float("nan"))))
     stats = segments.groupBy(*keys).agg(
-        (s / n).alias("__mu__"),
-        F.sqrt(F.greatest(q - s * s / n, F.lit(0.0)) / n).alias("__sd__"),
+        pushdown_agg_column("avg").alias("__mu__"),
+        pushdown_agg_column("stddev_pop").alias("__sd__"),
     )
     joined = segments.join(stats, keys)
     zc = F.lit(float(z))

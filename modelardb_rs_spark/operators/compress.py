@@ -112,6 +112,17 @@ def _assemble(parts: list, tag_columns: list[str]) -> pd.DataFrame:
     return seg
 
 
+def check_finite(pdf: pd.DataFrame, table: str, field_names: list[str]) -> None:
+    """Raise on a NaN or ±inf field value (or one beyond float32) before
+    anything is fitted or written: models and segment stats hold finite
+    values only. Every fitting path (``_fit_batch``, stateful streaming
+    ingest) runs it on its input."""
+    for f in field_names:
+        with np.errstate(over="ignore"):
+            if not np.isfinite(pdf[f].to_numpy(dtype=np.float32)).all():
+                raise ValueError(f"{table}: field {f!r} holds NaN or infinite values")
+
+
 def _fit_batch(
     pdf: pd.DataFrame,
     table: str,
@@ -126,13 +137,9 @@ def _fit_batch(
     disjoint time buckets of one series in the same partition, and
     fitting them as a single chunk would fuse across the holes —
     producing irregular, other-bucket-overlapping segments where the
-    data is perfectly regular. A NaN or ±inf field value (or one beyond
-    float32) raises before anything is written: models and segment
-    stats hold finite values only."""
-    for f in field_names:
-        with np.errstate(over="ignore"):
-            if not np.isfinite(pdf[f].to_numpy(dtype=np.float32)).all():
-                raise ValueError(f"{table}: field {f!r} holds NaN or infinite values")
+    data is perfectly regular. Non-finite field values raise
+    (``check_finite``)."""
+    check_finite(pdf, table, field_names)
     group_cols = tag_columns + (["__bucket__"] if "__bucket__" in pdf.columns else [])
     parts: list = []
     if not group_cols:

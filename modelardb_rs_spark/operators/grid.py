@@ -92,6 +92,17 @@ def _grid_jvm(segments: DataFrame, tag_columns: list[str]) -> DataFrame:
 _FAST_BRANCH_MIN_FRACTION = 0.05
 
 
+def python_only(may_have_slow: bool, fast_fraction: float | None) -> bool:
+    """Whether a read of the snapshot should skip its JVM-only branches:
+    its commit log counts JVM-decodable points below
+    ``_FAST_BRANCH_MIN_FRACTION`` of all."""
+    return (
+        may_have_slow
+        and fast_fraction is not None
+        and fast_fraction < _FAST_BRANCH_MIN_FRACTION
+    )
+
+
 def grid_univariate(
     segments: DataFrame,
     tag_columns: list[str],
@@ -153,11 +164,7 @@ def grid_univariate(
         if metrics is not None:
             metrics.setdefault("fast_branches", []).append(fast_segments)
 
-    if (
-        may_have_slow
-        and fast_fraction is not None
-        and fast_fraction < _FAST_BRANCH_MIN_FRACTION
-    ):
+    if python_only(may_have_slow, fast_fraction):
         points = segments.mapInPandas(decode, schema=out_schema)
     elif "param0" in segments.columns:
         # null ts_kind/params (rows written before the fast-path columns

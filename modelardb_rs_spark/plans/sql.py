@@ -8,17 +8,20 @@ decoded fields, ``Engine.register_views``), the typed WHERE conjuncts
 over each table read once (pushed into its view) and, for the shape
 ``[LIMIT] [ORDER BY] SELECT|GROUP BY [WHERE] FROM t``, what the aggregate
 rewrite and the bare-LIMIT cutoff read. A statement Spark cannot parse
-(the ASOF JOIN dialect, for one) has no analysis.
+(the ASOF JOIN dialect, for one) has no analysis, and that failed parse
+logs nothing: the statement's error is reported once, by ``spark.sql``.
 """
 
 from __future__ import annotations
 
 import datetime
 import json
+import threading
 from collections import Counter
 from typing import NamedTuple
 
 from pyspark.errors import ParseException
+from pyspark.logger import PySparkLogger
 
 
 class Node(NamedTuple):
@@ -98,12 +101,25 @@ _NUMERIC = frozenset("byte short integer long float double".split())
 _EPOCH, _US = datetime.datetime(1970, 1, 1), datetime.timedelta(microseconds=1)
 
 
+# Set while this thread's analysis parse runs: pyspark logs a parse error
+# with a query context as it converts it, and a failed analysis parse must
+# stay silent. Thread-local, since Flight serves each do_get on its own
+# thread.
+_parsing = threading.local()
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_parsing, "on", False)
+)
+
+
 def analyze(spark, sql: str) -> Analysis | None:
     """The statement's analysis, or None when Spark cannot parse it."""
+    _parsing.on = True
     try:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
     except ParseException:
         return None
+    finally:
+        _parsing.on = False
     root = _rebuild(json.loads(plan.toJSON()))
     walked = list(_walk(root, None))
     parent = {id(n): p for n, p in walked}

@@ -813,7 +813,8 @@ class DataFolder:
                 (
                     df.repartitionByRange(n_out, F.col("field_column"), F.col("start_time"))
                     .sortWithinPartitions(*sort_cols)
-                    .write.partitionBy("field_column")
+                    .write.option("compression", "zstd")
+                    .partitionBy("field_column")
                     .parquet(staged)
                 )
 
@@ -824,14 +825,15 @@ class DataFolder:
                     (
                         df.drop("txn")
                         .repartition(n_out, *[F.col(c) for c in part_cols])
-                        .write.partitionBy(*part_cols)
+                        .write.option("compression", "zstd")
+                        .partitionBy(*part_cols)
                         .parquet(staged)
                     )
 
             else:
 
                 def write_staged(staged: str) -> None:
-                    df.repartition(n_out).write.parquet(staged)
+                    df.repartition(n_out).write.option("compression", "zstd").parquet(staged)
 
         removed = [f["path"] for f in small]
         version = self._stage_and_commit(

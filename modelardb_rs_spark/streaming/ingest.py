@@ -111,7 +111,7 @@ def start_stateful_ingest(
     from pyspark.sql import types as T
 
     from modelardb_rs_spark.compression.fitter import fit_series
-    from modelardb_rs_spark.operators.compress import _assemble
+    from modelardb_rs_spark.operators.compress import _assemble, check_finite
     from modelardb_rs_spark.types import segment_schema
 
     meta = engine.catalog.time_series_metadata(table)
@@ -153,6 +153,8 @@ def start_stateful_ingest(
             return
 
         batches = [pdf for pdf in pdf_iter if len(pdf)]
+        for b in batches:
+            check_finite(b, table, field_names)
         new_ts = (
             np.concatenate([_ts_us(b[ts_col]) for b in batches])
             if batches

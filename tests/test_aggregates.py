@@ -5,6 +5,7 @@ the gridded path (exactly for COUNT/MIN/MAX, within f64 accumulation
 noise for SUM/AVG), including under lossy bounds."""
 
 import datetime
+import math
 
 import pytest
 from pyspark.sql import Row
@@ -298,6 +299,98 @@ def test_sql_strict_bounds_take_partial_pushdown(lossy_engine):
                 assert (g.n, g.mn, g.mx) == (r.n, r.mn, r.mx)
                 assert g.s == pytest.approx(r.s, rel=1e-9)
                 assert g.v == pytest.approx(r.v, rel=1e-6)
+
+
+_RANGES = {  # (start, end) in seconds from TS0; None = open; data covers [0, 2999]
+    "empty": (5000, 6000),
+    "start_only": (2500, None),
+    "end_only": (None, 400),
+    "end_only_empty": (None, -1),
+}
+
+
+def _at(s):
+    return None if s is None else TS0 + datetime.timedelta(seconds=s)
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=str)
+
+
+def _assert_same(got, want):
+    assert len(got) == len(want), (got, want)
+    for g, w in zip(got, want):
+        for x, y in zip(g, w):
+            assert (x is None) == (y is None), (g, w)
+            if isinstance(x, float):
+                assert x == pytest.approx(y, rel=1e-9, abs=1e-9), (g, w)
+            else:
+                assert x == y, (g, w)
+
+
+@pytest.mark.parametrize("lo,hi", list(_RANGES.values()), ids=list(_RANGES))
+def test_empty_and_one_sided_ranges_equal_grid(lossy_engine, lo, hi):
+    """Time-ranged stats reads through the API: ungrouped, one row (count
+    0 and NULLs on an empty range); grouped and bucketed, one row per
+    group or bucket present (none on an empty range); every answer equal
+    to the gridded one."""
+    start, end = _at(lo), _at(hi)
+    pts = lossy_engine.table("m", start=start, end=end)
+    empty = pts.count() == 0
+    assert empty == (lo is not None and lo > 3000 or hi is not None and hi < 0)
+    aggs = ("count", "min", "sum", "var_samp")
+    want = pts.agg(*[getattr(F, agg)("f") for agg in aggs]).collect()[0]
+    for agg, w in zip(aggs, want):
+        got = lossy_engine.read_time_series_table("m", columns={"f": agg}, start=start, end=end)
+        got = _rows(got)
+        _assert_same(got, [(w,)])
+        if empty:
+            assert got == ([(0,)] if agg == "count" else [(None,)])
+    got = _rows(lossy_engine.read_time_series_table(
+        "m", columns={"f": "count"}, group_by=["tag"], start=start, end=end
+    ))
+    _assert_same(got, _rows(pts.groupBy("tag").agg(F.count("f"))))
+    assert empty == (got == [])
+    got = _rows(lossy_engine.resample(
+        "m", "10 minutes", {"f": ["count", "sum", "min", "var_pop"]}, start=start, end=end
+    ))
+    us = "unix_micros(timestamp)"
+    bucket = F.expr(f"timestamp_micros({us} - pmod({us}, 600000000))")
+    want = pts.groupBy(bucket.alias("bucket")).agg(
+        F.count("f"), F.sum("f"), F.min("f"), F.var_pop("f")
+    )
+    _assert_same(got, _rows(want))
+    assert empty == (got == [])
+
+
+def test_empty_and_one_sided_ranges_through_sql(lossy_engine):
+    """The same shapes in SQL: a two-sided range over no points answers
+    from the rewrite (one row of count 0 and NULLs ungrouped, no rows
+    grouped or bucketed); one-sided ranges take the gridded path. Each
+    equals the gridded answer (a third bound defeats the rewrite)."""
+    at = lambda s: f"timestamp '{_at(s):%Y-%m-%d %H:%M:%S}'"  # noqa: E731
+    items = "count(f) AS n, min(f) AS mn, sum(f) AS s, avg(f) AS a, stddev(f) AS sd"
+    wheres = {  # WHERE -> (path, empty)
+        f"timestamp >= {at(5000)} AND timestamp <= {at(6000)}": ("segment-stats pushdown", True),
+        f"timestamp >= {at(2500)}": ("gridded", False),
+        f"timestamp <= {at(400)}": ("gridded", False),
+        f"timestamp > {at(4000)}": ("gridded", True),
+    }
+    for where, (path, empty) in wheres.items():
+        for proj, tail in (
+            (items, ""),
+            (f"tag, {items}", " GROUP BY tag"),
+            (f"time_bucket('10 minutes', timestamp) AS b, {items}",
+             " GROUP BY time_bucket('10 minutes', timestamp)"),
+        ):
+            sql = f"SELECT {proj} FROM m WHERE {where}{tail}"
+            grid_sql = f"SELECT {proj} FROM m WHERE {where} AND {at(-9000)} <= timestamp{tail}"
+            assert path in lossy_engine.explain_path(sql), sql
+            assert "gridded" in lossy_engine.explain_path(grid_sql), grid_sql
+            got = _rows(lossy_engine.read_sql(sql))
+            _assert_same(got, _rows(lossy_engine.read_sql(grid_sql)))
+            if empty:
+                assert got == ([(0, None, None, None, None)] if not tail else []), sql
 
 
 # --------------------------------------------------------------- resample
@@ -1175,6 +1268,30 @@ def test_log_merge_special_values_match_column_path(spark):
     assert by_tag["nan"]["min"] == 0.5 and by_tag["nan"]["max"] != by_tag["nan"]["max"]
     assert by_tag["inf"]["sum"] != by_tag["inf"]["sum"]  # inf + -inf
     assert by_tag["solo"]["var_samp"] is None and by_tag["solo"]["var_pop"] == 0.0
+
+
+def test_legacy_null_sum_sq_poisons_variance_on_every_path(spark):
+    """Segments written before ``seg_sum_sq`` existed hold NULL there: a
+    variance that reads it is NaN, never an undercount, whether the
+    kernel runs unbounded, time-ranged or bucketed; counts still
+    answer."""
+    from modelardb_rs_spark.operators import aggregates as agg
+    from modelardb_rs_spark.types import PMC_MEAN_ID, segment_schema
+
+    schema = segment_schema(["tag"])
+    rows = []
+    for start in (0, 100):  # two regular PMC segments of 10 points, 1 µs apart
+        values = dict(model_type_id=PMC_MEAN_ID, start_time=start, end_time=start + 9,
+                      timestamps=b"", min_value=2.0, max_value=2.0, values=b"", residuals=b"",
+                      error=0.0, value_count=10, seg_sum=20.0, seg_sum_sq=None, ts_kind=0,
+                      param0=2.0, param1=None, field_column=0, tag="t")
+        rows.append(tuple(values[f.name] for f in schema.fields))
+    segments = spark.createDataFrame(rows, schema)
+    aggs = [("count", 0, "n"), ("var_pop", 0, "v"), ("stddev_samp", 0, "sd")]
+    for kw in ({}, {"start_us": 0, "end_us": 104}, {"bucket_us": 50}):
+        out = agg.segment_aggregates(segments, aggs, tag_columns=["tag"], **kw).collect()
+        assert sum(r.n for r in out) == (15 if "end_us" in kw else 20), kw
+        assert all(math.isnan(r.v) and math.isnan(r.sd) for r in out), (kw, out)
 
 
 def test_log_answer_from_read_time_series_table(log_engine, monkeypatch):

@@ -395,6 +395,39 @@ def test_bare_limit_declines_unsafe_shapes(engine):
     assert bare_limit("SELECT max(a) OVER () FROM t LIMIT 2") is None
 
 
+def test_failed_analysis_parse_logs_nothing(spark):
+    """A statement the parser rejects with a query context has no
+    analysis and its analysis parse logs nothing: the error is logged
+    once, by ``spark.sql``. An ASOF JOIN still has no analysis."""
+    import logging
+
+    from pyspark.errors import ParseException
+    from pyspark.logger import PySparkLogger
+
+    from modelardb_rs_spark.plans.sql import analyze
+
+    records = []
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    logger, keep = PySparkLogger.getLogger("SQLQueryContextLogger"), Keep()
+    logger.addHandler(keep)
+    try:
+        sql = "SELECT * FROM m WHERE v > 1e400"
+        assert analyze(spark, sql) is None
+        assert records == []
+        asof = "SELECT l.k FROM a l ASOF JOIN b r ON l.k = r.k AND l.t >= r.t"
+        assert analyze(spark, asof) is None
+        assert records == []
+        with pytest.raises(ParseException):
+            spark.sql(sql)
+        assert len(records) == 1
+    finally:
+        logger.removeHandler(keep)
+
+
 _AT_5MIN = "TIMESTAMP '2024-01-01 00:05:00'"
 
 

@@ -118,6 +118,30 @@ def test_stateful_ingest_no_batch_boundary_splits(engine, spark, tmp_path):
     assert engine.table("sst").where(F.col("tag") == "a").agg(F.sum("f")).first()[0] == 100.0
 
 
+def test_stateful_ingest_rejects_non_finite_values(engine, spark, tmp_path):
+    """A micro-batch holding NaN fails the stateful query with the same
+    error as the batch write paths, and nothing is committed."""
+    from pyspark.errors import StreamingQueryException
+
+    engine.read_sql("CREATE TIME SERIES TABLE snan(timestamp TIMESTAMP, f FIELD, tag TAG)")
+    version = engine.folder.log("snan").snapshot().version
+    src = str(tmp_path / "snan_in")
+    os.makedirs(src)
+    rows = [Row(timestamp=TS0 + datetime.timedelta(seconds=i),
+                f=float("nan") if i == 7 else float(i), tag="a") for i in range(20)]
+    spark.createDataFrame(rows, INPUT_SCHEMA).repartition(1).write.parquet(src, mode="append")
+    q = start_stateful_ingest(
+        engine, "snan", spark.readStream.schema(INPUT_SCHEMA).parquet(src),
+        str(tmp_path / "snan_ckpt"),
+    )
+    try:
+        with pytest.raises(StreamingQueryException, match="holds NaN or infinite values"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert engine.folder.log("snan").snapshot().version == version
+
+
 def test_windowed_rollup(spark, tmp_path):
     src = str(tmp_path / "win_in")
     os.makedirs(src)

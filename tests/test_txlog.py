@@ -222,6 +222,7 @@ def test_optimize_compacts_small_files(ts_table, spark):
         "min_start_time" in f and "all_fast" in f and "field_column" in f
         for f in snap.files
     )
+    assert _live_codecs(ts_table, "acid") == {"ZSTD"}
     # pre-optimize snapshot still readable until vacuum
     assert (
         ts_table.folder.read_segments(meta, version=before.version)
@@ -232,6 +233,37 @@ def test_optimize_compacts_small_files(ts_table, spark):
     # a second optimize finds nothing worth rewriting (no-op, no commit)
     res = ts_table.optimize("acid")
     assert res["compacted"] == 0 and res["version"] == snap.version
+
+
+def _live_codecs(engine, name) -> set[str]:
+    """Parquet compression codecs of every column chunk of the live files."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    table = engine.folder.table_path(name)
+    codecs = set()
+    for f in engine.folder.log(name).snapshot().files:
+        md = pq.read_metadata(urlparse(engine.folder.fs.join(table, f["path"])).path)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            codecs |= {rg.column(c).compression for c in range(rg.num_columns)}
+    return codecs
+
+
+def test_optimize_of_a_normal_table_writes_zstd(engine, spark):
+    """OPTIMIZE rewrites a normal table's small files with the codec
+    every other writer uses."""
+    engine.read_sql("CREATE TABLE nz(k BIGINT, v STRING)")
+    for i in range(4):
+        rows = [(i * 10 + j, f"v{j}") for j in range(10)]
+        engine.write("nz", spark.createDataFrame(rows, "k BIGINT, v STRING"))
+    assert _live_codecs(engine, "nz") == {"ZSTD"}
+    n = len(engine.folder.log("nz").snapshot().files)
+    assert n > 1 and engine.optimize("nz")["compacted"] == n
+    assert len(engine.folder.log("nz").snapshot().files) == 1
+    assert _live_codecs(engine, "nz") == {"ZSTD"}
+    assert engine.read_sql("SELECT count(*) AS n, sum(k) AS s FROM nz").collect()[0] == (40, 780)
 
 
 def test_optimize_aborts_on_concurrent_remove(ts_table, spark):

@@ -604,3 +604,74 @@ def test_fuzz_log_answer_matches_column_path(fuzz_mixed_engine, monkeypatch):
                         assert x == y, (sql, g, w)
                     else:
                         assert x == pytest.approx(y, rel=1e-9, abs=1e-6), (sql, g, w)
+
+
+def test_fuzz_kernel_matches_gridded(fuzz_mixed_engine, monkeypatch):
+    """Random aggregates through the segment-aggregate kernel
+    (``read_time_series_table``, ``resample`` and the SQL rewrite) equal
+    the same aggregates over the gridded points: unbounded, one-sided
+    and two-sided ranges, with and without time buckets and tag groups,
+    all eleven functions. The commit-log answer is switched off so
+    unbounded queries reach the kernel too."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    eng = fuzz_mixed_engine
+    monkeypatch.setattr(eng, "_log_aggregates", lambda *args: None)
+    funcs = AGGS + ["var_pop", "var_samp", "variance", "stddev_pop", "stddev_samp", "stddev"]
+    at = lambda s: None if s is None else TS0 + datetime.timedelta(seconds=s)  # noqa: E731
+    rng = random.Random(43)
+    seen, sql_cases = set(), 0
+    for case in range(24):
+        lo = hi = None  # the data sits at seconds 0..1499 and 2000..2379
+        if case % 3 == 1:
+            if rng.random() < 0.5:
+                lo = rng.randint(-100, 2500)
+            else:
+                hi = rng.randint(-100, 2500)
+        elif case % 3 == 2:
+            lo = rng.randint(-100, 2300)
+            hi = lo + rng.randint(0, 900)
+        width = rng.choice([7, 60, 300, 3600]) if case % 2 else None
+        group = rng.sample(["site", "unit"], rng.randint(0, 2))
+        cols = {f: rng.sample(funcs, 3 if width else 1) for f in ("a", "b")}
+        seen.update(fn for chosen in cols.values() for fn in chosen)
+        names = [f"{fn}_{f}" for f, chosen in cols.items() for fn in chosen]
+        if lo is not None and hi is not None and rng.random() < 0.5:
+            ts = lambda s: f"timestamp '{at(s):%Y-%m-%d %H:%M:%S}'"  # noqa: E731
+            keys = ([f"time_bucket('{width} seconds', timestamp)"] if width else []) + group
+            proj = ([f"{keys[0]} AS bucket"] if width else []) + group + [
+                f"{fn}({f}) AS {fn}_{f}" for f, chosen in cols.items() for fn in chosen]
+            tail = f" GROUP BY {', '.join(keys)}" if keys else ""
+            sql = (f"SELECT {', '.join(proj)} FROM fm "
+                   f"WHERE timestamp >= {ts(lo)} AND timestamp <= {ts(hi)}{tail}")
+            assert "segment-stats pushdown" in eng.explain_path(sql), sql
+            got, sql_cases = eng.read_sql(sql), sql_cases + 1
+        elif width:
+            got = eng.resample("fm", f"{width} seconds", cols, group, at(lo), at(hi))
+        else:
+            got = eng.read_time_series_table(
+                "fm", {f: chosen[0] for f, chosen in cols.items()}, group, at(lo), at(hi)
+            )
+        grid = eng.table("fm", start=at(lo), end=at(hi))
+        keys = group
+        if width:
+            us = width * 1_000_000
+            grid = grid.withColumn("bucket", F.expr(
+                f"timestamp_micros(unix_micros(timestamp) - pmod(unix_micros(timestamp), {us}))"))
+            keys = ["bucket"] + group
+        want = grid.groupBy(*keys).agg(*[
+            getattr(F, fn)(f).alias(f"{fn}_{f}") for f, chosen in cols.items() for fn in chosen])
+        label = (case, lo, hi, width, group, cols)
+        assert got.columns == keys + names, label
+        exact = [not isinstance(f.dataType, T.DoubleType) for f in got.schema.fields]
+        g_rows = sorted((tuple(r) for r in got.collect()), key=str)
+        w_rows = sorted((tuple(r) for r in want.select(*keys, *names).collect()), key=str)
+        assert len(g_rows) == len(w_rows), label
+        for g, w in zip(g_rows, w_rows):
+            for x, y, ex in zip(g, w, exact):
+                if ex or x is None or y is None:
+                    assert x == y, (label, g, w)
+                else:
+                    assert x == pytest.approx(y, rel=1e-6, abs=1e-6), (label, g, w)
+    assert seen == set(funcs) and sql_cases >= 2
