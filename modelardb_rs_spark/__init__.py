@@ -20,6 +20,8 @@ Reference parity is documented per-module with file:line citations into
 the reference repo (read-only at /root/reference).
 """
 
+# first: inside a Spark task, shipping's import installs the worker hook
+from modelardb_rs_spark import shipping  # noqa: F401
 from modelardb_rs_spark.types import ErrorBound, TableKind, TimeSeriesTableMetadata
 from modelardb_rs_spark.engine import Engine
 from modelardb_rs_spark.session import make_spark

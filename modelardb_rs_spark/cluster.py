@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from modelardb_rs_spark.engine import Engine
 from modelardb_rs_spark.flight import ModelarFlightClient
+from modelardb_rs_spark.frames import rows_frame
 
 _NODES_TABLE = "__cluster_nodes"
 _MODES = ("edge", "cloud")
@@ -116,7 +117,8 @@ class Cluster:
     def _record(self, url: str, mode: str, action: str) -> None:
         self.engine.write(
             _NODES_TABLE,
-            self.engine.spark.createDataFrame(
+            rows_frame(
+                self.engine.spark,
                 [(url, mode, action, time.time_ns())],
                 "url STRING, mode STRING, action STRING, ts BIGINT",
             ),

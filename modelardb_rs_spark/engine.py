@@ -37,9 +37,9 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from modelardb_rs_spark.catalog import Catalog
+from modelardb_rs_spark.frames import arrow_frame, rows_frame
 from modelardb_rs_spark.operators import aggregates as agg_ops
 from modelardb_rs_spark.operators import compress as compress_ops
 from modelardb_rs_spark.operators import grid as grid_ops
@@ -465,9 +465,8 @@ class Engine:
                 # accept new group rows without double-representing the
                 # late points (once in the rollup, once in the raw that
                 # must survive for the already-rolled groups)
-                have_buckets = self.spark.createDataFrame(
-                    [(b,) for b in sorted(prior_buckets)] or [(-(2**62),)],
-                    "b BIGINT",
+                have_buckets = rows_frame(
+                    self.spark, [(b,) for b in sorted(prior_buckets)], "b BIGINT"
                 ).select(F.timestamp_micros(F.col("b")).alias("bucket"))
                 new_rows = late_res.join(have_buckets, ["bucket"], "left_anti")
                 late_rolled = new_rows.count()
@@ -606,7 +605,7 @@ class Engine:
         kind = self.catalog.kind(name)
         if kind == TableKind.NORMAL:
             if isinstance(df, pa.Table):
-                df = self._arrow_frame(df)
+                df = arrow_frame(self.spark, df)
             schema = self.catalog.normal_table_schema(name)
             self._check_columns(name, df, [f.name for f in schema.fields])
             cast = df.select(
@@ -627,7 +626,7 @@ class Engine:
             segments = compress_ops.compress_arrow(df, meta, self._session_zone())
             if segments is not None:
                 return self.folder.write_segments(meta, segments, txn=txn)
-            df = self._arrow_frame(df)
+            df = arrow_frame(self.spark, df)
         cast = df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in insert_schema.fields]
         )
@@ -645,30 +644,6 @@ class Engine:
         finally:
             if cache_input:
                 cast.unpersist()
-
-    def _arrow_frame(self, table: pa.Table, schema: T.StructType | None = None) -> DataFrame:
-        """A driver-built Arrow ``table`` as a DataFrame — the one route
-        for frames the engine builds in memory (uploads, commit-log
-        answers, SHOW/DESCRIBE/EXPLAIN rows). Built from Arrow, the
-        frame is a local relation that Spark collects in one light job;
-        ``createDataFrame`` over a list of tuples pays a Python worker.
-        ``schema`` defaults to the table's own, with tz-naive timestamps
-        typed TimestampNTZ as ``spark.read.parquet`` reads them; a
-        write's cast then takes them as wall-clock times in the session
-        zone, resolving a DST gap or overlap as Spark does (the default
-        ``createDataFrame`` localizes them in pyarrow, which raises on
-        either)."""
-        if schema is None:
-            schema = from_arrow_schema(table.schema, prefer_timestamp_ntz=True)
-        return self.spark.createDataFrame(table, schema=schema)
-
-    def _rows_frame(self, rows: list[tuple], ddl: str) -> DataFrame:
-        """String rows under a DDL schema, through ``_arrow_frame``."""
-        schema = T.StructType.fromDDL(ddl)
-        columns = [list(c) for c in zip(*rows)] or [[] for _ in schema.fields]
-        return self._arrow_frame(
-            pa.Table.from_arrays(columns, schema=to_arrow_schema(schema)), schema
-        )
 
     def _session_is_utc(self) -> bool:
         return self.spark.conf.get("spark.sql.session.timeZone", "UTC") in (
@@ -1022,7 +997,7 @@ class Engine:
             return None
         if stmt.kind == "show_tables":
             rows = [(n, k) for n, k in sorted(self.tables().items())]
-            return self._rows_frame(rows, "table_name string, table_type string")
+            return rows_frame(self.spark, rows, "table_name string, table_type string")
         if stmt.kind == "describe":
             name = stmt.tables[0]
             kind = self.catalog.kind(name)
@@ -1041,10 +1016,10 @@ class Engine:
                     for g in meta.generated_columns
                 ]
                 rows += [(t, "string", "tag") for t in meta.tag_columns]
-            return self._rows_frame(rows, "column_name string, data_type string, role string")
+            return rows_frame(self.spark, rows, "column_name string, data_type string, role string")
         if stmt.kind == "explain_analyze":
             report = self.explain_path(stmt.select_sql, analyze=True)
-            return self._rows_frame([(line,) for line in report.splitlines()], "plan string")
+            return rows_frame(self.spark, [(line,) for line in report.splitlines()], "plan string")
         if stmt.kind == "delete":
             table = stmt.tables[0]
             if self.catalog.kind(table) != TableKind.TIME_SERIES:
@@ -1190,7 +1165,13 @@ class Engine:
         plan = df._jdf.queryExecution().executedPlan().toString()
         if "FileScan" not in plan:
             return f"segment-stats pushdown ({kind}, commit-log answer: no segment file read)"
-        partial = "MapInPandas" in plan or "ArrowEvalPython" in plan
+        # class (c) decodes in Python, or on the JVM as grid's
+        # ``explode(sequence(0, value_count - 1))`` point generator
+        partial = (
+            "MapInPandas" in plan
+            or "ArrowEvalPython" in plan
+            or "Generate explode(sequence(0, " in plan
+        )
         return (
             f"segment-stats pushdown ({kind}"
             + (", partial: boundary/slow segments decode)" if partial else ", metadata-only)")
@@ -1432,7 +1413,7 @@ class Engine:
         answer = agg_ops.log_aggregates(
             series, meta.tag_columns, aggs, group_by, tag_filters
         )
-        return None if answer is None else self._arrow_frame(*answer)
+        return None if answer is None else arrow_frame(self.spark, *answer)
 
     # ------------------------------------------------------------- include
 

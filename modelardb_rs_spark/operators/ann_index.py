@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators.similarity import (
     bucket_centroids,
     cosine,
@@ -410,17 +411,17 @@ def _write_index(
             engine.create_table(bt, _BOOKS_SCHEMA)
         engine.write(vt, rows, partition_by=["ivf_bucket"], commit_meta=meta)
         engine.write(
-            ct, engine.spark.createDataFrame(cent_rows, _CENTROIDS_SCHEMA), txn=txn
+            ct, rows_frame(engine.spark, cent_rows, _CENTROIDS_SCHEMA), txn=txn
         )
         if book_rows is not None:
-            engine.write(bt, engine.spark.createDataFrame(book_rows, _BOOKS_SCHEMA))
+            engine.write(bt, rows_frame(engine.spark, book_rows, _BOOKS_SCHEMA))
     else:
         engine.overwrite(
             vt, rows, partition_by=["ivf_bucket"], expected_paths=expected_paths,
             commit_meta=meta,
         )
         engine.overwrite(
-            ct, engine.spark.createDataFrame(cent_rows, _CENTROIDS_SCHEMA), txn=txn
+            ct, rows_frame(engine.spark, cent_rows, _CENTROIDS_SCHEMA), txn=txn
         )
     return {
         "n_vectors": sum(r[2] for r in cent_rows),
@@ -736,7 +737,8 @@ def _residuals(spark, assigned: DataFrame, cent_pairs, vec_col: str) -> DataFram
     ``__c__`` and the float32 residual ``__resid__`` = vector - centroid:
     one broadcast join against the (bucket, centroid) pairs — index
     metadata — and a JVM ``zip_with`` subtraction."""
-    cent_df = spark.createDataFrame(
+    cent_df = rows_frame(
+        spark,
         [(int(b), [float(x) for x in c]) for b, c in cent_pairs],
         "ivf_bucket INT, __c__ ARRAY<FLOAT>",
     )
@@ -823,8 +825,8 @@ def ivfpq_topk(
     }
     qrows = collect_query_rows(queries, id_col, vec_col, max_queries)
     probes = []
-    for r in qrows:
-        qv = np.asarray(list(r[1]), dtype=np.float64)
+    for v in qrows.column(1).to_pylist():
+        qv = np.asarray(v, dtype=np.float64)
         # the bucket scalar q.c_b and the probe order use the original
         # space; adc_topk rotates the query for the residual LUT of an
         # OPQ index
@@ -874,7 +876,8 @@ def ivf_index_topk(
     """
     vt = _vectors_table(index_name)
     snap = engine.folder.log(vt).snapshot()
-    cents = engine.spark.createDataFrame(
+    cents = rows_frame(
+        engine.spark,
         [(b, c) for b, c, _ in _centroid_rows(engine, index_name, snap=snap)],
         "ivf_bucket INT, centroid ARRAY<FLOAT>",
     )
@@ -903,7 +906,7 @@ def ivf_index_topk(
         .select("query_id", "__qv__", F.col("ivf_bucket").alias("__bucket__"))
     )
     probe_rows = probe_plan.collect()
-    probes = engine.spark.createDataFrame(probe_rows, probe_plan.schema)
+    probes = rows_frame(engine.spark, probe_rows, probe_plan.schema)
     probed_buckets = sorted({r["__bucket__"] for r in probe_rows})
     # pinned to the SAME snapshot the centroids came from: without the
     # pin a rebuild committing between the two reads would pair old
@@ -1132,8 +1135,8 @@ def semantic_dedup_check(
             "ivf_bucket",
         )
     if chunked:
-        nchunks_df = engine.spark.createDataFrame(
-            sorted(nchunks.items()), "ivf_bucket INT, __nc__ INT"
+        nchunks_df = rows_frame(
+            engine.spark, sorted(nchunks.items()), "ivf_bucket INT, __nc__ INT"
         )
         corpus = (
             corpus.join(F.broadcast(nchunks_df), "ivf_bucket")
@@ -1763,7 +1766,8 @@ def ivf_index_maintenance(
         if mirror_stamp is None or mirror_stamp < int(vt_meta["gen"]):
             engine.overwrite(
                 ct,
-                engine.spark.createDataFrame(
+                rows_frame(
+                    engine.spark,
                     [(b, c, n) for b, c, n in vt_meta["ann_centroids"]],
                     "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT",
                 ),

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from modelardb_rs_spark.compression.fitter import fit_series
+from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.plans.stats import plan_size_bytes
 from modelardb_rs_spark.types import ErrorBound, TimeSeriesTableMetadata, segment_schema
 
@@ -330,7 +331,8 @@ def _bucket_by_volume(df: DataFrame, ts_col: str, tags: list[str], parallelism: 
             width = max((r["__hi__"] - r["__lo__"]) // n_buckets + 1, 1)
             plan_rows.append(tuple(r[t] for t in tags) + (int(r["__lo__"]), int(width)))
         plan = F.broadcast(
-            spark.createDataFrame(
+            rows_frame(
+                spark,
                 plan_rows,
                 df.select(*tags).schema.add("__lo__", "long").add("__width__", "long"),
             )

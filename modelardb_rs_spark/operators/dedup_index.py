@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators.dedup import band_keys, minhash_signatures
 
 
@@ -69,7 +70,8 @@ def build_minhash_index(
     engine.write(st, sigs)
     engine.write(
         mt,
-        engine.spark.createDataFrame(
+        rows_frame(
+            engine.spark,
             [(k, bands, n, _HASH_SCHEME, keep_mod)],
             "k int, bands int, n int, scheme string, keep_mod int",
         ),

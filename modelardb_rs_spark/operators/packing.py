@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators.text import token_count
 
 
@@ -84,9 +85,7 @@ def pack_documents(
     for pid in sorted(totals):
         offsets.append((pid, acc))
         acc += totals[pid]
-    offsets_df = spark.createDataFrame(
-        offsets or [(0, 0)], "__pid__ int, __base__ long"
-    )
+    offsets_df = rows_frame(spark, offsets, "__pid__ int, __base__ long")
 
     # pass 2: within-partition cumsum (bounded by one partition) + base
     from pyspark.sql import Window

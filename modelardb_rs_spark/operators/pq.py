@@ -415,7 +415,7 @@ def pq_topk(
 def adc_topk(
     scan: DataFrame,
     books: list[np.ndarray],
-    qrows: list,
+    qrows: pa.Table,
     k: int,
     rerank: int | None,
     id_col: str,
@@ -425,11 +425,12 @@ def adc_topk(
 ) -> DataFrame:
     """The one ADC probe kernel behind ``pq_topk`` and
     ``ann_index.ivfpq_topk``: top-k by ADC cosine over ``scan`` (id,
-    ``pq_codes``, ``pq_norm``) for the collected ``qrows``, exact
-    re-ranked when ``rerank`` is set. ``probes`` (IVF-PQ) gives each
-    query its sorted probed buckets and the bucket scalars q·c_b: the
-    query scores only rows of those buckets (``scan`` then carries
-    ``ivf_bucket``), adding q·c_b to the residual ADC.
+    ``pq_codes``, ``pq_norm``) for the collected ``qrows`` (an Arrow
+    table of query ids and vectors), exact re-ranked when ``rerank`` is
+    set. ``probes`` (IVF-PQ) gives each query its sorted probed buckets
+    and the bucket scalars q·c_b: the query scores only rows of those
+    buckets (``scan`` then carries ``ivf_bucket``), adding q·c_b to the
+    residual ADC.
 
     One ``mapInArrow`` pass over ``scan``; the per-query LUTs, query
     vectors and bucket scalars ride the closure, |Q|·(m·ks + dim +
@@ -461,8 +462,8 @@ def adc_topk(
     with_exact = rerank is not None
     m = len(books)
     ks = books[0].shape[0]
-    qids = [int(r[0]) for r in qrows]
-    qvs = [np.asarray(list(r[1]), dtype=np.float64) for r in qrows]
+    qids = [int(q) for q in qrows.column(0).to_pylist()]
+    qvs = [np.asarray(v, dtype=np.float64) for v in qrows.column(1).to_pylist()]
     qns = [float(np.sqrt((qv**2).sum())) for qv in qvs]
     luts = [
         np.asarray(query_lut(books, qv if R64 is None else qv @ R64)) for qv in qvs

@@ -56,6 +56,8 @@ import pandas as pd  # noqa: F401 — pandas_udf resolves pd.Series hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from modelardb_rs_spark.frames import rows_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """JVM-side dot product of two float array columns (f64 accumulate)."""
@@ -172,14 +174,16 @@ def collect_query_rows(
     tables and query vectors ride the scoring kernel's closure — bounded
     so a mistakenly-large query TABLE fails with a clear error instead
     of building |Q| per-query lookup tables on the driver. The bound is
-    enforced with a ``limit(n+1)`` collect — no separate count job.
-    For query sets beyond the bound, the distributed-query paths
-    (``ivf_index_topk`` / ``brute_force_topk``) are the right tool;
-    callers with a deliberate larger broadcast budget pass
-    ``max_queries`` explicitly."""
+    enforced with a ``limit(n+1)`` taken by ``toArrow`` — one job (a
+    ``collect`` of the limit scans one partition first and then the
+    rest, two jobs) and no separate count. Returns an Arrow table of
+    (id, vector) columns. For query sets beyond the bound, the
+    distributed-query paths (``ivf_index_topk`` / ``brute_force_topk``)
+    are the right tool; callers with a deliberate larger broadcast
+    budget pass ``max_queries`` explicitly."""
     bound = MAX_COLLECTED_QUERIES if max_queries is None else int(max_queries)
-    rows = queries.select(id_col, vec_col).limit(bound + 1).collect()
-    if len(rows) > bound:
+    rows = queries.select(id_col, vec_col).limit(bound + 1).toArrow()
+    if rows.num_rows > bound:
         raise ValueError(
             f"query set exceeds {bound} rows: this ANN path collects queries "
             "driver-side to broadcast per-query LUTs; use ivf_index_topk or "
@@ -1180,7 +1184,8 @@ def semantic_near_pairs(
         max_bucket_rows = max(
             1, int(auto_chunk_floor), int(auto_chunk_median_mult) * med
         )
-    nchunks_df = spark.createDataFrame(
+    nchunks_df = rows_frame(
+        spark,
         [
             (int(r["ivf_bucket"]), -(-int(r["__n__"]) // int(max_bucket_rows)))
             for r in sizes

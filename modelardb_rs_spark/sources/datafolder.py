@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators import aggregates as agg_ops
 from modelardb_rs_spark.sources.hadoopfs import HadoopFS
 from modelardb_rs_spark.sources.txlog import TransactionLog
@@ -610,7 +611,7 @@ class DataFolder:
             fast_fraction = (fast / total) if total else 1.0
         df = self._read_live(meta.name, snap, schema=schema)
         if df is None:
-            df = self.spark.createDataFrame([], schema)
+            df = rows_frame(self.spark, [], schema)
         else:
             # partition discovery types field_column as int (and adds the
             # txn staging column); restore int16, null-fill fast-path
@@ -719,7 +720,7 @@ class DataFolder:
         snap = self.log(name).snapshot(version, timestamp_ms)
         df = self._read_live(name, snap, schema=schema)
         if df is None:
-            return self.spark.createDataFrame([], schema)
+            return rows_frame(self.spark, [], schema)
         return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
 
     # -- maintenance ---------------------------------------------------------

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from modelardb_rs_spark.engine import Engine
+from modelardb_rs_spark.frames import rows_frame
 
 
 def start_ingest(
@@ -680,7 +681,7 @@ def near_dup_ingest_batch(
         )
     engine.write(
         epochs_table,
-        engine.spark.createDataFrame([(int(epoch_id),)], "epoch BIGINT"),
+        rows_frame(engine.spark, [(int(epoch_id),)], "epoch BIGINT"),
     )
     # per-epoch appends are small; compact once the threshold trips so
     # the corpus and index stay scannable over long-running streams

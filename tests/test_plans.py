@@ -631,8 +631,8 @@ def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark):
     """An IVF-PQ probe with rerank reads codes and raw vectors in ONE
     scan of the vectors table, shuffles once on query_id (both ranks
     share the exchange) and joins nothing. A warm single-query probe
-    runs at most 4 Spark jobs: the query collect's two, the rank's
-    shuffle stage and the result."""
+    runs at most 3 Spark jobs: the query set's one ``toArrow`` of a
+    limit, the rank's shuffle stage and the result."""
     from modelardb_rs_spark.operators import ann_index
     from modelardb_rs_spark.sources.testdata import load_table
 
@@ -663,7 +663,7 @@ def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 def test_asof_hot_key_window_partitions_by_time_bucket(spark):
@@ -689,3 +689,112 @@ def test_asof_hot_key_window_partitions_by_time_bucket(spark):
     plan1 = one._jdf.queryExecution().executedPlan().toString()
     win1 = [ln for ln in plan1.splitlines() if "Window" in ln and "windowspec" in ln.lower()]
     assert win1 and not any("__b__" in ln for ln in win1)
+
+
+def test_collect_query_rows_is_one_job_and_bounded(spark):
+    """The PQ probes' bounded query collect over a multi-partition frame
+    runs one job (``toArrow`` of ``limit(n+1)``; a ``collect`` of the
+    limit runs two) and still raises over the bound."""
+    from modelardb_rs_spark.operators.similarity import collect_query_rows
+
+    queries = spark.range(0, 40, numPartitions=4).selectExpr(
+        "id AS vec_id", "array(CAST(id AS FLOAT), 1.0F) AS embedding"
+    )
+    collect_query_rows(queries, max_queries=40)  # warm-up
+    group = "collect_query_rows_jobs"
+    got = _in_group(spark, group, lambda: collect_query_rows(queries, max_queries=40))
+    jobs, _ = _jobs_and_input_bytes(spark, group)
+    assert jobs == 1
+    assert got.num_rows == 40
+    assert sorted(got.column("vec_id").to_pylist()) == list(range(40))
+    with pytest.raises(ValueError, match="exceeds 39 rows"):
+        collect_query_rows(queries, max_queries=39)
+
+
+def _local_scan_only(df) -> str:
+    plan = plan_of(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    return plan
+
+
+def test_driver_built_frames_are_local_scans(engine, spark, monkeypatch):
+    """Frames the engine builds on the driver execute as a
+    ``LocalTableScan``, never a ``PythonRDD`` scan (``ExistingRDD``),
+    which would start Python tasks to serialize a few rows."""
+    from modelardb_rs_spark.frames import rows_frame
+    from modelardb_rs_spark.operators import ann_index
+    from modelardb_rs_spark.operators import compress as compress_ops
+
+    # a time-ranged segment read that prunes every file
+    engine.read_sql("CREATE TIME SERIES TABLE e(timestamp TIMESTAMP, f FIELD, tag TAG)")
+    meta = engine.catalog.time_series_metadata("e")
+    _local_scan_only(engine.folder.read_segments(meta, start_us=0, end_us=10))
+    # a normal table with no files
+    engine.create_table("n", "a INT, b STRING")
+    assert engine.table("n").collect() == []
+    _local_scan_only(engine.table("n"))
+    # the residual step's (bucket, centroid) frame
+    assigned = rows_frame(
+        spark, [(1, [1.0, 2.0], 0), (2, [3.0, 5.0], 1)],
+        "vec_id BIGINT, embedding ARRAY<FLOAT>, ivf_bucket INT",
+    )
+    resid = ann_index._residuals(spark, assigned, [(0, [0.5, 0.5]), (1, [1.0, 1.0])], "embedding")
+    _local_scan_only(resid)
+    assert sorted((r["vec_id"], list(r["__resid__"])) for r in resid.collect()) == [
+        (1, [0.5, 1.5]), (2, [2.0, 4.0])
+    ]
+    # the compressor's per-series bucket plan, on its large-input path
+    monkeypatch.setattr(compress_ops, "_SMALL_INPUT_BYTES", -1)
+    points = spark.range(0, 100, numPartitions=2).selectExpr(
+        "id * 1000000 AS ts", "CAST(id % 3 AS STRING) AS tag"
+    )
+    shaped = compress_ops._bucket_by_volume(points, "ts", ["tag"], 4)
+    assert "BroadcastExchange" in _local_scan_only(shaped)
+    assert shaped.count() == 100
+
+
+def test_only_the_arrow_helper_calls_create_data_frame():
+    """Frames built from Python rows go through ``frames.rows_frame``:
+    ``createDataFrame`` appears only in the Arrow helper and, on Arrow
+    table inputs, in the Flight server."""
+    import pathlib
+    import re
+
+    import modelardb_rs_spark
+
+    root = pathlib.Path(modelardb_rs_spark.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for m in re.finditer(r"createDataFrame\(\s*(\S*)", path.read_text()):
+            if rel == "frames.py" or (rel == "flight.py" and m[1].startswith("pa.Table")):
+                continue
+            offenders.append(f"{rel}: {m[0]}")
+    assert not offenders, offenders
+
+
+def test_jvm_decoded_range_is_labelled_partial(engine, spark):
+    """A two-sided range over a table whose segments all decode on the
+    JVM plans class (c) as ``explode(sequence(0, ...))``, no Python
+    stage: the path still names the decode."""
+    from modelardb_rs_spark.frames import rows_frame
+
+    engine.read_sql("CREATE TIME SERIES TABLE pmc(timestamp TIMESTAMP, f FIELD(0.5), tag TAG)")
+    t0 = int(TS0.timestamp())
+    engine.write("pmc", rows_frame(
+        spark,
+        [((t0 + i) * 1_000_000, float((i // 100) % 3), "a") for i in range(600)],
+        "timestamp BIGINT, f FLOAT, tag STRING",
+    ).selectExpr("timestamp_micros(timestamp) AS timestamp", "f", "tag"))
+    snap = engine.folder.log("pmc").snapshot()
+    assert all(f.get("all_fast") for f in snap.files)
+
+    def at(s):
+        return f"timestamp '{TS0 + datetime.timedelta(seconds=s):%Y-%m-%d %H:%M:%S}'"
+
+    sql = (f"SELECT count(f) AS n, sum(f) AS s FROM pmc "
+           f"WHERE timestamp >= {at(50)} AND timestamp <= {at(450)}")
+    plan = plan_of(engine.read_sql(sql))
+    assert "Generate explode(sequence(0, " in plan and "MapInPandas" not in plan, plan
+    assert "partial: boundary/slow segments decode" in engine.explain_path(sql)
+    assert engine.read_sql(sql).collect()[0]["n"] == 401
