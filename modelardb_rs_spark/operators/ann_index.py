@@ -34,9 +34,11 @@ k-means coarse quantizer (``similarity.numpy_kmeans_buckets``, the
 default) or a full-corpus MLlib fit (``similarity.kmeans_buckets``);
 ``build_ivf_index``, ``build_ivfpq_index`` and the maintenance rebuild
 share one quantize step (``_coarse_quantize``) and one write-and-commit
-tail (``_write_index``). Probing reuses
-``similarity.probe_topk`` so persisted-index results are value-identical
-to the in-line pipeline (and to its SQL oracle).
+tail (``_write_index``). Every probe (``ivf_index_topk``,
+``ivfpq_topk``) is ``_probe_index``: the driver-side centroid probe and
+the one scan of ``pq.adc_topk``, which ``similarity.ivf_topk`` shares,
+so persisted-index results are value-identical to the in-line pipeline
+(and to its SQL oracle).
 """
 
 from __future__ import annotations
@@ -47,11 +49,10 @@ from pyspark.sql import functions as F
 from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators.similarity import (
     bucket_centroids,
-    cosine,
+    collect_query_rows,
     kmeans_buckets,
     nearest_centroids,
     numpy_kmeans_buckets,
-    probe_topk,
 )
 
 _CENTROIDS_SCHEMA = "ivf_bucket INT, centroid ARRAY<FLOAT>, n_vectors BIGINT"
@@ -789,61 +790,27 @@ def ivfpq_topk(
     """Approximate cosine top-k against a persisted IVF-PQ index: ADC
     only WITHIN the probed buckets.
 
-    Driver-side (index metadata, no jobs): each query scores the
-    cached centroids, keeps ``nprobe`` buckets, and precomputes one
-    query-only m x ks lookup table plus a per-(query, bucket) scalar
-    q.c_b — valid because q.(c_b + r) = q.c_b + q.r. The union of
-    probed buckets becomes a static IN-filter on the partitioned
-    vectors table (planning-time partition pruning, plan-asserted), and
-    ``pq.adc_topk`` scores that ONE scan: the tables and scalars ride
-    its closure (|Q| x (m x ks + dim + nprobe) doubles), each query
-    scores only its own buckets' rows, and the scan reads (id, bucket,
-    codes, norm) — column pruning drops the raw vectors. ``rerank=N``
-    re-ranks an N-candidate shortlist with true cosine: the same scan
-    then also reads the raw vectors, and each task computes exact
-    cosine only for its ADC survivors (at most N + ties per query).
-    ``queries`` is evaluated once, by the query-set collect, which is
-    bounded by ``max_queries`` (default
-    ``similarity.MAX_COLLECTED_QUERIES``; over-limit raises — use
-    ``ivf_index_topk`` for large query tables)."""
-    import numpy as np
-
-    from modelardb_rs_spark.operators import pq as pq_ops
-    from modelardb_rs_spark.operators.similarity import collect_query_rows
-
+    Driver-side (index metadata, no jobs): each query keeps its
+    ``nprobe`` nearest cached centroids and precomputes one query-only
+    m x ks lookup table plus a per-(query, bucket) scalar q.c_b — valid
+    because q.(c_b + r) = q.c_b + q.r. ``pq.adc_topk`` scores the ONE
+    scan of ``_probe_index``: the tables and scalars ride its closure
+    (|Q| x (m x ks + dim + nprobe) doubles), each query scores only its
+    own buckets' rows, and the scan reads (id, bucket, codes, norm) —
+    column pruning drops the raw vectors. ``rerank=N`` re-ranks an
+    N-candidate shortlist with true cosine: the same scan then also
+    reads the raw vectors, and each task computes exact cosine only for
+    its ADC survivors (at most N + ties per query). ``queries`` is
+    evaluated once, by the query-set collect, which is bounded by
+    ``max_queries`` (default ``similarity.MAX_COLLECTED_QUERIES``;
+    over-limit raises — see ``collect_query_rows``)."""
+    # books are immutable across rebuilds and need no snapshot pin;
+    # codes are re-encoded against each rebuild's centroids, which the
+    # probe pins to the scanned snapshot
     books, rotation = _cached_pq_books(engine, index_name)
-    # one snapshot resolution serves centroids AND the vector scan:
-    # snapshot-atomic under concurrent rebuilds (codes are re-encoded
-    # against each rebuild's centroids, so a torn pair would score ADC
-    # against the wrong geometry; books are immutable across rebuilds
-    # and need no pin)
-    vt = _vectors_table(index_name)
-    vt_snap = engine.folder.log(vt).snapshot()
-    cents = {
-        b: np.asarray(list(c))
-        for b, c, _ in _centroid_rows(engine, index_name, snap=vt_snap)
-    }
-    qrows = collect_query_rows(queries, id_col, vec_col, max_queries)
-    probes = []
-    for v in qrows.column(1).to_pylist():
-        qv = np.asarray(v, dtype=np.float64)
-        # the bucket scalar q.c_b and the probe order use the original
-        # space; adc_topk rotates the query for the residual LUT of an
-        # OPQ index
-        sims = sorted(
-            (
-                (-(qv @ c) / (np.sqrt((c**2).sum()) or 1.0), b)
-                for b, c in cents.items()
-            )
-        )[:nprobe]
-        pb = sorted(b for _, b in sims)
-        probes.append((np.array(pb), np.array([float(qv @ cents[b]) for b in pb])))
-    probed = sorted({b for pb, _ in probes for b in pb.tolist()})
-    scan = engine.table(vt, version=vt_snap.version).where(
-        F.col("ivf_bucket").isin(probed)
-    )
-    return pq_ops.adc_topk(
-        scan, books, qrows, k, rerank, id_col, vec_col, rotation, probes
+    return _probe_index(
+        engine, index_name, queries, k, nprobe, id_col, vec_col,
+        books, rerank, rotation, max_queries,
     )
 
 
@@ -855,68 +822,37 @@ def ivf_index_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    drop_nan: bool = False,
 ) -> DataFrame:
-    """Top-k against a persisted index, touching only probed buckets.
-    ``drop_nan`` passes through to ``probe_topk`` (NaN-cosine corpus
-    rows removed BEFORE the rank — see its docstring for why a
-    post-rank filter is not equivalent).
-
-    The union of the queries' probe buckets (a handful of ints — index
-    metadata, not data) becomes a static IN-filter on the partitioned
-    vectors table, so planning prunes every unprobed directory; the
-    per-query restriction then rides the same probes join as the inline
-    pipeline. Value-identical to ``ivf_topk`` over the same buckets.
+    """Exact cosine top-k against a persisted index, touching only probed
+    buckets. Value-identical to ``ivf_topk`` over the same buckets: the
+    same driver-side probe and the same kernel (``_probe_index``), here
+    scoring the raw vectors. The query set is collected once and
+    bounded by ``similarity.MAX_COLLECTED_QUERIES`` (over-limit raises).
     Centroids come from the per-engine cache (_centroid_rows), so
-    probe-many workloads never re-scan any table — and the probe is
-    SNAPSHOT-ATOMIC: centroids and the vector scan derive from ONE
-    resolved snapshot (the commit-meta design), so a concurrent rebuild
-    can never serve this probe new vectors under old centroids or vice
-    versa.
-    """
+    probe-many workloads never re-scan any table."""
+    return _probe_index(engine, index_name, queries, k, nprobe, id_col, vec_col)
+
+
+def _probe_index(
+    engine, index_name, queries, k, nprobe, id_col, vec_col,
+    books=None, rerank=None, rotation=None, max_queries=None,
+) -> DataFrame:
+    """The probe of both index kinds: the collected queries pick their
+    buckets from the cached centroids and ``pq.adc_topk`` scores one
+    scan of the vectors table, whose IN-filter on the probed buckets
+    prunes every unprobed directory at planning time. SNAPSHOT-ATOMIC:
+    centroids and the vector scan derive from ONE resolved snapshot
+    (the commit-meta design), so a concurrent rebuild can never serve
+    this probe new vectors under old centroids or vice versa."""
+    from modelardb_rs_spark.operators import pq as pq_ops
+
     vt = _vectors_table(index_name)
     snap = engine.folder.log(vt).snapshot()
-    cents = rows_frame(
-        engine.spark,
-        [(b, c) for b, c, _ in _centroid_rows(engine, index_name, snap=snap)],
-        "ivf_bucket INT, centroid ARRAY<FLOAT>",
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv__"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("__ccos__").desc(), F.col("ivf_bucket")
-    )
-    # ONE probe computation, ONE job (round 14): the |Q| x n_buckets
-    # cross + per-query rank is collected once — the probed-bucket set
-    # comes from the collected rows driver-side, and the collected rows
-    # feed probe_topk's broadcast join as a LocalRelation. (Round 13
-    # localCheckpoint'ed the probe subplan and ran a SECOND job for the
-    # distinct buckets; the checkpoint blocks also lingered until the
-    # ContextCleaner noticed — §5 unpersist-when-done.) The collect is
-    # |Q| x nprobe rows INCLUDING the query vectors — exactly the rows
-    # the broadcast relation already materializes on the driver, so no
-    # new scale envelope is introduced.
-    probe_plan = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("__ccos__", cosine(F.col("__qv__"), F.col("centroid")))
-        .withColumn("__pr__", F.row_number().over(probe_w))
-        .where(F.col("__pr__") <= nprobe)
-        .select("query_id", "__qv__", F.col("ivf_bucket").alias("__bucket__"))
-    )
-    probe_rows = probe_plan.collect()
-    probes = rows_frame(engine.spark, probe_rows, probe_plan.schema)
-    probed_buckets = sorted({r["__bucket__"] for r in probe_rows})
-    # pinned to the SAME snapshot the centroids came from: without the
-    # pin a rebuild committing between the two reads would pair old
-    # centroids with new vectors (the torn read the meta design removes)
-    vectors = engine.table(vt, version=snap.version).where(
-        F.col("ivf_bucket").isin(probed_buckets)
-    )
-    return probe_topk(
-        vectors, cents, queries, k, nprobe, id_col, vec_col, "ivf_bucket",
-        drop_nan=drop_nan, probes=probes,
+    cents = [(b, c) for b, c, _ in _centroid_rows(engine, index_name, snap=snap)]
+    qrows = collect_query_rows(queries, id_col, vec_col, max_queries)
+    return pq_ops.adc_topk(
+        engine.table(vt, version=snap.version), books, qrows, k, rerank,
+        id_col, vec_col, rotation, cents, nprobe,
     )
 
 
@@ -983,8 +919,8 @@ def semantic_dedup_check(
     prune unprobed partitions at planning time. (Chosen after MEASURING
     the broadcast-probe alternative at 1M indexed vectors / 8k batch:
     710 s vs 12.5 s — every (query, candidate) pair became a JVM row
-    through ``probe_topk``'s broadcast join, the module-rule violation
-    for unbounded pair streams.)
+    through a broadcast join of the probe rows, the module-rule
+    violation for unbounded pair streams.)
 
     ``max_bucket_rows`` bounds the per-task corpus slice: a hot probed
     bucket's slice no longer serializes into one task — buckets larger

@@ -19,12 +19,14 @@ Spark-first mapping:
   per subspace is ``similarity.nearest_centroids`` (the same chunked
   kernel the training loop and the IVF assignment use),
 - **scoring** is ONE numpy pass over the codes (``adc_topk``, shared by
-  the flat and the IVF-PQ probe): the per-query lookup tables ride the
-  ``mapInArrow`` closure, each (query, vector) pair costs ``m`` table
-  lookups, each task forwards only its shortlist survivors, and the
-  same scan feeds the optional exact re-rank — without ``rerank`` it
-  reads ONLY the code columns (column pruning drops the raw embeddings
-  entirely). Two JVM windows finish the ranks.
+  the flat PQ, the IVF-PQ and, without codes, the exact flat-IVF
+  probes; ``probe_buckets`` picks the IVF buckets on the driver): the
+  per-query lookup tables ride the ``mapInArrow`` closure, each
+  (query, vector) pair costs ``m`` table lookups, each task forwards
+  only its shortlist survivors, and the same scan feeds the optional
+  exact re-rank — without ``rerank`` it reads ONLY the code columns
+  (column pruning drops the raw embeddings entirely). JVM windows
+  finish the ranks.
 
 Recall < 1 by construction; `sim_pq_topk` validates recall floors
 against ``brute_force_topk`` with a fixed seed, mirroring the IVF/LSH
@@ -412,38 +414,119 @@ def pq_topk(
     return adc_topk(encoded, books, qrows, k, rerank, id_col, vec_col, rotate)
 
 
+# Doubles per temporary of the driver-side centroid probe: queries are
+# ranked in chunks of at most this many (query, bucket) scores.
+_PROBE_CHUNK = 1 << 20
+
+
+def probe_buckets(
+    Q: np.ndarray, cents: list, nprobe: int
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Each query's ``nprobe`` nearest buckets, on the driver: for every
+    row of ``Q`` the probed bucket ids (ascending) and their q·c_b.
+    ``cents`` is (bucket, centroid) pairs; a NULL bucket is never probed.
+
+    The ranking is the Column ``similarity.cosine`` under ``row_number()
+    OVER (PARTITION BY query ORDER BY cos DESC, bucket)``, reproduced
+    exactly: float64 products summed left to right (``_seq_dot``), a
+    zero denominator is NULL and ranks last (so is a centroid holding a
+    NULL or of another length), NaN ranks first, -0.0 ties 0.0, and
+    ties go to the lower bucket id. Temporaries are at most
+    ``_PROBE_CHUNK`` doubles, whatever |Q| is."""
+    cents = [(b, c) for b, c in cents if b is not None]
+    if not cents:
+        return [(np.empty(0, np.int64), np.empty(0))] * len(Q)
+    bids = np.asarray([b for b, _ in cents])
+    dim = Q.shape[1]
+    ok = np.asarray(
+        [c is not None and len(c) == dim and None not in c for _, c in cents], dtype=bool
+    )
+    C = np.zeros((len(cents), dim))
+    if ok.any():
+        C[ok] = [c for (_, c), good in zip(cents, ok) if good]
+    cn = np.sqrt(_seq_dot(C, C))
+    out = []
+    step = max(1, _PROBE_CHUNK // len(cents))
+    for lo in range(0, len(Q), step):
+        q = Q[lo : lo + step]
+        dots = np.zeros((len(q), len(C)))
+        for d in range(dim):
+            dots += q[:, d, None] * C[None, :, d]
+        den = np.sqrt(_seq_dot(q, q))[:, None] * cn[None, :]
+        null = (den == 0) | ~ok[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dots / den
+        nan = np.isnan(cos) & ~null
+        rank_class = np.where(null, 2, np.where(nan, 0, 1))
+        neg = np.where(rank_class == 1, -cos, 0.0)
+        order = np.lexsort(
+            (np.broadcast_to(bids, cos.shape), neg, rank_class), axis=-1
+        )[:, :nprobe]
+        for row, pick in enumerate(order):
+            pick = pick[np.argsort(bids[pick], kind="stable")]
+            out.append((bids[pick], dots[row, pick]))
+    return out
+
+
+def _query_set(qrows, dim: int):
+    """The collected query rows that can score: the Arrow id array (its
+    type is the output's) and the (n, dim) float64 vectors. A row with
+    a NULL id, a NULL vector, a NULL element or a length other than
+    ``dim`` is left out, so it yields no rows, as in
+    ``similarity.brute_force_topk``."""
+    import pyarrow as pa
+
+    ids = qrows.column(0).combine_chunks()
+    vecs = qrows.column(1).to_pylist()
+    keep = [
+        i
+        for i, (q, v) in enumerate(zip(ids.to_pylist(), vecs))
+        if q is not None and v is not None and len(v) == dim and None not in v
+    ]
+    Q = np.asarray([vecs[i] for i in keep], dtype=np.float64).reshape(len(keep), dim)
+    return ids.take(pa.array(keep, type=pa.int64())), Q
+
+
 def adc_topk(
     scan: DataFrame,
-    books: list[np.ndarray],
+    books: list[np.ndarray] | None,
     qrows: pa.Table,
     k: int,
     rerank: int | None,
     id_col: str,
     vec_col: str,
     rotate: np.ndarray | None = None,
-    probes: list[tuple[np.ndarray, np.ndarray]] | None = None,
+    cents: list | None = None,
+    nprobe: int | None = None,
 ) -> DataFrame:
-    """The one ADC probe kernel behind ``pq_topk`` and
-    ``ann_index.ivfpq_topk``: top-k by ADC cosine over ``scan`` (id,
-    ``pq_codes``, ``pq_norm``) for the collected ``qrows`` (an Arrow
-    table of query ids and vectors), exact re-ranked when ``rerank`` is
-    set. ``probes`` (IVF-PQ) gives each query its sorted probed buckets
-    and the bucket scalars q·c_b: the query scores only rows of those
-    buckets (``scan`` then carries ``ivf_bucket``), adding q·c_b to the
-    residual ADC.
+    """The one probe kernel behind ``pq_topk``, ``ann_index.ivfpq_topk``,
+    ``ann_index.ivf_index_topk`` and ``similarity.ivf_topk``: top-k of
+    ``scan`` for the collected ``qrows`` (an Arrow table of query ids
+    and vectors, see ``collect_query_rows``).
+
+    - With ``books`` (PQ) a row scores its ADC cosine from (id,
+      ``pq_codes``, ``pq_norm``), exact re-ranked when ``rerank`` is
+      set.
+    - With ``books=None`` (flat IVF) a row scores its exact cosine from
+      (id, vector).
+    - With ``cents`` (IVF) each query scores only the rows of its
+      ``nprobe`` buckets (``probe_buckets``), whose union becomes an
+      IN-filter on ``scan``'s ``ivf_bucket`` column (partition pruning
+      on an index table); ADC adds the bucket scalar q·c_b to the
+      residual score.
 
     One ``mapInArrow`` pass over ``scan``; the per-query LUTs, query
     vectors and bucket scalars ride the closure, |Q|·(m·ks + dim +
-    nprobe) doubles, bounded by the ``max_queries`` collect. Per Arrow
-    batch and query the kernel computes the ADC scores, keeps the
-    task's survivors — every row whose raw ADC is at least the N-th
-    largest minus 2e-6 (N = ``rerank or k``), so a tie after the
-    6-digit rounding at the shortlist boundary is never lost; a task
-    holds at most N + ties per query — and computes exact cosine for
-    new survivors only, from the raw-vector column of the same scan
-    (read only when ``rerank`` is set). It emits narrow (query_id,
-    neighbor_id, adc, exact) rows; both ranks finish in the JVM
-    through ``similarity.ranked_topk``.
+    nprobe) doubles, bounded by the query-set collect. Per Arrow batch
+    and query the kernel scores the query's rows and keeps the task's
+    survivors — every row whose raw score is at least the N-th largest
+    minus 2e-6 (N = ``rerank or k``), so a tie after the 6-digit
+    rounding at the shortlist boundary is never lost; a task holds at
+    most N + ties per query — and, with ``rerank``, computes exact
+    cosine for new survivors only, from the raw-vector column of the
+    same scan. It emits narrow (query_id, neighbor_id, score[, exact])
+    rows; the ranks finish in the JVM through
+    ``similarity.ranked_topk``. ``query_id`` keeps the input id type.
 
     Values match the Column algebra of the SQL mirrors bit for bit: ADC
     sums ``((0.0 + lut[s0]) + lut[s1]) + …`` (plus q·c_b), divided by
@@ -454,42 +537,53 @@ def adc_topk(
     import pyarrow as pa
 
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
 
     from modelardb_rs_spark.operators.similarity import ranked_topk
 
     R64 = None if rotate is None else np.asarray(rotate, dtype=np.float64)
     n_keep = rerank or k
     with_exact = rerank is not None
-    m = len(books)
-    ks = books[0].shape[0]
-    qids = [int(q) for q in qrows.column(0).to_pylist()]
-    qvs = [np.asarray(v, dtype=np.float64) for v in qrows.column(1).to_pylist()]
-    qns = [float(np.sqrt((qv**2).sum())) for qv in qvs]
-    luts = [
-        np.asarray(query_lut(books, qv if R64 is None else qv @ R64)) for qv in qvs
-    ]
+    adc = books is not None
+    if adc:
+        m, ks = len(books), books[0].shape[0]
+        dim = sum(b.shape[1] for b in books)
+    else:
+        dim = len(cents[0][1]) if cents else 0
+    qids, Q = _query_set(qrows, dim)
+    qid_num = qids.to_numpy(zero_copy_only=False).astype(np.int64)
+    if adc:
+        qns = [float(np.sqrt((qv**2).sum())) for qv in Q]
+        luts = [
+            np.asarray(query_lut(books, qv if R64 is None else qv @ R64)) for qv in Q
+        ]
     exact_q = (
-        [(qv, float(np.sqrt(_seq_dot(qv[None, :], qv)[0]))) for qv in qvs]
-        if with_exact
+        [(qv, float(np.sqrt(_seq_dot(qv[None, :], qv)[0]))) for qv in Q]
+        if not adc or with_exact
         else None
     )
-    cols = [id_col, "pq_codes", "pq_norm"]
+    probes = None if cents is None else probe_buckets(Q, cents, nprobe)
+    cols = [id_col] + (["pq_codes", "pq_norm"] if adc else [])
     if probes is not None:
+        scan = scan.where(
+            F.col("ivf_bucket").isin(sorted({b for pb, _ in probes for b in pb.tolist()}))
+        )
         cols.append("ivf_bucket")
-    if with_exact:
+    if not adc or with_exact:
         cols.append(vec_col)
+    at = {c: i for i, c in enumerate(cols)}
     src = scan.select(*cols)
     fields = [
-        T.StructField("query_id", T.LongType()),
+        T.StructField("query_id", from_arrow_type(qids.type)),
         T.StructField("neighbor_id", src.schema[id_col].dataType),
-        T.StructField("adc", T.DoubleType()),
+        T.StructField("score", T.DoubleType()),
     ]
     if with_exact:
         fields.append(T.StructField("exact", T.DoubleType()))
 
     def fn(batches):
         empty = (np.empty(0, np.int64), np.empty(0), np.empty(0))
-        held = [empty] * len(qids)
+        held = [empty] * len(qid_num)
         id_type = None
         for batch in batches:
             n = batch.num_rows
@@ -499,44 +593,54 @@ def adc_topk(
             id_type = id_arr.type
             live = ~id_arr.is_null().to_numpy(zero_copy_only=False)
             ids = id_arr.fill_null(0).to_numpy().astype(np.int64, copy=False)
-            codes = batch.column(1).flatten().to_numpy().reshape(n, m)
-            norms = batch.column(2).to_numpy(zero_copy_only=False)
+            if adc:
+                codes = batch.column(1).flatten().to_numpy().reshape(n, m)
+                norms = batch.column(2).to_numpy(zero_copy_only=False)
             if probes is not None:
-                buckets = batch.column(3).to_numpy(zero_copy_only=False)
-            for j, qid in enumerate(qids):
+                buckets = batch.column(at["ivf_bucket"]).to_numpy(zero_copy_only=False)
+            vm = None
+            for j, qid in enumerate(qid_num):
                 sel = live & (ids != qid)
-                bucket_dot = None
                 if probes is not None:
                     pb, pdot = probes[j]
                     sel &= np.isin(buckets, pb)
-                    bucket_dot = pdot[np.searchsorted(pb, buckets[sel])]
                 rows = np.flatnonzero(sel)
                 if not len(rows):
                     continue
-                adc = _adc_cosine(codes[rows], norms[rows], luts[j], ks, qns[j], bucket_dot)
-                good = ~np.isnan(adc)
-                rows, adc = rows[good], adc[good]
-                h_id, h_adc, h_ex = held[j]
-                t = _keep_threshold(np.concatenate([h_adc, adc]), n_keep)
-                keep = h_adc >= t
-                h_id, h_adc, h_ex = h_id[keep], h_adc[keep], h_ex[keep]
-                keep = adc >= t
-                rows, adc = rows[keep], adc[keep]
+                if vm is None and vec_col in at:
+                    vm = _vector_matrix(batch.column(at[vec_col]), dim)
+                if not adc:
+                    score = _exact_cosine(vm, rows, *exact_q[j])
+                else:
+                    bucket_dot = (
+                        None if probes is None else pdot[np.searchsorted(pb, buckets[rows])]
+                    )
+                    score = _adc_cosine(
+                        codes[rows], norms[rows], luts[j], ks, qns[j], bucket_dot
+                    )
+                good = ~np.isnan(score)
+                rows, score = rows[good], score[good]
+                h_id, h_score, h_ex = held[j]
+                t = _keep_threshold(np.concatenate([h_score, score]), n_keep)
+                keep = h_score >= t
+                h_id, h_score, h_ex = h_id[keep], h_score[keep], h_ex[keep]
+                keep = score >= t
+                rows, score = rows[keep], score[keep]
                 ex = (
-                    _exact_cosine(batch.column(len(cols) - 1), rows, *exact_q[j])
+                    _exact_cosine(vm, rows, *exact_q[j])
                     if with_exact
                     else np.empty(len(rows))
                 )
                 held[j] = (
                     np.concatenate([h_id, ids[rows]]),
-                    np.concatenate([h_adc, adc]),
+                    np.concatenate([h_score, score]),
                     np.concatenate([h_ex, ex]),
                 )
         if id_type is None:
             return
         sizes = [len(h[0]) for h in held]
         out = [
-            pa.array(np.repeat(np.asarray(qids, dtype=np.int64), sizes)),
+            qids.take(pa.array(np.repeat(np.arange(len(held)), sizes))),
             pa.array(np.concatenate([h[0] for h in held])).cast(id_type),
             pa.array(np.concatenate([h[1] for h in held])),
         ]
@@ -545,7 +649,7 @@ def adc_topk(
         yield pa.RecordBatch.from_arrays(out, names=[f.name for f in fields])
 
     scored = src.mapInArrow(fn, T.StructType(fields)).withColumn(
-        "cos", F.round("adc", 6)
+        "cos", F.round("score", 6)
     )
     if not with_exact:
         return ranked_topk(scored, k)
@@ -582,7 +686,7 @@ def _adc_cosine(codes, norms, lut, ks: int, qn: float, bucket_dot=None) -> np.nd
 
 
 def _keep_threshold(adc: np.ndarray, n_keep: int) -> float:
-    """Lowest raw ADC that can still reach the top ``n_keep`` once
+    """Lowest raw score that can still reach the top ``n_keep`` once
     scores are rounded to 6 digits: the n_keep-th largest minus 2e-6.
     Rounding moves a value by at most 5e-7, so a row that rounds equal
     to the n_keep-th lies within 1e-6 of it and is kept; every dropped
@@ -603,24 +707,30 @@ def _seq_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
     return acc
 
 
-def _exact_cosine(vec_arr, rows: np.ndarray, qv: np.ndarray, qn: float) -> np.ndarray:
-    """Exact cosine of the raw vectors at ``rows`` of an Arrow list
-    column against query ``qv`` (exact norm ``qn``): NaN for a NULL,
-    wrong-length or zero-norm vector, which ``ranked_topk`` drops like
-    the NULL of ``try_divide``."""
+def _vector_matrix(vec_arr, dim: int) -> tuple[np.ndarray, np.ndarray]:
+    """The (n, dim) float64 rows of an Arrow list column and their norms
+    (``_seq_dot`` order): NaN norm for a NULL or wrong-length vector; a
+    NULL element reads as NaN."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    sub = vec_arr.take(pa.array(rows))
-    dim = len(qv)
-    ok = pc.list_value_length(sub).fill_null(-1).to_numpy() == dim
-    V = np.zeros((len(rows), dim))
+    ok = pc.list_value_length(vec_arr).fill_null(-1).to_numpy() == dim
+    V = np.zeros((len(vec_arr), dim))
     if ok.any():
         V[ok] = (
-            sub.filter(pa.array(ok)).flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
+            vec_arr.filter(pa.array(ok)).flatten().to_numpy(zero_copy_only=False).reshape(-1, dim)
         )
-    den = qn * np.sqrt(_seq_dot(V, V))
-    out = np.full(len(rows), np.nan)
-    good = ok & (den != 0)
-    out[good] = _seq_dot(V[good], qv) / den[good]
-    return out
+    vn = np.sqrt(_seq_dot(V, V))
+    vn[~ok] = np.nan
+    return V, vn
+
+
+def _exact_cosine(vm, rows: np.ndarray, qv: np.ndarray, qn: float) -> np.ndarray:
+    """Exact cosine of the ``_vector_matrix`` rows at ``rows`` against
+    query ``qv`` (exact norm ``qn``): NaN for a NULL, wrong-length or
+    zero-norm vector, which ``ranked_topk`` drops like the NULL of
+    ``try_divide``."""
+    V, vn = vm
+    den = qn * vn[rows]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(den != 0, _seq_dot(V[rows], qv) / den, np.nan)

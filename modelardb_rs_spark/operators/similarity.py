@@ -11,9 +11,8 @@
   quantization using per-label centroids (the embeddings table carries a
   cluster ``label``; a production pipeline would learn centroids with
   Spark MLlib KMeans). Queries probe only the ``nprobe`` nearest
-  centroids' buckets, cutting the scored pairs by |buckets|/nprobe while
-  the bucket join stays a keyed equi-join (shuffle on label, skew
-  handled by AQE).
+  centroids' buckets, cutting the scored pairs by |buckets|/nprobe; the
+  probed rows are scored in one scan of the corpus.
 - **Threshold pair counting** — cosine >= t pair enumeration for dedup
   pipelines (embedding-cosine near-dup).
 
@@ -40,14 +39,15 @@ operational rule, measured):
   ``nearest_centroids`` — on executors inside
   ``_numpy_centroid_assign``'s mapInPandas batch scan (centroid matrix
   in the closure), on the driver inside the k-means/PQ fits.
-- **Metadata-sized scoring** (|Q| x n_buckets centroid probes): the
-  Column ``cosine``/``dot`` algebra stays — the pair count is bounded
-  by index metadata, the interpreted cost is invisible, and the
-  expression doubles as the SQL-oracle mirror.
-- **PQ probes** (ADC scoring and the exact re-rank of its shortlist):
-  the numpy kernel ``pq.adc_topk``, one ``mapInArrow`` pass over the
-  scanned codes and vectors, summing in this module's ``dot`` order so
-  values match the Column algebra bit for bit.
+- **Metadata-sized scoring** (|Q| x n_buckets centroid probes):
+  ``pq.probe_buckets`` on the driver, over the collected query set —
+  it sums in this module's ``dot`` order, so it ranks buckets exactly
+  as the Column ``cosine`` (the SQL-oracle mirror) would.
+- **IVF and PQ probes** (exact scoring within probed buckets, ADC
+  scoring and the exact re-rank of its shortlist): the numpy kernel
+  ``pq.adc_topk``, one ``mapInArrow`` pass over the scanned codes and
+  vectors, summing in this module's ``dot`` order so values match the
+  Column algebra bit for bit.
 """
 
 from __future__ import annotations
@@ -169,26 +169,26 @@ def collect_query_rows(
     vec_col: str = "embedding",
     max_queries: int | None = None,
 ):
-    """Driver-side query-set collect for the PQ probe paths
-    (``pq.pq_topk``, ``ann_index.ivfpq_topk``), whose per-query lookup
-    tables and query vectors ride the scoring kernel's closure — bounded
-    so a mistakenly-large query TABLE fails with a clear error instead
-    of building |Q| per-query lookup tables on the driver. The bound is
-    enforced with a ``limit(n+1)`` taken by ``toArrow`` — one job (a
-    ``collect`` of the limit scans one partition first and then the
-    rest, two jobs) and no separate count. Returns an Arrow table of
-    (id, vector) columns. For query sets beyond the bound, the
-    distributed-query paths (``ivf_index_topk`` / ``brute_force_topk``)
-    are the right tool; callers with a deliberate larger broadcast
-    budget pass ``max_queries`` explicitly."""
+    """Driver-side query-set collect for every probe of ``pq.adc_topk``
+    (``ivf_topk``, ``pq.pq_topk``, ``ann_index.ivf_index_topk``,
+    ``ann_index.ivfpq_topk``), whose query vectors, centroid probes and
+    lookup tables ride the scoring kernel's closure — bounded so a
+    mistakenly-large query TABLE fails with a clear error instead of
+    building |Q| per-query probes on the driver. The bound is enforced
+    with a ``limit(n+1)`` taken by ``toArrow`` — one job (a ``collect``
+    of the limit scans one partition first and then the rest, two jobs)
+    and no separate count. Returns an Arrow table of (id, vector)
+    columns. Larger query sets go in batches of at most the bound, or
+    through ``brute_force_topk``; the PQ paths take ``max_queries`` for
+    a deliberate larger broadcast budget."""
     bound = MAX_COLLECTED_QUERIES if max_queries is None else int(max_queries)
     rows = queries.select(id_col, vec_col).limit(bound + 1).toArrow()
     if rows.num_rows > bound:
         raise ValueError(
             f"query set exceeds {bound} rows: this ANN path collects queries "
-            "driver-side to broadcast per-query LUTs; use ivf_index_topk or "
-            "brute_force_topk for large query tables, or raise max_queries "
-            "explicitly"
+            "driver-side to ship per-query probes; split the query table into "
+            "batches, use brute_force_topk, or raise max_queries where the path "
+            "takes it"
         )
     return rows
 
@@ -396,17 +396,29 @@ def ivf_topk(
     """Approximate top-k via inverted-file probing.
 
     1. centroid per bucket = element-wise mean of its vectors
-       (one groupBy; with learned KMeans centroids this input is tiny),
-    2. each query scores all centroids (broadcast — there are few) and
-       keeps its ``nprobe`` nearest buckets,
-    3. the (query, bucket) pairs equi-join the corpus on the bucket key
-       and exact cosine ranks within the probed subset.
+       (``bucket_centroids``, one groupBy, collected to the driver),
+    2. each query of the collected query set (bounded by
+       ``collect_query_rows``) keeps its ``nprobe`` nearest buckets
+       (``pq.probe_buckets``),
+    3. one scan of the corpus ranks exact cosine within each query's
+       probed buckets (``pq.adc_topk``).
 
     Recall < 1 by construction; callers validate against
     ``brute_force_topk`` (see tests).
     """
-    centroids = bucket_centroids(corpus, vec_col, bucket_col)
-    return probe_topk(corpus, centroids, queries, k, nprobe, id_col, vec_col, bucket_col)
+    from modelardb_rs_spark.operators.pq import adc_topk
+
+    qrows = collect_query_rows(queries, id_col, vec_col)
+    cents = [
+        tuple(r)
+        for r in bucket_centroids(corpus, vec_col, bucket_col)
+        .select(bucket_col, "centroid")
+        .collect()
+    ]
+    scan = corpus.select(
+        F.col(id_col), F.col(bucket_col).alias("ivf_bucket"), F.col(vec_col)
+    )
+    return adc_topk(scan, None, qrows, k, None, id_col, vec_col, cents=cents, nprobe=nprobe)
 
 
 def bucket_centroids(corpus: DataFrame, vec_col: str = "embedding", bucket_col: str = "label") -> DataFrame:
@@ -435,81 +447,6 @@ def bucket_centroids(corpus: DataFrame, vec_col: str = "embedding", bucket_col: 
             "n_vectors",
         )
     )
-
-
-def probe_topk(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "label",
-    drop_nan: bool = False,
-    probes: DataFrame | None = None,
-) -> DataFrame:
-    """The probe half of IVF: queries score the (small, broadcast)
-    centroid set, keep their ``nprobe`` nearest buckets, and exact-rank
-    within the probed subset only. ``centroids`` must be
-    (bucket_col, centroid) as produced by ``bucket_centroids`` or read
-    from a persisted index.
-
-    ``probes`` accepts a PRE-COMPUTED (query_id, __qv__, __bucket__)
-    probe-assignment frame (``ivf_index_topk`` materializes one so its
-    probed-bucket collect and this scan share a single probe
-    computation instead of re-running the |Q| x n_buckets cross + rank
-    per consumer); None keeps the self-contained construction.
-
-    ``drop_nan=True`` removes NaN-cosine candidates (zero-norm or
-    malformed corpus vectors) BEFORE the rank: Spark orders NaN above
-    every double, so with the default a single degenerate corpus vector
-    consumes a top-k slot in its bucket and a post-rank isnan filter
-    would MASK the real k-th neighbor — callers whose downstream logic
-    filters NaN (the dedup admission gate) must drop pre-rank instead.
-    Default off: the historical NaN-ranked-first semantics are pinned
-    by the DuckDB oracles (which order NaN the same way).
-
-    The bucket-scan cosine — evaluated once per (candidate, probed
-    query), the corpus-sized term — is the vectorized
-    ``cosine_batch_udf`` (SCALE.md "Round-9": per-pair interpreted
-    Column cosines are the ~100us trap). The |Q| x n_buckets centroid
-    probe stays Column algebra: its UNROUNDED ranking decides which
-    buckets are scanned, and the sequential-sum Column form is what
-    the exact DuckDB oracles reproduce term-for-term."""
-    if probes is None:
-        centroids = centroids.select(
-            F.col(bucket_col).alias("__bucket__"),
-            F.col("centroid").alias("__centroid__"),
-        )
-        q = queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).alias("__qv__"),
-        )
-        probe_w = Window.partitionBy("query_id").orderBy(
-            F.col("__ccos__").desc(), F.col("__bucket__")
-        )
-        probes = (
-            q.crossJoin(F.broadcast(centroids))
-            .withColumn("__ccos__", cosine(F.col("__qv__"), F.col("__centroid__")))
-            .withColumn("__pr__", F.row_number().over(probe_w))
-            .where(F.col("__pr__") <= nprobe)
-            .select("query_id", "__qv__", F.col("__bucket__"))
-        )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv__"),
-        F.col(bucket_col).alias("__bucket__"),
-    )
-    cos_udf = cosine_batch_udf()
-    scored = (
-        c.join(F.broadcast(probes), "__bucket__")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", F.round(cos_udf(F.col("__qv__"), F.col("__cv__")), 6))
-    )
-    if drop_nan:
-        scored = scored.where(~F.isnan(F.col("cos")))
-    return ranked_topk(scored, k)
 
 
 def kmeans_buckets(

@@ -81,8 +81,11 @@ def main() -> None:
     gate_s = round(time.time() - t0, 2)
 
     total_files = len(eng.folder.log("gp_idx__vectors").snapshot().files)
+    # the probe collects its query set, which is bounded: count the files
+    # a slice of at most MAX_COLLECTED_QUERIES rows would read
+    probe_n = min(batch_n, sim.MAX_COLLECTED_QUERIES)
     probed_files = len(
-        ann.ivf_index_topk(eng, "gp_idx", batch, k=1, nprobe=2).inputFiles()
+        ann.ivf_index_topk(eng, "gp_idx", batch.limit(probe_n), k=1, nprobe=2).inputFiles()
     )
 
     # exact-scan baseline on a TINY sub-batch, scaled: the full
@@ -102,7 +105,8 @@ def main() -> None:
         "corpus_vectors": stats["n_vectors"], "n_buckets": stats["n_buckets"],
         "build_s": build_s, "batch": batch_n, "flagged": flagged,
         "gate_s": gate_s, "gate_ms_per_vector": round(1000 * gate_s / batch_n, 3),
-        "probed_files": probed_files, "total_files": total_files,
+        "probed_files": probed_files, "probed_files_queries": probe_n,
+        "total_files": total_files,
         "exact_scan_s_scaled": exact_s,
     }))
 

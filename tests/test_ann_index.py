@@ -1366,3 +1366,157 @@ def test_fitted_counts_fallback_reads_staged_files_only(engine, emb, monkeypatch
     }
     meta = engine.folder.log("fbidx__vectors").snapshot().meta
     assert {b: n for b, _, n in meta["ann_centroids"]} == got
+
+
+def _flat_and_pq_probe(path, engine, emb):
+    """``probe(queries, k)`` through one of the four paths that share
+    ``pq.adc_topk``, over ``emb`` bucketed by its label."""
+    from modelardb_rs_spark.operators import pq
+
+    if path == "pq_topk":
+        books = pq.train_pq_codebooks(emb, m=8, ks=16)
+        encoded = pq.encode_pq(emb, books)
+        return lambda q, k: pq.pq_topk(encoded, books, q, k=k)
+    if path == "ivfpq_topk":
+        ann_index.build_ivfpq_index(engine, "probeidx", emb, bucket_col="label")
+        return lambda q, k: ann_index.ivfpq_topk(engine, "probeidx", q, k=k, nprobe=2)
+    if path == "ivf_index_topk":
+        ann_index.build_ivf_index(engine, "probeidx", emb, bucket_col="label")
+        return lambda q, k: ann_index.ivf_index_topk(engine, "probeidx", q, k=k, nprobe=2)
+    return lambda q, k: similarity.ivf_topk(emb, q, k=k, nprobe=2, bucket_col="label")
+
+
+@pytest.mark.parametrize("path", ["pq_topk", "ivfpq_topk", "ivf_index_topk", "ivf_topk"])
+def test_bad_query_rows_yield_no_rows(engine, emb, path):
+    """A query with a NULL id, a NULL vector, a NULL element or the
+    wrong dimension yields no rows (as in brute_force_topk) and leaves
+    the other queries' results alone; query_id keeps the input's INT
+    type."""
+    from pyspark.sql.types import IntegerType
+
+    probe = _flat_and_pq_probe(path, engine, emb)
+
+    def q(src, qid, vec=F.col("embedding")):
+        return emb.where(F.col("vec_id") == src).select(
+            F.lit(qid).cast("int").alias("vec_id"), vec.alias("embedding")
+        )
+
+    good = q(3, 1)
+    bad = [
+        q(4, None),
+        q(5, 2, F.lit(None).cast("array<float>")),
+        q(6, 3, F.slice("embedding", 1, 3)),
+        q(7, 4, F.transform("embedding", lambda x: F.when(x > 0, x))),
+    ]
+    mixed = good
+    for b in bad:
+        mixed = mixed.unionByName(b)
+    out = probe(mixed, 3)
+    assert out.schema["query_id"].dataType == IntegerType()
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, probe(good, 3).collect()))
+    assert {r["query_id"] for r in out.collect()} == {1}
+
+
+def _column_probe(spark, Q, cents, nprobe):
+    """The Column centroid probe the IVF paths ran before the driver
+    probe: cross join, ``similarity.cosine``, ``row_number`` over
+    (cos desc, bucket). Returns {query: (sorted buckets, their dots)}."""
+    from pyspark.sql import Window
+
+    from modelardb_rs_spark.frames import rows_frame
+
+    q = rows_frame(
+        spark, [(i, [float(x) for x in v]) for i, v in enumerate(Q)],
+        "query_id INT, qv ARRAY<FLOAT>",
+    )
+    c = rows_frame(spark, [(b, list(v)) for b, v in cents], "bucket INT, cv ARRAY<FLOAT>")
+    w = Window.partitionBy("query_id").orderBy(F.col("ccos").desc(), F.col("bucket"))
+    rows = (
+        q.crossJoin(c)
+        .withColumn("ccos", similarity.cosine(F.col("qv"), F.col("cv")))
+        .withColumn("dot", similarity.dot(F.col("qv"), F.col("cv")))
+        .withColumn("pr", F.row_number().over(w))
+        .where(F.col("pr") <= nprobe)
+        .collect()
+    )
+    out = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["bucket"])):
+        out.setdefault(r["query_id"], ([], []))
+        out[r["query_id"]][0].append(r["bucket"])
+        out[r["query_id"]][1].append(r["dot"])
+    return out
+
+
+@pytest.mark.parametrize("nprobe", [1, 3, 12])
+def test_driver_probe_matches_column_probe(spark, nprobe):
+    """``pq.probe_buckets`` picks the buckets the Column probe picked,
+    with its dots bit for bit, on random vectors plus a zero-norm query
+    (all NULL: the lowest bucket ids), a NaN component in a query (all
+    NaN) and in a centroid (ranks first), a zero centroid (NULL, ranks
+    last) and duplicate centroids (ties to the lower bucket id)."""
+    import numpy as np
+
+    from modelardb_rs_spark.operators import pq
+
+    rng = np.random.default_rng(5)
+    dim = 8
+    C = rng.normal(size=(12, dim)).astype(np.float32)
+    C[4] = C[9]  # tied centroids
+    C[2] = 0.0  # zero-norm centroid
+    Cn = C.copy()
+    Cn[6, 3] = np.nan
+    Q = rng.normal(size=(20, dim)).astype(np.float32)
+    Q[1] = 0.0
+    Q[2, 5] = np.nan
+    Q[3] = C[4] * np.float32(2.0)  # exactly on the tied pair
+    bids = [7, 3, 11, 0, 5, 1, 9, 2, 8, 10, 4, 6]
+    for cents_f32 in (C, Cn):
+        cents = [(b, [float(x) for x in c]) for b, c in zip(bids, cents_f32)]
+        want = _column_probe(spark, Q, cents, nprobe)
+        got = pq.probe_buckets(Q.astype(np.float64), cents, nprobe)
+        for i, (pb, pdot) in enumerate(got):
+            assert pb.tolist() == want[i][0], (i, pb, want[i])
+            np.testing.assert_array_equal(pdot, np.asarray(want[i][1], dtype=np.float64))
+
+
+@pytest.mark.parametrize("path", ["ivf_index_topk", "ivf_topk"])
+def test_zero_norm_corpus_vector_never_takes_a_slot(engine, spark, emb, path):
+    """A zero-norm vector in a probed bucket scores no cosine: it never
+    appears in the top-k and never pushes out the true k-th neighbour,
+    so the result equals the probe of the corpus without it."""
+    target = emb.where(F.col("vec_id") == 3)
+    zero = target.select(
+        F.lit(7777).cast("long").alias("vec_id"),
+        F.transform("embedding", lambda x: (x * F.lit(0.0)).cast("float")).alias("embedding"),
+        F.col("label"),
+    )
+    queries = emb.where(F.col("vec_id") < 6).select(
+        (F.col("vec_id") + 500_000).alias("vec_id"), "embedding"
+    )
+    results = []
+    for name, corpus in (("with", emb.unionByName(zero)), ("without", emb)):
+        if path == "ivf_index_topk":
+            ann_index.build_ivf_index(engine, f"z{name}", corpus, bucket_col="label")
+            out = ann_index.ivf_index_topk(engine, f"z{name}", queries, k=5, nprobe=10)
+        else:
+            out = similarity.ivf_topk(corpus, queries, k=5, nprobe=10, bucket_col="label")
+        results.append(sorted(map(tuple, out.collect())))
+    assert len(results[0]) == 6 * 5
+    assert 7777 not in {r[1] for r in results[0]}
+    assert results[0] == results[1]
+
+
+@pytest.mark.parametrize("path", ["ivf_index_topk", "ivf_topk"])
+def test_flat_ivf_query_set_is_bounded(engine, spark, emb, path):
+    """The flat IVF probes collect their query set through
+    ``collect_query_rows``: one row over the bound raises."""
+    queries = spark.range(similarity.MAX_COLLECTED_QUERIES + 1).selectExpr(
+        "id AS vec_id", "array_repeat(CAST(1.0 AS FLOAT), 64) AS embedding"
+    )
+    if path == "ivf_index_topk":
+        ann_index.build_ivf_index(engine, "boundidx", emb, bucket_col="label")
+    with pytest.raises(ValueError, match="query set exceeds"):
+        if path == "ivf_index_topk":
+            ann_index.ivf_index_topk(engine, "boundidx", queries, k=5)
+        else:
+            similarity.ivf_topk(emb, queries, k=5)

@@ -627,21 +627,26 @@ def test_ann_rank_is_two_phase(spark):
     assert out.count() == 4 * 5
 
 
-def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark):
-    """An IVF-PQ probe with rerank reads codes and raw vectors in ONE
-    scan of the vectors table, shuffles once on query_id (both ranks
-    share the exchange) and joins nothing. A warm single-query probe
-    runs at most 3 Spark jobs: the query set's one ``toArrow`` of a
-    limit, the rank's shuffle stage and the result."""
+@pytest.mark.parametrize("path", ["ivfpq_topk", "ivf_index_topk"])
+def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark, path):
+    """An IVF-PQ probe with rerank, and a flat IVF probe, read what they
+    score in ONE scan of the vectors table (codes and raw vectors, or
+    raw vectors only), shuffle once on query_id (both ranks share the
+    exchange), join nothing and evaluate no pandas UDF. A warm
+    single-query probe runs at most 3 Spark jobs: the query set's one
+    ``toArrow`` of a limit, the rank's shuffle stage and the result."""
     from modelardb_rs_spark.operators import ann_index
     from modelardb_rs_spark.sources.testdata import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    ann_index.build_ivfpq_index(engine, "planpq", emb, bucket_col=None, n_buckets=8)
     q = emb.where(F.col("vec_id") == 3)
+    pq = path == "ivfpq_topk"
+    build = ann_index.build_ivfpq_index if pq else ann_index.build_ivf_index
+    build(engine, "planpq", emb, bucket_col=None, n_buckets=8)
+    rerank = {"rerank": 50} if pq else {}
 
     def probe():
-        return ann_index.ivfpq_topk(engine, "planpq", q, k=5, nprobe=3, rerank=50)
+        return getattr(ann_index, path)(engine, "planpq", q, k=5, nprobe=3, **rerank)
 
     out = probe()
     plan = plan_of(out)
@@ -650,13 +655,14 @@ def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark):
     # the scan's Location is elided in the plan string: check its files
     assert out.inputFiles() and all("planpq__vectors" in f for f in out.inputFiles())
     read_schema = scans[0].split("ReadSchema:")[1].splitlines()[0]
-    assert "pq_codes" in read_schema and "embedding" in read_schema
+    assert "embedding" in read_schema
+    assert ("pq_codes" in read_schema) == pq
     assert plan.count("Exchange hashpartitioning(query_id") == 1, plan
-    assert "Join" not in plan, plan
+    assert "Join" not in plan and "ArrowEvalPython" not in plan, plan
     assert len(out.collect()) == 5  # warm-up
 
     sc = spark.sparkContext
-    group = "ivfpq_probe_job_count"
+    group = f"{path}_probe_job_count"
     sc.setJobGroup(group, group)
     try:
         probe().collect()
