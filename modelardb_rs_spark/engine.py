@@ -520,45 +520,13 @@ class Engine:
         """Compact small files into ~target-sized ones (one transactional
         commit; old files remain for time travel until VACUUM). The
         Delta-OPTIMIZE analog of the reference's compaction-on-write —
-        ingest keeps commits small and OPTIMIZE amortizes them away."""
-        kind = self.catalog.kind(name)
-        meta = (
-            self.catalog.time_series_metadata(name)
-            if kind == TableKind.TIME_SERIES
-            else None
-        )
-        return self.folder.optimize(name, target_file_bytes, meta=meta)
-
-    # Auto-OPTIMIZE policy: compact when at least this many live files
-    # are under small_file_bytes. At 1000x ingest rates the FILE COUNT,
-    # not the byte count, is what degrades scan planning (SCALE.md) —
-    # so the ingest paths call maybe_optimize after each commit and
-    # compaction amortizes the many small streaming commits away.
-    auto_optimize_small_files = 48
-    auto_optimize_small_file_bytes = 8 << 20
-
-    def maybe_optimize(
-        self, name: str, target_file_bytes: int = 128 << 20
-    ) -> dict | None:
-        """Compact ``name`` iff its live small-file count crossed the
-        auto-OPTIMIZE threshold; returns the optimize stats or None.
-        The check is one driver-side snapshot read (commit-log file
-        sizes, no Spark job). A concurrent append racing the compaction
-        aborts it harmlessly — the next batch's call retries."""
-        snap = self.folder.log(name).snapshot()
-        small = sum(
-            1
-            for f in snap.files
-            if f.get("size", 0) < self.auto_optimize_small_file_bytes
-        )
-        if small < self.auto_optimize_small_files:
-            return None
-        from modelardb_rs_spark.sources.datafolder import ConcurrentModificationError
-
-        try:
-            return self.optimize(name, target_file_bytes)
-        except ConcurrentModificationError:
-            return None
+        every append runs it once the table's mergeable small files
+        cross ``datafolder.COMPACT_MIN_MERGEABLE``; call it directly to
+        compact below that threshold."""
+        tags = None
+        if self.catalog.kind(name) == TableKind.TIME_SERIES:
+            tags = self.catalog.time_series_metadata(name).tag_columns
+        return self.folder.optimize(name, target_file_bytes, tag_columns=tags)
 
     # --------------------------------------------------------------- write
 

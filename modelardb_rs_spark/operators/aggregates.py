@@ -239,10 +239,9 @@ def segment_aggregates(
     whole = " AND ".join(inside)
     if not whole:  # every segment is whole: one aggregate over the stats
         parts = [partials(segments, _STATS, "field_column", None)]
-    elif "param0" not in segments.columns or python_only(may_have_slow, fast_fraction):
-        # no closed form: the snapshot predates the model columns, or
-        # holds almost no JVM-decodable points (the closed form would
-        # scan for nothing)
+    elif python_only(may_have_slow, fast_fraction):
+        # no closed form: the snapshot holds almost no JVM-decodable
+        # points (the closed form would scan for nothing)
         closed = "false"
         parts = [partials(
             segments.where(whole), _STATS, "field_column", bucket_start("start_time")

@@ -520,9 +520,9 @@ def append_to_ivf_index(
             )
         # one file per TOUCHED bucket per commit: without the
         # repartition the partitioned writer opens (batch partitions x
-        # touched buckets) files per epoch — the small-file tax
-        # maybe_optimize then has to keep paying down (guide §6). No
-        # salt here: append batches are micro-batch-sized, and one
+        # touched buckets) files per epoch — the small-file tax the
+        # append's compaction rule then has to keep paying down (guide
+        # §6). No salt here: append batches are micro-batch-sized, and one
         # writer per bucket is the file-count optimum.
         assigned = assigned.repartition(
             max(1, min(_shuffle_partitions(engine.spark), len(cent_rows))),
@@ -545,12 +545,6 @@ def append_to_ivf_index(
             # exactly-once audits and launch a pointless Spark job on
             # the no-op path.
             return {"appended": 0, "replayed": True}
-        # Sustained appends write one small file per touched bucket per
-        # commit; the auto-OPTIMIZE cadence compacts them (preserving
-        # the ivf_bucket= layout — sources/datafolder.py infers it from
-        # live paths) so probe-time file counts stay bounded, the same
-        # policy the streaming ingest paths apply to their tables.
-        engine.maybe_optimize(vt)
         # `appended` from the commit's own add entries (per-file
         # num_rows footer stats): no count job, no Observation — the
         # former Observation form broke on EMPTY batches, where AQE's

@@ -166,9 +166,9 @@ def grid_univariate(
 
     if python_only(may_have_slow, fast_fraction):
         points = segments.mapInPandas(decode, schema=out_schema)
-    elif "param0" in segments.columns:
+    else:
         # null ts_kind/params (rows written before the fast-path columns
-        # existed, read in a mixed snapshot) must fall to the slow branch
+        # existed) must fall to the slow branch
         fast_cond = (
             (F.col("model_type_id") != F.lit(GORILLA_ID))
             & (F.coalesce(F.col("ts_kind"), F.lit(1)) == F.lit(0))
@@ -181,9 +181,6 @@ def grid_univariate(
         if may_have_slow:
             slow = segments.where(~fast_cond).mapInPandas(decode, schema=out_schema)
             points = points.unionByName(slow)
-    else:
-        # Legacy folder written before the parameter columns existed.
-        points = segments.mapInPandas(decode, schema=out_schema)
     if start_us is not None:
         points = points.where(F.col("timestamp") >= F.lit(int(start_us)))
     if end_us is not None:

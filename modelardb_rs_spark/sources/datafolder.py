@@ -30,7 +30,9 @@ namespace.
 
 from __future__ import annotations
 
+import logging
 import re
+import threading
 import uuid
 
 import pandas as pd
@@ -67,11 +69,31 @@ _SERIES_ROWS_MAX = 128
 # footer reads hold ~3 MB per file whatever the file size.
 _SERIES_BATCH_ROWS = 65536
 
+# The compaction rule, evaluated when an append commits: a live file
+# under COMPACT_SMALL_FILE_BYTES is small, the small files beyond one per
+# partition directory are mergeable, and COMPACT_MIN_MERGEABLE of them
+# run OPTIMIZE. At 1000x ingest rates the FILE COUNT, not the byte count,
+# is what degrades scan planning (SCALE.md), so every append path keeps
+# it bounded the same way.
+COMPACT_MIN_MERGEABLE = 48
+COMPACT_SMALL_FILE_BYTES = 8 << 20
+
+# OPTIMIZE attempts: a concurrent OPTIMIZE that removed this one's inputs
+# already merged them, so each retry plans from a fresh snapshot.
+_OPTIMIZE_ATTEMPTS = 4
+
+_logger = logging.getLogger(__name__)
+
 
 class ConcurrentModificationError(RuntimeError):
     """A transactional rewrite lost a race: files it read were removed
     from the live set before it could commit. Retry against the new
     snapshot."""
+
+
+class _InputsCompacted(ConcurrentModificationError):
+    """An OPTIMIZE lost its inputs to another OPTIMIZE, which already
+    merged them: planning again from a fresh snapshot is the retry."""
 
 
 def _parquet_segment_stats(
@@ -110,11 +132,16 @@ def _parquet_segment_stats(
         return None
     lo = hi = None
     max_model = max_ts_kind = None
+    # a NULL ts_kind (a row written before the column existed, carried
+    # by a rewrite) decodes in Python, whatever the non-NULL maximum says
+    null_ts_kind = False
     for rg in range(md.num_row_groups):
         group = md.row_group(rg)
         for ci in range(group.num_columns):
             col = group.column(ci)
             st = col.statistics
+            if col.path_in_schema == "ts_kind" and st is not None and st.has_null_count:
+                null_ts_kind |= st.null_count > 0
             if st is None or not st.has_min_max:
                 continue
             if col.path_in_schema == "start_time":
@@ -129,7 +156,9 @@ def _parquet_segment_stats(
 
     all_fast = None
     if max_model is not None and max_ts_kind is not None:
-        all_fast = bool(int(max_model) < GORILLA_ID and int(max_ts_kind) == 0)
+        all_fast = bool(
+            int(max_model) < GORILLA_ID and int(max_ts_kind) == 0 and not null_ts_kind
+        )
     fast_points = total_points = series = None
     try:
         # Three narrow columns (two int8, one int32) — a few KB even for
@@ -192,6 +221,14 @@ def _parquet_num_rows(fs: HadoopFS, uri: str, size: int) -> int | None:
             stream.close()
 
 
+def _mergeable_files(files: list[dict]) -> int:
+    """Small files beyond one per partition directory (``field_column=N/``,
+    ``ivf_bucket=N/`` or the table root): the files OPTIMIZE would fold
+    into the ones it keeps per directory."""
+    small = [f["path"] for f in files if f["size"] < COMPACT_SMALL_FILE_BYTES]
+    return len(small) - len({"/".join(p.split("/")[1:-1]) for p in small})
+
+
 class DataFolder:
     def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
@@ -203,6 +240,10 @@ class DataFolder:
         self.fs.mkdirs(self.metadata_dir)
         self._logs: dict[str, TransactionLog] = {}
         self._df_cache: dict[tuple, DataFrame] = {}
+        # one append-triggered compaction per table at a time in this
+        # process: concurrent puts that all cross the threshold would
+        # otherwise each rewrite the table and all but one lose the commit
+        self._compacting: dict[str, threading.Lock] = {}
 
     def table_path(self, name: str) -> str:
         return self.fs.join(self.tables_dir, name)
@@ -270,7 +311,12 @@ class DataFolder:
         hook that lets a meta payload incorporate statistics of the
         write itself: the ANN builds derive their per-bucket counts
         from the entries' ``num_rows`` + ``ivf_bucket=`` path values,
-        saving the separate counts pass the eager form required."""
+        saving the separate counts pass the eager form required.
+
+        Every ``op="append"`` commit then applies the compaction rule:
+        at ``COMPACT_MIN_MERGEABLE`` mergeable files (``_mergeable_files``)
+        it compacts the table (``_compact_after_append``). No other op
+        triggers it."""
         table = self.table_path(name)
         staged_rel = f"txn={uuid.uuid4().hex[:16]}"
         staged = self.fs.join(table, staged_rel)
@@ -285,30 +331,34 @@ class DataFolder:
             if m:
                 entry["field_column"] = int(m.group(1))
             add.append(entry)
-        if segment_tags is not None and add:
-            if len(add) > _DRIVER_STATS_MAX_FILES:
-                # wide commit: ONE distributed job computes every file's
-                # stats (narrow columns only) — the driver reading
-                # thousands of footers serially would become the commit
-                # bottleneck on a real cluster
-                stats = self._segment_stats_job(staged, staged_rel, add)
+        if segment_tags is not None and len(add) > _DRIVER_STATS_MAX_FILES:
+            # wide commit: ONE distributed job computes every file's
+            # stats (narrow columns only) — the driver reading
+            # thousands of footers serially would become the commit
+            # bottleneck on a real cluster
+            stats = self._segment_stats_job(staged, staged_rel, add)
+        else:
+            # footer reads (KB-sized ranged reads, threaded across
+            # files): segment stats, or a normal table's row counts
+            def footer(entry: dict):
+                uri = self.fs.join(table, entry["path"])
+                if segment_tags is None:
+                    return _parquet_num_rows(self.fs, uri, entry["size"])
+                return _parquet_segment_stats(self.fs, uri, entry["size"], segment_tags)
+
+            if len(add) <= 1:
+                stats = [footer(entry) for entry in add]
             else:
-                def stats_of(entry: dict):
-                    return _parquet_segment_stats(
-                        self.fs, self.fs.join(table, entry["path"]), entry["size"],
-                        segment_tags,
-                    )
+                from concurrent.futures import ThreadPoolExecutor
 
-                if len(add) == 1:
-                    stats = [stats_of(add[0])]
-                else:
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    with ThreadPoolExecutor(min(16, len(add))) as pool:
-                        stats = list(pool.map(stats_of, add))
-            for entry, st in zip(add, stats):
-                if st is None:
-                    continue
+                with ThreadPoolExecutor(min(16, len(add))) as pool:
+                    stats = list(pool.map(footer, add))
+        for entry, st in zip(add, stats):
+            if st is None:
+                continue
+            if segment_tags is None:
+                entry["num_rows"] = st
+            else:
                 if st["span"] is not None:
                     entry["min_start_time"], entry["max_end_time"] = st["span"]
                 if st["all_fast"] is not None:
@@ -318,31 +368,15 @@ class DataFolder:
                     entry["total_points"] = st["total_points"]
                 if st.get("series") is not None:
                     entry["series"] = st["series"]
-        elif add:
-            # normal tables: record each file's row count (one footer
-            # ranged read per file, threaded — same flat-commit-latency
-            # contract as the segment stats above)
-            def rows_of(entry: dict):
-                return _parquet_num_rows(
-                    self.fs, self.fs.join(table, entry["path"]), entry["size"]
-                )
-
-            if len(add) == 1:
-                n_rows = [rows_of(add[0])]
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(min(16, len(add))) as pool:
-                    n_rows = list(pool.map(rows_of, add))
-            for entry, n in zip(add, n_rows):
-                if n is not None:
-                    entry["num_rows"] = n
         if callable(commit_meta):
             commit_meta = commit_meta(add)
         remove_set = set(remove or [])
         expected_set = set(replace_expected) if replace_expected is not None else None
+        base = None
 
         def build(snap):
+            nonlocal base
+            base = snap
             if expected_meta is not None:
                 mk, mv = expected_meta
                 cur = (snap.meta or {}).get(mk)
@@ -378,16 +412,49 @@ class DataFolder:
                 return (op, add, sorted(remove_set), commit_meta)
             return (op, add, sorted(remove_set))
 
-        committed = self.log(name).commit(build, txn=txn)
-        if committed is None:
-            # txn already applied (at-least-once replay lost the race):
-            # the staged files are orphans no commit references; delete
-            # them now rather than waiting for vacuum
+        def discard_staged() -> None:
+            # no commit references the staged files: delete them now
+            # rather than waiting for vacuum
             try:
                 self.fs.delete(staged, recursive=True)
             except Exception:
                 pass
+
+        try:
+            committed = self.log(name).commit(build, txn=txn)
+        except ConcurrentModificationError:
+            discard_staged()
+            raise
+        if committed is None:
+            # txn already applied (an at-least-once replay lost the race)
+            discard_staged()
+            return None
+        if op == "append" and _mergeable_files(base.files + add) >= COMPACT_MIN_MERGEABLE:
+            # the compaction rule, counted on the snapshot the append was
+            # built against plus its own adds: an append that does not
+            # compact lists no log and starts no job
+            self._compact_after_append(name, segment_tags)
         return committed
+
+    def _compact_after_append(self, name: str, tag_columns: list[str] | None) -> None:
+        """One best-effort compaction attempt after an append committed:
+        a failure must not fail the write, whose rows are already in the
+        table (a retry without ``txn`` would append them twice). A lost
+        race, or another append of this process compacting the table,
+        needs no retry: the next append re-checks the rule."""
+        lock = self._compacting.setdefault(name, threading.Lock())
+        if not lock.acquire(blocking=False):
+            return
+        try:
+            self._compact(name, tag_columns=tag_columns)
+        except ConcurrentModificationError:
+            pass
+        except Exception:
+            _logger.warning(
+                "compaction of %s after a committed append failed", name, exc_info=True
+            )
+        finally:
+            lock.release()
 
     # -------------------------------------------------------- read helpers
 
@@ -440,32 +507,97 @@ class DataFolder:
             }
         return [by_rel.get(entry["path"]) for entry in add]
 
-    def _read_live(self, name: str, snapshot, schema=None) -> DataFrame | None:
-        """``schema`` (when the caller knows it, e.g. the segment layout)
-        skips footer-based schema inference at plan time and null-fills
-        columns absent from pre-upgrade files — at scale this avoids a
-        driver-side footer read per snapshot.
+    def _read(self, name: str, rel_paths: list[str], schema=None) -> DataFrame:
+        """The one reader of table files: table-relative ``rel_paths`` as
+        a frame. With ``schema`` (the declared segment layout, or a
+        normal table's catalog schema) the read skips footer-based
+        schema inference, Spark fills columns absent from older files
+        with NULL, and exactly the declared columns come back. Without
+        it (OPTIMIZE of a normal table, whose schema the catalog holds)
+        the ``txn`` staging partition is dropped; other Hive partitions
+        (``ivf_bucket=``) stay.
 
-        The resolved DataFrame is cached per (table, version, pruned
-        path set): DataFrames are immutable plans, and data files under
-        ``txn=`` staging are never rewritten in place, so the same live
-        set always reads the same bytes — repeated queries skip the
-        JVM-side DataSource resolution + file-index build entirely."""
-        if not snapshot.files:
-            return None
+        The frame is cached per (table, path set, schema): DataFrames
+        are immutable plans, and data files under ``txn=`` staging are
+        never rewritten in place, so the same path set always reads the
+        same bytes — repeated queries skip the JVM-side DataSource
+        resolution + file-index build entirely."""
+        if not rel_paths:
+            return rows_frame(self.spark, [], schema)
         table = self.table_path(name)
-        paths = [self.fs.join(table, p) for p in snapshot.paths]
-        key = (name, snapshot.version, hash(tuple(paths)), schema is not None)
+        paths = [self.fs.join(table, p) for p in rel_paths]
+        key = (name, hash(tuple(paths)), None if schema is None else schema.simpleString())
         df = self._df_cache.get(key)
         if df is None:
             reader = self.spark.read.option("basePath", table)
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.parquet(*paths)
+            if schema is None:
+                df = reader.parquet(*paths).drop("txn")
+            else:
+                df = reader.schema(schema).parquet(*paths).select(*schema.fieldNames())
             if len(self._df_cache) >= self._DF_CACHE_MAX:
                 self._df_cache.clear()
             self._df_cache[key] = df
         return df
+
+    def _commit_segments(
+        self,
+        name: str,
+        tag_columns: list[str],
+        segments: DataFrame,
+        range_partitions: int | None = None,
+        **commit,
+    ) -> int | None:
+        """The one Spark writer of segment files: partitioned by
+        field_column, sorted within partitions by (field_column,
+        tags..., start_time), zstd, then committed with ``commit``
+        (``_stage_and_commit`` keywords). Sorting keeps one open Parquet
+        writer at a time per dynamic partition and tight row-group
+        stats within each file. ``range_partitions`` range-partitions
+        the rows on (field_column, start_time) first, so rewritten
+        files become near-disjoint time slices (OPTIMIZE, resegment)."""
+
+        def write_staged(staged: str) -> None:
+            out = segments
+            if range_partitions is not None:
+                out = out.repartitionByRange(
+                    range_partitions, F.col("field_column"), F.col("start_time")
+                )
+            (
+                out.sortWithinPartitions("field_column", *tag_columns, "start_time")
+                .write.partitionBy("field_column")
+                # the reference fixes ZSTD for segment storage
+                # (modelardb_storage/src/lib.rs:255); ~20-40% smaller than
+                # snappy on codec payloads at negligible decode cost
+                .option("compression", "zstd")
+                .parquet(staged)
+            )
+
+        return self._stage_and_commit(name, write_staged, segment_tags=tag_columns, **commit)
+
+    def _commit_normal(
+        self,
+        name: str,
+        df: DataFrame,
+        partition_by: list[str] | None = None,
+        n_files: int | None = None,
+        **commit,
+    ) -> int | None:
+        """The one writer of normal-table files: zstd, Hive-partitioned
+        on ``partition_by`` when given, then committed with ``commit``
+        (``_stage_and_commit`` keywords). ``n_files`` repartitions the
+        rows first (on the partition columns, if any) — OPTIMIZE's
+        target file count."""
+
+        def write_staged(staged: str) -> None:
+            out = df
+            if n_files is not None:
+                out = out.repartition(n_files, *[F.col(c) for c in partition_by or []])
+            writer = out.write.option("compression", "zstd")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            writer.parquet(staged)
+
+        return self._stage_and_commit(name, write_staged, **commit)
 
     # -- segments (time series tables) -------------------------------------
 
@@ -481,23 +613,11 @@ class DataFolder:
         commit. A pandas frame (segments fitted on the driver) is written
         without a Spark job: one zstd file per ``field_column=N/``
         directory, through pyarrow and the Hadoop FS."""
-        # No repartition: the compressor already co-located each series'
-        # segments in one task; an extra shuffle here would double the
-        # write cost. Sorting by (field_column, tags..., start_time) keeps
-        # one open Parquet writer at a time per dynamic partition and tight
-        # row-group stats within each file.
-        sort_cols = ["field_column", *meta.tag_columns, "start_time"]
-
-        def write_staged(staged: str) -> None:
-            (
-                segments.sortWithinPartitions(*sort_cols)
-                .write.partitionBy("field_column")
-                # the reference fixes ZSTD for segment storage
-                # (modelardb_storage/src/lib.rs:255); ~20-40% smaller than
-                # snappy on codec payloads at negligible decode cost
-                .option("compression", "zstd")
-                .parquet(staged)
-            )
+        if not isinstance(segments, pd.DataFrame):
+            # No repartition: the compressor already co-located each
+            # series' segments in one task; an extra shuffle here would
+            # double the write cost.
+            return self._commit_segments(meta.name, meta.tag_columns, segments, txn=txn)
 
         def write_frame(staged: str) -> None:
             if not len(segments):
@@ -505,7 +625,10 @@ class DataFolder:
             schema = to_arrow_schema(segment_schema(meta.tag_columns))
             body = pa.schema([f for f in schema if f.name != "field_column"])
             # Spark's ascending sort puts NULL tags first
-            frame = segments.sort_values(sort_cols, na_position="first", kind="stable")
+            frame = segments.sort_values(
+                ["field_column", *meta.tag_columns, "start_time"],
+                na_position="first", kind="stable",
+            )
             for idx, part in frame.groupby("field_column", sort=True):
                 table = pa.Table.from_pandas(part, schema=body, preserve_index=False)
                 sink = pa.BufferOutputStream()
@@ -520,10 +643,7 @@ class DataFolder:
                 )
 
         return self._stage_and_commit(
-            meta.name,
-            write_frame if isinstance(segments, pd.DataFrame) else write_staged,
-            segment_tags=meta.tag_columns,
-            txn=txn,
+            meta.name, write_frame, segment_tags=meta.tag_columns, txn=txn
         )
 
     def limit_time_cutoff(self, name: str, n: int) -> int | None:
@@ -584,7 +704,6 @@ class DataFolder:
         the JVM fast path, from commit-log point counts (None when any
         live file lacks them) — the grid view drops the JVM branch (and
         its second scan of the segment files) when it's negligible."""
-        schema = segment_schema(meta.tag_columns)
         snap = self.log(meta.name).snapshot(version, timestamp_ms)
         if start_us is not None or end_us is not None or field_indexes is not None:
             fields = set(field_indexes) if field_indexes is not None else None
@@ -609,19 +728,7 @@ class DataFolder:
             total = sum(f["total_points"] for f in snap.files)
             fast = sum(f["fast_points"] for f in snap.files)
             fast_fraction = (fast / total) if total else 1.0
-        df = self._read_live(meta.name, snap, schema=schema)
-        if df is None:
-            df = rows_frame(self.spark, [], schema)
-        else:
-            # partition discovery types field_column as int (and adds the
-            # txn staging column); restore int16, null-fill fast-path
-            # columns absent from pre-upgrade files, and restore the
-            # declared column set
-            df = df.withColumn("field_column", F.col("field_column").cast("short"))
-            for f in schema.fields:
-                if f.name not in df.columns:
-                    df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            df = df.select(*[f.name for f in schema.fields])
+        df = self._read(meta.name, snap.paths, segment_schema(meta.tag_columns))
         info = {
             "may_have_slow": may_have_slow,
             "fast_fraction": fast_fraction,
@@ -644,23 +751,15 @@ class DataFolder:
     ) -> int | None:
         """Atomically append rows to a normal table. Returns the
         committed version, or None when a txn replay gate skipped the
-        commit. ``partition_by``
-        lays the files out Hive-style on those columns, so equality/IN
-        filters on them prune whole directories at planning time (the
-        ANN index stores vectors partitioned by bucket this way).
-        ``txn=(app_id, version)`` records a SetTransaction-style replay
-        gate atomically with the append (see TransactionLog.commit).
-        ``commit_meta`` attaches an application metadata payload to the
-        same commit (Snapshot.meta)."""
-
-        def write_staged(staged: str) -> None:
-            writer = df.write.option("compression", "zstd")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(staged)
-
-        return self._stage_and_commit(
-            name, write_staged, txn=txn, commit_meta=commit_meta,
+        commit. ``partition_by`` lays the files out Hive-style on those
+        columns, so equality/IN filters on them prune whole directories
+        at planning time (the ANN index stores vectors partitioned by
+        bucket this way). ``txn=(app_id, version)`` records a
+        SetTransaction-style replay gate atomically with the append (see
+        TransactionLog.commit). ``commit_meta`` attaches an application
+        metadata payload to the same commit (Snapshot.meta)."""
+        return self._commit_normal(
+            name, df, partition_by, txn=txn, commit_meta=commit_meta,
             expected_meta=expected_meta,
         )
 
@@ -691,15 +790,8 @@ class DataFolder:
         rewrites, modelardb_storage/src/data_folder/mod.rs)."""
         if expected_paths is None:
             expected_paths = list(self.log(name).snapshot().paths)
-
-        def write_staged(staged: str) -> None:
-            writer = df.write.option("compression", "zstd")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(staged)
-
-        return self._stage_and_commit(
-            name, write_staged, op="replace", replace_expected=expected_paths,
+        return self._commit_normal(
+            name, df, partition_by, op="replace", replace_expected=expected_paths,
             txn=txn, commit_meta=commit_meta,
         )
 
@@ -717,11 +809,7 @@ class DataFolder:
         version: int | None = None,
         timestamp_ms: int | None = None,
     ) -> DataFrame:
-        snap = self.log(name).snapshot(version, timestamp_ms)
-        df = self._read_live(name, snap, schema=schema)
-        if df is None:
-            return rows_frame(self.spark, [], schema)
-        return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
+        return self._read(name, self.log(name).snapshot(version, timestamp_ms).paths, schema)
 
     # -- maintenance ---------------------------------------------------------
 
@@ -729,7 +817,7 @@ class DataFolder:
         self,
         name: str,
         target_file_bytes: int = 128 << 20,
-        meta: TimeSeriesTableMetadata | None = None,
+        tag_columns: list[str] | None = None,
     ) -> dict:
         """Compact small live files into ~target-sized ones in ONE
         transactional commit (Delta OPTIMIZE / bin-packing analog).
@@ -739,10 +827,10 @@ class DataFolder:
         frequently-appended table scannable. Old files stay on disk for
         time travel until VACUUM, exactly like any other remove.
 
-        Pass ``meta`` for time series tables: the rewrite then keeps the
-        field_column partitioning and the (tags, start_time) sort order,
-        and RANGE-partitions the output on (field_column, start_time) —
-        ingest's volume-bucketed shuffle hash-scatters time buckets
+        Pass ``tag_columns`` for time series tables: the rewrite then
+        keeps the field_column partitioning and the (tags, start_time)
+        sort order, and RANGE-partitions the output on (field_column,
+        start_time) — ingest's volume-bucketed shuffle hash-scatters time buckets
         across files (wide per-file time spans), whereas compacted files
         become near-disjoint time slices, so commit-log span pruning
         skips almost everything outside a query's range and later
@@ -750,17 +838,35 @@ class DataFolder:
         OPTIMIZE+ZORDER-by-time analog; repartitionByRange's sampling
         pass is fine in a maintenance op). Returns
         ``{"compacted", "produced", "version"}``.
+
+        A concurrent OPTIMIZE (an append's compaction or another caller's)
+        that removes this one's inputs makes it plan again from a fresh
+        snapshot, up to ``_OPTIMIZE_ATTEMPTS`` times: the winner already
+        merged those files, so the retry compacts what is left or
+        returns the no-op result. Inputs a TRUNCATE, expire or replace
+        removed raise ConcurrentModificationError.
         """
+        for attempt in range(1, _OPTIMIZE_ATTEMPTS + 1):
+            try:
+                return self._compact(name, target_file_bytes, tag_columns)
+            except _InputsCompacted:
+                if attempt == _OPTIMIZE_ATTEMPTS:
+                    raise
+
+    def _compact(
+        self,
+        name: str,
+        target_file_bytes: int = 128 << 20,
+        tag_columns: list[str] | None = None,
+    ) -> dict:
+        """One OPTIMIZE attempt on the current snapshot (see
+        ``optimize``); raises ConcurrentModificationError when a
+        concurrent rewrite removed its inputs."""
         snap = self.log(name).snapshot()
-        small = [
-            f
-            for f in snap.files
-            if f["size"] < target_file_bytes * _OPTIMIZE_SMALL_FRACTION
-        ]
+        small = [f for f in snap.files if f["size"] < target_file_bytes * _OPTIMIZE_SMALL_FRACTION]
         if len(small) < 2:
             return {"compacted": 0, "produced": 0, "version": snap.version}
-        table = self.table_path(name)
-        if meta is None:
+        if tag_columns is None:
             # Normal tables may be Hive-partitioned per write (the ANN
             # vectors tables lay out ivf_bucket= dirs for planning-time
             # pruning). The layout isn't cataloged, but it IS in every
@@ -771,79 +877,60 @@ class DataFolder:
             # next to path-encoded ones and silently drop the pruning
             # the layout buys.
             schemes = {
-                tuple(
-                    seg.split("=", 1)[0]
-                    for seg in f["path"].split("/")[1:-1]
-                    if "=" in seg
-                )
+                tuple(seg.split("=", 1)[0] for seg in f["path"].split("/")[1:-1] if "=" in seg)
                 for f in small
             }
             if len(schemes) != 1:
                 # two writes disagreed on layout — refuse to guess; a
                 # rebuild (not compaction) is the safe repair. WARN
-                # rather than return silently: maybe_optimize re-tries
-                # after every commit (the threshold stays crossed), so a
-                # silent no-op here means the table's file count grows
-                # forever with no signal to the operator.
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "optimize(%s): live files carry %d different Hive "
-                    "partition layouts (%s) — refusing to compact a mixed "
-                    "layout; rewrite the table with one consistent "
-                    "partition_by to restore compaction",
-                    name,
-                    len(schemes),
-                    sorted(schemes),
+                # rather than return silently: the compaction rule
+                # re-tries after every append (the threshold stays
+                # crossed), so a silent no-op here means the table's
+                # file count grows forever with no signal to the operator.
+                _logger.warning(
+                    "optimize(%s): live files carry %d different Hive partition layouts "
+                    "(%s) — refusing to compact a mixed layout; rewrite the table with "
+                    "one consistent partition_by to restore compaction",
+                    name, len(schemes), sorted(schemes),
                 )
-                return {
-                    "compacted": 0,
-                    "produced": 0,
-                    "version": snap.version,
-                    "mixed_layouts": sorted(schemes),
-                }
-            part_cols = list(schemes.pop())
-        df = self.spark.read.option("basePath", table).parquet(
-            *[self.fs.join(table, f["path"]) for f in small]
-        )
+                return {"compacted": 0, "produced": 0, "version": snap.version,
+                        "mixed_layouts": sorted(schemes)}
+        paths = [f["path"] for f in small]
         n_out = max(1, -(-sum(f["size"] for f in small) // target_file_bytes))
-        if meta is not None:
-            sort_cols = ["field_column", *meta.tag_columns, "start_time"]
-
-            def write_staged(staged: str) -> None:
-                (
-                    df.repartitionByRange(n_out, F.col("field_column"), F.col("start_time"))
-                    .sortWithinPartitions(*sort_cols)
-                    .write.option("compression", "zstd")
-                    .partitionBy("field_column")
-                    .parquet(staged)
+        try:
+            if tag_columns is not None:
+                version = self._commit_segments(
+                    name, tag_columns, self._read(name, paths, segment_schema(tag_columns)),
+                    range_partitions=n_out, op="optimize", remove=paths,
                 )
-
-        else:
-            if part_cols:
-
-                def write_staged(staged: str) -> None:
-                    (
-                        df.drop("txn")
-                        .repartition(n_out, *[F.col(c) for c in part_cols])
-                        .write.option("compression", "zstd")
-                        .partitionBy(*part_cols)
-                        .parquet(staged)
-                    )
-
             else:
-
-                def write_staged(staged: str) -> None:
-                    df.repartition(n_out).write.option("compression", "zstd").parquet(staged)
-
-        removed = [f["path"] for f in small]
-        version = self._stage_and_commit(
-            name,
-            write_staged,
-            op="optimize",
-            segment_tags=meta.tag_columns if meta is not None else None,
-            remove=removed,
-        )
+                version = self._commit_normal(
+                    name, self._read(name, paths), list(schemes.pop()), n_files=n_out,
+                    op="optimize", remove=paths,
+                )
+        except Exception as exc:
+            # inputs a concurrent commit removed fail the commit, or (once
+            # a vacuum deleted them) the read: a lost race, not a fault
+            log = self.log(name)
+            gone = set(paths) - set(log.snapshot().paths)
+            if not gone:
+                raise
+            removers = set()
+            for v in (v for v in log.versions() if v > snap.version):
+                try:
+                    doc = log.read_commit(v)
+                except Exception:
+                    continue  # vacuumed since the listing
+                if gone.intersection(doc.get("remove", [])):
+                    removers.add(doc["op"])
+            # a TRUNCATE, expire or replace that took the inputs is the
+            # caller's to see; a commit the log no longer holds can only
+            # be one a retry plans around safely, like an OPTIMIZE
+            lost = ConcurrentModificationError if removers - {"optimize"} else _InputsCompacted
+            raise lost(
+                f"{name}: {len(gone)} input file(s) were removed concurrently "
+                f"(e.g. {sorted(gone)[0]}); retry the operation"
+            ) from exc
         produced = len(self.log(name).read_commit(version).get("add", []))
         return {"compacted": len(small), "produced": produced, "version": version}
 
@@ -902,36 +989,14 @@ class DataFolder:
             version = self.log(name).commit(build)
             return {"files_removed": len(old), "files_rewritten": 0, "version": version}
 
-        table = self.table_path(name)
-        schema = segment_schema(meta.tag_columns)
-        df = self.spark.read.option("basePath", table).parquet(
-            *[self.fs.join(table, p) for p in boundary]
+        kept = split_boundary_segments(
+            self._read(name, boundary, segment_schema(meta.tag_columns)),
+            meta.tag_columns, cutoff_us, not_before_us,
         )
-        df = df.withColumn("field_column", F.col("field_column").cast("short"))
-        for fld in schema.fields:
-            if fld.name not in df.columns:
-                df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-        df = df.select(*[fld.name for fld in schema.fields])
-        kept = split_boundary_segments(df, meta.tag_columns, cutoff_us, not_before_us)
-        sort_cols = ["field_column", *meta.tag_columns, "start_time"]
-
-        def write_staged(staged: str) -> None:
-            (
-                kept.sortWithinPartitions(*sort_cols)
-                .write.partitionBy("field_column")
-                .option("compression", "zstd")
-                .parquet(staged)
-            )
-
-        version = self._stage_and_commit(
-            name, write_staged, op="expire", segment_tags=meta.tag_columns,
-            remove=old + boundary,
+        version = self._commit_segments(
+            name, meta.tag_columns, kept, op="expire", remove=old + boundary
         )
-        return {
-            "files_removed": len(old),
-            "files_rewritten": len(boundary),
-            "version": version,
-        }
+        return {"files_removed": len(old), "files_rewritten": len(boundary), "version": version}
 
     def resegment(self, meta: TimeSeriesTableMetadata) -> dict:
         """Merge overlapping segments created by out-of-order/backfill
@@ -947,33 +1012,12 @@ class DataFolder:
         snap = self.log(name).snapshot()
         if not snap.files:
             return {"files_before": 0, "version": snap.version}
-        schema = segment_schema(meta.tag_columns)
-        table = self.table_path(name)
-        df = self.spark.read.option("basePath", table).parquet(
-            *[self.fs.join(table, p) for p in snap.paths]
+        merged = merge_overlapping_segments(
+            self._read(name, snap.paths, segment_schema(meta.tag_columns)), meta.tag_columns
         )
-        df = df.withColumn("field_column", F.col("field_column").cast("short"))
-        for fld in schema.fields:
-            if fld.name not in df.columns:
-                df = df.withColumn(fld.name, F.lit(None).cast(fld.dataType))
-        df = df.select(*[fld.name for fld in schema.fields])
-        merged = merge_overlapping_segments(df, meta.tag_columns)
-        sort_cols = ["field_column", *meta.tag_columns, "start_time"]
-
-        def write_staged(staged: str) -> None:
-            (
-                merged.repartitionByRange(
-                    max(1, len(snap.paths)), F.col("field_column"), F.col("start_time")
-                )
-                .sortWithinPartitions(*sort_cols)
-                .write.partitionBy("field_column")
-                .option("compression", "zstd")
-                .parquet(staged)
-            )
-
-        version = self._stage_and_commit(
-            name, write_staged, op="resegment", segment_tags=meta.tag_columns,
-            remove=list(snap.paths),
+        version = self._commit_segments(
+            name, meta.tag_columns, merged, range_partitions=len(snap.paths),
+            op="resegment", remove=list(snap.paths),
         )
         return {"files_before": len(snap.paths), "version": version}
 

@@ -19,6 +19,7 @@ writer is always safe).
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
@@ -30,6 +31,17 @@ class FileInfo:
     is_dir: bool
     size: int
     mtime_ms: int
+
+
+# Suffix of the hidden temporary files ``create_exclusive`` publishes on
+# file: URIs.
+_CREATE_TEMP_SUFFIX = ".tmp"
+
+
+def is_create_temp(name: str) -> bool:
+    """Whether a file name is one of ``create_exclusive``'s temporary
+    files (``.<name>.<uuid>.tmp``)."""
+    return name.startswith(".") and name.endswith(_CREATE_TEMP_SUFFIX)
 
 
 class HadoopFS:
@@ -180,22 +192,40 @@ class HadoopFS:
         exists (the optimistic-concurrency primitive).
 
         Hadoop's LocalFileSystem implements create(overwrite=false) as a
-        non-atomic existence check, so for file: URIs this uses a real
-        O_CREAT|O_EXCL syscall instead; HDFS-like filesystems keep the
-        atomic create (Delta's HDFSLogStore relies on the same split)."""
+        non-atomic existence check, so for file: URIs the bytes go to a
+        hidden temporary file that a hard link publishes (``link`` fails
+        if the name exists): a concurrent reader never sees the file
+        created but not yet written. A local directory therefore needs
+        hard-link support; on one without it (some FUSE or CIFS mounts)
+        this raises an OSError that says so. A crash between the write
+        and the unlink leaves the temporary file, which
+        ``TransactionLog.vacuum`` removes (``is_create_temp``).
+        HDFS-like filesystems keep the atomic create (Delta's
+        HDFSLogStore relies on the same split)."""
         qualified = self.qualify(uri)
         if qualified.startswith("file:"):
             import os
             from urllib.parse import urlparse
 
             local = urlparse(qualified).path
-            os.makedirs(os.path.dirname(local), exist_ok=True)
+            head, tail = os.path.split(local)
+            os.makedirs(head, exist_ok=True)
+            tmp = os.path.join(head, f".{tail}.{uuid.uuid4().hex}{_CREATE_TEMP_SUFFIX}")
+            with open(tmp, "wb") as f:
+                f.write(data)
             try:
-                fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+                os.link(tmp, local)
             except FileExistsError:
                 return False
-            with os.fdopen(fd, "wb") as f:
-                f.write(data)
+            except OSError as exc:
+                raise OSError(
+                    exc.errno,
+                    f"create_exclusive publishes {local} with a hard link, which "
+                    f"this filesystem refused ({exc.strerror}); keep the table "
+                    "root on a local filesystem that supports hard links",
+                ) from exc
+            finally:
+                os.unlink(tmp)
             return True
         try:
             stream = self._fs.create(self.path(uri), False)

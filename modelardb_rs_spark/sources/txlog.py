@@ -50,7 +50,7 @@ import json
 import time
 from dataclasses import dataclass, field
 
-from modelardb_rs_spark.sources.hadoopfs import HadoopFS
+from modelardb_rs_spark.sources.hadoopfs import HadoopFS, is_create_temp
 
 _LOG_DIR = "_txn"
 _MAX_COMMIT_ATTEMPTS = 100
@@ -776,7 +776,8 @@ class TransactionLog:
         self, retain_seconds: float, staging_grace_seconds: float | None = None
     ) -> list[str]:
         """Delete files removed before the retention horizon, plus staged
-        directories no commit references (crashed writes). Returns the
+        directories no commit references (crashed writes) and temporary
+        log files a crashed commit left (``is_create_temp``). Returns the
         deleted URIs. Time travel to versions older than the horizon
         stops working — same contract as Delta VACUUM.
 
@@ -856,4 +857,12 @@ class TransactionLog:
                     uri = self._checkpoint_uri(cv)
                     if self.fs.delete(uri):
                         deleted.append(uri)
+        # 4) temporary files a crashed create_exclusive left in the log
+        # directories, on the staging grace clock (a live one is younger)
+        for log_dir in (self.log_uri, self._delta_log_dir()):
+            for info in self.fs.list(log_dir):
+                name = info.path.rsplit("/", 1)[-1]
+                if is_create_temp(name) and info.mtime_ms <= stage_horizon_ms:
+                    if self.fs.delete(info.path):
+                        deleted.append(info.path)
         return deleted

@@ -49,10 +49,6 @@ def start_ingest(
         if batch_df.isEmpty():
             return
         engine.write(table, batch_df)
-        # streaming necessarily commits many small files; compact once
-        # the small-file threshold is crossed so read planning stays
-        # flat no matter how long the stream runs (SCALE.md lever)
-        engine.maybe_optimize(table)
 
     writer = stream.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
     if trigger_seconds is not None:
@@ -219,7 +215,6 @@ def start_stateful_ingest(
         if batch_df.isEmpty():
             return
         engine.folder.write_segments(meta, batch_df)
-        engine.maybe_optimize(table)
 
     writer = segs.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint_dir)
     if trigger_seconds is not None:
@@ -376,9 +371,10 @@ def start_vector_ingest(
     single transactional append, so the ``txn=(app_id, epoch)`` replay
     gate recorded atomically with the commit is the whole story — a
     replayed micro-batch is a commit-layer no-op that launches no
-    Spark job. Per-epoch small files are auto-compacted by
-    ``append_to_ivf_index``'s layout-preserving OPTIMIZE cadence, so
-    probe-time file counts stay bounded over long-running streams.
+    Spark job. Per-epoch small files are compacted by the append
+    commit's compaction rule (``DataFolder._stage_and_commit``), whose
+    OPTIMIZE keeps the ``ivf_bucket=`` layout, so probe-time file counts
+    stay bounded over long-running streams.
 
     ``app_id`` defaults to ``vector_ingest_app_id(index_name,
     checkpoint_dir)`` — unique per stream, so concurrent streams into
@@ -683,7 +679,3 @@ def near_dup_ingest_batch(
         epochs_table,
         rows_frame(engine.spark, [(int(epoch_id),)], "epoch BIGINT"),
     )
-    # per-epoch appends are small; compact once the threshold trips so
-    # the corpus and index stay scannable over long-running streams
-    engine.maybe_optimize(table)
-    engine.maybe_optimize(ndi._sigs_table(index_name))

@@ -120,7 +120,6 @@ def start_continuous_rollup(
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         append_batch(engine, table, batch_df, epoch_id, ts_col, value_col, keys, bucket_us)
-        engine.maybe_optimize(table)
 
     writer = stream.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint

@@ -4,11 +4,11 @@ MinHash index — the path the batch probes never exercised.
 
 What it measures, per epoch:
   - wall seconds of the full epoch (within-batch collapse -> index
-    check -> table append -> index append -> epoch marker ->
-    maybe_optimize x2),
+    check -> table append -> index append -> epoch marker; each append
+    compacts its table once the compaction rule trips),
   - live file counts of the corpus table and the signature index
     (fragmentation under per-epoch small appends, and whether the
-    auto-OPTIMIZE cadence keeps them bounded),
+    append-time compaction rule keeps them bounded),
   - rows kept/dropped.
 
 Epoch composition: `dup_frac` of each batch are near-dups of indexed

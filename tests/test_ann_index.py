@@ -250,6 +250,23 @@ def test_optimize_preserves_bucket_partition_layout(engine, emb):
     assert "ivf_bucket" in scan.split("PartitionFilters")[1][:120]
 
 
+def test_small_appends_to_a_wide_index_do_not_recompact(engine, emb):
+    """One file per bucket directory is not mergeable: small appends to
+    a 56-bucket index leave the vectors table uncompacted instead of
+    rewriting all of it on every append."""
+    corpus = emb.withColumn("label", (F.col("vec_id") % 56).cast("int"))
+    ann_index.build_ivf_index(
+        engine, "wide56", corpus.where(F.col("vec_id") < 448), bucket_col="label"
+    )
+    for i in range(4):
+        lo = 448 + 5 * i
+        batch = corpus.where((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 5))
+        assert ann_index.append_to_ivf_index(engine, "wide56", batch)["appended"] == 5
+    ops = [h["op"] for h in engine.folder.history("wide56__vectors")]
+    assert "optimize" not in ops, ops
+    assert engine.table("wide56__vectors").count() == 468
+
+
 def test_optimize_mixed_layout_warns_not_silent(engine, spark, caplog):
     """Writes that disagree on Hive layout make compaction unsafe;
     optimize must refuse LOUDLY (warning + mixed_layouts in the result),

@@ -55,17 +55,16 @@ def _collected(df):
 
 
 def test_fast_path_matches_pandas_decode(mixed):
-    """Dropping the param columns forces the legacy all-pandas decode;
-    results must be identical (bitwise float32) to the split plan."""
+    """A zero fast fraction forces the all-pandas decode; results must
+    be identical (bitwise float32) to the split plan."""
     engine, _ = mixed
     split = _collected(engine.table("m"))
 
     meta = engine.catalog.time_series_metadata("m")
-    legacy_segments = engine.segments("m").drop("param0", "param1", "ts_kind")
     from modelardb_rs_spark.operators import grid as grid_ops
 
-    legacy = _collected(grid_ops.grid(legacy_segments, meta))
-    assert split == legacy
+    pandas_only = _collected(grid_ops.grid(engine.segments("m"), meta, fast_fraction=0.0))
+    assert split == pandas_only
 
 
 def test_roundtrip_through_fast_path(mixed):

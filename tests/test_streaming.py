@@ -417,14 +417,16 @@ def test_near_dup_ingest_id_reuse_does_not_drop_batch(spark, engine):
     assert sorted(r["doc_id"] for r in rows) == [10, 10, 20]
 
 
-def test_auto_optimize_keeps_streaming_file_count_flat(engine, spark, tmp_path):
+def test_auto_optimize_keeps_streaming_file_count_flat(engine, spark, tmp_path, monkeypatch):
     """Long-running ingest must not accumulate unbounded small files:
-    once the small-file threshold is crossed the sink compacts, live
-    file count drops, and the read plan's input stays bounded — with
-    results unchanged (SCALE.md names OPTIMIZE as the lever that keeps
-    plan-time flat at 1000x file counts; this makes it automatic)."""
+    once the mergeable-file threshold is crossed the append compacts,
+    live file count drops, and the read plan's input stays bounded —
+    with results unchanged (SCALE.md names OPTIMIZE as the lever that
+    keeps plan-time flat at 1000x file counts; this makes it automatic)."""
+    import modelardb_rs_spark.sources.datafolder as dfm
+
     engine.read_sql("CREATE TIME SERIES TABLE ao(timestamp TIMESTAMP, f FIELD, tag TAG)")
-    engine.auto_optimize_small_files = 6
+    monkeypatch.setattr(dfm, "COMPACT_MIN_MERGEABLE", 6)
     src = str(tmp_path / "ao_incoming")
     os.makedirs(src)
     stream = (
@@ -448,12 +450,14 @@ def test_auto_optimize_keeps_streaming_file_count_flat(engine, spark, tmp_path):
     assert total == sum(range(600))
 
 
-def test_maybe_optimize_below_threshold_is_noop(engine, spark):
+def test_maybe_optimize_below_threshold_is_noop(engine, spark, monkeypatch):
+    """Appends below the mergeable-file threshold never compact."""
+    import modelardb_rs_spark.sources.datafolder as dfm
+
     engine.create_table("mo", "id BIGINT")
-    engine.auto_optimize_small_files = 10
+    monkeypatch.setattr(dfm, "COMPACT_MIN_MERGEABLE", 10)
     for i in range(3):
         engine.write("mo", spark.createDataFrame([(i,)], "id long"))
-    assert engine.maybe_optimize("mo") is None
     assert len(engine.folder.history("mo")) == 3  # no optimize commit
 
 

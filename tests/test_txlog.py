@@ -12,6 +12,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from modelardb_rs_spark.engine import Engine
+from modelardb_rs_spark.types import segment_schema
 
 TS0 = datetime.datetime(2024, 1, 1, tzinfo=datetime.timezone.utc)
 
@@ -230,9 +231,26 @@ def test_optimize_compacts_small_files(ts_table, spark):
         .collect()[0][0]
         == 240
     )
+    # compacted files store the declared segment columns only: no txn
+    # staging partition as a data column
+    declared = [c for c in segment_schema(meta.tag_columns).fieldNames() if c != "field_column"]
+    assert _live_file_columns(ts_table, "acid") == [declared] * len(snap.files)
     # a second optimize finds nothing worth rewriting (no-op, no commit)
     res = ts_table.optimize("acid")
     assert res["compacted"] == 0 and res["version"] == snap.version
+
+
+def _live_file_columns(engine, name) -> list[list[str]]:
+    """The Parquet schema column names of every live file."""
+    from urllib.parse import urlparse
+
+    import pyarrow.parquet as pq
+
+    table = engine.folder.table_path(name)
+    return [
+        pq.read_schema(urlparse(engine.folder.fs.join(table, f["path"])).path).names
+        for f in engine.folder.log(name).snapshot().files
+    ]
 
 
 def _live_codecs(engine, name) -> set[str]:
@@ -263,6 +281,7 @@ def test_optimize_of_a_normal_table_writes_zstd(engine, spark):
     assert n > 1 and engine.optimize("nz")["compacted"] == n
     assert len(engine.folder.log("nz").snapshot().files) == 1
     assert _live_codecs(engine, "nz") == {"ZSTD"}
+    assert _live_file_columns(engine, "nz") == [["k", "v"]]
     assert engine.read_sql("SELECT count(*) AS n, sum(k) AS s FROM nz").collect()[0] == (40, 780)
 
 
@@ -290,6 +309,73 @@ def test_optimize_aborts_on_concurrent_remove(ts_table, spark):
     finally:
         ts_table.folder.log("acid").commit = real_commit
     assert ts_table.read_sql("SELECT count(f) AS n FROM acid").collect()[0].n == 0
+
+
+def test_optimize_retries_after_losing_to_a_compaction(ts_table, spark):
+    """An OPTIMIZE whose inputs another OPTIMIZE merged first plans again
+    from the fresh snapshot (here: nothing left to merge) instead of
+    failing, and the loser's staged files are deleted at once."""
+    for i in range(3):
+        ts_table.write("acid", points(spark, 10, offset=50 * i))
+    log = ts_table.folder.log("acid")
+    real_commit = log.commit
+    fired = []
+
+    def racing_commit(build, txn=None):
+        if not fired:
+            fired.append(True)
+            ts_table.optimize("acid")  # the winner
+        return real_commit(build, txn=txn)
+
+    log.commit = racing_commit
+    try:
+        res = ts_table.optimize("acid")
+    finally:
+        log.commit = real_commit
+    assert res == {"compacted": 0, "produced": 0, "version": 3}
+    assert [h["op"] for h in ts_table.folder.history("acid")] == ["append"] * 3 + ["optimize"]
+    fs, table = ts_table.folder.fs, ts_table.folder.table_path("acid")
+    staged = {i.path.rsplit("/", 1)[-1] for i in fs.list(table) if i.is_dir and "txn=" in i.path}
+    referenced = {e["path"].split("/", 1)[0] for c in log.commits() for e in c["add"]}
+    assert staged == referenced
+    assert ts_table.read_sql("SELECT count(f) AS n FROM acid").collect()[0].n == 30
+
+
+def test_vacuum_removes_stale_commit_temp_files(ts_table, spark):
+    """A crash between writing create_exclusive's temporary file and
+    unlinking it leaves the file in the log directory; vacuum removes it
+    once it is older than the staging grace."""
+    import os
+    from urllib.parse import urlparse
+
+    ts_table.write("acid", points(spark, 5))
+    log = ts_table.folder.log("acid")
+    tmp = os.path.join(urlparse(log.log_uri).path, ".00000000000000000001.json.0123abcd.tmp")
+    with open(tmp, "wb") as f:
+        f.write(b"{")
+    assert log.versions() == [0]  # never read as a commit
+    assert ts_table.folder.vacuum("acid", retain_seconds=0) == []
+    assert os.path.exists(tmp)  # younger than the default grace
+    assert ts_table.folder.vacuum("acid", retain_seconds=3600, staging_grace_seconds=0) == [
+        "file:" + tmp
+    ]
+    assert not os.path.exists(tmp)
+
+
+def test_create_exclusive_names_the_hard_link_requirement(engine, monkeypatch, tmp_path):
+    """On a local filesystem that refuses hard links the commit fails
+    with an error that says why, and leaves no temporary file."""
+    import errno
+    import os
+
+    def refuse(src, dst):
+        raise PermissionError(errno.EPERM, "Operation not permitted")
+
+    log_dir = tmp_path / "log"
+    monkeypatch.setattr(os, "link", refuse)
+    with pytest.raises(OSError, match="hard link"):
+        engine.folder.fs.create_exclusive("file:" + str(log_dir / "x.json"), b"{}")
+    assert os.listdir(log_dir) == []
 
 
 def test_truncate_cluster(ts_table, spark):
@@ -866,3 +952,149 @@ def test_commit_meta_payload_flows_through_snapshots(engine, spark):
             spark.createDataFrame([Row(timestamp=TS0, f=1.0)]),
             commit_meta={"nope": 1},
         )
+
+
+def _arrow_points(start_s, n, tag="a", fields=("f",)):
+    import pyarrow as pa
+
+    cols = {
+        "timestamp": pa.array(
+            [(int(TS0.timestamp()) + start_s + i) * 1_000_000 for i in range(n)],
+            pa.timestamp("us", tz="UTC"),
+        ),
+    }
+    for k, name in enumerate(fields):
+        cols[name] = pa.array([float((i + k) % 7) for i in range(n)], pa.float32())
+    cols["tag"] = pa.array([tag] * n)
+    return pa.table(cols)
+
+
+def test_appends_compact_at_the_mergeable_threshold(engine, monkeypatch):
+    """The compaction rule runs after an append commit once the small
+    files beyond one per partition directory reach the threshold, and
+    leaves one file per field_column."""
+    import modelardb_rs_spark.sources.datafolder as dfm
+
+    monkeypatch.setattr(dfm, "COMPACT_MIN_MERGEABLE", 5)
+    engine.read_sql("CREATE TIME SERIES TABLE one(timestamp TIMESTAMP, f FIELD, tag TAG)")
+    log = engine.folder.log("one")
+    for i in range(5):  # 5 files in one directory: 4 mergeable
+        engine.write("one", _arrow_points(100 * i, 20))
+    assert [h["op"] for h in engine.folder.history("one")] == ["append"] * 5
+    engine.write("one", _arrow_points(500, 20))  # 5 mergeable: compact
+    assert [h["op"] for h in engine.folder.history("one")][5:] == ["append", "optimize"]
+    assert [f["field_column"] for f in log.snapshot().files] == [0]
+    assert engine.read_sql("SELECT count(f) AS n FROM one").collect()[0].n == 120
+
+
+def test_puts_keep_live_file_count_bounded(engine):
+    """In-process puts into a 2-field table write one file per field;
+    the compaction rule keeps the live file count bounded and the
+    answers unchanged."""
+    import numpy as np
+
+    engine.read_sql(
+        "CREATE TIME SERIES TABLE puts(timestamp TIMESTAMP, a FIELD, b FIELD, tag TAG)"
+    )
+    log = engine.folder.log("puts")
+    a_values = []
+    for i in range(60):
+        batch = _arrow_points(100 * i, 20, tag=f"t{i % 3}", fields=("a", "b"))
+        engine.write("puts", batch)
+        a_values.append(batch.column("a").to_numpy())
+        assert len(log.snapshot().files) <= 50, i
+        if i % 10 == 9 or i == 24:
+            n, s = engine.read_sql("SELECT count(*) AS n, sum(a) AS s FROM puts").collect()[0]
+            truth = np.concatenate(a_values).astype(np.float64)
+            assert (n, s) == (len(truth), truth.sum()), i
+    assert "optimize" in [h["op"] for h in engine.folder.history("puts")]
+
+
+def test_failed_compaction_does_not_fail_the_append(engine, monkeypatch, caplog):
+    """Compaction runs after the append committed: when it fails, the
+    write still returns its version (a retry would append the rows a
+    second time) and the failure is logged."""
+    import modelardb_rs_spark.sources.datafolder as dfm
+
+    def broken(self, name, target_file_bytes=0, tag_columns=None):
+        raise OSError("disk gone")
+
+    monkeypatch.setattr(dfm, "COMPACT_MIN_MERGEABLE", 1)
+    monkeypatch.setattr(dfm.DataFolder, "_compact", broken)
+    engine.read_sql("CREATE TIME SERIES TABLE one(timestamp TIMESTAMP, f FIELD, tag TAG)")
+    engine.create_table("flat", "k INT, v BIGINT")
+    assert engine.write("one", _arrow_points(0, 20)) == 0
+    with caplog.at_level("WARNING", logger=dfm.__name__):
+        assert engine.write("one", _arrow_points(100, 20)) == 1  # 1 mergeable file
+        for version in (0, 1):  # one file per write: the second one trips the rule
+            rows = engine.spark.range(0, 40, 1, 1).selectExpr("CAST(id AS INT) AS k", "id AS v")
+            assert engine.write("flat", rows) == version
+    assert sum("compaction of" in r.getMessage() for r in caplog.records) == 2
+    assert engine.read_sql("SELECT count(f) AS n FROM one").collect()[0].n == 40
+    assert engine.read_sql("SELECT count(*) AS n FROM flat").collect()[0].n == 80
+    assert [h["op"] for h in engine.folder.history("flat")] == ["append", "append"]
+
+
+def test_legacy_segment_files_read_with_nulls_on_every_path(engine):
+    """A segment file written before param0, param1, ts_kind and
+    seg_sum_sq existed reads with NULLs there through the table view,
+    OPTIMIZE, resegment and expire; its points grid exactly and a
+    variance over it is NaN."""
+    import math
+    from urllib.parse import urlparse
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ddl = "CREATE TIME SERIES TABLE {}(timestamp TIMESTAMP, f FIELD, tag TAG)"
+    engine.read_sql(ddl.format("src"))
+    engine.read_sql(ddl.format("leg"))
+    engine.write("src", _arrow_points(0, 40, tag="old"))
+    fs, src = engine.folder.fs, engine.folder.table_path("src")
+    (entry,) = engine.folder.log("src").snapshot().files
+    legacy = pq.read_table(urlparse(fs.join(src, entry["path"])).path).drop_columns(
+        ["param0", "param1", "ts_kind", "seg_sum_sq"]
+    )
+
+    def write_staged(staged: str) -> None:
+        sink = pa.BufferOutputStream()
+        pq.write_table(legacy, sink)
+        fs.write_bytes(
+            fs.join(staged, "field_column=0", "part-legacy.parquet"),
+            sink.getvalue().to_pybytes(),
+        )
+
+    engine.folder._stage_and_commit("leg", write_staged, segment_tags=["tag"])
+
+    def points():
+        return sorted(
+            (r.tag, int(r.timestamp.timestamp()), r.f) for r in engine.table("leg").collect()
+        )
+
+    def null_rows():
+        return engine.segments("leg").where(
+            F.col("param0").isNull() & F.col("param1").isNull()
+            & F.col("ts_kind").isNull() & F.col("seg_sum_sq").isNull()
+        ).count()
+
+    def expected(*batches):
+        return sorted(
+            (tag, int(ts.timestamp()), f)
+            for b in batches
+            for ts, f, tag in zip(*(b.column(c).to_pylist() for c in ("timestamp", "f", "tag")))
+        )
+
+    old = _arrow_points(0, 40, tag="old")
+    assert null_rows() > 0
+    assert points() == expected(old)
+    v, n = engine.read_sql("SELECT var_pop(f) AS v, count(f) AS n FROM leg").collect()[0]
+    assert math.isnan(v) and n == 40
+
+    new = _arrow_points(1000, 40, tag="new")
+    engine.write("leg", new)
+    assert engine.optimize("leg")["compacted"] == 2
+    assert null_rows() > 0 and points() == expected(old, new)
+    engine.folder.resegment(engine.catalog.time_series_metadata("leg"))
+    assert null_rows() > 0 and points() == expected(old, new)
+    engine.expire("leg", TS0 + datetime.timedelta(seconds=20))
+    assert points() == [p for p in expected(old, new) if p[1] >= int(TS0.timestamp()) + 20]
