@@ -1485,10 +1485,11 @@ def _recall_summary(
 
 
 def sim_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with an MLlib-KMeans-trained coarse quantizer: recall@5 vs
-    brute force must clear a floor (seeded index build + probe)."""
+    """IVF with a k-means-trained coarse quantizer (the seeded numpy
+    fit, ``numpy_kmeans_buckets``): recall@5 vs brute force must clear
+    a floor (seeded index build + probe)."""
     (emb,) = _prep(spark, sf_dir, "embeddings")
-    bucketed = sim_ops.kmeans_buckets(emb, k=8)
+    bucketed = sim_ops.numpy_kmeans_buckets(emb, k=8)[0]
     queries = bucketed.where(F.col("vec_id") < 10)
     approx = sim_ops.ivf_topk(bucketed, queries, k=5, nprobe=3, bucket_col="ivf_bucket")
     exact = sim_ops.brute_force_topk(emb, emb.where(F.col("vec_id") < 10), k=5)

@@ -29,9 +29,10 @@ reads, not snapshot-atomic) until their first ``ivf_index_maintenance``
 call upgrades them in place — run maintenance once after deploying to
 get the atomicity guarantee on pre-existing indexes.
 
-Buckets come from a provided column (e.g. a label), a sampled numpy
-k-means coarse quantizer (``similarity.numpy_kmeans_buckets``, the
-default) or a full-corpus MLlib fit (``similarity.kmeans_buckets``);
+Buckets come from a provided column (e.g. a label), whose centroids
+are its per-bucket means (``similarity.bucket_means``), or from the
+one coarse k-means, a seeded numpy fit on a sample
+(``similarity.numpy_kmeans_buckets``, the default);
 ``build_ivf_index``, ``build_ivfpq_index`` and the maintenance rebuild
 share one quantize step (``_coarse_quantize``) and one write-and-commit
 tail (``_write_index``). Every probe (``ivf_index_topk``,
@@ -48,9 +49,8 @@ from pyspark.sql import functions as F
 
 from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators.similarity import (
-    bucket_centroids,
+    bucket_means,
     collect_query_rows,
-    kmeans_buckets,
     nearest_centroids,
     numpy_kmeans_buckets,
 )
@@ -273,27 +273,26 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_sample: int | None = 65536,
+    fit_sample: int = 65536,
 ) -> dict:
     """Build (or rebuild) a persisted IVF index over ``corpus``.
 
     ``bucket_col`` uses an existing integer column as the coarse
     quantizer (deterministic, SQL-reproducible); otherwise k-means
     learns ``n_buckets`` buckets (seeded), fitting IN NUMPY on a
-    bounded seeded hash-ordered sample of ``fit_sample`` vectors —
-    coarse centroids converge on a sample (FAISS trains its coarse
-    quantizers the same way), so no iteration ever scans the full
-    corpus and no MLlib job overhead is paid (SCALE.md "Round-7" for
-    the flat-in-N sampled-fit measurement; TESTDATA.md round-9 for the
-    MLlib-overhead cut); assignment still covers every vector,
-    map-only. On the sampled-fit path the STORED centroids are the
-    fitted quantizer centroids (the FAISS convention — probe
-    assignment then uses exactly the geometry vectors were bucketed
-    with) rather than posterior bucket means, which saves a full
-    posexplode/groupBy corpus pass; ``bucket_col``/MLlib paths keep
-    posterior means (the bucket column carries no geometry of its
-    own). ``fit_sample=None`` restores the historical full-corpus
-    MLlib fit. Returns ``{"n_vectors", "n_buckets"}``.
+    bounded seeded hash-ordered sample of ``fit_sample`` vectors
+    (``similarity.numpy_kmeans_buckets``) — coarse centroids converge
+    on a sample (FAISS trains its coarse quantizers the same way), so
+    no iteration ever scans the full corpus (SCALE.md "Round-7" for the
+    flat-in-N sampled-fit measurement); assignment still covers every
+    vector, map-only. The fit holds ``fit_sample x dim x 8`` bytes on
+    the driver: lower ``fit_sample`` at high dims. On the k-means path
+    the STORED centroids are the fitted quantizer centroids (the FAISS
+    convention — probe assignment then uses exactly the geometry
+    vectors were bucketed with) rather than posterior bucket means,
+    which saves a corpus pass; the ``bucket_col`` path stores posterior
+    means (``similarity.bucket_means`` — the bucket column carries no
+    geometry of its own). Returns ``{"n_vectors", "n_buckets"}``.
     """
     vectors, fitted_C, cent_rows, _ = _coarse_quantize(
         index_name, corpus, bucket_col, n_buckets, id_col, vec_col, seed, fit_sample
@@ -314,41 +313,27 @@ def _coarse_quantize(
     ``fitted_C``/``cent_rows`` carries the geometry.
 
     - ``bucket_col`` set: that column IS the quantizer; ``cent_rows``
-      are the posterior (bucket, mean, count) rows of ONE fused
-      ``bucket_centroids`` scan.
-    - ``fit_sample`` set: seeded numpy k-means on the hash-ordered
-      sample, called through this module's ``numpy_kmeans_buckets``
-      attribute. ``fitted_C`` is the k x dim quantizer and ``fit_X``
-      the sample it was fitted on; counts come later, from the write's
-      own commit statistics.
-    - neither: full-corpus MLlib fit, posterior ``cent_rows`` as for
-      ``bucket_col``."""
-    fitted_C = cent_rows = fit_X = None
+      are its posterior (bucket, mean, count) rows from one
+      ``bucket_means`` job.
+    - otherwise: seeded numpy k-means on the hash-ordered sample,
+      called through this module's ``numpy_kmeans_buckets`` attribute.
+      ``fitted_C`` is the k x dim quantizer and ``fit_X`` the sample it
+      was fitted on; counts come later, from the write's own commit
+      statistics."""
     if bucket_col is not None:
-        bucketed, src = corpus, bucket_col
-    elif fit_sample is not None:
-        try:
-            bucketed, fitted_C, fit_X = numpy_kmeans_buckets(
-                corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
-                fit_sample=fit_sample, return_centroids=True, return_sample=True,
-            )
-        except ValueError as e:
-            raise ValueError(f"index {index_name!r}: {e}") from e
-        src = "ivf_bucket"
-    else:
-        bucketed = kmeans_buckets(
-            corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
+        vectors = corpus.select(
+            F.col(id_col), F.col(vec_col), F.col(bucket_col).cast("int").alias("ivf_bucket")
         )
-        src = "ivf_bucket"
-    vectors = bucketed.select(
-        F.col(id_col), F.col(vec_col), F.col(src).cast("int").alias("ivf_bucket")
-    )
-    if fitted_C is None:
-        cent_rows = [
-            (int(r["ivf_bucket"]), list(r["centroid"]), int(r["n_vectors"]))
-            for r in bucket_centroids(vectors, vec_col, "ivf_bucket").collect()
-        ]
-    return vectors, fitted_C, cent_rows, fit_X
+        return vectors, None, bucket_means(vectors, vec_col, "ivf_bucket"), None
+    try:
+        bucketed, fitted_C, fit_X = numpy_kmeans_buckets(
+            corpus, k=n_buckets, id_col=id_col, vec_col=vec_col, seed=seed,
+            fit_sample=fit_sample,
+        )
+    except ValueError as e:
+        raise ValueError(f"index {index_name!r}: {e}") from e
+    vectors = bucketed.select(F.col(id_col), F.col(vec_col), F.col("ivf_bucket"))
+    return vectors, fitted_C, None, fit_X
 
 
 def _cent_pairs(fitted_C, cent_rows) -> list:
@@ -623,7 +608,7 @@ def build_ivfpq_index(
     seed: int = 42,
     sample: int = 4096,
     iters: int = 10,
-    fit_sample: int | None = 65536,
+    fit_sample: int = 65536,
     opq: bool = False,
     opq_iters: int = 10,
 ) -> dict:
@@ -660,8 +645,9 @@ def build_ivfpq_index(
 
     Both quantizer fits are sample-bounded by default: the PQ codebook
     fit already trains on ``sample`` residuals, and the coarse k-means
-    fits in numpy on ``fit_sample`` seeded hash-ordered vectors (None =
-    full-corpus MLlib fit). On the sampled-fit path the PQ/OPQ training
+    fits in numpy on ``fit_sample`` seeded hash-ordered vectors (lower
+    it at high dims: the fit holds ``fit_sample x dim x 8`` bytes on the
+    driver). On the k-means path the PQ/OPQ training
     residuals are derived DRIVER-SIDE from the coarse-fit sample (both
     samples share the xxhash64(id, seed) ordering, so the codebook
     sample is a prefix of the fit sample; the assignment + float32
@@ -1382,15 +1368,11 @@ def ivf_index_stats(engine, index_name: str, drift: bool = True) -> dict:
     cached centroid rows (n_buckets tiny rows) and the commit log's
     add-entry listing (driver-side, no Spark job) — plus ONE count-only
     aggregate over the partition column (parquet footer counts, no
-    vector data read). ``drift=True`` adds the one narrow full pass the
-    drift number fundamentally needs: per-bucket component sums via
-    ``posexplode`` + a (bucket, position) groupBy — a three-column plan
-    at ANY dim (the round-8 shape generated one sum column per
-    dimension, i.e. thousands of aggregate expressions and codegen
-    fallback at dim 1024-4096); map-side partial aggregation collapses
-    the exploded rows to K x dim per task before the exchange, and the
-    K x dim result is compared to the stored centroids in numpy on the
-    driver.
+    vector data read). ``drift=True`` adds the one full pass the drift
+    number fundamentally needs: the current per-bucket means of the
+    same snapshot from ``similarity.bucket_means`` (one job; each task
+    sends K x dim partial sums, merged before the driver), compared to
+    the stored centroids in numpy on the driver.
 
     Returns::
 
@@ -1457,42 +1439,17 @@ def ivf_index_stats(engine, index_name: str, drift: bool = True) -> dict:
         "n_files": n_files,
     }
     if drift:
-        dim = len(next(iter(built.values()))[0]) if built else 0
         # the raw vector column is the array<float> one that is not the
         # PQ codes (IVF-PQ vectors tables carry both)
+        table = engine.table(vt, version=snap.version)
         vec_col = next(
-            c
-            for c, t in engine.table(vt).dtypes
-            if t.startswith("array") and c != "pq_codes"
+            c for c, t in table.dtypes if t.startswith("array") and c != "pq_codes"
         )
-        # one narrow JVM aggregate, dim-independent: posexplode the
-        # vector and sum per (bucket, position) — 3 plan columns at any
-        # dim; map-side combine bounds the shuffle at K x dim per task
-        sums = (
-            engine.table(vt)
-            .select(
-                "ivf_bucket",
-                F.posexplode(F.col(vec_col).cast("array<double>")).alias(
-                    "__p__", "__x__"
-                ),
-            )
-            .groupBy("ivf_bucket", "__p__")
-            .agg(F.sum("__x__").alias("__s__"), F.count(F.lit(1)).alias("__n__"))
-            .collect()
-        )
-        acc: dict[int, tuple[np.ndarray, int]] = {}
-        for r in sums:
-            b = int(r["ivf_bucket"])
-            if int(r["__p__"]) >= dim:
-                continue  # stored vectors longer than the centroid dim
-            if b not in acc:
-                acc[b] = (np.zeros(dim, dtype=np.float64), int(r["__n__"]))
-            acc[b][0][int(r["__p__"])] = float(r["__s__"])
         drifts = []
-        for b, (comp_sums, n) in acc.items():
-            if b not in built or n == 0:
+        for b, mean, _ in bucket_means(table, vec_col, "ivf_bucket"):
+            if b not in built:
                 continue
-            mean_vec = comp_sums / n
+            mean_vec = np.asarray(mean, dtype=np.float64)
             c = built[b][0]
             denom = np.linalg.norm(mean_vec) * np.linalg.norm(c)
             cos = float(mean_vec @ c / denom) if denom > 0 else 1.0

@@ -80,16 +80,36 @@ def train_pq_codebooks(
 def _driver_sample(
     corpus: DataFrame, id_col: str, vec_col: str, sample: int, seed: int
 ) -> np.ndarray:
-    """The seeded-hash driver sample shared by PQ and OPQ training —
-    one sampler so the two trainers see the SAME rows for the same
-    (corpus, seed)."""
-    rows = (
+    """The seeded-hash driver sample shared by PQ and OPQ training and
+    the coarse k-means fit (``similarity.numpy_kmeans_buckets``) — one
+    sampler so every trainer sees the SAME rows for the same (corpus,
+    seed): the ``sample`` rows first in ``xxhash64(id, seed), id``
+    order, read as one Arrow table. Returns an (n, dim) float64 matrix
+    in that order; a NULL vector is a row of NaN, a NULL element is NaN,
+    and vectors of mixed length raise ``ValueError``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vecs = (
         corpus.select(id_col, vec_col)
         .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
-        .limit(sample)
-        .collect()
+        .limit(int(sample))
+        .toArrow()
+        .column(1)
+        .combine_chunks()
     )
-    return np.asarray([list(r[1]) for r in rows], dtype=np.float64)
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    dims = np.unique(lens[~np.isnan(lens)])
+    if len(dims) > 1:
+        raise ValueError(f"{vec_col}: vectors of mixed length {dims.astype(int).tolist()}")
+    X = np.full((len(vecs), int(dims[0]) if len(dims) else 0), np.nan)
+    live = vecs.is_valid().to_numpy(zero_copy_only=False)
+    if live.any() and X.shape[1]:
+        X[live] = (
+            vecs.filter(pa.array(live)).flatten().to_numpy(zero_copy_only=False)
+            .reshape(-1, X.shape[1])
+        )
+    return X
 
 
 def _fit_books(

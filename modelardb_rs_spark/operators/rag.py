@@ -49,7 +49,7 @@ def fake_embedding(text: Column, dim: int = 8) -> Column:
 
 def chunk_bucket(text: Column, n_buckets: int) -> Column:
     """Deterministic md5 coarse bucket for the stub pipeline (a real
-    build would train kmeans_buckets on the real embeddings)."""
+    build would train numpy_kmeans_buckets on the real embeddings)."""
     return (
         F.conv(F.substring(F.md5(text), 1, 4), 16, 10).cast("long")
         % F.lit(int(n_buckets))
@@ -77,8 +77,8 @@ def build_rag_index(
     pandas_udf wrapping a real embedding model (its output dim need
     not match ``dim``, which only parameterizes the default stub).
     With a real encoder the md5 chunk_bucket is replaced by a learned
-    coarse quantizer (bucket_col=None routes build_ivf_index to
-    KMeans), since text-hash buckets carry no meaning in a real
+    coarse quantizer (bucket_col=None routes build_ivf_index to the
+    numpy k-means fit), since text-hash buckets carry no meaning in a real
     embedding space. Proven by
     tests/test_ann_index.py::test_rag_encoder_seam_swaps_in."""
     chunks = chunk_documents(docs, chunk_chars, overlap_chars, text_col, id_col)

@@ -7,12 +7,14 @@
   with the queries broadcast — at 100 TB this is the right shape for
   small query sets, and the component every ANN variant verifies
   against.
-- **IVF (inverted-file) top-k** — the scale path: k-means-style coarse
-  quantization using per-label centroids (the embeddings table carries a
-  cluster ``label``; a production pipeline would learn centroids with
-  Spark MLlib KMeans). Queries probe only the ``nprobe`` nearest
-  centroids' buckets, cutting the scored pairs by |buckets|/nprobe; the
-  probed rows are scored in one scan of the corpus.
+- **IVF (inverted-file) top-k** — the scale path: coarse quantization
+  by a bucket column, either a natural one (the embeddings table
+  carries a cluster ``label``) or one learned by the one k-means fit,
+  ``numpy_kmeans_buckets``. Centroids are the per-bucket means of the
+  one bucket-mean kernel, ``bucket_means``. Queries probe only the
+  ``nprobe`` nearest centroids' buckets, cutting the scored pairs by
+  |buckets|/nprobe; the probed rows are scored in one scan of the
+  corpus.
 - **Threshold pair counting** — cosine >= t pair enumeration for dedup
   pipelines (embedding-cosine near-dup).
 
@@ -396,7 +398,7 @@ def ivf_topk(
     """Approximate top-k via inverted-file probing.
 
     1. centroid per bucket = element-wise mean of its vectors
-       (``bucket_centroids``, one groupBy, collected to the driver),
+       (``bucket_means``, one job, merged rows on the driver),
     2. each query of the collected query set (bounded by
        ``collect_query_rows``) keeps its ``nprobe`` nearest buckets
        (``pq.probe_buckets``),
@@ -409,83 +411,90 @@ def ivf_topk(
     from modelardb_rs_spark.operators.pq import adc_topk
 
     qrows = collect_query_rows(queries, id_col, vec_col)
-    cents = [
-        tuple(r)
-        for r in bucket_centroids(corpus, vec_col, bucket_col)
-        .select(bucket_col, "centroid")
-        .collect()
-    ]
+    cents = [(b, c) for b, c, _ in bucket_means(corpus, vec_col, bucket_col)]
     scan = corpus.select(
         F.col(id_col), F.col(bucket_col).alias("ivf_bucket"), F.col(vec_col)
     )
     return adc_topk(scan, None, qrows, k, None, id_col, vec_col, cents=cents, nprobe=nprobe)
 
 
-def bucket_centroids(corpus: DataFrame, vec_col: str = "embedding", bucket_col: str = "label") -> DataFrame:
-    """Element-wise mean vector and vector count per bucket:
-    (bucket_col, centroid float array, n_vectors) from ONE groupBy over
-    the exploded dimensions — the index-build half of IVF, persisted by
-    operators/ann_index.py. The count rides the per-(bucket, dim)
-    aggregate (each dim-0 element counts its vector): identical to
-    count(*) for the fixed-dimension non-null vectors the centroid math
-    itself assumes (a zero-length array contributes to neither), and
-    pruned from the plan by consumers that read only the centroid."""
-    exploded = corpus.select(
-        F.col(bucket_col), F.posexplode(F.col(vec_col)).alias("__i__", "__x__")
+def bucket_means(df: DataFrame, vec_col: str = "embedding", bucket_col: str = "label") -> list:
+    """Element-wise mean vector and vector count per bucket, as driver
+    rows ``(bucket, mean, n_vectors)`` sorted by bucket — THE per-bucket
+    mean kernel: the inline ``ivf_topk`` centroids, the ``bucket_col``
+    index builds and ``ann_index.ivf_index_stats``' drift all call it.
+
+    One job: each partition sums its vectors per bucket in numpy over
+    its Arrow batches (``mapInArrow``), and an RDD ``reduceByKey``
+    merges those partials per bucket before they reach the driver, so
+    the driver holds buckets x dim values whatever the partition count.
+    Means are float64 sums divided by the count, rounded to float32 as
+    the stored ``ARRAY<FLOAT>`` centroids are. A NULL or empty vector is
+    skipped; a NaN (or NULL) element makes its bucket's mean NaN there.
+    Vectors of mixed length raise ``ValueError``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from pyspark.sql import types as T
+
+    src = df.select(bucket_col, vec_col)
+    schema = T.StructType(
+        [
+            T.StructField("bucket", src.schema[bucket_col].dataType),
+            T.StructField("dim", T.IntegerType()),
+            T.StructField("n", T.LongType()),
+            T.StructField("sums", T.ArrayType(T.DoubleType())),
+        ]
     )
-    return (
-        exploded.groupBy(bucket_col, "__i__")
-        .agg(F.avg("__x__").alias("__m__"), F.count("*").alias("__c__"))
-        .groupBy(bucket_col)
-        .agg(
-            F.array_sort(F.collect_list(F.struct("__i__", "__m__"))).alias("__s__"),
-            F.max("__c__").alias("n_vectors"),
-        )
-        .select(
-            F.col(bucket_col),
-            F.transform(F.col("__s__"), lambda s: s["__m__"].cast("float")).alias("centroid"),
-            "n_vectors",
-        )
+
+    def partials(batches):
+        acc: dict = {}
+        key_type = None
+        for batch in batches:
+            key_type = batch.column(0).type
+            vecs = batch.column(1)
+            lens = pc.list_value_length(vecs).fill_null(0).to_numpy(zero_copy_only=False)
+            enc = pc.dictionary_encode(batch.column(0), null_encoding="encode")
+            keys = enc.dictionary.to_pylist()
+            groups = enc.indices.to_numpy(zero_copy_only=False)
+            for d in np.unique(lens[lens > 0]):
+                rows = lens == d
+                X = vecs.filter(pa.array(rows)).flatten().to_numpy(zero_copy_only=False)
+                X = X.astype(np.float64).reshape(-1, d)
+                g = groups[rows]
+                for j in np.unique(g):
+                    sel = g == j
+                    n, s = acc.get((keys[j], int(d)), (0, 0.0))
+                    acc[(keys[j], int(d))] = (n + int(sel.sum()), s + X[sel].sum(axis=0))
+        if acc:
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([b for b, _ in acc], type=key_type),
+                    pa.array([d for _, d in acc], type=pa.int32()),
+                    pa.array([n for n, _ in acc.values()], type=pa.int64()),
+                    pa.array([s.tolist() for _, s in acc.values()], type=pa.list_(pa.float64())),
+                ],
+                names=["bucket", "dim", "n", "sums"],
+            )
+
+    # one reduce task: it holds what the driver holds, buckets x dim
+    merged = (
+        src.mapInArrow(partials, schema)
+        .rdd.map(lambda r: ((r[0], r[1]), (r[2], np.asarray(r[3]))))
+        .reduceByKey(lambda a, b: (a[0] + b[0], a[1] + b[1]), 1)
+        .collect()
     )
-
-
-def kmeans_buckets(
-    corpus: DataFrame,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_sample: int | None = None,
-) -> DataFrame:
-    """Train an IVF coarse quantizer with Spark MLlib KMeans and assign
-    every vector its bucket — the index-build step for ``ivf_topk`` when
-    no natural cluster column exists. Returns the corpus plus an
-    ``ivf_bucket`` int column; assignment is a map-only transform.
-
-    ``fit_sample`` bounds the TRAINING set: the fit runs on that many
-    vectors ranked by a seeded hash of their id (the
-    ``pq.train_pq_codebooks`` sampling contract — deterministic and
-    content-unbiased, unlike lowest-ids-first on a corpus whose ids
-    track ingest time), while assignment still covers every vector.
-    Coarse centroids converge on a sample (k << sample works fine);
-    iterating MLlib over the full corpus buys nothing at 100TB scale.
-    Default None keeps the historical full-corpus fit for small/exact
-    callers."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector, vector_to_array
-
-    with_vec = corpus.withColumn("__mlvec__", array_to_vector(F.col(vec_col).cast("array<double>")))
-    fit_input = with_vec
-    if fit_sample is not None:
-        fit_input = (
-            with_vec.select(id_col, "__mlvec__")
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
-            .limit(int(fit_sample))
-        )
-    model = KMeans(k=k, seed=seed, featuresCol="__mlvec__", predictionCol="ivf_bucket").fit(
-        fit_input
+    dims = sorted({d for (_, d), _ in merged})
+    if len(dims) > 1:
+        raise ValueError(f"{vec_col}: vectors of mixed length {dims} cannot be averaged")
+    return sorted(
+        (
+            (b, (s / n).astype(np.float32).tolist(), n)
+            for (b, _), (n, s) in merged
+        ),
+        key=lambda r: (r[0] is not None, r[0]),
     )
-    return model.transform(with_vec).drop("__mlvec__")
 
 
 def nearest_centroids(X, C, n: int = 1):
@@ -574,102 +583,72 @@ def numpy_kmeans_buckets(
     seed: int = 42,
     fit_sample: int = 4096,
     iters: int = 10,
-    return_centroids: bool = False,
-    return_sample: bool = False,
+    nprobe: int = 1,
 ):
-    """``kmeans_buckets`` without the MLlib job overhead: Lloyd's
-    iterations run in numpy on a bounded seeded hash-ordered sample
-    collected to the driver (the ``pq.train_pq_codebooks`` sampling
-    contract — FAISS trains its coarse quantizers the same way,
-    in-core on a sample), and assignment is the map-only
-    literal-centroid scan shared with
-    ``kmeans_multiprobe_assignments``. Same output contract as
-    ``kmeans_buckets`` (corpus + ``ivf_bucket``); different (equally
-    valid) clusterings — callers whose results must reproduce a
-    specific MLlib clustering keep ``kmeans_buckets``. Preferred for
-    index BUILDS, where a fit over a few thousand sampled vectors was
-    paying ~10 MLlib jobs of pure scheduling overhead (measured in
-    TESTDATA.md's per-entry runtimes, round-9). Driver memory is
-    ``fit_sample x dim x 8`` bytes (65536 x 64-dim = 33 MB; at dim
-    4096 drop ``fit_sample`` to ~8192 or use ``kmeans_buckets``) plus
-    one <= 32 MB ``nearest_centroids`` chunk per Lloyd step — the fit
-    is ``pq._fit_books`` with a single subspace.
-    ``return_centroids=True`` also returns the fitted k x dim float64
-    centroid matrix so index builds can store the quantizer centroids
-    directly (the FAISS convention) instead of re-scanning the corpus
-    for posterior bucket means. ``return_sample=True`` additionally
-    returns the collected hash-ordered sample matrix itself (float64,
-    in ``xxhash64(id, seed), id`` order): a PQ/OPQ codebook fit over
-    the SAME (corpus, seed) samples a PREFIX of exactly these rows
-    (``pq._driver_sample`` shares the ordering contract), so index
-    builds can derive their codebook training set driver-side instead
-    of paying a second full-corpus TopK collect."""
+    """THE coarse k-means: train an IVF quantizer of ``k`` centroids and
+    assign every vector its bucket(s). Returns ``(assigned, C, X)``:
+    ``assigned`` is the corpus plus an ``ivf_bucket`` int column, ``C``
+    the fitted k x dim float64 centroids (index builds store them as
+    the quantizer, the FAISS convention) and ``X`` the collected
+    sample, float64 in ``xxhash64(id, seed), id`` order.
+
+    The fit runs in numpy on the driver, over the ``fit_sample`` rows of
+    ``pq._driver_sample`` — the sampler PQ/OPQ codebook training uses,
+    so a codebook sample of the same (corpus, seed) is a PREFIX of
+    ``X`` and index builds derive it driver-side. FAISS trains coarse
+    quantizers the same way, in-core on a sample. Sample rows with a
+    NULL vector or a NaN element are left out of the fit (a NaN row
+    would poison its centroid and with it every assignment);
+    ``ValueError`` when none remain. Seeding is k-means++ (Arthur and
+    Vassilvitskii, SODA 2007): each next centroid is drawn by D^2
+    sampling from the seeded rng. Lloyd then runs ``iters`` steps of
+    ``pq._fit_books`` with a single subspace, warm-started from the
+    seeds.
+
+    Driver memory is ``fit_sample x dim x 8`` bytes (65536 x 64-dim =
+    33 MB) plus one <= 32 MB ``nearest_centroids`` chunk per Lloyd
+    step. There is no distributed fit to fall back on: at high dims
+    lower ``fit_sample`` (at dim 4096, ~8192).
+
+    Assignment is map-only (``_numpy_centroid_assign``). ``nprobe > 1``
+    emits one row per (vector, probed bucket), its ``nprobe`` nearest
+    centroids nearest first — the multi-probe assignment that recovers
+    cluster-BOUNDARY pairs for ``semantic_dedup``: a near-dup pair split
+    across adjacent clusters still meets in one of them."""
     import numpy as np
 
-    from modelardb_rs_spark.operators.pq import _fit_books
+    from modelardb_rs_spark.operators.pq import _driver_sample, _fit_books
 
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
-        .limit(int(fit_sample))
-        .collect()
-    )
-    if not rows:
-        raise ValueError("numpy_kmeans_buckets: the corpus is empty, nothing to fit")
-    X = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
-    C = _fit_books(X, 1, k, iters, np.random.default_rng(seed))[0]
-    assigned = _numpy_centroid_assign(corpus, C, vec_col, nprobe=1)
-    if return_centroids and return_sample:
-        return assigned, C, X
-    return (assigned, C) if return_centroids else assigned
-
-
-def kmeans_multiprobe_assignments(
-    corpus: DataFrame,
-    k: int = 16,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_sample: int | None = None,
-) -> DataFrame:
-    """The corpus plus an ``ivf_bucket`` column, one row per (vector,
-    probed bucket) — each vector appears with its ``nprobe`` NEAREST
-    centroids (squared-Euclidean, KMeans' own metric; ties broken by
-    bucket id) —
-    the multi-probe assignment that recovers cluster-BOUNDARY recall for
-    ``semantic_dedup``: a near-dup pair split across adjacent clusters
-    still meets in one of them when each vector also joins its
-    runner-up cluster. Candidate cost is ~``nprobe``^2 x (every
-    bucket's effective membership multiplies by ``nprobe`` and
-    within-bucket pairs are quadratic in membership), but with the
-    numpy-matmul verify that growth disappears into BLAS throughput:
-    the measured end-to-end wall at nprobe=2 is ~1.2x the nprobe=1
-    line (SCALE.md "Round-9" — the round-8 crossJoin+window assignment
-    plus join-based verify cost 16x). Same fit as ``kmeans_buckets``
-    (seeded, optionally sample-bounded); assignment is MAP-ONLY via
-    ``_numpy_centroid_assign`` (batch numpy distance scan, centroids
-    in the UDF closure) — no shuffle, no window, no N x k intermediate
-    ever leaves the batch."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    with_vec = corpus.withColumn(
-        "__mlvec__", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    fit_input = with_vec
-    if fit_sample is not None:
-        fit_input = (
-            with_vec.select(id_col, "__mlvec__")
-            .orderBy(F.xxhash64(F.col(id_col), F.lit(seed)), F.col(id_col))
-            .limit(int(fit_sample))
+    X = _driver_sample(corpus, id_col, vec_col, int(fit_sample), seed)
+    fit = X[~np.isnan(X).any(axis=1)] if X.shape[1] else X[:0]
+    if not len(fit):
+        raise ValueError(
+            "numpy_kmeans_buckets: the corpus is empty or every sampled vector "
+            "is NULL or holds a NaN, nothing to fit"
         )
-    model = KMeans(
-        k=k, seed=seed, featuresCol="__mlvec__", predictionCol="ivf_bucket"
-    ).fit(fit_input)
-    return _numpy_centroid_assign(
-        corpus, model.clusterCenters(), vec_col, nprobe=nprobe
-    )
+    rng = np.random.default_rng(seed)
+    C = _fit_books(fit, 1, k, iters, rng, [_kmeanspp(fit, k, rng)])[0]
+    return _numpy_centroid_assign(corpus, C, vec_col, nprobe), C, X
+
+
+def _kmeanspp(X, k: int, rng):
+    """min(k, len(X)) k-means++ seeds from the rows of ``X``: the first
+    uniformly, each next one with probability proportional to its
+    squared distance to the nearest seed so far (uniformly once every
+    row is a seed's duplicate)."""
+    import numpy as np
+
+    C = [X[rng.integers(len(X))]]
+    d2 = ((X - C[0]) ** 2).sum(axis=1)
+    for _ in range(min(k, len(X)) - 1):
+        cum = np.cumsum(d2)
+        if cum[-1] > 0:
+            i = int(np.searchsorted(cum, rng.random() * cum[-1], side="right"))
+        else:
+            i = int(rng.integers(len(X)))
+        C.append(X[min(i, len(X) - 1)])
+        d2 = np.minimum(d2, ((X - C[-1]) ** 2).sum(axis=1))
+    return np.array(C)
 
 
 def _signature_keys(
@@ -976,7 +955,7 @@ def semantic_near_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    fit_sample: int | None = 65536,
+    fit_sample: int = 65536,
     assignments: DataFrame | None = None,
     nprobe: int = 1,
     max_bucket_rows: int | str | None = None,
@@ -989,14 +968,15 @@ def semantic_near_pairs(
     ``semantic_dedup``'s candidate+verify core, exposed so recall
     audits and custom survivor policies can consume the pairs directly.
 
-    ``nprobe > 1`` assigns each vector to its ``nprobe`` nearest
-    clusters (``kmeans_multiprobe_assignments``): pairs straddling a
-    cluster BOUNDARY — the paper's documented recall trade — get a
-    second chance to meet, at ~``nprobe``^2 x candidate cost (bucket
-    membership multiplies by ``nprobe``; within-bucket pairs are
-    quadratic in it). NaN-bearing vectors are excluded from
-    clustering (their cosine is NaN — they can never pair; MLlib
-    rejects them anyway).
+    The clustering is ``numpy_kmeans_buckets`` on a ``fit_sample``
+    sample. ``nprobe > 1`` assigns each vector to its ``nprobe``
+    nearest clusters: pairs straddling a cluster BOUNDARY — the
+    paper's documented recall trade — get a second chance to meet, at
+    ~``nprobe``^2 x candidate cost (bucket membership multiplies by
+    ``nprobe``; within-bucket pairs are quadratic in it); the measured
+    end-to-end wall at nprobe=2 is ~1.2x the nprobe=1 line (SCALE.md
+    "Round-9"). NaN-bearing vectors are excluded from clustering and
+    pairing: their cosine is NaN, so they can never pair.
 
     Plan shape (round-9, chosen after MEASURING three designs at 50k
     vectors / 12.5M candidates, SCALE.md "Round-9"): the corpus
@@ -1040,30 +1020,20 @@ def semantic_near_pairs(
     cache released before returning. ``nprobe > 1`` dedups pairs that
     co-occur in several probed buckets with a distinct over SURVIVORS,
     not candidates."""
-    has_nan = F.exists(F.col(vec_col), F.isnan)
     if assignments is not None:
         assigned = corpus.select(id_col, vec_col).join(
             assignments.select(id_col, "ivf_bucket"), id_col
         )
-    elif nprobe > 1:
-        assigned = kmeans_multiprobe_assignments(
-            corpus.where(~has_nan).select(id_col, vec_col),
-            k=n_clusters,
-            nprobe=nprobe,
-            id_col=id_col,
-            vec_col=vec_col,
-            seed=seed,
-            fit_sample=fit_sample,
-        )
     else:
-        assigned = kmeans_buckets(
-            corpus.where(~has_nan).select(id_col, vec_col),
+        assigned = numpy_kmeans_buckets(
+            corpus.where(~F.exists(F.col(vec_col), F.isnan)).select(id_col, vec_col),
             k=n_clusters,
             id_col=id_col,
             vec_col=vec_col,
             seed=seed,
             fit_sample=fit_sample,
-        ).select(id_col, vec_col, "ivf_bucket")
+            nprobe=nprobe,
+        )[0]
     from pyspark.sql import types as T
 
     id_type = corpus.schema[id_col].dataType
@@ -1189,9 +1159,9 @@ def semantic_dedup(
     Scale shape (the paper's own design point): clustering caps the
     pairwise work at sum(n_b^2) ~ N^2/k instead of N^2 — pick
     ``n_clusters`` ~ sqrt(N)/c to hold per-cluster membership near
-    constant. The KMeans fit runs on a bounded seeded hash-ordered
-    sample (``fit_sample``, the ``pq.train_pq_codebooks`` contract) —
-    never a full-corpus MLlib iterate — and ``assignments`` skips the
+    constant. The k-means fit (``numpy_kmeans_buckets``) runs on a
+    bounded seeded hash-ordered sample (``fit_sample``, the
+    ``pq._driver_sample`` contract), and ``assignments`` skips the
     fit entirely by reusing an EXISTING clustering as a DataFrame of
     (id_col, ivf_bucket), e.g. a persisted ANN index's
     ``<name>__vectors`` table (``ann_index.build_ivf_index``), so one
@@ -1236,8 +1206,8 @@ def semantic_dedup(
     if collapse_exact and threshold > 1.0:
         collapse_exact = False
     # NaN-bearing vectors can never be duplicates (their cosine is NaN,
-    # failing every threshold) and MLlib KMeans rejects them outright —
-    # route them around the clustering; they are always kept.
+    # failing every threshold): semantic_near_pairs routes them around
+    # the clustering, so they are always kept.
     has_nan = F.exists(F.col(vec_col), F.isnan)
     work = corpus
     if collapse_exact:
@@ -1254,11 +1224,11 @@ def semantic_dedup(
             .agg(F.min(F.col(id_col)).alias(id_col))
             .select(id_col, vec_col)
         )
-        # The collapsed frame feeds FIVE independent subtrees (the KMeans
+        # The collapsed frame feeds FIVE independent subtrees (the k-means
         # fit action, both sides of the candidate self-join, the vector
         # re-attach, the final kept semi-join): persist it so the
-        # collapse shuffle runs once, not per branch. The MLlib fit —
-        # an eager action — populates the cache before the lazy
+        # collapse shuffle runs once, not per branch. The fit's sample
+        # collect — an eager action — populates the cache before the lazy
         # branches need it. At 100 TB this is the collapsed (id,
         # vector) projection, which is the whole point of collapsing.
         from pyspark import StorageLevel

@@ -1,8 +1,8 @@
-"""Semantic-dedup scale probe: the round-5/7 verdict asked for a
->= 1M-vector measurement showing (a) the KMeans FIT cost stays bounded
-when it runs on a fixed-size seeded sample instead of the full corpus,
-and (b) the within-cluster pairwise work tracks ~N^2/k, i.e. the
-n_clusters lever works as the SemDeDup paper claims.
+"""Semantic-dedup scale probe: a >= 1M-vector measurement showing (a)
+the k-means FIT cost stays bounded because it runs on a fixed-size
+seeded sample (``numpy_kmeans_buckets``), and (b) the within-cluster
+pairwise work tracks ~N^2/k, i.e. the n_clusters lever works as the
+SemDeDup paper claims.
 
 Corpus: the sf embeddings table (2000 x 64-dim at sf0.1) replicated
 N x with a deterministic per-copy perturbation (JVM `transform`, no
@@ -12,8 +12,8 @@ base vector stay near-duplicates (cos ~ 0.999) — a realistic dup-heavy
 corpus where dedup has real work to do.
 
 Measured:
-  - kmeans fit wall time: full-corpus fit vs fit_sample=65536 at
-    increasing N (the sample fit must stay ~flat),
+  - k-means fit + assignment wall time with fit_sample=65536 at
+    increasing N (the fit must stay ~flat; assignment is one map pass),
   - within-cluster candidate-pair count vs the N^2/k prediction at
     several k (the pairwise-work lever),
   - end-to-end semantic_dedup wall time at the largest N with the
@@ -87,18 +87,10 @@ def main() -> None:
             n = corpus.count()
             run = {"n_copies": n_copies, "n_vectors": n}
 
-            # fit cost: the full-corpus MLlib iterate (the pre-round-7
-            # path) only at the two SMALLEST sizes — its growth is the
-            # point, and at 1M+ it is exactly the cost we refuse to pay;
-            # the sampled fit runs at every size to show it stays flat.
-            if n_copies in sizes[:2]:
-                t0 = time.time()
-                sim.kmeans_buckets(corpus, k=64, fit_sample=None).select(
-                    F.max("ivf_bucket")
-                ).collect()
-                run["fit_full_s"] = round(time.time() - t0, 1)
+            # fit cost: the sampled fit runs at every size to show it
+            # stays flat
             t0 = time.time()
-            buckets = sim.kmeans_buckets(corpus, k=64, fit_sample=65536)
+            buckets = sim.numpy_kmeans_buckets(corpus, k=64, fit_sample=65536)[0]
             buckets.select(F.max("ivf_bucket")).collect()
             run["fit_sampled_s"] = round(time.time() - t0, 1)
 
@@ -106,7 +98,7 @@ def main() -> None:
             # counted from cluster sizes (an aggregate — the pairs are
             # never materialized here)
             for k in (64, 256):
-                b = sim.kmeans_buckets(corpus, k=k, fit_sample=65536).select(
+                b = sim.numpy_kmeans_buckets(corpus, k=k, fit_sample=65536)[0].select(
                     "vec_id", "ivf_bucket"
                 )
                 sizes_df = b.groupBy("ivf_bucket").count()

@@ -683,9 +683,8 @@ def test_ivf_rebuild_is_one_atomic_commit_and_mirror_resyncs(engine, emb):
     from modelardb_rs_spark.operators.similarity import numpy_kmeans_buckets
 
     corpus = engine.table(vt).select("vec_id", "embedding")
-    bucketed, fitted_C = numpy_kmeans_buckets(
+    bucketed, fitted_C, _ = numpy_kmeans_buckets(
         corpus, k=8, id_col="vec_id", vec_col="embedding", seed=7,
-        return_centroids=True,
     )
     vectors = bucketed.select(
         "vec_id", "embedding", F.col("ivf_bucket").cast("int").alias("ivf_bucket")
@@ -796,9 +795,8 @@ def _swap_geometry(engine, vt, k, seed=7):
     from modelardb_rs_spark.operators.similarity import numpy_kmeans_buckets
 
     corpus = engine.table(vt).select("vec_id", "embedding")
-    bucketed, fitted_C = numpy_kmeans_buckets(
+    bucketed, fitted_C, _ = numpy_kmeans_buckets(
         corpus, k=k, id_col="vec_id", vec_col="embedding", seed=seed,
-        return_centroids=True,
     )
     vectors = bucketed.select(
         "vec_id", "embedding", F.col("ivf_bucket").cast("int").alias("ivf_bucket")
@@ -1537,3 +1535,97 @@ def test_flat_ivf_query_set_is_bounded(engine, spark, emb, path):
             ann_index.ivf_index_topk(engine, "boundidx", queries, k=5)
         else:
             similarity.ivf_topk(emb, queries, k=5)
+
+
+def test_bucket_means_match_numpy_truth(spark):
+    """The one bucket-mean kernel: float64 sums over partitions merged
+    per bucket, means rounded to float32. A NULL vector is skipped, a
+    NaN element makes that bucket's mean NaN there, and the counts are
+    the non-NULL vectors. Vectors of mixed length raise."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    vecs = rng.normal(size=(60, 6)).astype(np.float32)
+    rows = [(int(i % 4), [float(x) for x in v]) for i, v in enumerate(vecs)]
+    rows.append((1, None))
+    rows[6] = (2, [float(x) for x in vecs[6][:3]] + [float("nan")] + [float(x) for x in vecs[6][4:]])
+    df = spark.createDataFrame(rows, "b INT, v ARRAY<FLOAT>").repartition(3)
+    got = similarity.bucket_means(df, "v", "b")
+    assert [b for b, _, _ in got] == [0, 1, 2, 3]
+    for b, mean, n in got:
+        X = np.asarray([r[1] for r in rows if r[0] == b and r[1] is not None], dtype=np.float64)
+        assert n == len(X)
+        truth = X.mean(axis=0).astype(np.float32)
+        assert np.array_equal(np.asarray(mean, np.float32), truth, equal_nan=True)
+    assert np.isnan(got[2][1][3]) and not np.isnan(got[2][1][2])
+    mixed = spark.createDataFrame(
+        [(0, [1.0, 2.0]), (0, [1.0, 2.0, 3.0]), (1, [4.0, 5.0])], "b INT, v ARRAY<FLOAT>"
+    )
+    with pytest.raises(ValueError, match="mixed length"):
+        similarity.bucket_means(mixed, "v", "b")
+
+
+def test_kmeans_multiprobe_first_probe_is_the_nprobe1_bucket(emb):
+    """``nprobe=2`` emits every vector twice, its nearest centroid
+    first, from the same fit as ``nprobe=1``."""
+    import numpy as np
+
+    one, C1, _ = similarity.numpy_kmeans_buckets(emb, k=6)
+    two, C2, _ = similarity.numpy_kmeans_buckets(emb, k=6, nprobe=2)
+    assert np.array_equal(C1, C2)
+    first = {r["vec_id"]: r["ivf_bucket"] for r in one.collect()}
+    probes: dict = {}
+    for r in two.collect():
+        probes.setdefault(r["vec_id"], []).append(r["ivf_bucket"])
+    assert probes.keys() == first.keys()
+    assert all(len(p) == 2 and p[0] == first[i] and p[1] != p[0] for i, p in probes.items())
+
+
+def test_nan_vector_does_not_collapse_kmeans_build(engine, spark, emb):
+    """One all-NaN vector in the corpus must not enter the fit: it
+    would average into a centroid, make it NaN and send every vector's
+    argmin to bucket 0."""
+    emb = emb.select("vec_id", "embedding")
+    nan_row = spark.range(1).selectExpr(
+        "CAST(1000000 AS BIGINT) AS vec_id",
+        "array_repeat(CAST('NaN' AS FLOAT), 64) AS embedding",
+    )
+    stats = ann_index.build_ivf_index(
+        engine, "nanidx", emb.unionByName(nan_row), bucket_col=None, n_buckets=8
+    )
+    assert stats["n_buckets"] == 8 and stats["n_vectors"] == 501
+    with pytest.raises(ValueError, match="NaN"):
+        similarity.numpy_kmeans_buckets(nan_row, k=2)
+    with pytest.raises(TypeError):
+        similarity.numpy_kmeans_buckets(emb, k=2, fit_sample=None)
+
+
+def _warm_jobs(spark, group: str, fn) -> int:
+    """Spark jobs of ``fn`` run once more, after a warm-up run, under
+    job group ``group``."""
+    sc = spark.sparkContext
+    fn()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bucket_means_and_its_callers_job_counts(spark, emb):
+    """Warm job counts: the bucket-mean kernel runs 1 job (partials per
+    partition, one ``reduceByKey`` merge); a single-query inline
+    ``ivf_topk`` at most 4 (query collect, bucket means, the rank's
+    shuffle stage and result; 6 with the posexplode centroid pass); a
+    ``semantic_dedup`` with the numpy fit at most 12 (30 with the MLlib
+    fit)."""
+    means = lambda: similarity.bucket_means(emb, "embedding", "label")  # noqa: E731
+    assert _warm_jobs(spark, "bucket_means_jobs", means) == 1
+    q = emb.where(F.col("vec_id") == 3)
+    probe = lambda: similarity.ivf_topk(emb, q, k=10, nprobe=2, bucket_col="label").collect()  # noqa: E731
+    assert _warm_jobs(spark, "inline_ivf_jobs", probe) <= 4
+    dedup = lambda: similarity.semantic_dedup(emb, threshold=0.999, n_clusters=8).count()  # noqa: E731
+    assert _warm_jobs(spark, "semantic_dedup_jobs", dedup) <= 12

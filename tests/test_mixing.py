@@ -485,7 +485,7 @@ class TestSemanticDedup:
     def test_reuses_external_assignments(self, vecs):
         # a precomputed clustering (e.g. a persisted IVF index's vectors
         # table) skips the KMeans fit entirely
-        from modelardb_rs_spark.operators.similarity import kmeans_buckets
+        from modelardb_rs_spark.operators.similarity import numpy_kmeans_buckets
 
         dups = vecs.where(F.col("vec_id") % 5 == 0).select(
             (F.col("vec_id") + 1000).alias("vec_id"),
@@ -494,7 +494,7 @@ class TestSemanticDedup:
             ),
         )
         corpus = vecs.unionByName(dups)
-        assigns = kmeans_buckets(corpus, k=4).select("vec_id", "ivf_bucket")
+        assigns = numpy_kmeans_buckets(corpus, k=4)[0].select("vec_id", "ivf_bucket")
         kept = {r["vec_id"] for r in semantic_dedup(
             corpus, threshold=0.999, assignments=assigns
         ).select("vec_id").collect()}

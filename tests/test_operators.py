@@ -320,7 +320,7 @@ def test_lsh_topk_finds_cluster_neighbors(vectors):
 
 
 def test_kmeans_trained_ivf_recall(vectors):
-    bucketed = sim_ops.kmeans_buckets(vectors, k=4, vec_col="embedding")
+    bucketed = sim_ops.numpy_kmeans_buckets(vectors, k=4, vec_col="embedding")[0]
     queries = bucketed.where(F.col("vec_id") % 25 == 0)
     exact = {
         (r.query_id, r.neighbor_id)
