@@ -49,8 +49,14 @@ from pyspark.sql import functions as F
 
 from modelardb_rs_spark.frames import rows_frame
 from modelardb_rs_spark.operators.similarity import (
+    _block_rows,
+    _chunk_plan,
+    _round6_half_away,
+    _vector_matrices,
+    best_peers,
     bucket_means,
     collect_query_rows,
+    cosine_blocks,
     nearest_centroids,
     numpy_kmeans_buckets,
 )
@@ -61,22 +67,6 @@ _BOOKS_SCHEMA = "subspace INT, code INT, centroid ARRAY<FLOAT>"
 
 def _vectors_table(index_name: str) -> str:
     return f"{index_name}__vectors"
-
-
-def _round6_half_away(x):
-    """Round to 6 decimals HALF-AWAY-FROM-ZERO: matches DuckDB's
-    round(), and approximates Spark's F.round — Spark rounds the
-    double's SHORTEST-DECIMAL representation (BigDecimal HALF_UP)
-    while this rounds the binary value via floor(|x|*1e6+0.5), so the
-    two can disagree for values whose binary form sits just below a .5
-    decimal boundary (e.g. 0.1234565). Good enough for the numpy gate
-    paths whose oracles are DuckDB; Column-side F.round stays the rule
-    where exact Spark parity is needed. numpy's np.round is
-    half-to-even and would diverge from the SQL oracles exactly on the
-    .5 boundaries a low-entropy corpus can hit."""
-    import numpy as np
-
-    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
 
 def _entry_bucket_counts(add_entries: list[dict]) -> dict[int, int] | None:
@@ -891,7 +881,9 @@ def semantic_dedup_check(
     otherwise the ContextCleaner frees them when the returned plan is
     garbage-collected. The batch then COGROUPS
     with the probed bucket slices of the vectors table and each
-    bucket's bipartite cosine block runs as chunked numpy matmul —
+    bucket's bipartite cosine block runs as chunked numpy matmul
+    (``similarity.best_peers`` over ``similarity.cosine_blocks``, the
+    block function of every near-pair verify) —
     candidate pairs never exist as rows, only per-(query, bucket) bests
     do (<= |batch| x nprobe rows). One exchange of the probed corpus
     slices on the bucket key + one |batch|-sized exchange; the
@@ -907,9 +899,10 @@ def semantic_dedup_check(
     than the cap split into hash chunks and the verify runs one
     (bucket, chunk) task per corpus chunk, with the batch's rows
     replicated to each (the bipartite form of ``semantic_near_pairs``'s
-    chunked verify; re-transfer grows by ~n_b/M for that bucket, the
-    price of distributing the work). ``"auto"`` (default) applies the
-    family's median-anchored rule — max(``auto_chunk_floor``,
+    chunked verify, through the same ``similarity._chunk_plan``; one
+    chunk per bucket is the same plan; re-transfer grows by ~n_b/M for
+    that bucket, the price of distributing the work). ``"auto"``
+    (default) applies the family's median-anchored rule — max(``auto_chunk_floor``,
     ``auto_chunk_median_mult`` x median built bucket size) — computed
     from the centroid metadata's per-bucket counts, so sizing costs
     ZERO extra jobs; built counts lag post-build appends, which can
@@ -930,7 +923,7 @@ def semantic_dedup_check(
 
     Approximate exactly as IVF probing is approximate: a near-dup whose
     match lives outside the probed buckets is missed (raise
-    ``nprobe``). NaN/zero-norm vectors never match (NaN cosine fails
+    ``nprobe``). NULL/NaN/zero-norm vectors never match (NaN cosine fails
     every threshold — masked BEFORE the per-bucket max, so a degenerate
     indexed vector cannot shadow a true duplicate in its bucket);
     self-id pairs are excluded. ``_probe_counter`` is test
@@ -946,10 +939,16 @@ def semantic_dedup_check(
     buckets_np = np.asarray([b for b, _, _ in cent_rows], dtype="int64")
     C = np.asarray([c for _, c, _ in cent_rows], dtype=np.float64)
     cent_map = {int(b): np.asarray(c, dtype=np.float64) for b, c, _ in cent_rows}
-    k = len(C)
-    npb = max(1, min(int(nprobe), k))
-    Cn = np.sqrt((C * C).sum(axis=1))
+    npb = max(1, min(int(nprobe), len(C)))
     thr = float(threshold)
+    # chunk plan from index METADATA (built per-bucket counts): zero
+    # extra jobs; stale counts under appends only under-chunk
+    chunk = _chunk_plan(
+        {int(b): int(n) for b, _, n in cent_rows},
+        max_bucket_rows,
+        auto_chunk_floor,
+        auto_chunk_median_mult,
+    )
 
     q = new_vectors.select(
         F.col(id_col).alias("__qid__"), F.col(vec_col).alias("__qv__")
@@ -968,15 +967,12 @@ def semantic_dedup_check(
                 continue
             if _probe_counter is not None:
                 _probe_counter.add(len(pdf))
-            V = np.stack(pdf["__qv__"].to_numpy()).astype(np.float64, copy=False)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (V @ C.T) / (
-                    np.sqrt((V * V).sum(axis=1))[:, None] * Cn[None, :]
-                )
-            # NaN query rows rank arbitrarily here; their verify cosines
-            # are NaN and masked below, so they can never flag
-            cos = np.nan_to_num(cos, nan=-np.inf)
-            top = np.argsort(-cos, axis=1, kind="stable")[:, :npb]
+            top = np.empty((len(pdf), npb), dtype=np.intp)
+            for s, cos in cosine_blocks(pdf["__qv__"], C):
+                # NULL or NaN query rows rank arbitrarily here; their
+                # verify cosines are NaN too, so they can never flag
+                cos = np.nan_to_num(cos, nan=-np.inf)
+                top[s : s + len(cos)] = np.argsort(-cos, axis=1, kind="stable")[:, :npb]
             out = pdf.iloc[np.repeat(np.arange(len(pdf)), npb)].reset_index(drop=True)
             out["ivf_bucket"] = buckets_np[top.reshape(-1)].astype("int32")
             yield out
@@ -992,27 +988,6 @@ def semantic_dedup_check(
     probed_buckets = [
         int(r["ivf_bucket"]) for r in probed.select("ivf_bucket").distinct().collect()
     ]
-
-    # chunk plan from index METADATA (built per-bucket counts): zero
-    # extra jobs; stale counts under appends only under-chunk
-    sizes = {int(b): int(n) for b, _, n in cent_rows}
-    if max_bucket_rows is None:
-        cap = None
-    elif isinstance(max_bucket_rows, str):
-        if max_bucket_rows != "auto":
-            raise ValueError(
-                f"max_bucket_rows must be an int, None, or 'auto', got {max_bucket_rows!r}"
-            )
-        counts = sorted(sizes.values())
-        med = counts[len(counts) // 2] if counts else 0
-        cap = max(1, int(auto_chunk_floor), int(auto_chunk_median_mult) * med)
-    elif max_bucket_rows <= 0:
-        raise ValueError(f"max_bucket_rows must be positive, got {max_bucket_rows}")
-    else:
-        cap = int(max_bucket_rows)
-    nchunks = {b: (-(-sizes.get(b, 1) // cap) if cap else 1) for b in probed_buckets}
-    chunked = any(nc > 1 for nc in nchunks.values())
-
     base = engine.table(vt, version=snap.version).where(
         F.col("ivf_bucket").isin(probed_buckets)
     )
@@ -1050,32 +1025,13 @@ def semantic_dedup_check(
             F.col(vec_col).alias("__nv__"),
             "ivf_bucket",
         )
-    if chunked:
-        nchunks_df = rows_frame(
-            engine.spark, sorted(nchunks.items()), "ivf_bucket INT, __nc__ INT"
-        )
-        corpus = (
-            corpus.join(F.broadcast(nchunks_df), "ivf_bucket")
-            .withColumn(
-                "__cj__",
-                F.pmod(F.xxhash64(F.col("__nid__")), F.col("__nc__")).cast("int"),
-            )
-            .drop("__nc__")
-        )
-        # each batch row joins every chunk task of its probed bucket —
-        # the bipartite analog of semantic_near_pairs' (chunk_i, chunk_j)
-        left = (
-            probed.join(F.broadcast(nchunks_df), "ivf_bucket")
-            .withColumn("__cj__", F.explode(F.sequence(F.lit(0), F.col("__nc__") - 1)))
-            .drop("__nc__")
-        )
-    else:
-        corpus = corpus.withColumn("__cj__", F.lit(0))
-        left = probed.withColumn("__cj__", F.lit(0))
+    # each corpus row lands in its chunk's task, and each batch row
+    # joins every chunk task of its probed bucket — the bipartite form
+    # of semantic_near_pairs' (chunk_i, chunk_j) plan
+    corpus = chunk(corpus, "__nid__")
+    left = chunk(probed, partners=True)
 
-    nid_type = (
-        base.schema[id_col].dataType if use_pq else corpus.schema["__nid__"].dataType
-    )
+    nid_type = base.schema[id_col].dataType
     out_schema = T.StructType(
         [
             T.StructField("__qid__", q.schema["__qid__"].dataType, True),
@@ -1085,93 +1041,13 @@ def semantic_dedup_check(
         ]
     )
 
-    def _self_frame(left_pdf):
-        """Batch-vs-batch block for one probed bucket (run in the cj==0
-        task only, where every batch row of the bucket is present):
-        best strictly-smaller-id peer per query, exact cosine."""
-        import pandas as pd
-
-        order = np.argsort(left_pdf["__qid__"].to_numpy(), kind="stable")
-        ids = left_pdf["__qid__"].to_numpy()[order]
-        Q = np.stack(left_pdf["__qv__"].to_numpy()[order]).astype(
-            np.float64, copy=False
-        )
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        out_q, out_n, out_c = [], [], []
-        bs = max(1, (1 << 22) // max(len(Q), 1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for s in range(0, len(Q), bs):
-                cos = _round6_half_away(
-                    (Q[s : s + bs] @ Q.T) / (qn[s : s + bs, None] * qn[None, :])
-                )
-                cos = np.where(np.isnan(cos), -np.inf, cos)
-                # only strictly-smaller ids are admissible representatives
-                # (ids sorted asc, so argmax ties pick the smallest peer)
-                cos = np.where(ids[None, :] < ids[s : s + bs, None], cos, -np.inf)
-                best_j = np.argmax(cos, axis=1)
-                best = cos[np.arange(len(best_j)), best_j]
-                keep = best >= thr
-                out_q.append(ids[s : s + bs][keep])
-                out_n.append(ids[best_j[keep]])
-                out_c.append(best[keep])
-        oq = np.concatenate(out_q)
-        return pd.DataFrame(
-            {
-                "__qid__": oq,
-                "dup_of": np.concatenate(out_n),
-                "dup_cos": np.concatenate(out_c),
-                "__exact__": np.ones(len(oq), dtype=bool),
-            }
-        )
-
-    def _exact_bipartite(left_pdf, right_pdf):
-        import pandas as pd
-
-        # corpus slice sorted by id: np.argmax then returns the SMALLEST
-        # id among equal-max cosines — the (cos desc, id asc) tie rule
-        order = np.argsort(right_pdf["__nid__"].to_numpy(), kind="stable")
-        nids = right_pdf["__nid__"].to_numpy()[order]
-        Xn = np.stack(right_pdf["__nv__"].to_numpy()[order]).astype(
-            np.float64, copy=False
-        )
-        nn = np.sqrt((Xn * Xn).sum(axis=1))
-        qids = left_pdf["__qid__"].to_numpy()
-        Q = np.stack(left_pdf["__qv__"].to_numpy()).astype(np.float64, copy=False)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        out_q, out_n, out_c = [], [], []
-        bs = max(1, (1 << 22) // max(len(Xn), 1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for s in range(0, len(Q), bs):
-                cos = _round6_half_away(
-                    (Q[s : s + bs] @ Xn.T) / (qn[s : s + bs, None] * nn[None, :])
-                )
-                # NaN (degenerate vectors) and self-id pairs never match
-                cos = np.where(np.isnan(cos), -np.inf, cos)
-                cos = np.where(nids[None, :] == qids[s : s + bs, None], -np.inf, cos)
-                best_j = np.argmax(cos, axis=1)
-                best = cos[np.arange(len(best_j)), best_j]
-                keep = best >= thr
-                out_q.append(qids[s : s + bs][keep])
-                out_n.append(nids[best_j[keep]])
-                out_c.append(best[keep])
-        oq = np.concatenate(out_q)
-        return pd.DataFrame(
-            {
-                "__qid__": oq,
-                "dup_of": np.concatenate(out_n),
-                "dup_cos": np.concatenate(out_c),
-                "__exact__": np.ones(len(oq), dtype=bool),
-            }
-        )
-
     def _adc_bipartite(bucket, left_pdf, right_pdf):
         """ADC-score the batch against one corpus chunk's CODES and keep
         the top-``s_short`` candidates per query (exact re-rank happens
-        downstream on the pooled shortlist)."""
-        import pandas as pd
-
+        downstream on the pooled shortlist). Returns ``(query_ids,
+        peer_ids, adc)`` arrays."""
         qids = left_pdf["__qid__"].to_numpy()
-        Q = np.stack(left_pdf["__qv__"].to_numpy()).astype(np.float64, copy=False)
+        (Q,) = _vector_matrices(left_pdf["__qv__"])
         qn = np.sqrt((Q * Q).sum(axis=1))
         # OPQ index: codes live in the rotated residual space, so the
         # LUT side reads Q @ R; the bucket scalar and norms stay raw
@@ -1186,7 +1062,7 @@ def semantic_dedup_check(
         n_c = len(nids)
         s_eff = min(s_short, n_c)
         out_q, out_n, out_c = [], [], []
-        bs = max(1, (1 << 22) // max(n_c, 1))
+        bs = _block_rows(n_c)
         with np.errstate(divide="ignore", invalid="ignore"):
             for st in range(0, len(Q), bs):
                 Qb = Q[st : st + bs]
@@ -1210,41 +1086,35 @@ def semantic_dedup_check(
                 out_q.append(np.repeat(qids[st : st + bs], idx.shape[1])[keep])
                 out_n.append(nids[idx.reshape(-1)][keep])
                 out_c.append(vals[keep])
-        oq = np.concatenate(out_q)
-        return pd.DataFrame(
-            {
-                "__qid__": oq,
-                "dup_of": np.concatenate(out_n),
-                "dup_cos": np.concatenate(out_c),
-                "__exact__": np.zeros(len(oq), dtype=bool),
-            }
-        )
+        return np.concatenate(out_q), np.concatenate(out_n), np.concatenate(out_c)
 
     def pair_fn(key, left_pdf, right_pdf):
         import pandas as pd
 
-        parts = []
+        qids, qv = left_pdf["__qid__"].to_numpy(), left_pdf["__qv__"]
+        parts = [(qids[:0], qids[:0], np.empty(0), True)]
+        # batch-vs-batch runs in the chunk-0 task only, where every
+        # batch row of the bucket is present
         if within_batch and int(key[1]) == 0 and len(left_pdf) > 1:
-            parts.append(_self_frame(left_pdf))
+            parts.append((*best_peers(qids, qv, thr), True))
         if len(left_pdf) and len(right_pdf):
             if use_pq:
-                parts.append(_adc_bipartite(key[0], left_pdf, right_pdf))
+                parts.append((*_adc_bipartite(key[0], left_pdf, right_pdf), False))
             else:
-                parts.append(_exact_bipartite(left_pdf, right_pdf))
-        if not parts:
-            return pd.DataFrame(
-                {
-                    "__qid__": left_pdf["__qid__"].iloc[:0],
-                    "dup_of": left_pdf["__qid__"].iloc[:0],
-                    "dup_cos": np.array([], dtype=np.float64),
-                    "__exact__": np.array([], dtype=bool),
-                }
-            )
-        return pd.concat(parts, ignore_index=True)
+                nids = right_pdf["__nid__"].to_numpy()
+                parts.append((*best_peers(qids, qv, thr, nids, right_pdf["__nv__"]), True))
+        return pd.DataFrame(
+            {
+                "__qid__": np.concatenate([p[0] for p in parts]),
+                "dup_of": np.concatenate([p[1] for p in parts]),
+                "dup_cos": np.concatenate([p[2] for p in parts]),
+                "__exact__": np.concatenate([np.full(len(p[0]), p[3]) for p in parts]),
+            }
+        )
 
     bests = (
-        left.groupby("ivf_bucket", "__cj__")
-        .cogroup(corpus.groupby("ivf_bucket", "__cj__"))
+        left.groupby("ivf_bucket", "__o__")
+        .cogroup(corpus.groupby("ivf_bucket", "__c__"))
         .applyInPandas(pair_fn, out_schema)
     )
     # global best across the query's probed buckets (and chunks),

@@ -21,8 +21,8 @@
 Which cosine form is canonical for which shape (the SCALE.md "Round-9"
 operational rule, measured):
 
-- **Per-CANDIDATE-pair scoring over an unbounded pair stream** (LSH /
-  blocking candidates, brute-force and threshold pair joins): the
+- **Per-CANDIDATE-pair scoring over an unbounded pair stream** (LSH
+  top-k candidates, brute-force and threshold pair joins): the
   Arrow-batched numpy ``cosine_batch_udf`` — the interpreted
   ``zip_with``/``aggregate`` Column form is CodegenFallback at ~100us
   per evaluation, which IS the wall once the expression is evaluated
@@ -31,11 +31,15 @@ operational rule, measured):
   chain instead: fully JVM-side (no Arrow transfer of pair-expanded
   vectors), but it costs ~dim x 6 py4j calls of PLAN build, so it only
   pays above ~10^6 scored pairs with a known small dim.
-- **Whole-BUCKET quadratic verifies** (semantic dedup): one chunked
-  numpy matmul per bucket inside ``applyInPandas``
-  (``_bucket_near_pairs_fn``) — candidates never exist as rows; a hot
-  bucket distributes EXACTLY via ``max_bucket_rows`` (one task per
-  chunk pair, ``_chunk_pair_fn``).
+- **Whole-BUCKET quadratic verifies** (semantic dedup, the LSH
+  near-dup leg ``embedding_near_dup_pairs``, the ingest gate
+  ``ann_index.semantic_dedup_check``): one block function,
+  ``cosine_blocks`` (chunked numpy matmul, ~32 MB blocks, NaN for
+  NULL/NaN/zero-norm vectors), inside ``applyInPandas`` — candidates
+  never exist as rows. The all-pairs verify is ``_near_pairs_fn``, the
+  gate's best-peer reduction ``best_peers``; a hot bucket distributes
+  EXACTLY through the one chunk plan ``_chunk_plan`` (``max_bucket_rows``:
+  one task per chunk pair, or per corpus chunk in the gate).
 - **Per-(row, centroid) assignment** (k-means fit and assign,
   multi-probe, PQ encode): the chunked numpy kernel
   ``nearest_centroids`` — on executors inside
@@ -57,8 +61,6 @@ from __future__ import annotations
 import pandas as pd  # noqa: F401 — pandas_udf resolves pd.Series hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from modelardb_rs_spark.frames import rows_frame
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -119,7 +121,7 @@ def cosine_batch_udf():
     yielded NULL for NULLs; both are dropped by every caller's guard) —
     note a Spark-side ``cos >= t`` compare PASSES NaN (NaN > any
     double), so callers thresholding the result must pair it with a
-    ``~isnan`` guard (as ``embedding_near_dup_pairs`` does).
+    ``~isnan`` guard (as ``cosine_threshold_pairs`` does).
 
     Marked NON-DETERMINISTIC as an optimizer fence, not as a semantic
     statement (the function is a pure cosine): every ranking caller
@@ -317,11 +319,12 @@ def mmr_rerank(
     memory is N x dim + N^2 scores, bounded by the pool size, and
     queries distribute freely (no driver-side query collect, unlike
     the LUT paths — this re-rank serves unbounded query tables).
-    Pairwise sims round to 6 decimals like every cosine in this module
-    so ranks can't flip across engines; ties break to the smallest
-    neighbor id; the empty-selected-set similarity term is 0. NaN-rel
-    candidates never arrive (ranked_topk drops them) and zero-norm
-    pairwise sims count as 0 via try-divide semantics."""
+    Pairwise sims come from ``cosine_blocks`` and round to 6 decimals
+    with ``_round6_half_away`` (DuckDB's round) so ranks can't flip
+    across engines; ties break to the smallest neighbor id; the
+    empty-selected-set similarity term is 0. NaN-rel candidates never
+    arrive (ranked_topk drops them) and NULL or zero-norm pairwise sims
+    count as 0 via try-divide semantics."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -344,17 +347,9 @@ def mmr_rerank(
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         ids = pdf["neighbor_id"].to_numpy()
         rel = pdf["cos"].to_numpy().astype(np.float64)
-        V = np.stack(pdf["__nv__"].to_numpy()).astype(np.float64, copy=False)
         n = len(ids)
-        norms = np.sqrt((V * V).sum(axis=1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            raw = (V @ V.T) / (norms[:, None] * norms[None, :])
-        # round HALF-AWAY-FROM-ZERO (floor(|x|*1e6 + 0.5)), matching
-        # Spark's F.round and DuckDB's round() — np.round is half-even
-        # and would disagree with the SQL oracle exactly on the .5
-        # boundaries a low-entropy corpus can hit
-        sims = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-        sims = np.nan_to_num(sims, nan=0.0)
+        raw = np.concatenate([b for _, b in cosine_blocks(pdf["__nv__"])])
+        sims = np.nan_to_num(_round6_half_away(raw), nan=0.0)
         # first pick: S is empty, the similarity term is 0 by
         # convention, so the score is lam * rel for every candidate
         pick = int(np.lexsort((ids, -(lam64 * rel)))[0])
@@ -497,6 +492,115 @@ def bucket_means(df: DataFrame, vec_col: str = "embedding", bucket_col: str = "l
     )
 
 
+def _block_rows(n: int) -> int:
+    """Rows per block so that a block of ``n`` float64 values per row
+    stays at ~32 MB (4M values) whatever the sizes."""
+    return max(1, (1 << 22) // max(n, 1))
+
+
+def _round6_half_away(x):
+    """Round to 6 decimals HALF-AWAY-FROM-ZERO: matches DuckDB's
+    round(), and approximates Spark's F.round — Spark rounds the
+    double's SHORTEST-DECIMAL representation (BigDecimal HALF_UP)
+    while this rounds the binary value via floor(|x|*1e6+0.5), so the
+    two can disagree for values whose binary form sits just below a .5
+    decimal boundary (e.g. 0.1234565). Good enough for the numpy gate
+    paths whose oracles are DuckDB; Column-side F.round stays the rule
+    where exact Spark parity is needed. numpy's np.round is
+    half-to-even and would diverge from the SQL oracles exactly on the
+    .5 boundaries a low-entropy corpus can hit."""
+    import numpy as np
+
+    return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
+
+
+def _vector_matrices(*sets):
+    """float64 matrices of vector sets that share one dimension, the
+    length of the first non-NULL vector. A set is a pandas Series or a
+    numpy array of vectors, or already a 2-D matrix. A NULL vector
+    becomes a zero row, whose zero norm makes every cosine it enters
+    NaN; a vector of another length raises ``ValueError``."""
+    import numpy as np
+
+    cols = [s.to_numpy() if hasattr(s, "to_numpy") else s for s in sets]
+    vecs = (v for c in cols for v in (c[:1] if c.ndim == 2 else c) if v is not None)
+    dim = len(next(vecs, ()))
+    out = []
+    for c in cols:
+        if c.ndim == 2:
+            out.append(c.astype(np.float64, copy=False))
+            continue
+        ok = np.fromiter((v is not None for v in c), dtype=bool, count=len(c))
+        X = np.zeros((len(c), dim))
+        if ok.any():
+            X[ok] = np.stack(c[ok])
+        out.append(X)
+    return out
+
+
+def cosine_blocks(a, b=None):
+    """THE near-pair cosine kernel: float64 cosines of every vector of
+    ``a`` against every vector of ``b`` (``b=None``: ``a`` against
+    itself, stacked once), yielded as ``(s, block)`` for rows ``s ..
+    s + len(block)`` of ``a``. Block rows follow ``_block_rows(len(b))``,
+    so a block holds ~32 MB whatever the set sizes, and the memory bound
+    is the vectors themselves. The all-pairs SemDeDup and LSH verify
+    (``_near_pairs_fn``), the ingest gate's best-peer reduction
+    (``best_peers``) and probe, and the MMR re-rank all score through
+    it. NULL, NaN-bearing and zero-norm vectors give NaN cosines, and a
+    NaN fails every ``>=`` threshold compare."""
+    import numpy as np
+
+    if b is None:
+        (A,) = _vector_matrices(a)
+        B = A
+    else:
+        A, B = _vector_matrices(a, b)
+    na = np.sqrt((A * A).sum(axis=1))
+    nb = na if b is None else np.sqrt((B * B).sum(axis=1))
+    bs = _block_rows(len(B))
+    for s in range(0, len(A), bs):
+        with np.errstate(divide="ignore", invalid="ignore"):
+            block = (A[s : s + bs] @ B.T) / (na[s : s + bs, None] * nb[None, :])
+        yield s, block
+
+
+def best_peers(qids, qvecs, threshold: float, pids=None, pvecs=None):
+    """The ingest gate's best-peer reduction: for every query vector,
+    its best peer by cosine rounded with ``_round6_half_away``, ties to
+    the smallest peer id. Returns ``(query_ids, peer_ids, cos)`` arrays
+    for the queries whose best clears ``threshold``. With no peers
+    given, the queries are their own peers and only a strictly smaller
+    peer id is admissible (the within-batch rule); otherwise any peer
+    with another id is. NaN cosines are never best."""
+    import numpy as np
+
+    own = pids is None
+    if own:
+        pids, (P,) = qids, _vector_matrices(qvecs)
+    else:
+        Q, P = _vector_matrices(qvecs, pvecs)
+    # peers sorted by id: argmax then takes the SMALLEST id among
+    # equal-max cosines, the (cos desc, id asc) rule
+    order = np.argsort(pids, kind="stable")
+    pids, P = pids[order], P[order]
+    if own:
+        qids, Q = pids, P
+    out_q, out_p, out_c = [qids[:0]], [pids[:0]], [np.empty(0)]
+    for s, cos in cosine_blocks(Q, None if own else P):
+        q = qids[s : s + len(cos)]
+        ok = pids[None, :] < q[:, None] if own else pids[None, :] != q[:, None]
+        cos = _round6_half_away(cos)
+        cos = np.where(ok & ~np.isnan(cos), cos, -np.inf)
+        j = np.argmax(cos, axis=1)
+        best = cos[np.arange(len(j)), j]
+        keep = best >= threshold
+        out_q.append(q[keep])
+        out_p.append(pids[j[keep]])
+        out_c.append(best[keep])
+    return np.concatenate(out_q), np.concatenate(out_p), np.concatenate(out_c)
+
+
 def nearest_centroids(X, C, n: int = 1):
     """Indices of the ``n`` nearest rows of the centroid matrix ``C``
     (k x dim) for every row of ``X`` (N x dim), by squared Euclidean
@@ -514,7 +618,7 @@ def nearest_centroids(X, C, n: int = 1):
     import numpy as np
 
     k, dim = C.shape
-    chunk = max(1, (1 << 22) // max(k * dim, 1))
+    chunk = _block_rows(k * dim)
     out = np.empty((len(X), n) if n > 1 else len(X), dtype=np.intp)
     for s in range(0, len(X), chunk):
         Xc = X[s : s + chunk]
@@ -660,6 +764,7 @@ def _signature_keys(
     id_col: str,
     vec_col: str,
     out_id: str,
+    keep_vec: bool = False,
 ) -> DataFrame:
     """(out_id, __t__, __sig__) — one sign-LSH signature row per (row,
     hash table), from fixed pseudo-random hyperplanes (deterministic in
@@ -672,7 +777,9 @@ def _signature_keys(
     evaluated each plane's dot interpreted per row. The hyperplane
     matrix rides the UDF closure; map-only, no shuffle. The id column
     passes through with its INPUT type (long, string, ...) — the
-    output schema is derived from the input field, not hardcoded."""
+    output schema is derived from the input field, not hardcoded.
+    ``keep_vec`` also carries the vector column on every row. A row
+    with a NULL vector gets no signature, so it is nobody's candidate."""
     import numpy as np
     import pandas as pd
 
@@ -685,6 +792,7 @@ def _signature_keys(
             T.StructField("__t__", T.IntegerType(), False),
             T.StructField("__sig__", T.IntegerType(), False),
         ]
+        + ([df.schema[vec_col]] if keep_vec else [])
     )
     rng = np.random.default_rng(seed)
     H2 = rng.normal(0.0, 1.0, (tables, planes, dim)).reshape(tables * planes, dim)
@@ -701,7 +809,7 @@ def _signature_keys(
                 .sum(-1)
                 .astype("int32")
             )
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
                     out_id: np.repeat(pdf[id_col].to_numpy(), tables),
                     "__t__": np.tile(
@@ -710,8 +818,15 @@ def _signature_keys(
                     "__sig__": sigs.reshape(-1),
                 }
             )
+            if keep_vec:
+                out[vec_col] = np.repeat(pdf[vec_col].to_numpy(), tables)
+            yield out
 
-    return df.select(id_col, vec_col).mapInPandas(fn, out_schema)
+    return (
+        df.select(id_col, vec_col)
+        .where(F.col(vec_col).isNotNull())
+        .mapInPandas(fn, out_schema)
+    )
 
 
 def embedding_near_dup_pairs(
@@ -729,47 +844,38 @@ def embedding_near_dup_pairs(
 
     Corpus×corpus at scale, so no broadcast anywhere: rows are bucketed
     by (hash table, sign signature) and candidates are pairs sharing a
-    bucket in ANY of the ``tables`` tables — a self equi-join on the
-    bucket key carrying ids only (the vectors are re-fetched by id after
-    candidate dedup). Exact cosine then verifies every candidate —
-    vectorized (``cosine_batch_udf``), since the candidate stream is
-    unbounded and a per-pair interpreted cosine is the ~100us trap of
-    SCALE.md "Round-9" — so precision is 1 by construction; recall is
+    bucket in ANY of the ``tables`` tables. Each bucket is verified
+    whole, like a SemDeDup cluster: the signature rows carry their
+    vectors, one exchange groups them by (table, signature), and the
+    all-pairs body ``_near_pairs_fn`` scores the bucket with
+    ``cosine_blocks`` — candidate pairs never exist as rows, only
+    survivors do, and a pair meeting in several tables is reduced to
+    one row after the verify (the ``nprobe > 1`` shape of
+    ``semantic_near_pairs``). Precision is 1 by construction; recall is
     the standard multi-table sign-LSH guarantee (near-identical vectors
-    share all sign bits). A pathologically dense bucket (m rows → m²
-    candidate pairs) is the skew risk; ``planes`` is the blocking-
-    granularity lever and AQE's skew-join handles residual imbalance.
+    share all sign bits). Arrow transfer is ``tables`` x corpus. A
+    pathologically dense bucket (m rows) serializes its m² scores into
+    one task, in ~32 MB blocks, with its m vectors in that task's
+    memory; ``planes`` is the blocking-granularity lever.
 
-    Zero-norm vectors (NaN cosine) are explicitly EXCLUDED: Spark and
-    DuckDB both treat NaN as greater than any double, so a bare
-    ``cos >= threshold`` replay would pair a degenerate vector with
-    every bucket peer. All near-pair paths share this policy
-    (``semantic_near_pairs``' numpy compare rejects NaN the same way);
-    a SQL oracle replaying the threshold must add the NaN guard."""
+    ``cos`` is the 6-digit Spark ``F.round`` of the cosine, and the
+    threshold applies to that rounded value: the kernel keeps raw
+    cosines >= ``threshold`` - 1e-6 and the rounded compare decides.
+    Zero-norm and NULL vectors are explicitly EXCLUDED: a NaN cosine
+    fails every compare (Spark and DuckDB both treat NaN as greater
+    than any double, so a bare ``cos >= threshold`` replay would pair a
+    degenerate vector with every bucket peer). All near-pair paths
+    share this policy; a SQL oracle replaying the threshold must add
+    the NaN guard."""
     keys = _signature_keys(
-        corpus, tables, planes, dim, seed, id_col, vec_col, "__id__"
+        corpus, tables, planes, dim, seed, id_col, vec_col, "__id__", keep_vec=True
     )
-    a_keys = keys.select(F.col("__id__").alias("id_a"), "__t__", "__sig__")
-    b_keys = keys.select(F.col("__id__").alias("id_b"), "__t__", "__sig__")
-    cands = (
-        a_keys.join(b_keys, ["__t__", "__sig__"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    vecs = corpus.select(
-        F.col(id_col).alias("__vid__"), F.col(vec_col).alias("__v__")
-    )
-    cos_udf = cosine_batch_udf()
     return (
-        cands.join(vecs.withColumnRenamed("__vid__", "id_a"), "id_a")
-        .withColumnRenamed("__v__", "__av__")
-        .join(vecs.withColumnRenamed("__vid__", "id_b"), "id_b")
-        .withColumn(
-            "cos", F.round(cos_udf(F.col("__av__"), F.col("__v__")), 6)
-        )
+        _near_pairs(keys, ["__t__", "__sig__"], float(threshold) - 1e-6, vec_col)
+        .withColumn("cos", F.round(F.col("cos"), 6))
         .where(~F.isnan(F.col("cos")) & (F.col("cos") >= threshold))
-        .select("id_a", "id_b", "cos")
+        .groupBy("id_a", "id_b")
+        .agg(F.max("cos").alias("cos"))
     )
 
 
@@ -852,100 +958,140 @@ def cosine_threshold_pairs(
     )
 
 
-def _bucket_near_pairs_fn(threshold: float, vec_col: str):
-    """``applyInPandas`` body for the within-bucket near-pair verify:
-    the bucket's cosine matrix in chunked numpy matmuls (BLAS), one
-    output row per surviving pair with ``id_a < id_b`` strictly by id
-    (duplicate ids never pair, either orientation emitted once —
-    exactly the join-based semantics). Block size is capped so the
-    in-flight block x m score matrix stays ~32 MB regardless of bucket
-    size; the bucket's own vectors (m x dim doubles) are the real
-    memory bound, as they are for any per-bucket design. Zero-norm
-    rows produce NaN cosines, which FAIL the numpy ``>=`` compare —
-    deliberately NOT the retired join form's semantics (Spark and
-    DuckDB order NaN above any double, so ``cos >= t`` there PASSED
-    zero-norm vectors against every bucket peer); every near-pair
-    path now shares this never-pair-NaN policy, and a SQL oracle
-    replaying the threshold needs an explicit NaN guard."""
+def _near_pairs_fn(threshold: float, vec_col: str, chunked: bool = False):
+    """``applyInPandas`` body of every all-pairs near-pair verify: one
+    ``(id_a, id_b, cos)`` row, ``id_a < id_b``, per pair of the group
+    whose raw cosine (``cosine_blocks``) is >= ``threshold``. A group is
+    a SemDeDup bucket, an LSH (table, signature) bucket, or —
+    ``chunked`` — one (bucket, chunk_i, chunk_j) task of the hot-bucket
+    chunk plan (``_chunk_plan``), whose rows carry their chunk in
+    ``__c__`` and whose last two key values are chunk_i and chunk_j.
+
+    A whole group, or a diagonal task (chunk_i == chunk_j), is the
+    triangle case: every pair with a strictly larger second id, so
+    duplicate ids never pair and each unordered pair is emitted once.
+    An off-diagonal task is the cross case: chunk_i rows against
+    chunk_j rows with equal ids masked, so even a partitioner that
+    splits a duplicated id across chunks emits no (x, x) pair. Every
+    unordered pair of a bucket lands in exactly one task, so the
+    chunked union is the one-task output, with per-task memory bounded
+    by two chunks. NaN cosines (NULL, NaN-bearing or zero-norm vectors)
+    fail the numpy ``>=`` compare — the never-pair-NaN policy every
+    near-pair path shares; a SQL oracle replaying the threshold needs
+    an explicit NaN guard."""
     import numpy as np
     import pandas as pd
 
-    def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        m = len(pdf)
-        if m < 2:
-            empty = pdf["__id__"].iloc[:0]
-            return pd.DataFrame({"id_a": empty, "id_b": empty})
-        ids = pdf["__id__"].to_numpy()
-        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-        norms = np.sqrt((V * V).sum(axis=1))
-        out_a, out_b = [], []
-        bs = max(1, (1 << 22) // m)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for s in range(0, m, bs):
-                block = V[s : s + bs] @ V.T
-                cos = block / (norms[s : s + bs, None] * norms[None, :])
-                ii, jj = np.nonzero(cos >= threshold)
-                keep = ids[jj] > ids[s + ii]
-                out_a.append(ids[s + ii[keep]])
-                out_b.append(ids[jj[keep]])
+    def fn(key, pdf):
+        ids, vecs = pdf["__id__"].to_numpy(), pdf[vec_col]
+        cross = chunked and key[-2] != key[-1]
+        if cross:
+            c = pdf["__c__"].to_numpy()
+            a, b = c == key[-2], c == key[-1]
+            ids_a, ids_b = ids[a], ids[b]
+            blocks = cosine_blocks(vecs[a], vecs[b])
+        else:
+            ids_a = ids_b = ids
+            blocks = cosine_blocks(vecs)
+        out_a, out_b, out_c = [ids[:0]], [ids[:0]], [np.empty(0)]
+        for s, cos in blocks:
+            ii, jj = np.nonzero(cos >= threshold)
+            ia, ib = ids_a[s + ii], ids_b[jj]
+            keep = ia != ib if cross else ib > ia
+            out_a.append(np.minimum(ia[keep], ib[keep]))
+            out_b.append(np.maximum(ia[keep], ib[keep]))
+            out_c.append(cos[ii[keep], jj[keep]])
         return pd.DataFrame(
-            {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
+            {
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "cos": np.concatenate(out_c),
+            }
         )
 
     return fn
 
 
-def _chunk_pair_fn(threshold: float, vec_col: str):
-    """``applyInPandas`` body for the HOT-BUCKET chunked verify: one
-    task per (bucket, chunk_i, chunk_j) pair. The diagonal task
-    (i == j) computes its chunk's triangle exactly like
-    ``_bucket_near_pairs_fn``; an off-diagonal task computes the CROSS
-    cosine block between its two chunks. Every unordered within-bucket
-    pair lands in exactly one task (its members' chunk pair), so the
-    union over tasks reproduces the single-task verify bit-for-bit with
-    per-task memory bounded by TWO chunks instead of the whole bucket —
-    and the quadratic work spreads across the cluster instead of
-    serializing into one worker. The cross block masks ``ida == idb``
-    to mirror the diagonal's STRICT ``>`` compare: today's chunk
-    assignment (xxhash64 of the id) co-locates duplicate ids so the
-    cross block never sees an equal pair, but the function must stay
-    partitioner-independent — under any assignment that splits a
-    duplicated id across chunks, an unmasked cross block would emit an
-    (x, x) self-pair the single-task path never produces."""
-    import numpy as np
-    import pandas as pd
+def _near_pairs(
+    rows: DataFrame, keys: list, threshold: float, vec_col: str, chunked: bool = False
+) -> DataFrame:
+    """``rows`` (``__id__``, ``vec_col``, the grouping ``keys``) grouped
+    by ``keys`` and verified by ``_near_pairs_fn``: (id_a, id_b, cos)."""
+    from pyspark.sql import types as T
 
-    def fn(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-        ti, tj = int(key[1]), int(key[2])
-        if ti == tj:
-            return _bucket_near_pairs_fn(threshold, vec_col)(pdf)
-        a_pdf = pdf[pdf["__c__"] == ti]
-        b_pdf = pdf[pdf["__c__"] == tj]
-        if not len(a_pdf) or not len(b_pdf):
-            empty = pdf["__id__"].iloc[:0]
-            return pd.DataFrame({"id_a": empty, "id_b": empty})
-        ids_a = a_pdf["__id__"].to_numpy()
-        ids_b = b_pdf["__id__"].to_numpy()
-        VA = np.stack(a_pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-        VB = np.stack(b_pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-        na = np.sqrt((VA * VA).sum(axis=1))
-        nb = np.sqrt((VB * VB).sum(axis=1))
-        out_a, out_b = [], []
-        bs = max(1, (1 << 22) // max(len(VB), 1))
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for st in range(0, len(VA), bs):
-                block = VA[st : st + bs] @ VB.T
-                cos = block / (na[st : st + bs, None] * nb[None, :])
-                ii, jj = np.nonzero(cos >= threshold)
-                ida, idb = ids_a[st + ii], ids_b[jj]
-                keep = ida != idb
-                out_a.append(np.minimum(ida[keep], idb[keep]))
-                out_b.append(np.maximum(ida[keep], idb[keep]))
-        return pd.DataFrame(
-            {"id_a": np.concatenate(out_a), "id_b": np.concatenate(out_b)}
-        )
+    id_type = rows.schema["__id__"].dataType
+    schema = T.StructType(
+        [
+            T.StructField("id_a", id_type, True),
+            T.StructField("id_b", id_type, True),
+            T.StructField("cos", T.DoubleType(), True),
+        ]
+    )
+    return rows.groupBy(*keys).applyInPandas(
+        _near_pairs_fn(float(threshold), vec_col, chunked), schema
+    )
 
-    return fn
+
+def _chunk_plan(
+    sizes,
+    max_bucket_rows: int | str | None,
+    auto_chunk_floor: int,
+    auto_chunk_median_mult: int,
+):
+    """The hot-bucket chunk plan shared by ``semantic_near_pairs`` and
+    ``ann_index.semantic_dedup_check``. ``sizes`` maps bucket -> rows
+    (index metadata), or is the DataFrame of ``ivf_bucket`` rows to
+    chunk: then it is persisted MEMORY_AND_DISK, so that one count
+    aggregate and the caller's verify share one map (the caller
+    unpersists it), and the sizes are collected from it.
+
+    The cap is ``max_bucket_rows``: None (every bucket one chunk), a
+    positive int, or ``"auto"`` — the median-anchored rule shared with
+    the LSH and SimHash bucket caps (``dedup.lsh_candidate_pairs``),
+    max(1, ``auto_chunk_floor``, ``auto_chunk_median_mult`` x the median
+    bucket size): buckets near the median stay one chunk, only hot ones
+    split, and the floor keeps tiny corpora from paying chunk-task
+    overhead. Anything else raises ``ValueError`` before any job runs.
+
+    Returns ``chunk(df, id_col=None, partners=False)``: ``df`` (with an
+    ``ivf_bucket`` column) plus ``__c__``, the row's chunk
+    ``pmod(xxhash64(id_col), n_chunks)``, and/or — ``partners`` — one
+    row per chunk of its bucket in ``__o__``. A bucket's chunk count is
+    looked up in a literal map that holds only the buckets of more than
+    one chunk (empty when none is hot), so the plan needs no join and
+    runs no broadcast job."""
+    if isinstance(max_bucket_rows, str):
+        if max_bucket_rows != "auto":
+            raise ValueError(
+                f"max_bucket_rows must be an int, None, or 'auto', got {max_bucket_rows!r}"
+            )
+    elif max_bucket_rows is not None and max_bucket_rows <= 0:
+        raise ValueError(f"max_bucket_rows must be positive, got {max_bucket_rows}")
+    if isinstance(sizes, DataFrame):
+        from pyspark import StorageLevel
+
+        per_bucket = sizes.persist(StorageLevel.MEMORY_AND_DISK).groupBy("ivf_bucket").count()
+        sizes = {int(r[0]): int(r[1]) for r in per_bucket.collect()}
+    cap = max_bucket_rows
+    if cap == "auto":
+        counts = sorted(sizes.values())
+        med = counts[len(counts) // 2] if counts else 0
+        cap = max(1, int(auto_chunk_floor), int(auto_chunk_median_mult) * med)
+    n_chunks = [(b, -(-n // int(cap))) for b, n in sorted(sizes.items())] if cap else []
+    hot = ", ".join(f"{b}, {nc}" for b, nc in n_chunks if nc > 1)
+    nc = F.lit(1)
+    if hot:
+        lookup = F.try_element_at(F.expr(f"map({hot})"), F.col("ivf_bucket").cast("int"))
+        nc = F.coalesce(lookup, nc)
+
+    def chunk(df: DataFrame, id_col: str | None = None, partners: bool = False):
+        if id_col is not None:
+            df = df.withColumn("__c__", F.pmod(F.xxhash64(F.col(id_col)), nc).cast("int"))
+        if partners:
+            df = df.withColumn("__o__", F.explode(F.sequence(F.lit(0), nc - 1)))
+        return df
+
+    return chunk
 
 
 def semantic_near_pairs(
@@ -963,7 +1109,7 @@ def semantic_near_pairs(
     auto_chunk_median_mult: int = 4,
 ) -> DataFrame:
     """The verified near-duplicate PAIRS of the SemDeDup pipeline:
-    cluster (or reuse ``assignments``), self-join ids within each
+    cluster (or reuse ``assignments``), score every pair within each
     cluster, and keep pairs with exact cosine >= ``threshold``. This is
     ``semantic_dedup``'s candidate+verify core, exposed so recall
     audits and custom survivor policies can consume the pairs directly.
@@ -975,14 +1121,17 @@ def semantic_near_pairs(
     ~``nprobe``^2 x candidate cost (bucket membership multiplies by
     ``nprobe``; within-bucket pairs are quadratic in it); the measured
     end-to-end wall at nprobe=2 is ~1.2x the nprobe=1 line (SCALE.md
-    "Round-9"). NaN-bearing vectors are excluded from clustering and
-    pairing: their cosine is NaN, so they can never pair.
+    "Round-9"). NaN-bearing and NULL vectors are excluded from
+    clustering and pairing: their cosine is NaN, so they can never
+    pair (with ``assignments`` they reach the verify, which scores
+    them NaN).
 
     Plan shape (round-9, chosen after MEASURING three designs at 50k
     vectors / 12.5M candidates, SCALE.md "Round-9"): the corpus
     exchanges ONCE on the bucket key and each bucket's quadratic
-    verify runs as a CHUNKED NUMPY MATMUL inside ``applyInPandas`` —
-    only survivors (true near-dups) ever become rows. The alternatives
+    verify runs as a CHUNKED NUMPY MATMUL inside ``applyInPandas``
+    (``_near_pairs_fn`` over ``cosine_blocks``) — only survivors (true
+    near-dups) ever become rows. The alternatives
     both materialize the candidate pairs as JVM rows: (a) round-8's
     ids-only self-join re-shuffled the candidate volume three times
     (distinct + two re-attach joins) and paid ~100us/pair for the
@@ -998,19 +1147,21 @@ def semantic_near_pairs(
     chunked to a fixed ~32 MB block, so memory is the VECTORS, not the
     m^2 pair matrix); ``n_clusters`` is the first lever.
     ``max_bucket_rows=M`` removes the ceiling EXACTLY: buckets larger
-    than M split into hash chunks of ~M rows and the verify runs one
-    task per (chunk_i, chunk_j) pair — per-task memory is TWO chunks,
+    than M split into hash chunks of ~M rows (``_chunk_plan``) and the
+    verify runs one task per (chunk_i, chunk_j) pair — per-task memory
+    is TWO chunks,
     the quadratic work spreads across the cluster, and every unordered
     pair lands in exactly one task so the output is bit-identical to
     the single-task path (tested; measured on a 60k-vector single hot
     bucket at local[32]: 65.8 s single-task -> 12.4 s at M=8000 ->
-    7.5 s at M=3000, identical pairs — SCALE.md "Round-10"). The cost is Arrow re-transfer: each
+    7.5 s at M=3000, identical pairs — SCALE.md "Round-10"). The cost
+    is Arrow re-transfer: each
     hot-bucket row ships to its n_chunks tasks, i.e. transfer grows by
     ~m/M for that bucket — the unavoidable price of distributing m^2
     work; small buckets (<= M) keep the one-task path unchanged.
     ``max_bucket_rows="auto"`` sizes M FROM THE DATA with the same
-    median-anchored rule as the LSH/SimHash caps: M =
-    max(``auto_chunk_floor``, ``auto_chunk_median_mult`` x the median
+    median-anchored rule as the LSH/SimHash caps: M = max(1,
+    ``auto_chunk_floor``, ``auto_chunk_median_mult`` x the median
     bucket size) — typical buckets (near the median under a sane k)
     stay one-task, only genuine hot buckets chunk, and the floor stops
     tiny corpora from paying chunk-task overhead. Any chunked run
@@ -1034,89 +1185,40 @@ def semantic_near_pairs(
             fit_sample=fit_sample,
             nprobe=nprobe,
         )[0]
-    from pyspark.sql import types as T
-
-    id_type = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type, True),
-            T.StructField("id_b", id_type, True),
-        ]
-    )
     rows = assigned.select(
         "ivf_bucket", F.col(id_col).alias("__id__"), F.col(vec_col)
     )
     if max_bucket_rows is None:
-        pairs = rows.groupBy("ivf_bucket").applyInPandas(
-            _bucket_near_pairs_fn(float(threshold), vec_col), out_schema
+        pairs = _near_pairs(rows, ["ivf_bucket"], threshold, vec_col).select(
+            "id_a", "id_b"
         )
         if nprobe > 1:
             # a pair can co-occur in several probed buckets; the distinct
             # runs over SURVIVORS (true near-dups), not the candidates
             pairs = pairs.distinct()
         return pairs
-    if isinstance(max_bucket_rows, str):
-        if max_bucket_rows != "auto":
-            raise ValueError(
-                f"max_bucket_rows must be an int, None, or 'auto', got {max_bucket_rows!r}"
-            )
-    elif max_bucket_rows <= 0:
-        raise ValueError(f"max_bucket_rows must be positive, got {max_bucket_rows}")
-    from pyspark import StorageLevel
-
     from modelardb_rs_spark.operators.dedup import _truncate_lineage
 
-    spark = corpus.sparkSession
-    # the clustering/assignment lineage feeds BOTH the size pass and the
-    # verify: persist it so the dominant map cost (the numpy assignment
-    # over the whole corpus) runs once, not twice — the sizes collect
-    # below materializes the cache, the verify reads it, and the final
-    # survivor materialization releases it before returning
-    rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
-    # bucket sizes are index metadata (n_buckets tiny rows): one
-    # count aggregate, broadcast back as a chunk-count frame
-    sizes = rows.groupBy("ivf_bucket").agg(F.count("*").alias("__n__")).collect()
-    if max_bucket_rows == "auto":
-        # median-anchored cap, the family rule shared with the LSH and
-        # SimHash bucket caps (dedup.lsh_candidate_pairs): clusters are
-        # near the median when k is sane, so a generous multiple of the
-        # median leaves typical buckets on the one-task path and chunks
-        # only genuine hot buckets. The floor keeps tiny corpora from
-        # chunking at all (chunk-pair task overhead would dominate).
-        counts = sorted(int(r["__n__"]) for r in sizes)
-        med = counts[len(counts) // 2] if counts else 0
-        # clamp to >= 1: floor=0 with mult*median == 0 (empty/tiny corpus
-        # or mult=0) must degrade to one-row chunks, not a ceil-division
-        # ZeroDivisionError the int path's validation would have caught
-        max_bucket_rows = max(
-            1, int(auto_chunk_floor), int(auto_chunk_median_mult) * med
-        )
-    nchunks_df = rows_frame(
-        spark,
-        [
-            (int(r["ivf_bucket"]), -(-int(r["__n__"]) // int(max_bucket_rows)))
-            for r in sizes
-        ],
-        "ivf_bucket INT, __nc__ INT",
+    # the plan persists the assignment for its size pass, so the
+    # dominant map cost (the numpy assignment over the whole corpus)
+    # runs once for both the sizes and the verify
+    chunk = _chunk_plan(
+        rows,
+        max_bucket_rows,
+        auto_chunk_floor,
+        auto_chunk_median_mult,
     )
-    tagged = rows.join(F.broadcast(nchunks_df), "ivf_bucket").withColumn(
-        "__c__",
-        F.pmod(F.xxhash64(F.col("__id__")), F.col("__nc__")).cast("int"),
-    )
-    # each row joins every (chunk_i, chunk_j) task it belongs to:
-    # one explode over its bucket's chunk count — a row in chunk c
-    # meets partner chunk o in task (min(c,o), max(c,o)), each
-    # exactly once, so no post-dedup is needed
+    # each row joins every (chunk_i, chunk_j) task it belongs to: a row
+    # in chunk c meets partner chunk o in task (min(c,o), max(c,o)),
+    # each exactly once, so no post-dedup is needed
     tasks = (
-        tagged.withColumn(
-            "__o__", F.explode(F.sequence(F.lit(0), F.col("__nc__") - 1))
-        )
+        chunk(rows, "__id__", partners=True)
         .withColumn("__ti__", F.least("__c__", "__o__"))
         .withColumn("__tj__", F.greatest("__c__", "__o__"))
     )
-    pairs = tasks.groupBy("ivf_bucket", "__ti__", "__tj__").applyInPandas(
-        _chunk_pair_fn(float(threshold), vec_col), out_schema
-    )
+    pairs = _near_pairs(
+        tasks, ["ivf_bucket", "__ti__", "__tj__"], threshold, vec_col, chunked=True
+    ).select("id_a", "id_b")
     if nprobe > 1:
         pairs = pairs.distinct()
     # materialize the survivors while the assignment cache is hot, then

@@ -916,6 +916,41 @@ def test_semantic_dedup_check_survives_degenerate_indexed_vector(engine, spark, 
     assert out[0]["dup_of"] == 3 and out[0]["dup_cos"] >= 0.999
 
 
+def test_semantic_dedup_check_null_vectors_never_flag(engine, spark, emb):
+    """A NULL vector in the batch, or among a bucket_col index's rows,
+    scores NaN against everything: NULL batch rows come back unflagged
+    (also against each other), the NULL indexed row is nobody's
+    dup_of, and a true copy in its bucket still flags — with and
+    without chunking."""
+    target = emb.where(F.col("vec_id") == 3)
+    null_row = target.select(
+        F.lit(7777).cast("long").alias("vec_id"),
+        F.lit(None).cast("array<float>").alias("embedding"),
+        F.col("label"),
+    )
+    ann_index.build_ivf_index(
+        engine, "nullidx", emb.unionByName(null_row), bucket_col="label"
+    )
+    batch = target.select(
+        (F.col("vec_id") + 500_000).alias("vec_id"), "embedding"
+    ).unionByName(
+        spark.createDataFrame(
+            [(500_777, None), (500_778, None)], "vec_id long, embedding array<float>"
+        )
+    )
+    for cap in (None, 50):
+        out = {
+            int(r["vec_id"]): r
+            for r in ann_index.semantic_dedup_check(
+                engine, "nullidx", batch, threshold=0.999, nprobe=10,
+                max_bucket_rows=cap,
+            ).collect()
+        }
+        assert len(out) == 3
+        assert out[500_003]["dup_of"] == 3 and out[500_003]["dup_cos"] >= 0.999
+        assert out[500_777]["dup_of"] is None and out[500_778]["dup_of"] is None
+
+
 def test_semantic_dedup_check_probe_runs_once(engine, spark, emb):
     """The gate's mapInPandas coarse assignment feeds two jobs (the
     probed-bucket collect and the cogrouped verify) plus the caller's

@@ -391,6 +391,81 @@ def test_zero_norm_vectors_never_pair_or_rank(vectors):
     assert ranked.where("neighbor_id = 9999").count() == 0
 
 
+def test_null_vectors_never_pair_on_near_pair_paths(vectors):
+    """A NULL embedding pairs with nothing on every near-pair path, and
+    crashes none of them: the rows sit in a bucket of true near-dups,
+    so every verify scores them (NaN), and the LSH signatures skip
+    them (which also keeps them out of ``lsh_topk``)."""
+    spark = vectors.sparkSession
+    nulls = spark.createDataFrame(
+        [Row(vec_id=8000 + i, embedding=None, label=0) for i in range(2)],
+        schema=vectors.schema,
+    )
+    corpus = vectors.unionByName(nulls)
+
+    def assign(df):
+        return df.select("vec_id", F.col("label").cast("int").alias("ivf_bucket"))
+
+    def pair_set(df):
+        return sorted(map(tuple, df.collect()))
+
+    for cap in (None, 7):
+        got = sim_ops.semantic_near_pairs(
+            corpus, threshold=0.9, assignments=assign(corpus), max_bucket_rows=cap
+        )
+        want = sim_ops.semantic_near_pairs(
+            vectors, threshold=0.9, assignments=assign(vectors), max_bucket_rows=cap
+        )
+        assert pair_set(got) == pair_set(want) and pair_set(want)
+    near = sim_ops.embedding_near_dup_pairs(corpus, threshold=0.9, dim=16)
+    assert pair_set(near) == pair_set(
+        sim_ops.embedding_near_dup_pairs(vectors, threshold=0.9, dim=16)
+    )
+    assert sim_ops.lsh_topk(corpus, nulls, k=3, dim=16).count() == 0
+    ranked = sim_ops.lsh_topk(corpus, vectors.where(F.col("vec_id") == 0), k=200, dim=16)
+    assert ranked.count() and ranked.where("neighbor_id >= 8000").count() == 0
+
+
+def test_embedding_near_dup_pairs_match_brute_force(spark):
+    """The LSH leg equals a numpy brute force over all pairs: the same
+    (id_a, id_b) set and the same 6-digit rounded cos. Planted partners
+    sit just around the threshold: raw 0.9899998 rounds up to 0.99 and
+    is kept, raw 0.9899992 rounds to 0.989999 and is dropped; a NULL and
+    a zero vector pair with nothing."""
+    rng = np.random.default_rng(11)
+    dim = 16
+    base = rng.normal(size=(60, dim))
+
+    def partner(v, c):
+        u = rng.normal(size=dim)
+        u -= (u @ v) / (v @ v) * v
+        return c * v / np.linalg.norm(v) + np.sqrt(1 - c * c) * u / np.linalg.norm(u)
+
+    targets = [0.9899998, 0.9899992, 0.995, 0.99000004]
+    rows = [(i, v.tolist()) for i, v in enumerate(base)]
+    rows += [(1000 + i, partner(base[i], c).tolist()) for i, c in enumerate(targets)]
+    rows += [(2000, (2.0 * base[10]).tolist()), (3000, None), (3001, [0.0] * dim)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {
+        (r.id_a, r.id_b): r.cos
+        for r in sim_ops.embedding_near_dup_pairs(df, threshold=0.99, dim=dim).collect()
+    }
+    ids = np.array([i for i, v in rows if v is not None])
+    X = np.array([v for _, v in rows if v is not None])
+    n = np.linalg.norm(X, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.round((X @ X.T) / (n[:, None] * n[None, :]), 6)
+    want = {
+        (int(ids[i]), int(ids[j])): cos[i, j]
+        for i, j in zip(*np.nonzero(cos >= 0.99))
+        if ids[i] < ids[j]
+    }
+    assert got == want
+    assert got[(0, 1000)] == 0.99 and (1, 1001) not in got
+    assert got[(2, 1002)] == 0.995 and got[(3, 1003)] == 0.99
+    assert got[(10, 2000)] == 1.0
+
+
 def test_string_ids_flow_through_lsh_and_semantic_paths(vectors):
     """_signature_keys / semantic_near_pairs derive the id type from
     the input schema — string ids must pass through unchanged."""
@@ -1131,7 +1206,7 @@ def test_chunk_pair_fn_duplicate_ids_never_self_pair():
     self-pair — the single-task path's ``ids[jj] > ids[ii]`` drops it."""
     import pandas as pd
 
-    fn = sim_ops._chunk_pair_fn(0.9, "embedding")
+    fn = sim_ops._near_pairs_fn(0.9, "embedding", chunked=True)
     v = [1.0, 0.0]
     pdf = pd.DataFrame(
         {

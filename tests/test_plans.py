@@ -627,6 +627,22 @@ def test_ann_rank_is_two_phase(spark):
     assert out.count() == 4 * 5
 
 
+def test_embedding_near_dup_pairs_verify_whole_buckets(spark):
+    """The LSH near-dup leg groups its signature rows by (table,
+    signature) and verifies each bucket in one pandas group: its
+    executed plan joins nothing and evaluates no per-pair pandas UDF."""
+    from modelardb_rs_spark.operators import similarity
+    from modelardb_rs_spark.sources.testdata import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    out = similarity.embedding_near_dup_pairs(emb, threshold=0.999, tables=4)
+    out.collect()
+    plan = plan_of(out)
+    assert "FlatMapGroupsInPandas" in plan, plan
+    for node in ("SortMergeJoin", "BroadcastHashJoin", "ArrowEvalPython"):
+        assert node not in plan, plan
+
+
 @pytest.mark.parametrize("path", ["ivfpq_topk", "ivf_index_topk"])
 def test_ivfpq_rerank_probe_is_one_scan_one_exchange(engine, spark, path):
     """An IVF-PQ probe with rerank, and a flat IVF probe, read what they
